@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
+import uuid
 
 import pytest
 
@@ -39,3 +41,51 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode="formatted")
     return buf.getvalue()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` runs ``fn`` under a fresh Spark job group
+    and returns ``(result, number of Spark jobs it started)`` — the probe
+    behind the zero-jobs-at-build and per-operation job pins."""
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        group = f"job-probe-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "job probe")
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture()
+def count_py4j_calls(monkeypatch):
+    """``count_py4j_calls(fn, *args)`` returns ``(result, py4j round trips)``:
+    every ``ClientServerConnection.send_command`` made by the calling
+    thread. py4j's finalizer thread sends the release commands of dropped
+    JVM handles asynchronously, whenever it runs, so those are not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    def run(fn, *args, **kwargs):
+        n = 0
+        caller = threading.get_ident()
+
+        def counting(self, *a, **kw):
+            nonlocal n
+            n += threading.get_ident() == caller
+            return send(self, *a, **kw)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            monkeypatch.setattr(ClientServerConnection, "send_command", send)
+        return out, n
+
+    return run

@@ -8,17 +8,18 @@ Round 4: the exemption list shrank to ONE query. Query *parameters*
 (_query_vec), z-score corpus stats (_zparams), ANN indexes and fitted
 models are all memoized per session now, so the SECOND build of EVERY
 catalog query — vector/ANN/model families included — must run zero jobs.
+The plan-handle cache is cleared before that build, so the query function
+really runs instead of returning its memoized DataFrame.
 The single exception is d_dedup_keep: connected-components convergence is
 an inherently iterative driver loop (documented in operators/dedup.py as
 an offline algorithm, not a query path)."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
 from vectordb_similarity_search_spark.plans import REGISTRY
+from vectordb_similarity_search_spark.plans.catalog import clear_plan_cache
 
 # build-time driver iteration is the algorithm itself here, not a fixable
 # lookup: label propagation checks convergence with a bounded count() loop
@@ -33,46 +34,34 @@ ITERATIVE_BUILD = {
 @pytest.mark.parametrize(
     "name", [n for n in REGISTRY if n not in ITERATIVE_BUILD]
 )
-def test_build_runs_no_jobs(spark, sf_dir, name):
-    sc = spark.sparkContext
+def test_build_runs_no_jobs(spark, sf_dir, name, count_jobs):
     # warm: the first touch of a table pays spark.read.parquet's 1-task
     # schema-footer job (inherent to the reader, cached by load_table);
     # the first build of a parameterized/model query additionally pays its
     # memoized parameter fetch / model fit exactly once per session
     REGISTRY[name].fn(spark, sf_dir)
-    group = f"lazy-probe-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, f"build {name}")
-    try:
-        REGISTRY[name].fn(spark, sf_dir)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert list(jobs) == [], f"{name} ran {len(jobs)} job(s) at plan build"
+    # the probed build must really BUILD: without this it returns the
+    # memoized _PLAN_CACHE handle and could never see a job
+    clear_plan_cache()
+    _, jobs = count_jobs(REGISTRY[name].fn, spark, sf_dir)
+    assert jobs == 0, f"{name} ran {jobs} job(s) at plan build"
 
 
-def test_widen_skips_derived_frames_without_jobs(spark, sf_dir):
+def test_widen_skips_derived_frames_without_jobs(spark, sf_dir, count_jobs):
     """Round-10 (ADVICE): widen()'s split-count probe goes through
     .rdd, which under AQE executes upstream shuffle stages. A derived
     (aggregated/joined) input must come back UNCHANGED with zero jobs;
     a scan-shaped input still widens."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     from vectordb_similarity_search_spark.util import widen
 
-    sc = spark.sparkContext
     scan = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_type")
     derived = scan.groupBy("event_type").count()
 
-    group = f"widen-probe-{_uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "widen derived")
-    try:
-        out = widen(derived)
-    finally:
-        sc.setJobGroup(None, None)
+    out, jobs = count_jobs(widen, derived)
     assert out is derived
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == 0
 
     widened = widen(scan.filter(F.col("event_type").isNotNull()))
     assert "Repartition" in widened._jdf.queryExecution().analyzed().toString()

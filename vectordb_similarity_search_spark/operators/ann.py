@@ -85,23 +85,21 @@ class IvfModel:
             use_blas = len(self.centers) > self.EXPR_MAX_CELLS
         if use_blas:
             return self._assign_blas(corpus, cell_col)
-        from ..functions.vector import to_double_array
+        from ..functions.vector import matrix_lit, to_double_array
 
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    to_double_array(self.vec_col),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
+        # one array<array<double>> centroid literal under one transform: the
+        # per-centroid squared distance is the same left-to-right fold as
+        # before, built in O(1) py4j calls whatever n_cells × dim is
+        vec = to_double_array(self.vec_col)
+        dists = F.transform(
+            matrix_lit(self.centers),
+            lambda c: F.aggregate(
+                F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
                 F.lit(0.0),
                 lambda a, x: a + x,
-            )
-            for c in self.centers
-        ]
-        cell = F.array_position(
-            F.array(*dists), F.array_min(F.array(*dists))
-        ).cast("int") - 1
+            ),
+        )
+        cell = F.array_position(dists, F.array_min(dists)).cast("int") - 1
         return corpus.withColumn(cell_col, cell)
 
     def _assign_blas(self, corpus: DataFrame, cell_col: str) -> DataFrame:
@@ -202,12 +200,15 @@ def lsh_bucket_topk(
 _INDEX_SCAN_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def _index_scan(spark, path: str) -> DataFrame:
+def _index_scan(spark, path: str, schema: str | None = None) -> DataFrame:
+    """Cached scan of ``path``; a known ``schema`` also skips the footer
+    (schema inference) job of a fresh read."""
     key = (spark.sparkContext.applicationId, path)
     evict_other_apps(_INDEX_SCAN_CACHE, key[0])
     df = _INDEX_SCAN_CACHE.get(key)
     if df is None:
-        df = _INDEX_SCAN_CACHE[key] = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = _INDEX_SCAN_CACHE[key] = reader.parquet(path)
     return df
 
 
@@ -263,7 +264,10 @@ def _tombstone_ids(spark, path: str, id_col: str) -> DataFrame | None:
     tp = _tombstone_dir(path)
     if not os.path.isdir(tp):
         return None
-    return _index_scan(spark, tp).select(id_col).distinct()
+    # the schema is fixed (one bigint id column), so re-reading the store
+    # after a delete runs no schema job; no distinct(): the anti-join only
+    # tests existence, and an id deleted twice just repeats a build row
+    return _index_scan(spark, tp, f"{id_col} long")
 
 
 def _apply_tombstones(spark, path: str, scan: DataFrame, id_col: str) -> DataFrame:
@@ -271,6 +275,49 @@ def _apply_tombstones(spark, path: str, scan: DataFrame, id_col: str) -> DataFra
     if tomb is None:
         return scan
     return scan.join(F.broadcast(tomb), id_col, "left_anti")
+
+
+def _stage_tombstones(path: str, ids: DataFrame, id_col: str) -> str:
+    """Write an id frame as ONE parquet file into a hidden staging directory
+    of the index (underscore prefix: invisible to index and tombstone scans)
+    and return that directory; :func:`_publish_tombstones` makes it live.
+    Staging lets a caller validate in the same job as the write and still
+    leave the index untouched when it rejects the batch."""
+    import uuid
+
+    stage = f"{path.rstrip('/')}/_tombstones_{uuid.uuid4().hex[:8]}"
+    ids.select(F.col(id_col).cast("long")).coalesce(1).write.parquet(stage)
+    return stage
+
+
+def _publish_tombstones(path: str, stage: str) -> None:
+    """Move a staged tombstone file into ``<index>/_tombstones`` by rename
+    (same directory tree, so one metadata operation per file; the first
+    batch renames the whole staged directory, so the store never exists
+    without a readable file). A crash between the staged write and the
+    rename leaves only an invisible staging directory."""
+    import os
+    import shutil
+
+    tp = _tombstone_dir(path)
+    if not os.path.isdir(tp):
+        os.rename(stage, tp)
+    else:
+        for f in os.listdir(stage):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(stage, f), os.path.join(tp, f))
+        shutil.rmtree(stage)
+    _invalidate_index_scans(tp)
+
+
+def _id_frame(spark, ids: Sequence[int], id_col: str) -> DataFrame:
+    """A one-column bigint frame of driver-side ids, built JVM-side: one
+    long[] literal exploded over a one-row range. No Python worker runs
+    (``createDataFrame(list)`` ships the rows through a Python RDD) and
+    the py4j cost does not grow with ``len(ids)``."""
+    from ..functions.vector import long_array_lit
+
+    return spark.range(1).select(F.explode(long_array_lit(ids)).alias(id_col))
 
 
 def ivf_delete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
@@ -294,13 +341,10 @@ def ivf_delete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
     index. Returns the number of tombstones written (0 for an empty
     batch).
     """
-    ids = list(ids)
+    ids = [int(i) for i in ids]
     if not ids:
         return 0
-    tp = _tombstone_dir(path)
-    df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
-    df.coalesce(1).write.mode("append").parquet(tp)
-    _invalidate_index_scans(tp)
+    _publish_tombstones(path, _stage_tombstones(path, _id_frame(spark, ids, id_col), id_col))
     return len(ids)
 
 
@@ -514,9 +558,13 @@ def ivf_compact(
 ) -> bool:
     """Compact an appended IVF index: many small per-insert files per cell
     degrade scan throughput (file-open overhead, tiny row groups). Rewrite
-    each cell's data into ~rows/target files, then swap the index
-    directory (util.swap_snapshot — parked old snapshot, mid-swap crash
-    recovered on the next compact/merge).
+    the index so that each cell holds ⌈cell rows / target_rows_per_file⌉
+    files — one shuffle by cell puts every cell in one task, and
+    ``maxRecordsPerFile`` rolls that task's output for the cell every
+    ``target_rows_per_file`` rows — then swap the index directory
+    (util.swap_snapshot — parked old snapshot, mid-swap crash recovered on
+    the next compact/merge). No separate count job: the survivor count is
+    observed during the write.
 
     Compaction is also the tombstone GC: rows deleted via
     :func:`ivf_delete` are dropped from the rewrite, and the swap retires
@@ -527,28 +575,38 @@ def ivf_compact(
     EMPTY (every live row tombstoned) is a no-op returning False: plain
     partitioned parquet cannot represent an empty table (the swap would
     install a schema-less directory and brick every subsequent probe), so
-    the files and tombstones stay as they are — probes already return
-    nothing; to actually retire the index, delete its directory."""
-    import math
+    the rewrite is discarded unswapped and the files and tombstones stay as
+    they are — probes already return nothing; to actually retire the
+    index, delete its directory."""
+    import shutil
     import uuid
 
-    from pyspark.sql import functions as FF
+    from pyspark.sql import Observation
 
     from ..util import restore_snapshot, swap_snapshot
 
+    if target_rows_per_file < 1:
+        raise ValueError(f"target_rows_per_file must be >= 1, got {target_rows_per_file}")
     restore_snapshot(path)  # recover a crashed previous swap, if any
-    df = _apply_tombstones(spark, path, spark.read.parquet(path), id_col)
-    n = df.count()
-    if n == 0:
-        return False
-    files = max(1, math.ceil(n / target_rows_per_file))
+    obs = Observation()
+    # observed ABOVE the shuffle: when the survivor set is empty, AQE
+    # replaces the empty shuffle stage (and any metrics node inside it) by
+    # an empty relation, but keeps a metrics node sitting on top of it
+    df = (
+        _apply_tombstones(spark, path, spark.read.parquet(path), id_col)
+        .repartition(F.col(cell_col))
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+    )
     tmp = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
     (
-        df.repartition(files, FF.col(cell_col))
-        .write.partitionBy(cell_col)
+        df.write.partitionBy(cell_col)
+        .option("maxRecordsPerFile", target_rows_per_file)
         .mode("overwrite")
         .parquet(tmp)
     )
+    if not obs.get["rows"]:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return False
     swap_snapshot(path, tmp)
     _invalidate_index_scans(path)
     _invalidate_index_scans(_tombstone_dir(path))

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.synthetic import FEATURES
+from .ann import _PERSISTED_SERVE
 from .topk import knn
 
 
@@ -110,7 +111,14 @@ class PatientSimilaritySearch:
         feats = zscore_features_col(self.params)
         self.store = patients.withColumn("features", feats)
         if embed is not None:
-            self.store = embed.transform(self.store, "features", "embedding")
+            # embed the store ONCE: persisted lazily (no job here; the first
+            # search materializes it), so query plans scan the cached
+            # embeddings instead of re-running the mapInPandas MLP over every
+            # patient per action — search_with_stats collects two. Freed by
+            # operators.ann.release_ann_caches().
+            self.store = _PERSISTED_SERVE.persist(
+                embed.transform(self.store, "features", "embedding")
+            )
 
     def search(
         self, query: dict, top_k: int = 10, hospitals: Sequence[str] | None = None

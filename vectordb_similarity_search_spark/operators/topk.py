@@ -26,14 +26,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.vector import array_lit, cosine_similarity, l2_distance
+from ..functions.vector import cosine_similarity, l2_distance
 from ..util import widen
 
 
 def _score(
-    vec_col: str, query: Column, metric: str, dim: int | None = None
+    vec_col: str, query: Column | Sequence[float], metric: str, dim: int | None = None
 ) -> tuple[Column, bool]:
-    """Returns (score column, descending?)."""
+    """Returns (score column, descending?). ``query`` is a vector column or
+    a driver-side query vector (folded into the plan as a literal)."""
     if metric == "cosine":
         return cosine_similarity(vec_col, query, dim), True
     if metric == "l2":
@@ -59,7 +60,7 @@ def knn(
     parquet scan, then TakeOrderedAndProject (per-partition partial top-k,
     O(k·P) driver merge).
     """
-    score, desc = _score(vec_col, array_lit(query_vec), metric)
+    score, desc = _score(vec_col, query_vec, metric)
     scored = corpus.withColumn(score_col, score)
     order = F.col(score_col).desc() if desc else F.col(score_col).asc()
     return scored.orderBy(order, F.col(id_col).asc()).limit(k)
@@ -171,7 +172,7 @@ def grouped_knn(
     never the corpus. One scan regardless of group count; G filtered
     knn() calls would be G scans.
     """
-    score, desc = _score(vec_col, array_lit(query_vec), metric)
+    score, desc = _score(vec_col, query_vec, metric)
     order = F.col(score_col).desc() if desc else F.col(score_col).asc()
     w = Window.partitionBy(group_col).orderBy(order, F.col(id_col).asc())
     keep = [c for c in corpus.columns if c != vec_col]
@@ -399,7 +400,7 @@ def range_search(
     shuffle, no driver merge; the result is unbounded by construction, so
     callers that need an ordered result pay one range-partitioned sort.
     """
-    score, desc = _score(vec_col, array_lit(query_vec), metric)
+    score, desc = _score(vec_col, query_vec, metric)
     scored = corpus.withColumn(score_col, score)
     pred = (
         F.col(score_col) >= float(threshold)
@@ -595,7 +596,7 @@ def late_interaction_topk(
     if not query_vecs:
         raise ValueError("need at least one query vector")
     maxes = [
-        F.max(cosine_similarity(vec_col, array_lit(qv))).alias(f"_m{i}")
+        F.max(cosine_similarity(vec_col, qv)).alias(f"_m{i}")
         for i, qv in enumerate(query_vecs)
     ]
     per_doc = chunks.groupBy(doc_col).agg(*maxes)

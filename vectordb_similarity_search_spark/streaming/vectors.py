@@ -3,8 +3,9 @@ IVF index (operators/ann.py) — the streaming half of the vector-store
 lifecycle. The reference rebuilds its whole in-memory store per arriving
 batch (similarity_search.py:275-292); here each micro-batch appends
 parquet files only under the cells its vectors land in, so the index
-stays serveable during ingest and the per-batch cost is O(batch), not
-O(store).
+stays serveable during ingest and an insert/delete batch costs O(batch),
+not O(store). Compaction is the exception: it rewrites the whole index,
+O(store), once every ``compact_every`` batches.
 """
 
 from __future__ import annotations
@@ -14,7 +15,13 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.ann import IvfModel, ivf_append, ivf_compact, ivf_delete
+from ..operators.ann import (
+    IvfModel,
+    _publish_tombstones,
+    _stage_tombstones,
+    ivf_append,
+    ivf_compact,
+)
 
 
 def vector_ingest_stream(
@@ -32,7 +39,8 @@ def vector_ingest_stream(
 
     Per micro-batch:
     - rows flagged by ``delete_col`` (when given) become tombstones
-      (:func:`ivf_delete` — O(batch) append, no index file touched);
+      (the :func:`ivf_delete` store — O(batch) append, no index file
+      touched), validated and staged in one job;
     - remaining rows are cell-assigned under the FROZEN centroids and
       appended only under the touched cells (:func:`ivf_append`);
     - every ``compact_every``-th batch id triggers
@@ -90,43 +98,76 @@ def apply_vector_batch(
     marker = os.path.join(ledger, str(batch_id))
     if os.path.exists(marker):
         return False  # replayed batch: already ingested
-    spark = batch_df.sparkSession
-    batch = batch_df
+    batch, live = batch_df, True
     if delete_col is not None:
-        flagged = batch.filter(F.col(delete_col))
-        batch = batch.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
-        dead = [r[0] for r in flagged.select(id_col).collect()]
-        if dead:
-            live_ids = {
-                r[0]
-                for r in batch.select(id_col)
-                .filter(F.col(id_col).isin(dead))
-                .collect()
-            }
-            if live_ids:
-                raise ValueError(
-                    f"batch {batch_id} both deletes and inserts ids "
-                    f"{sorted(live_ids)[:5]}… — in-place update is not "
-                    "expressible with tombstones; delete, compact, then "
-                    "re-insert"
-                )
-            ivf_delete(spark, index_path, dead, id_col=id_col)
-    if not batch.isEmpty():
+        flag = F.coalesce(F.col(delete_col), F.lit(False))
+        live = _apply_batch_deletes(batch_df, batch_id, index_path, id_col, flag)
+        batch = batch_df.filter(~flag).drop(delete_col)
+    if live:  # no emptiness probe: an empty partitioned append writes no files
         ivf_append(model, batch, index_path)
     # cadence keys off the DURABLE batch_id (monotonic across stream
     # restarts via the checkpoint), not a process-local counter — a
     # crash-looping stream must still reach its compactions
     if compact_every and batch_id % compact_every == compact_every - 1:
         ivf_compact(
-            spark, index_path, id_col=id_col,
+            batch_df.sparkSession, index_path, id_col=id_col,
             target_rows_per_file=target_rows_per_file,
         )
     os.makedirs(ledger, exist_ok=True)
     with open(marker, "w"):
         pass
     return True
+
+
+def _apply_batch_deletes(
+    batch_df: DataFrame, batch_id: int, index_path: str, id_col: str, flag
+) -> int:
+    """Validate a CDC batch and tombstone its deleted ids in ONE job: group
+    the batch by id, write the deleted ids to a hidden staging directory
+    (operators/ann._stage_tombstones) and observe, on the way, the deleted
+    id count, the delete+insert conflicts and the live row count. A conflict
+    rejects the batch with the index untouched (staging removed); otherwise
+    the staged ids are published. Returns the live (to-append) row count."""
+    import shutil
+
+    from pyspark.sql import Observation
+
+    per_id = batch_df.groupBy(id_col).agg(
+        F.max(flag).alias("_dead"), F.count(F.when(~flag, 1)).alias("_live")
+    )
+    conflict = F.col("_dead") & (F.col("_live") > 0)
+    obs = Observation()
+    # observed above the id shuffle, so an empty batch still reports zeros
+    # (see operators/ann.ivf_compact)
+    checked = per_id.observe(
+        obs,
+        F.count(F.when(F.col("_dead"), 1)).alias("dead"),
+        F.count(F.when(conflict, 1)).alias("conflicts"),
+        F.coalesce(F.sum("_live"), F.lit(0)).alias("live"),
+    )
+    stage = _stage_tombstones(
+        index_path, checked.filter(F.col("_dead")), id_col
+    )
+    m = obs.get
+    if m["conflicts"] or not m["dead"]:
+        shutil.rmtree(stage, ignore_errors=True)
+    if m["conflicts"]:
+        sample = [
+            r[0]
+            for r in per_id.filter(conflict)
+            .select(id_col)
+            .orderBy(id_col)
+            .limit(5)
+            .collect()
+        ]
+        raise ValueError(
+            f"batch {batch_id} both deletes and inserts ids {sample}… — "
+            "in-place update is not expressible with tombstones; delete, "
+            "compact, then re-insert"
+        )
+    if m["dead"]:
+        _publish_tombstones(index_path, stage)
+    return m["live"]
 
 
 def semantic_cache_stream(
