@@ -503,23 +503,9 @@ def main() -> None:
     # teardown: the PRF/dedup paths persist module-level frames; release
     # them before the write group so its walls aren't paid under cache
     # memory pressure (round-4 ADVICE: nothing ever called this)
-    from vectordb_similarity_search_spark.operators.ann import (
-        release_ann_caches,
-    )
-    from vectordb_similarity_search_spark.operators.bm25 import (
-        release_bm25_caches,
-    )
-    from vectordb_similarity_search_spark.operators.dedup import (
-        release_dedup_caches,
-    )
-    from vectordb_similarity_search_spark.operators.ranking import (
-        release_ranking_caches,
-    )
+    from vectordb_similarity_search_spark import cache
 
-    release_ann_caches()
-    release_bm25_caches()
-    release_dedup_caches()
-    release_ranking_caches()
+    cache.release()
 
     import tempfile
 

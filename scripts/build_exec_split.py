@@ -7,7 +7,7 @@ that motivated the registry plan cache.
 
 Usage: python scripts/build_exec_split.py [--nocache] <query> [query ...]
 
---nocache clears the registry _PLAN_CACHE before each timed build so
+--nocache drops the registry plan handles before each timed build so
 every timed run pays full plan construction — the split then shows what
 bench timed runs paid BEFORE the cache existed.
 """
@@ -41,7 +41,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    from vectordb_similarity_search_spark.plans import catalog
+    from vectordb_similarity_search_spark import cache
 
     out: dict[str, dict[str, float]] = {}
     for name in names:
@@ -51,7 +51,7 @@ def main() -> None:
         builds, execs = [], []
         for _ in range(3):
             if nocache:
-                catalog._PLAN_CACHE.clear()
+                cache.clear("plan")
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()

@@ -96,23 +96,9 @@ def main() -> int:
     print(f"DONE {len(names) - bad}/{len(names)} green", flush=True)
     # teardown: drop the module-level persisted frames (PRF corpus cache
     # etc.) before stopping — the round-4 ADVICE leak fix
-    from vectordb_similarity_search_spark.operators.ann import (
-        release_ann_caches,
-    )
-    from vectordb_similarity_search_spark.operators.bm25 import (
-        release_bm25_caches,
-    )
-    from vectordb_similarity_search_spark.operators.dedup import (
-        release_dedup_caches,
-    )
-    from vectordb_similarity_search_spark.operators.ranking import (
-        release_ranking_caches,
-    )
+    from vectordb_similarity_search_spark import cache
 
-    release_ann_caches()
-    release_bm25_caches()
-    release_dedup_caches()
-    release_ranking_caches()
+    cache.release()
     spark.stop()
     return 1 if bad else 0
 

@@ -107,10 +107,8 @@ def main() -> None:
     # the honest alternative: re-run the batch operator over corpus+batch
     # (re-shingles the corpus in Python, self-pairs the corpus) and filter
     # to cross pairs
-    from vectordb_similarity_search_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_dedup_caches,
-    )
+    from vectordb_similarity_search_spark import cache
+    from vectordb_similarity_search_spark.operators.dedup import minhash_lsh_pairs
 
     union = corpus.unionByName(batch.select("doc_id", "text"))
     t0 = time.perf_counter()
@@ -118,7 +116,7 @@ def main() -> None:
         union, threshold=0.8, shingle_n=3, shingle_mode="word"
     ).collect()
     t_full = time.perf_counter() - t0
-    release_dedup_caches()
+    cache.release()
     cross = {
         (max(r.id_a, r.id_b), min(r.id_a, r.id_b))
         for r in full

@@ -264,11 +264,12 @@ def test_adaptive_probe_terminal_frame_materialized_and_releasable(
     """Round-5 ADVICE: (a) the full-coverage terminal round must ALSO be
     materialized before return (the old short-circuit skipped its count,
     returning an unmaterialized persisted frame), and (b) every returned
-    frame is registered so release_ann_caches() can free it."""
+    frame is registered so cache.release() can free it."""
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import ann
 
     model, path, qv = index
-    ann.release_ann_caches()
+    cache.release()
     # full escalation: impossible k with a selective filter
     res, used = ann.ivf_search_until_k(
         spark, path, model, qv, k=10**6,
@@ -278,10 +279,10 @@ def test_adaptive_probe_terminal_frame_materialized_and_releasable(
     assert res.storageLevel.useMemory  # persisted…
     # …and materialized: the cached plan reports positive cached size
     assert res.count() >= 0
-    assert len(ann._PERSISTED_SERVE) >= 1
-    assert ann.release_ann_caches() >= 1
+    assert len(cache.PERSISTED) >= 1
+    assert cache.release() >= 1
     assert not res.storageLevel.useMemory
-    assert len(ann._PERSISTED_SERVE) == 0
+    assert len(cache.PERSISTED) == 0
 
 
 def test_ivf_maintain_compacts_when_balanced_and_reclusters_on_drift(
@@ -354,6 +355,7 @@ def test_ivf_maintain_recovers_crashed_swap_on_entry(spark, tmp_path):
     ivf_maintain must restore ON ENTRY (like ivf_compact does) — its
     balance measurement scans the index before any recovery deeper in the
     recluster branch could run."""
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import ann
 
     emb = spark.createDataFrame(
@@ -365,7 +367,7 @@ def test_ivf_maintain_recovers_crashed_swap_on_entry(spark, tmp_path):
     ann.ivf_write_index(model, emb, path)
     # simulate the crash window: snapshot parked, live path missing
     os.rename(path, path + "__old_deadbeef")
-    ann._invalidate_index_scans(path)
+    cache.invalidate(path)
     got_model, rep = ann.ivf_maintain(spark, path, model,
                                       rebalance_ratio=1000.0)
     assert rep["total_rows"] == 60  # restored, then measured

@@ -214,6 +214,7 @@ def test_prf_tokenized_frame_inherits_input_parallelism(spark):
     this pins partition inheritance rather than an absolute count)."""
     from pyspark.sql import functions as F
 
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import bm25
 
     docs = (
@@ -227,15 +228,15 @@ def test_prf_tokenized_frame_inherits_input_parallelism(spark):
             ).alias("text"),
         )
     )
-    bm25.release_bm25_caches()
+    cache.release()
     try:
         bm25.prf_expand_topk(docs, ["alpha"], k=5)
         frames = [
-            f for lst in bm25._PERSISTED._frames.values() for f in lst
+            f for lst in cache.PERSISTED._frames.values() for f in lst
         ]
         assert frames, "prf must persist its tokenized frame"
         assert all(f.rdd.getNumPartitions() >= 8 for f in frames), [
             f.rdd.getNumPartitions() for f in frames
         ]
     finally:
-        bm25.release_bm25_caches()
+        cache.release()

@@ -18,8 +18,8 @@ from __future__ import annotations
 
 import pytest
 
+from vectordb_similarity_search_spark import cache
 from vectordb_similarity_search_spark.plans import REGISTRY
-from vectordb_similarity_search_spark.plans.catalog import clear_plan_cache
 
 # build-time driver iteration is the algorithm itself here, not a fixable
 # lookup: label propagation checks convergence with a bounded count() loop
@@ -41,8 +41,8 @@ def test_build_runs_no_jobs(spark, sf_dir, name, count_jobs):
     # memoized parameter fetch / model fit exactly once per session
     REGISTRY[name].fn(spark, sf_dir)
     # the probed build must really BUILD: without this it returns the
-    # memoized _PLAN_CACHE handle and could never see a job
-    clear_plan_cache()
+    # memoized plan handle and could never see a job
+    cache.clear("plan")
     _, jobs = count_jobs(REGISTRY[name].fn, spark, sf_dir)
     assert jobs == 0, f"{name} ran {jobs} job(s) at plan build"
 

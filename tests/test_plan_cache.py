@@ -1,4 +1,6 @@
-"""Registry-level plan cache (plans/catalog._PLAN_CACHE, round 9).
+"""Registry-level plan cache (``plan`` entries of the session cache in
+vectordb_similarity_search_spark/cache.py) and the cache's path
+invalidation.
 
 The cache memoizes the LOGICAL PLAN handle per (applicationId, sf_dir,
 query) — never results: executing the cached handle must run Spark jobs
@@ -10,16 +12,22 @@ result cache would be gaming). These tests pin:
 2. different sf_dir → a different plan (no cross-sf leakage);
 3. executing the cached handle twice runs jobs BOTH times — the plan
    cache is not a result cache;
-4. entries keyed to a dead application are evicted on insert (the
-   evict_other_apps sweep — no unbounded growth across session
-   restarts).
+4. entries keyed to a dead application are evicted on insert (no
+   unbounded growth across session restarts);
+5. a write invalidates exactly the entries whose read paths overlap the
+   written path, also when the write fails half-way.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import uuid
 
-from vectordb_similarity_search_spark.plans import REGISTRY, catalog
+import pytest
+
+from vectordb_similarity_search_spark import cache
+from vectordb_similarity_search_spark.plans import REGISTRY
 
 ORACLE_SF = "/root/testdata/sf0.01"
 
@@ -69,14 +77,16 @@ def test_cached_reader_sees_post_merge_data(spark, tmp_path):
         F.col("id").alias("k"), F.lit(1).alias("v")
     ).write.parquet(tbl)
 
-    key = (spark.sparkContext.applicationId, tbl, "_scratch_reader")
-    catalog._PLAN_CACHE[key] = spark.read.parquet(tbl)
-    assert catalog._PLAN_CACHE[key].agg(F.sum("v")).head()[0] == 100
+    key = (spark.sparkContext.applicationId, "plan", tbl, "_scratch_reader")
+    reader = cache.get(
+        spark, *key[1:], reads=(tbl,), build=lambda: spark.read.parquet(tbl)
+    )
+    assert reader.agg(F.sum("v")).head()[0] == 100
 
     upd = spark.range(0, 10).select(F.col("id").alias("k"), F.lit(5).alias("v"))
     merge_parquet(spark, tbl, upd, ["k"])
 
-    assert key not in catalog._PLAN_CACHE, (
+    assert key not in cache._ENTRIES, (
         "swap_snapshot must clear the registry plan cache"
     )
     fresh = spark.read.parquet(tbl)
@@ -101,9 +111,11 @@ def test_cached_reader_evicted_by_partitioned_merge(spark, tmp_path):
         F.lit(1).alias("v"),
     ).write.partitionBy("p").parquet(tbl)
 
-    key = (spark.sparkContext.applicationId, tbl, "_scratch_preader")
-    catalog._PLAN_CACHE[key] = spark.read.parquet(tbl)
-    assert catalog._PLAN_CACHE[key].count() == 40
+    key = (spark.sparkContext.applicationId, "plan", tbl, "_scratch_preader")
+    reader = cache.get(
+        spark, *key[1:], reads=(tbl,), build=lambda: spark.read.parquet(tbl)
+    )
+    assert reader.count() == 40
 
     # updates land ONLY in a brand-new partition p=7 (the add-only branch)
     upd = spark.range(100, 105).select(
@@ -111,7 +123,7 @@ def test_cached_reader_evicted_by_partitioned_merge(spark, tmp_path):
     )
     merge_parquet_partitioned(spark, tbl, upd, ["k", "p"], ["p"])
 
-    assert key not in catalog._PLAN_CACHE, (
+    assert key not in cache._ENTRIES, (
         "partitioned merge must clear the registry plan cache"
     )
     assert spark.read.parquet(tbl).count() == 45
@@ -119,9 +131,124 @@ def test_cached_reader_evicted_by_partitioned_merge(spark, tmp_path):
 
 def test_dead_app_entries_evicted(spark, sf_dir):
     REGISTRY["r_pricing_summary"].fn(spark, sf_dir)
-    dead = ("app-dead-123", sf_dir, "r_pricing_summary")
-    catalog._PLAN_CACHE[dead] = object()
+    dead = ("app-dead-123", "plan", sf_dir, "r_pricing_summary")
+    cache._ENTRIES[dead] = (object(), (sf_dir,))
+    cache.clear("plan", sf_dir, "r_scalar_math")
     REGISTRY["r_scalar_math"].fn(spark, sf_dir)  # any insert sweeps
-    assert dead not in catalog._PLAN_CACHE
-    live_apps = {k[0] for k in catalog._PLAN_CACHE}
+    assert dead not in cache._ENTRIES
+    live_apps = {k[0] for k in cache._ENTRIES}
     assert live_apps == {spark.sparkContext.applicationId}
+
+
+def test_invalidate_overlaps_at_path_component_boundaries(spark, tmp_path):
+    """invalidate(p) drops entries reading p, a path under p or a path
+    above p — but not a sibling that merely shares a string prefix."""
+    root = str(tmp_path / "root")
+    reads = {
+        "root": root,
+        "sub": f"{root}/sub",
+        "deep": f"{root}/sub/deeper",
+        "root2": f"{root}2",
+        "none": None,
+    }
+    try:
+        def fill():
+            for name, path in reads.items():
+                cache.clear("probe", name)
+                cache.get(spark, "probe", name, reads=[path] if path else [], build=object)
+
+        def live():
+            return {k[2] for k in cache._ENTRIES if k[1] == "probe"}
+
+        fill()
+        cache.invalidate(root)  # downward: root and everything under it
+        assert live() == {"root2", "none"}
+
+        fill()
+        cache.invalidate(f"{root}/sub/deeper/part-0.parquet")  # upward
+        assert live() == {"root2", "none"}
+
+        fill()
+        cache.invalidate(f"{root}/subx/")  # sibling of sub, under root
+        assert live() == {"sub", "deep", "root2", "none"}
+
+        fill()
+        cache.invalidate(f"{root}2")
+        assert live() == {"root", "sub", "deep", "none"}
+    finally:
+        cache.clear("probe")
+
+
+def _scratch_table(spark, path: str, n: int = 20) -> None:
+    from pyspark.sql import functions as F
+
+    spark.range(0, n).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("p"), F.lit(1).alias("v")
+    ).write.partitionBy("p").parquet(path)
+
+
+def test_registry_plans_survive_unrelated_writes(spark, sf_dir, tmp_path):
+    """A merge into a scratch table outside a plan's sf_dir keeps the
+    registry plan handle; a write under the sf_dir evicts it."""
+    from pyspark.sql import functions as F
+
+    from vectordb_similarity_search_spark.operators.merge import merge_parquet
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), sf)
+    fn = REGISTRY["r_pricing_summary"].fn
+    plan = fn(spark, sf)
+    upd = spark.range(0, 5).select(
+        F.col("id").alias("k"), F.lit(1).alias("p"), F.lit(7).alias("v")
+    )
+
+    other = str(tmp_path / "scratch")
+    _scratch_table(spark, other)
+    merge_parquet(spark, other, upd, ["k"])
+    assert fn(spark, sf) is plan
+
+    inside = os.path.join(sf, "scratch")
+    _scratch_table(spark, inside)
+    merge_parquet(spark, inside, upd, ["k"])
+    rebuilt = fn(spark, sf)
+    assert rebuilt is not plan
+    assert rebuilt.collect() == plan.collect()
+
+
+def test_partition_swap_crash_leaves_no_entry_over_table(spark, tmp_path, monkeypatch):
+    """A partitioned merge whose SECOND partition swap raises must still
+    invalidate the table's entries (the invalidation runs in a finally
+    after the reconcile)."""
+    from pyspark.sql import functions as F
+
+    from vectordb_similarity_search_spark.operators import merge
+
+    tbl = str(tmp_path / "pt")
+    _scratch_table(spark, tbl)
+    scan = cache.get(spark, "scan", tbl, reads=(tbl,), build=lambda: spark.read.parquet(tbl))
+    assert scan.count() == 20
+    part = f"{tbl}/p=0"
+    cache.get(spark, "index_scan", part, reads=(part,), build=lambda: spark.read.parquet(part))
+
+    calls = []
+
+    def flaky_swap(table_path: str, new_path: str) -> None:
+        # the first swap "lands" without touching the cache, so only the
+        # writer's own invalidation can clear the entries
+        calls.append(table_path)
+        if len(calls) == 2:
+            raise OSError("injected failure in the second partition swap")
+
+    monkeypatch.setattr(merge, "swap_snapshot", flaky_swap)
+    upd = spark.range(0, 4).select(
+        F.col("id").alias("k"), (F.col("id") % 2).alias("p"), F.lit(9).alias("v")
+    )
+    with pytest.raises(OSError, match="second partition swap"):
+        merge.merge_parquet_partitioned(spark, tbl, upd, ["k", "p"], ["p"])
+    assert len(calls) == 2
+    over_table = [
+        k for k, (_, reads) in cache._ENTRIES.items()
+        if any(r == tbl or r.startswith(tbl + "/") for r in reads)
+    ]
+    assert not over_table, over_table

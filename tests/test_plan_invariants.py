@@ -11,7 +11,9 @@ enforced structurally instead of query-by-query:
   bounded scalar/stats frame (single-row totals, top-N rank lists,
   fraction tables) — the explicit whitelist below. A new query landing
   a BNLJ must either justify itself here (with the bounded side named)
-  or restructure.
+  or restructure;
+- no hand-rolled cache outside ``cache.py`` (module ``*_CACHE`` dicts,
+  ``PersistRegistry()`` instances, memo roots under ``plans/``).
 
 One sweep, one failure list — so a regression in any registered plan
 (the sweep iterates the live REGISTRY; counts are derived, never
@@ -19,6 +21,9 @@ hard-coded) names every offender at once.
 """
 
 from __future__ import annotations
+
+import ast
+import os
 
 from vectordb_similarity_search_spark.plans import REGISTRY
 
@@ -275,10 +280,8 @@ def test_registry_no_coarse_group_windows_at_scale(spark, sf_dir):
     scale-killer (the round-7 r_mann_whitney finding, now structural).
     Fixture-size plans legitimately take the plain-window branch — they
     are NOT linted, exactly because the routing exists."""
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import ranking
-    from vectordb_similarity_search_spark.plans.catalog import (
-        clear_plan_cache,
-    )
 
     offenders = []
     orig = ranking.DIMENSION_WINDOW_MAX_BYTES
@@ -286,7 +289,7 @@ def test_registry_no_coarse_group_windows_at_scale(spark, sf_dir):
     # builders are memoized per (session, sf_dir, query); the patched
     # threshold only reaches a FRESH build — clear going in, and clear
     # again on the way out so scale-mode plans don't leak to later tests
-    clear_plan_cache()
+    cache.clear("plan")
     try:
         for name, spec in REGISTRY.items():
             hits = coarse_window_violations(_optimized(spec.fn(spark, sf_dir)))
@@ -294,5 +297,76 @@ def test_registry_no_coarse_group_windows_at_scale(spark, sf_dir):
                 offenders.append(f"{name}: {hits}")
     finally:
         ranking.DIMENSION_WINDOW_MAX_BYTES = orig
-        clear_plan_cache()
+        cache.clear("plan")
+    assert not offenders, offenders
+
+
+# Cache regrowth lint: the session cache, the persisted-frame registry and
+# the memo root live in cache.py only; a new hand-rolled copy elsewhere
+# would bring back its own key recipe and its own staleness bugs.
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = os.path.join(_REPO, "vectordb_similarity_search_spark")
+_CACHE_MODULE = os.path.join(_PKG, "cache.py")
+
+
+def cache_regrowth(tree: ast.Module) -> list[tuple[str, int]]:
+    """``(rule, line)`` for each module-level ``*_CACHE`` dict,
+    ``PersistRegistry()`` instance and ``tempfile.gettempdir()`` call."""
+    hits = []
+    for node in tree.body:
+        targets = (
+            node.targets if isinstance(node, ast.Assign)
+            else [node.target] if isinstance(node, ast.AnnAssign) else []
+        )
+        value = getattr(node, "value", None)
+        is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id in ("dict", "defaultdict", "OrderedDict")
+        )
+        for t in targets:
+            if is_dict and isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                hits.append(("_CACHE dict", node.lineno))
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name == "PersistRegistry":
+            hits.append(("PersistRegistry()", node.lineno))
+        if name == "gettempdir":
+            hits.append(("gettempdir()", node.lineno))
+    return hits
+
+
+def _py_sources() -> list[str]:
+    paths = [os.path.join(_REPO, "bench.py")]
+    for top in (_PKG, os.path.join(_REPO, "scripts")):
+        for d, _, files in os.walk(top):
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return sorted(paths)
+
+
+def test_cache_regrowth_lint_discriminates():
+    """The lint must not pass vacuously: it flags the one allowed
+    registry instance and memo-root call in cache.py, and a re-added
+    module dict."""
+    with open(_CACHE_MODULE) as fh:
+        rules = sorted(r for r, _ in cache_regrowth(ast.parse(fh.read())))
+    assert rules == ["PersistRegistry()", "gettempdir()"], rules
+    src = "_ROW_CACHE: dict[str, int] = {}\n_FIT_CACHE = dict()\nREGISTRY = {}\n"
+    assert [r for r, _ in cache_regrowth(ast.parse(src))] == ["_CACHE dict"] * 2
+
+
+def test_no_cache_regrowth_outside_cache_module():
+    offenders = []
+    for path in _py_sources():
+        if path == _CACHE_MODULE:
+            continue
+        with open(path) as fh:
+            hits = cache_regrowth(ast.parse(fh.read()))
+        in_plans = path.startswith(os.path.join(_PKG, "plans") + os.sep)
+        for rule, line in hits:
+            if rule != "gettempdir()" or in_plans:
+                offenders.append(f"{os.path.relpath(path, _REPO)}:{line}: {rule}")
     assert not offenders, offenders

@@ -331,15 +331,16 @@ def test_persist_registry_bounded_across_rebuilds(spark):
     """Rebuilding the same persisted plan N times must reuse ONE registry
     entry (the (appId, semanticHash) dedupe) — an append-list regrows
     py4j handles per rebuild even though Spark dedupes the cached data."""
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import ranking
 
-    ranking.release_ranking_caches()
+    cache.release()
     df = spark.range(100).selectExpr("id", "id % 7 AS k")
-    before = len(ranking._PERSISTED)
+    before = len(cache.PERSISTED)
     for _ in range(3):
         ranking.global_row_number(df, ["k", "id"], persist=True, buckets=4)
-    assert len(ranking._PERSISTED) == before + 1
-    assert ranking.release_ranking_caches() >= 1
+    assert len(cache.PERSISTED) == before + 1
+    assert cache.release() >= 1
 
 
 @settings(max_examples=5, deadline=None)
@@ -384,7 +385,7 @@ def test_persist_registry_collision_never_aliases(spark):
     wrong cached DataFrame. The shared PersistRegistry confirms bucket
     hits with sameSemantics — simulate a collision by forcing both
     frames into one bucket key."""
-    from vectordb_similarity_search_spark.util import PersistRegistry
+    from vectordb_similarity_search_spark.cache import PersistRegistry
 
     reg = PersistRegistry()
     a = spark.range(10).selectExpr("id AS k")
@@ -418,7 +419,7 @@ def test_persist_registry_discard_removes_one_entry(spark):
     """discard() (the ann serving-loop hook): deregisters + unpersists
     exactly the given frame, leaves other registrations alone, and is a
     safe no-op on frames that were never registered."""
-    from vectordb_similarity_search_spark.util import PersistRegistry
+    from vectordb_similarity_search_spark.cache import PersistRegistry
 
     reg = PersistRegistry()
     a = spark.range(10).selectExpr("id AS k")
@@ -447,12 +448,11 @@ def test_adaptive_probe_interim_rounds_leave_registry(spark, tmp_path):
     appending — the registry stays bounded across serving loops."""
     from pyspark.sql import functions as F
 
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators.ann import (
-        _PERSISTED_SERVE,
         ivf_fit,
         ivf_search_until_k,
         ivf_write_index,
-        release_ann_caches,
     )
 
     emb = spark.createDataFrame(
@@ -463,22 +463,22 @@ def test_adaptive_probe_interim_rounds_leave_registry(spark, tmp_path):
     model = ivf_fit(emb, n_cells=8, seed=3)
     idx = str(tmp_path / "adaptidx")
     ivf_write_index(model, emb, idx)
-    release_ann_caches()
+    cache.release()
     try:
         res, nprobe = ivf_search_until_k(
             spark, idx, model, [0.0, 1.0, 1.0], k=25,
             start_nprobe=1, predicate=F.col("label") == 1,
         )
         assert nprobe > 1  # the filter forces at least one escalation
-        assert len(_PERSISTED_SERVE) == 1  # interim rounds discarded
+        assert len(cache.PERSISTED) == 1  # interim rounds discarded
         res2, nprobe2 = ivf_search_until_k(
             spark, idx, model, [0.0, 1.0, 1.0], k=25,
             start_nprobe=1, predicate=F.col("label") == 1,
         )
         assert nprobe2 == nprobe
-        assert len(_PERSISTED_SERVE) == 1  # reused, not re-appended
+        assert len(cache.PERSISTED) == 1  # reused, not re-appended
     finally:
-        release_ann_caches()
+        cache.release()
 
 
 def _explain_str(df) -> str:
@@ -575,11 +575,9 @@ def test_dimension_global_plans_route_past_threshold(spark, monkeypatch):
     straggler the threshold exists for — the only survivors are 1-row
     scalar aggregates over P partial rows), and the rows are EXACTLY the
     default branch's (round-5 VERDICT #6)."""
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators import ranking
     from vectordb_similarity_search_spark.plans import REGISTRY
-    from vectordb_similarity_search_spark.plans.catalog import (
-        clear_plan_cache,
-    )
 
     sf = "/root/testdata/sf0.001"
     for name in ("w_percentile_rank", "e_gini_users", "r_pareto_revenue"):
@@ -596,9 +594,9 @@ def test_dimension_global_plans_route_past_threshold(spark, monkeypatch):
         # patched threshold only reaches a FRESH build, and the routed
         # build must not be left behind for later tests either
         monkeypatch.setattr(ranking, "DIMENSION_WINDOW_MAX_BYTES", -1)
-        clear_plan_cache()
+        cache.clear("plan")
         routed = fn(spark, sf)
-        clear_plan_cache()
+        cache.clear("plan")
         monkeypatch.setattr(
             ranking, "DIMENSION_WINDOW_MAX_BYTES", 256 << 20
         )

@@ -270,7 +270,7 @@ def _plan_node_names(df) -> list[str]:
 
 def test_embedded_patient_search_scans_cached_store(spark, count_jobs):
     from vectordb_similarity_search_spark.ml.embed import EmbeddingModel, _forward
-    from vectordb_similarity_search_spark.operators.ann import release_ann_caches
+    from vectordb_similarity_search_spark import cache
     from vectordb_similarity_search_spark.operators.cohort import (
         PatientSimilaritySearch,
         zscore_params,
@@ -305,4 +305,4 @@ def test_embedded_patient_search_scans_cached_store(spark, count_jobs):
         _, stats = pss.search_with_stats(query, top_k=10)
         assert "MapInPandas" not in _plan_node_names(stats)
     finally:
-        release_ann_caches()
+        cache.release()

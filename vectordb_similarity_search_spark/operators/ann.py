@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hyperplane_signature
-from ..util import PersistRegistry, evict_other_apps
+from .. import cache
 from .topk import knn
 
 
@@ -192,43 +192,16 @@ def lsh_bucket_topk(
     )
 
 
-# One scan plan per (session, index path): spark.read.parquet runs a
-# listing/footer job per call, so an uncached repeat probe pays a driver
-# job at query BUILD (tests/test_lazy_build.py pins zero). Writers below
-# invalidate the path's entries — a cached plan pins its file listing, so
-# serving it across an append would silently miss the new files.
-_INDEX_SCAN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _index_scan(spark, path: str, schema: str | None = None) -> DataFrame:
-    """Cached scan of ``path``; a known ``schema`` also skips the footer
-    (schema inference) job of a fresh read."""
-    key = (spark.sparkContext.applicationId, path)
-    evict_other_apps(_INDEX_SCAN_CACHE, key[0])
-    df = _INDEX_SCAN_CACHE.get(key)
-    if df is None:
+    """Session-cached scan of ``path`` (the footer job of a fresh read
+    would land at query BUILD); a known ``schema`` also skips the footer
+    job of the first read. Writers below invalidate ``path``."""
+
+    def read():
         reader = spark.read if schema is None else spark.read.schema(schema)
-        df = _INDEX_SCAN_CACHE[key] = reader.parquet(path)
-    return df
+        return reader.parquet(path)
 
-
-def _invalidate_index_scans(path: str) -> None:
-    for key in [k for k in _INDEX_SCAN_CACHE if k[1] == path]:
-        del _INDEX_SCAN_CACHE[key]
-
-
-# Frames ivf_search_until_k hands back persisted (so the caller's collect
-# does not re-run the terminal probe) — the shared app-scoped
-# util.PersistRegistry, like the bm25/dedup/ranking modules: a repeated
-# serving call with the same plan reuses the registered handle instead of
-# appending a new one per call, dead-session entries are swept on insert,
-# and bench/drive teardowns call release_ann_caches().
-_PERSISTED_SERVE = PersistRegistry()
-
-
-def release_ann_caches() -> int:
-    """Unpersist every serving frame this module has cached; returns count."""
-    return _PERSISTED_SERVE.release()
+    return cache.get(spark, "index_scan", path, reads=(path,), build=read)
 
 
 def ivf_write_index(
@@ -246,7 +219,7 @@ def ivf_write_index(
     model.assign(corpus, cell_col).write.partitionBy(cell_col).mode(
         "overwrite"
     ).parquet(path)
-    _invalidate_index_scans(path)
+    cache.invalidate(path)
 
 
 def _tombstone_dir(path: str) -> str:
@@ -307,7 +280,7 @@ def _publish_tombstones(path: str, stage: str) -> None:
             if f.endswith(".parquet"):
                 os.rename(os.path.join(stage, f), os.path.join(tp, f))
         shutil.rmtree(stage)
-    _invalidate_index_scans(tp)
+    cache.invalidate(tp)
 
 
 def _id_frame(spark, ids: Sequence[int], id_col: str) -> DataFrame:
@@ -415,7 +388,7 @@ def ivf_search_until_k(
     including the full-coverage terminal one, runs its count against the
     persisted frame — without the cache the caller's collect would re-run
     the most expensive probe a second time), and it is registered for
-    :func:`release_ann_caches` so bench/drive teardowns can free it;
+    :func:`cache.release` so bench/drive teardowns can free it;
     callers may also unpersist once consumed.
     """
     if start_nprobe < 1:
@@ -423,7 +396,7 @@ def ivf_search_until_k(
     n_cells = len(model.centers)
     nprobe = min(start_nprobe, n_cells)
     while True:
-        res = _PERSISTED_SERVE.persist(ivf_search_index(
+        res = cache.persist(ivf_search_index(
             spark, path, model, query_vec, k,
             nprobe=nprobe, id_col=id_col, cell_col=cell_col,
             metric=metric, predicate=predicate,
@@ -436,7 +409,7 @@ def ivf_search_until_k(
             return res, nprobe
         # insufficient round: unpersist AND deregister, or the registry
         # would grow one dead entry per escalation step
-        _PERSISTED_SERVE.discard(res)
+        cache.discard(res)
         nprobe = min(nprobe * 2, n_cells)
 
 
@@ -545,7 +518,7 @@ def ivf_append(
     model.assign(new_rows, cell_col).write.partitionBy(cell_col).mode(
         "append"
     ).parquet(path)
-    _invalidate_index_scans(path)
+    cache.invalidate(path)
 
 
 def ivf_compact(
@@ -608,8 +581,6 @@ def ivf_compact(
         shutil.rmtree(tmp, ignore_errors=True)
         return False
     swap_snapshot(path, tmp)
-    _invalidate_index_scans(path)
-    _invalidate_index_scans(_tombstone_dir(path))
     return True
 
 
@@ -720,8 +691,6 @@ def ivf_maintain(
         "overwrite"
     ).parquet(tmp)
     swap_snapshot(path, tmp)
-    _invalidate_index_scans(path)
-    _invalidate_index_scans(_tombstone_dir(path))
     return new_model, {**report, "action": "recluster"}
 
 
@@ -764,7 +733,7 @@ def ivfpq_write_index(
         to_encode, vec_col=ivf_model.vec_col, code_col="pq_code"
     ).join(assigned.select("vec_id", ivf_model.vec_col), "vec_id")
     encoded.write.partitionBy(cell_col).mode("overwrite").parquet(path)
-    _invalidate_index_scans(path)
+    cache.invalidate(path)
 
 
 def ivfpq_search_index(

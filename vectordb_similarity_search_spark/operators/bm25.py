@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import n_tokens, tokens
-from ..util import PersistRegistry
+from .. import cache
 
 
 def bm25_part(tf, df, dl, n, avgdl, k1: float = 1.2, b: float = 0.75):
@@ -279,24 +279,6 @@ def alpha_fuse(
     )
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist + register app-scoped (round-4 ADVICE: nothing ever called
-    release_bm25_caches in long-lived sessions, so repeated PRF plan
-    builds accumulated cached frames for the process lifetime). Backed by
-    the shared util.PersistRegistry — 32-bit semanticHash bucket +
-    sameSemantics hit confirmation, so a hash collision can never hand
-    back a semantically different frame (round-5 ADVICE)."""
-    return _PERSISTED.persist(df)
-
-
-def release_bm25_caches() -> int:
-    """Unpersist every DataFrame this module has cached; returns count."""
-    return _PERSISTED.release()
-
-
-_PERSISTED = PersistRegistry()
-
-
 def _dynamic_topk_from_toks(
     toks: DataFrame,
     qterms: DataFrame,
@@ -420,7 +402,7 @@ def prf_expand_topk(
 
     Scale shape: the corpus is tokenized ONCE into a persisted
     (id, _toks, _len) frame shared by all three stages (seed scoring,
-    expansion mining, re-rank) — release via :func:`release_bm25_caches`;
+    expansion mining, re-rank) — release via :func:`cache.release`;
     the fb_k ids broadcast into the distinct-token stream; expansion
     ranking happens on a vocabulary-sized frame. Everything is lazy —
     zero jobs at build time."""
@@ -428,7 +410,7 @@ def prf_expand_topk(
         raise ValueError("fb_k must be > 0 and n_expand >= 0")
     if not seed_terms:
         raise ValueError("seed_terms must be non-empty")
-    toks = _persist(
+    toks = cache.persist(
         docs.select(
             F.col(id_col),
             tokens(text_col).alias("_toks"),

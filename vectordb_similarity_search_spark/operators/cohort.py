@@ -15,8 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..sources.synthetic import FEATURES
-from .ann import _PERSISTED_SERVE
 from .topk import knn
 
 
@@ -115,8 +115,8 @@ class PatientSimilaritySearch:
             # search materializes it), so query plans scan the cached
             # embeddings instead of re-running the mapInPandas MLP over every
             # patient per action — search_with_stats collects two. Freed by
-            # operators.ann.release_ann_caches().
-            self.store = _PERSISTED_SERVE.persist(
+            # cache.release().
+            self.store = cache.persist(
                 embed.transform(self.store, "features", "embedding")
             )
 

@@ -155,9 +155,6 @@ def compact_parquet(
         history_preserving_swap(table_path, tmp)
     else:
         swap_snapshot(table_path, tmp)
-    from .merge import _invalidate_foreign_scan_caches
-
-    _invalidate_foreign_scan_caches(table_path)
     if zone_cols or sort_cols:
         # the old sidecar died with the old snapshot; re-commit stats
         # for the same columns (plus any new clustering columns)
@@ -281,9 +278,6 @@ def compact_parquet_partitioned(
             f"compaction output dirs {sorted(tmp_dirs)} != planned "
             f"{sorted(plan)}; aborting before any swap (table unchanged)"
         )
-    from .merge import _invalidate_foreign_scan_caches
-
-    _invalidate_foreign_scan_caches(table_path)
     _reconcile_partition_dirs(table_path, tmp, set(plan))
     for rel in plan:
         after += len(_data_files(os.path.join(table_path, rel)))

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import cache
 from ..functions.text import char_shingles, tokens
 from ..functions.hashing import (
     hamming_distance,
@@ -27,30 +28,7 @@ from ..functions.hashing import (
     simhash_block_keys,
 )
 from ..functions.vector import cosine_similarity
-from ..util import PersistRegistry, widen
-
-
-# Operators below persist intermediate DataFrames (signatures, shingle
-# arrays) consumed by several plan branches. Registered app-scoped and
-# deduped by (applicationId, semanticHash) — a same-session rebuild of a
-# semantically-equal plan reuses the registered handle, so the registry
-# stays bounded by DISTINCT cached plans (the bm25/ranking pattern;
-# Spark's CacheManager dedupes the data either way, but an append-list
-# regrows Python/py4j handles per rebuild). release_dedup_caches() drops
-# everything.
-_PERSISTED = PersistRegistry()
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist + register app-scoped via the shared util.PersistRegistry
-    (32-bit semanticHash bucket + sameSemantics hit confirmation — a hash
-    collision can never hand back a semantically different frame)."""
-    return _PERSISTED.persist(df)
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every DataFrame this module has cached; returns count."""
-    return _PERSISTED.release()
+from ..util import widen
 
 
 def _shingle_set(text: str, n: int, mode: str) -> set:
@@ -218,7 +196,7 @@ def minhash_lsh_pairs(
         # Persisted: consumed by the band keys AND both sides of the
         # signature screen below — without persist each branch re-runs the
         # scan + Python signature pass.
-        sig_df = _persist(minhash_signatures_batch(
+        sig_df = cache.persist(minhash_signatures_batch(
             df, id_col, text_col, shingle_n=shingle_n, n_hashes=n_hashes,
             shingle_mode=shingle_mode,
         ))
@@ -230,7 +208,7 @@ def minhash_lsh_pairs(
         # The shingle branch feeds the signature build and both verify join
         # sides; persist it or Spark recomputes the scan + shingling per
         # branch.
-        sh = _persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
+        sh = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), char_shingles(text_col, shingle_n).alias("shingles")
         ))
         base = sh.select(
@@ -302,13 +280,13 @@ def minhash_lsh_pairs(
 
         def verify_pairs(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
             k = shingle_n
-            cache: dict = {}  # doc id → shingle set (docs recur across pairs)
+            shingles: dict = {}  # doc id → shingle set (docs recur across pairs)
 
             def sset(doc_id, text):
-                s = cache.get(doc_id)
+                s = shingles.get(doc_id)
                 if s is None:
                     s = _shingle_set(text, k, shingle_mode)
-                    cache[doc_id] = s
+                    shingles[doc_id] = s
                 return s
 
             for pdf in batches:
@@ -325,7 +303,7 @@ def minhash_lsh_pairs(
 
     # Pure-JVM verify over the persisted shingle branch.
     if sh is None:
-        sh = _persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
+        sh = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), char_shingles(text_col, shingle_n).alias("shingles")
         ))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sa"))
@@ -419,9 +397,9 @@ def simhash_pairs(
     # three consumers (band keys + both verify sides) — persist or the
     # 64-fold simhash recomputes per branch
     if impl == "arrow":
-        sb = _persist(simhash_bits_batch(df, id_col, text_col, n_bits=n_bits))
+        sb = cache.persist(simhash_bits_batch(df, id_col, text_col, n_bits=n_bits))
     else:
-        sb = _persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
+        sb = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
             id_col, simhash_bits(tokens(text_col), n_bits).alias("bits")
         ))
     keyed = sb.select(
@@ -654,7 +632,7 @@ def dedup_clusters(
             "(a cluster's diameter exceeds max_iter); raise max_iter"
         )
     # The returned frame is localCheckpoint-backed, NOT cached:
-    # unpersist()/release_dedup_caches() cannot free checkpoint blocks
+    # unpersist()/cache.release() cannot free checkpoint blocks
     # (see operators/graph.py) — Spark's ContextCleaner reclaims them
     # once the frame is unreferenced.
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
@@ -915,7 +893,7 @@ def minhash_lsh_pairs_incremental(
     ``mode="append"`` after accepting the batch so the next batch sees it.
     The new batch's signatures are cached for the duration of the plan
     (they feed three passes); long-lived ingest loops should call
-    :func:`release_dedup_caches` between batches, like the batch operator.
+    :func:`cache.release` between batches, like the batch operator.
     """
     import json
     from collections.abc import Iterator as _Iter
@@ -932,12 +910,12 @@ def minhash_lsh_pairs_incremental(
     bands = meta["bands"]
     rows = n_hashes // bands
 
-    new_sigs = _persist(minhash_signatures_batch(
+    new_sigs = cache.persist(minhash_signatures_batch(
         new_docs, id_col, text_col,
         shingle_n=shingle_n, n_hashes=n_hashes, seed=seed,
         shingle_mode=shingle_mode,
     ))
-    new_keyed = _persist(new_sigs.select(
+    new_keyed = cache.persist(new_sigs.select(
         F.col(id_col).alias("id_new"),
         F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk"),
     ).select("id_new", F.col("bk.key").alias("key")))
@@ -992,7 +970,7 @@ def minhash_lsh_pairs_incremental(
     ) / F.lit(float(n_hashes))
     # persisted: consumed twice below (corpus text fetch + pair assembly)
     # — without it each consumer re-runs the store scans
-    cand = _persist(cand.filter(
+    cand = cache.persist(cand.filter(
         F.col("_sig_corpus").isNull() | (est >= screen)
     ).select("id_new", "id_corpus"))
 
@@ -1021,12 +999,12 @@ def minhash_lsh_pairs_incremental(
     )
 
     def verify_pairs(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
-        cache: dict = {}
+        shingles: dict = {}
 
         def sset(key, text):
-            s = cache.get(key)
+            s = shingles.get(key)
             if s is None:
-                s = cache[key] = _shingle_set(text, shingle_n, shingle_mode)
+                s = shingles[key] = _shingle_set(text, shingle_n, shingle_mode)
             return s
 
         for pdf in batches:
@@ -1376,13 +1354,13 @@ def banding_curve(
     """
     spark = df.sparkSession
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    sig = _persist(
+    sig = cache.persist(
         minhash_signatures_batch(base, "id", "text", shingle_n=shingle_n,
                                  n_hashes=n_hashes)
     )
 
     # ---- exact ground truth via shingle inverted index -------------------
-    sh = _persist(
+    sh = cache.persist(
         widen(base).select("id", char_shingles("text", shingle_n).alias("sh"))
     )
     sizes = sh.select(F.col("id"), F.size("sh").alias("nsh"))
@@ -1405,7 +1383,7 @@ def banding_curve(
     # n_true total) would otherwise re-evaluate the whole exact-truth
     # subtree — whose pair explode is quadratic in hot-shingle df, the
     # dominant cost of the advisor (measured ~2x the warm wall at sf0.1)
-    truth = _persist(
+    truth = cache.persist(
         inter_pairs.join(
             sizes.select(F.col("id").alias("id_a"), F.col("nsh").alias("na")),
             "id_a",
@@ -1546,7 +1524,7 @@ def _hashed_distinct_sets(
     frame (referenced by the token stream AND both verify sides — persist
     keeps the caller's set-construction expression, often a heavy n-gram
     chain, from evaluating three times; lazy, released by
-    release_dedup_caches()) plus its exploded 64-bit-hashed token stream.
+    cache.release()) plus its exploded 64-bit-hashed token stream.
 
     Hashing is the d_substring_spans discipline — exchanges move 8-byte
     keys, never n-gram strings. Exactness survives: a collision merges two
@@ -1554,7 +1532,7 @@ def _hashed_distinct_sets(
     Jaccard/containment above the true value, so prefix filtering over the
     quotient alphabet yields a candidate SUPERSET — and the verify joins
     always test the real string sets."""
-    base = _persist(
+    base = cache.persist(
         df.select(
             F.col(id_col).alias("_id"),
             F.array_distinct(F.col(set_col)).alias("_set"),

@@ -52,8 +52,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.text import n_tokens, tokens
-from .ann import _index_scan, _invalidate_index_scans
+from .ann import _index_scan
 from .bm25 import bm25_score_expr
 
 
@@ -121,8 +122,7 @@ def text_index_write(
             f,
         )
     os.replace(tmp, f"{root}/_meta.json")
-    for sub in ("postings", "_stats/terms", "_stats/meta", "_docs"):
-        _invalidate_index_scans(f"{root}/{sub}")
+    cache.invalidate(root)
 
 
 def _postings_frame(
@@ -304,8 +304,7 @@ def text_index_append(new_docs: DataFrame, path: str) -> int:
         ).coalesce(1).write.mode("overwrite").parquet(tmp_meta)
         swap_snapshot(f"{root}/_stats/meta", tmp_meta)
 
-        for sub in ("postings", "_stats/terms", "_stats/meta", "_docs"):
-            _invalidate_index_scans(f"{root}/{sub}")
+        cache.invalidate(root)
         os.remove(pending)  # marker LAST: the append is committed
         return n_new
     finally:

@@ -30,22 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..util import restore_snapshot, swap_snapshot
-
-
-def _invalidate_foreign_scan_caches(path: str) -> None:
-    """Any table this writer rewrites may also be probed through the ANN
-    index-scan cache (operators/ann), the streaming ledger-audit scan
-    cache (streaming/audit), or a memoized registry plan — a cached plan
-    pins the old file listing and would read deleted files after the
-    rewrite. One helper does all three (util.invalidate_snapshot_caches);
-    this is the writer-side hook for the PARTITIONED rewrite paths, which
-    rename individual partition dirs and never go through swap_snapshot
-    (round-10 review finding — swap_snapshot invalidates on its own, so
-    the swap paths calling both is a harmless idempotent overlap)."""
-    from ..util import invalidate_snapshot_caches
-
-    invalidate_snapshot_caches(path)
 
 
 # Table-level schema sidecar (partitioned evolution). A partitioned
@@ -169,7 +155,6 @@ def merge_parquet(
         archive_swap(table_path, tmp, retain=retain_history)
     else:
         swap_snapshot(table_path, tmp)
-    _invalidate_foreign_scan_caches(table_path)
 
 
 def _evolve_target(
@@ -585,11 +570,7 @@ def merge_parquet_partitioned(
         # (partition columns ride at their read positions) BEFORE any dir
         # carries mixed footers — see the crash-honesty note above
         _write_schema_sidecar(table_path, full.schema)
-    n = _reconcile_partition_dirs(table_path, tmp_root, existing)
-    # invalidate AFTER the partition-dir renames land — a plan rebuilt
-    # between an early eviction and the renames would pin the old listing
-    _invalidate_foreign_scan_caches(table_path)
-    return n
+    return _reconcile_partition_dirs(table_path, tmp_root, existing)
 
 
 def _validate_pruned_partitioning(
@@ -698,21 +679,27 @@ def _reconcile_partition_dirs(
     swap (recoverable park-and-rename), brand-new dirs move in, touched
     dirs with no output rows are removed. Sequential, so only
     per-partition (not cross-partition) atomicity — see the public
-    functions' docstrings."""
+    functions' docstrings. The table's cache entries are invalidated
+    after the renames land (a plan rebuilt between an early eviction and
+    the renames would pin the old listing), and also when one of them
+    raises half-way."""
     import os
 
     root = os.path.abspath(table_path)
     tmp_names = _partition_dirs(tmp_root)
-    for name in sorted(tmp_names & existing):  # rewritten partitions
-        swap_snapshot(os.path.join(root, name), os.path.join(tmp_root, name))
-    for name in sorted(tmp_names - existing):  # brand-new partitions
-        dst = os.path.join(root, name)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(os.path.join(tmp_root, name), dst)
-    for name in sorted(existing - tmp_names):  # fully-deleted partitions
-        parked = os.path.join(root, name) + f"__old_{uuid.uuid4().hex[:8]}"
-        os.rename(os.path.join(root, name), parked)
-        shutil.rmtree(parked)
+    try:
+        for name in sorted(tmp_names & existing):  # rewritten partitions
+            swap_snapshot(os.path.join(root, name), os.path.join(tmp_root, name))
+        for name in sorted(tmp_names - existing):  # brand-new partitions
+            dst = os.path.join(root, name)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.rename(os.path.join(tmp_root, name), dst)
+        for name in sorted(existing - tmp_names):  # fully-deleted partitions
+            parked = os.path.join(root, name) + f"__old_{uuid.uuid4().hex[:8]}"
+            os.rename(os.path.join(root, name), parked)
+            shutil.rmtree(parked)
+    finally:
+        cache.invalidate(table_path)
     shutil.rmtree(tmp_root, ignore_errors=True)
     return len(tmp_names | existing)
 
@@ -772,6 +759,4 @@ def scd2_apply_partitioned(
     tmp_root = f"{table_path.rstrip('/')}__pscd2_{uuid.uuid4().hex[:8]}"
     snapshot.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp_root)
     _raise_if_stale(obs, tmp_root)
-    n = _reconcile_partition_dirs(table_path, tmp_root, existing)
-    _invalidate_foreign_scan_caches(table_path)
-    return n
+    return _reconcile_partition_dirs(table_path, tmp_root, existing)

@@ -516,10 +516,11 @@ def phash_neardup_pairs(
     documents."""
     from pyspark.sql import functions as FF
 
+    from .. import cache
     from ..functions.hashing import hamming_distance, simhash_block_keys
-    from .dedup import _candidate_pairs, _persist
+    from .dedup import _candidate_pairs
 
-    hashed = _persist(phash_bits(media).select("media_id", "bits"))
+    hashed = cache.persist(phash_bits(media).select("media_id", "bits"))
     keyed = hashed.select(
         "media_id",
         FF.explode(

@@ -36,38 +36,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..util import PersistRegistry, evict_other_apps
-
-# Per-session memo for the planning artifacts (quantile bounds,
-# cumulative bucket offsets, total row count) keyed by (applicationId,
-# caller key): the
-# SECOND build of a rank-backed catalog query must run zero jobs (the
-# tests/test_lazy_build.py contract shared with _query_vec and the model
-# caches). Only used when the caller passes ``memo_key`` — ad-hoc frames
-# have no stable identity to key on.
-_PLAN_STATS_CACHE: dict[tuple, tuple[list, dict[int, int], int]] = {}
-
-# App-scoped registry of frames persisted via persist=True (the bm25
-# _PERSISTED pattern): keyed by (applicationId, semanticHash) so rebuilds
-# reuse the registered handle, and release_ranking_caches() gives bench/
-# drive teardowns a hook (cache pressure before write benches).
-_PERSISTED = PersistRegistry()
-
-
-def _register_persist(df: DataFrame) -> DataFrame:
-    """Persist + register app-scoped via the shared util.PersistRegistry
-    (32-bit semanticHash bucket + sameSemantics hit confirmation — a hash
-    collision can never hand back a semantically different frame)."""
-    return _PERSISTED.persist(df)
-
-
-def release_ranking_caches() -> int:
-    """Unpersist every frame this module has cached; returns count."""
-    return _PERSISTED.release()
+from .. import cache
 
 
 def persist_dimension_frame(df: DataFrame) -> DataFrame:
-    """Persist (app-scoped, released by :func:`release_ranking_caches`) a
+    """Persist (app-scoped, released by :func:`cache.release`) a
     dimension aggregate that a ROUTED dimension-global plan is about to
     consume several times. The bucketed machinery makes multiple passes
     (rank quantiles, bucket counts, cumsum quantiles/sums, the final plan,
@@ -76,7 +49,7 @@ def persist_dimension_frame(df: DataFrame) -> DataFrame:
     fires when that subtree is HUGE. Spark's CacheManager matches any
     semantically-equal subplan, so every consumer built over the same
     aggregate hits the one cache."""
-    return _register_persist(df)
+    return cache.persist(df)
 
 
 def _bucket_expr(key: Column, bounds: list, *, descending: bool) -> Column:
@@ -129,8 +102,8 @@ def global_row_number(
     stays session-lived like the other per-session memos. Correctness
     never depends on it: bucket assignment is a pure function of the row.
 
-    ``memo_key``: stable identity of the input (e.g. ``(sf_dir,)``) —
-    when given, the planning artifacts (bounds, offsets, total count)
+    ``memo_key``: stable identity of the input whose first element is
+    the path it reads (e.g. ``(sf_dir,)``) — when given, the planning artifacts (bounds, offsets, total count)
     memoize per session so a REBUILD of the same plan runs zero driver
     jobs (the lazy-build contract catalog queries follow). Callers
     mutating the underlying data between builds must not pass it.
@@ -166,7 +139,7 @@ def _global_rank(
     if len(desc) != len(keys):
         raise ValueError("descending must match keys length")
     if persist:
-        df = _register_persist(df)
+        df = cache.persist(df)
 
     k0 = F.col(keys[0])
 
@@ -181,14 +154,7 @@ def _global_rank(
         null_bucket = F.lit(len(bounds)) if desc[0] else F.lit(-1)
         return F.when(k0.isNull(), null_bucket).otherwise(nonnull)
 
-    cache_key = None
-    if memo_key is not None:
-        app = df.sparkSession.sparkContext.applicationId
-        cache_key = (app, tuple(keys), tuple(desc), buckets, *memo_key)
-        evict_other_apps(_PLAN_STATS_CACHE, app)
-    if cache_key is not None and cache_key in _PLAN_STATS_CACHE:
-        bounds, offsets, total = _PLAN_STATS_CACHE[cache_key]
-    else:
+    def plan_stats() -> tuple[list, dict[int, int], int]:
         fracs = [i / buckets for i in range(1, buckets)]
         row = df.select(
             F.percentile_approx(keys[0], fracs, 10_000).alias("q")
@@ -210,9 +176,19 @@ def _global_rank(
         for b in sorted(counts):
             offsets[b] = acc
             acc += counts[b]
-        total = acc
-        if cache_key is not None:
-            _PLAN_STATS_CACHE[cache_key] = (bounds, offsets, total)
+        return bounds, offsets, acc
+
+    # the SECOND build of a rank-backed catalog query must run zero jobs
+    # (tests/test_lazy_build.py), so a caller-keyed input memoizes its
+    # planning artifacts for the session; ad-hoc frames have no stable
+    # identity to key on
+    if memo_key is None:
+        bounds, offsets, total = plan_stats()
+    else:
+        bounds, offsets, total = cache.get(
+            df.sparkSession, "plan_stats", tuple(keys), tuple(desc), buckets, *memo_key,
+            reads=memo_key[:1], build=plan_stats,
+        )
 
     bucketed = df.withColumn("_grn_bucket", _bucket_of(bounds))
     if offsets:

@@ -31,6 +31,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import cache
+
 HISTORY_DIR = "_history"
 _V_RE = re.compile(r"v(\d{6})$")
 
@@ -135,19 +137,19 @@ def archive_swap(
         raise ValueError(f"retain must be >= 1, got {retain}")
     recover_history(table_path)
     park = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(table_path, park)
-    os.rename(new_path, table_path)
-    _hoist_history(table_path, park)
-    versions = list_versions(table_path)
-    nxt = (versions[-1] + 1) if versions else 1
-    _archive_park(table_path, park, nxt)
-    for v in list_versions(table_path)[:-retain]:
-        shutil.rmtree(
-            os.path.join(_hist(table_path), f"v{v:06d}"), ignore_errors=True
-        )
-    from ..util import invalidate_snapshot_caches
-
-    invalidate_snapshot_caches(table_path)
+    try:
+        os.rename(table_path, park)
+        os.rename(new_path, table_path)
+        _hoist_history(table_path, park)
+        versions = list_versions(table_path)
+        nxt = (versions[-1] + 1) if versions else 1
+        _archive_park(table_path, park, nxt)
+        for v in list_versions(table_path)[:-retain]:
+            shutil.rmtree(
+                os.path.join(_hist(table_path), f"v{v:06d}"), ignore_errors=True
+            )
+    finally:
+        cache.invalidate(table_path)
     return nxt
 
 
@@ -168,13 +170,13 @@ def history_preserving_swap(table_path: str, new_path: str) -> None:
     import uuid
 
     park = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(table_path, park)
-    os.rename(new_path, table_path)
-    _hoist_history(table_path, park)
-    shutil.rmtree(park)
-    from ..util import invalidate_snapshot_caches
-
-    invalidate_snapshot_caches(table_path)
+    try:
+        os.rename(table_path, park)
+        os.rename(new_path, table_path)
+        _hoist_history(table_path, park)
+        shutil.rmtree(park)
+    finally:
+        cache.invalidate(table_path)
 
 
 def vacuum_versions(table_path: str, *, keep_last: int) -> list[int]:

@@ -22,9 +22,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import cache
 from ..session import ensure_package_on_executors
 from ..sources.tables import load_table
-from ..util import evict_other_apps
 
 # Expected-output parquet fixtures (tests/fixtures/): oracles for queries
 # whose results are deterministic but not SQL-expressible (seeded
@@ -75,40 +75,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# One logical plan per (session, sf_dir, query) — the registry-wide form of
-# the _SCAN_CACHE/_MODEL_CACHE discipline (sources/tables.py). A registry
-# builder is a pure function of (spark, sf_dir): rebuilding it returns a
-# semantically identical IMMUTABLE lazy plan, but pays the full py4j
-# expression-tree construction again (measured 0.3-1.3 s per build for the
-# HOF/literal-heavy queries — round-9 optimization, guide §1.2: per-task
-# work includes the driver's own per-run work). Caching the plan is NOT
-# result caching: every action on the handle re-executes the whole
-# computation from the parquet inputs. Keyed by applicationId so a new
-# session never sees a dead session's plans.
-#
-# Staleness contract (round-10, ADVICE):
-# - PATHS: registry builders read only immutable inputs — the read-only
-#   sf_dir fixtures and DONE-marked memoized ledger dirs. Any writer that
-#   swaps a table directory clears this cache wholesale
-#   (util.invalidate_snapshot_caches, pinned by
-#   tests/test_plan_cache.py::test_cached_reader_sees_post_merge_data).
-# - KNOBS: a builder is pure in (spark, sf_dir) GIVEN fixed module state.
-#   The one runtime knob that reaches plan construction today is
-#   ranking.DIMENSION_WINDOW_MAX_BYTES; anything that patches such a knob
-#   MUST call clear_plan_cache() before and after (the scale-mode lint in
-#   tests/test_plan_invariants.py does). A future knob should either do
-#   the same or fold its value into this key.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_plan_cache() -> None:
-    """Drop every memoized plan handle. A builder is pure in (spark,
-    sf_dir) GIVEN fixed module state; a test that patches routing state
-    (e.g. ranking.DIMENSION_WINDOW_MAX_BYTES) and rebuilds registry
-    plans must clear first — and clear again after restoring — or it
-    reads plans built under the other branch."""
-    _PLAN_CACHE.clear()
-
 
 def query(name: str, oracle: str | None = None) -> Callable:
     """Decorator registering a query builder under ``name``."""
@@ -123,12 +89,12 @@ def query(name: str, oracle: str | None = None) -> Callable:
             # cwd; ship the package so worker-side closure unpickling can
             # import it (see session.ensure_package_on_executors).
             ensure_package_on_executors(spark)
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            evict_other_apps(_PLAN_CACHE, key[0])
-            cached = _PLAN_CACHE.get(key)
-            if cached is None:
-                cached = _PLAN_CACHE[key] = fn(spark, sf_dir)
-            return cached
+            # one plan handle per (session, sf_dir, query): a builder is a
+            # pure function of both, and rebuilding pays 0.3-1.3 s of py4j
+            # expression construction (staleness contract in cache.py)
+            return cache.get(
+                spark, "plan", sf_dir, name, reads=(sf_dir,), build=lambda: fn(spark, sf_dir)
+            )
 
         REGISTRY[name] = QuerySpec(name, wrapped, oracle, (fn.__doc__ or "").strip())
         return fn

@@ -8,16 +8,16 @@ a direct SQL twin.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..operators.ann import (
     IvfModel,
+    _index_scan,
     ivf_fit,
     ivf_search_index,
     ivf_search_index_batch,
@@ -72,41 +72,30 @@ def _ivf_index_for(
     Index BUILD (iterative k-means + cell-partitioned parquet write) is an
     offline job, not query work — running it inside every search would put
     minutes of training on the 100 TB query path. Here the built index is
-    cached per (sf_dir, n_cells, seed) under the system tmp dir: first call
-    builds and writes, every later call (or process) reads centroids from
-    disk and probes the written, partition-pruned store.
-
-    Write order makes the cache crash-safe: the centroids file is written
-    (atomic rename) only after the parquet index commits, so a half-built
-    index is never probed.
+    memoized per (sources, n_cells, seed, code) under the temp root
+    (cache.memo_dir): first call builds and writes, every later call (or
+    process) reads centroids from disk and probes the written,
+    partition-pruned store.
     """
-    # Key includes the source file's (mtime, size): regenerated fixture
-    # data invalidates the cached index instead of being served stale.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{n_cells}|{seed}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"vss_ivf_{key}")
-    centers_path = os.path.join(base, "centers.npy")
-    index_path = os.path.join(base, "index")
-    if os.path.exists(centers_path):
-        return IvfModel(np.load(centers_path), "embedding"), index_path
-    emb = t(spark, sf_dir, "embeddings")
     committed = _committed_centers_path(sf_dir, n_cells, seed)
+    sources = [os.path.join(sf_dir, "embeddings.parquet")]
     if os.path.exists(committed):
-        # prefer the committed centers fixture: guarantees the cell
-        # assignment matches the committed expected-output fixtures even
-        # if a future Spark/MLlib version fits differently
-        model = IvfModel(np.load(committed), "embedding")
-    else:
-        model = ivf_fit(emb, n_cells=n_cells, seed=seed)
-    ivf_write_index(model, emb.filter(F.col("vec_id") != 0), index_path)
-    os.makedirs(base, exist_ok=True)
-    tmp = centers_path + ".tmp.npy"
-    np.save(tmp, model.centers)
-    os.replace(tmp, centers_path)
-    return model, index_path
+        sources.append(committed)
+
+    def build(base: str) -> None:
+        emb = t(spark, sf_dir, "embeddings")
+        if os.path.exists(committed):
+            # prefer the committed centers fixture: guarantees the cell
+            # assignment matches the committed expected-output fixtures
+            # even if a future Spark/MLlib version fits differently
+            model = IvfModel(np.load(committed), "embedding")
+        else:
+            model = ivf_fit(emb, n_cells=n_cells, seed=seed)
+        ivf_write_index(model, emb.filter(F.col("vec_id") != 0), f"{base}/index")
+        np.save(f"{base}/centers.npy", model.centers)
+
+    base = cache.memo_dir("ivf", sources, n_cells, seed, build=build)
+    return IvfModel(np.load(f"{base}/centers.npy"), "embedding"), f"{base}/index"
 
 
 @query(
@@ -166,18 +155,16 @@ def d_cross_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cross_neardup_flags
 
     emb = t(spark, sf_dir, "embeddings")
-    key = _model_key(spark, sf_dir, "decontam_flags")
-    if key not in _MODEL_CACHE:
-        # the operator collects the (tiny) eval side into its broadcast
-        # matrix — a model-parameter build, so the LAZY flags frame is
-        # memoized per session like the other model builds (second build
-        # is zero-job, tests/test_lazy_build.py)
-        _MODEL_CACHE[key] = cross_neardup_flags(
-            emb.filter(F.col("vec_id") >= 25),
-            emb.filter(F.col("vec_id") < 25),
-            0.32,
-        )
-    return _MODEL_CACHE[key].select(
+    # the operator collects the (tiny) eval side into its broadcast
+    # matrix — a model-parameter build, so the LAZY flags frame is
+    # memoized per session like the other model builds (second build
+    # is zero-job, tests/test_lazy_build.py)
+    flags = _model(spark, sf_dir, "decontam_flags", lambda: cross_neardup_flags(
+        emb.filter(F.col("vec_id") >= 25),
+        emb.filter(F.col("vec_id") < 25),
+        0.32,
+    ))
+    return flags.select(
         "vec_id", "eval_id", F.round("score", 6).alias("score")
     )
 
@@ -307,12 +294,9 @@ def _zparams(spark: SparkSession, pts, tag: str) -> dict:
     eager aggregate job, a model-build cost that repeat query builds on the
     same seeded corpus must not re-pay (round-4 close-out of the
     `_query_vec pays a job per build` notes item)."""
-    key = _model_key(spark, "zparams", tag)
-    if key not in _MODEL_CACHE:
-        from ..operators.cohort import zscore_params
+    from ..operators.cohort import zscore_params
 
-        _MODEL_CACHE[key] = zscore_params(pts)
-    return _MODEL_CACHE[key]
+    return _model(spark, None, ("zparams", tag), lambda: zscore_params(pts))
 
 
 @query("m_embed_knn", oracle=_expected_oracle("m_embed_knn"))
@@ -342,7 +326,7 @@ def m_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m_embed_knn_bn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned-embedding search through the inference-mode BatchNorm model
     (reference :29-37 eval() family: Linear→ReLU→[Dropout=identity]→BN with
-    running stats): BN statistics are fit once per process over the corpus
+    running stats): BN statistics are fit once per session over the corpus
     features (deterministic population stats, ml/embed.fit_batchnorm_stats)
     and cached — stat fitting is model build, not query work. Oracle:
     precomputed expected-output parquet (sf-independent)."""
@@ -352,34 +336,24 @@ def m_embed_knn_bn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.cohort import PatientSimilaritySearch
 
     pts = _embed_patients(spark)
-    if "bn_model" not in _MODEL_CACHE:
-        feats_engine = PatientSimilaritySearch(
-            pts, params=_zparams(spark, pts, 'e433')
-        )
-        _MODEL_CACHE["bn_model"] = EmbeddingModel.init(42).with_batchnorm(
-            feats_engine.store, "features"
-        )
-    engine = PatientSimilaritySearch(
-        pts, embed=_MODEL_CACHE["bn_model"], params=_zparams(spark, pts, 'e433')
-    )
+    params = _zparams(spark, pts, 'e433')
+    bn_model = _model(spark, None, "bn_model", lambda: EmbeddingModel.init(
+        42
+    ).with_batchnorm(PatientSimilaritySearch(pts, params=params).store, "features"))
+    engine = PatientSimilaritySearch(pts, embed=bn_model, params=params)
     hits = engine.search({"age": 48, "meld_score": 31, "bilirubin": 12.0}, top_k=10)
     return hits.select(
         "patient_id", "hospital", FF.round("score", 6).alias("score")
     )
 
 
-_MODEL_CACHE: dict = {}
-
-
-def _model_key(spark, *rest):
-    """App-scoped cache key; sweeps entries of stopped sessions on the
-    way (string-keyed entries — session-independent numpy models — are
-    untouched by the sweep)."""
-    from ..util import evict_other_apps
-
-    app = spark.sparkContext.applicationId
-    evict_other_apps(_MODEL_CACHE, app)
-    return (app, *rest)
+def _model(spark, sf_dir: str | None, name, build):
+    """A fitted model or query parameter memoized for the session: model
+    builds run jobs, and a rebuilt query must run none
+    (tests/test_lazy_build.py). Recorded as reading ``sf_dir``."""
+    return cache.get(
+        spark, "model", sf_dir, name, reads=(sf_dir,) if sf_dir else (), build=build
+    )
 
 
 @query(
@@ -445,18 +419,16 @@ def v_ivf_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_search.py:613-634), fetched once per session. Oracle:
     expected-output parquet (committed-centers fixture pins the cell
     assignment; within-cell scoring is the exact JVM fold)."""
-    key = _model_key(spark, sf_dir, "qbatch100")
-    if key not in _MODEL_CACHE:
-        emb = t(spark, sf_dir, "embeddings")
-        _MODEL_CACHE[key] = [
-            (r["vec_id"], list(r["embedding"]))
-            for r in emb.filter(F.col("vec_id") < 100)
-            .select("vec_id", "embedding")
-            .collect()
-        ]
+    emb = t(spark, sf_dir, "embeddings")
+    queries = _model(spark, sf_dir, "qbatch100", lambda: [
+        (r["vec_id"], list(r["embedding"]))
+        for r in emb.filter(F.col("vec_id") < 100)
+        .select("vec_id", "embedding")
+        .collect()
+    ])
     model, index_path = _ivf_index_for(spark, sf_dir, n_cells=16)
     res = ivf_search_index_batch(
-        spark, index_path, model, _MODEL_CACHE[key], k=5, nprobe=2
+        spark, index_path, model, queries, k=5, nprobe=2
     )
     return res.select(
         "q_id", "vec_id", "label", F.round("score", 6).alias("score")
@@ -527,12 +499,9 @@ def _bpe_model(spark: SparkSession, sf_dir: str):
     memoized per session — model build, not query work)."""
     from ..ml.bpe import fit_bpe
 
-    key = _model_key(spark, sf_dir, "bpe")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_bpe(
-            t(spark, sf_dir, "documents"), "text", n_merges=40, top_words=50_000
-        )
-    return _MODEL_CACHE[key]
+    return _model(spark, sf_dir, "bpe", lambda: fit_bpe(
+        t(spark, sf_dir, "documents"), "text", n_merges=40, top_words=50_000
+    ))
 
 
 @query(
@@ -673,31 +642,31 @@ def _sq8_state(spark: SparkSession, sf_dir: str, corpus, dim: int):
     the cache for the other (round-4 review)."""
     from ..operators.quantize import fit_sq8
 
-    key = _model_key(spark, sf_dir, "sq8")
-    if key not in _MODEL_CACHE:
+    def fit():
         model = fit_sq8(corpus, "embedding", dim=dim)
-        _MODEL_CACHE[key] = (model, model.encode(corpus))
-    return _MODEL_CACHE[key]
+        return model, model.encode(corpus)
+
+    return _model(spark, sf_dir, "sq8", fit)
 
 
 def _pq_state(spark: SparkSession, sf_dir: str, corpus):
     from ..operators.pq import fit_pq, l2_normalized
 
-    key = _model_key(spark, sf_dir, "pq")
-    if key not in _MODEL_CACHE:
+    def fit():
         model = fit_pq(corpus.orderBy("vec_id"), m=16, k=32, seed=42)
-        _MODEL_CACHE[key] = (model, model.encode(l2_normalized(corpus)))
-    return _MODEL_CACHE[key]
+        return model, model.encode(l2_normalized(corpus))
+
+    return _model(spark, sf_dir, "pq", fit)
 
 
 def _bq_state(spark: SparkSession, sf_dir: str, corpus, dim: int):
     from ..operators.quantize import fit_bq
 
-    key = _model_key(spark, sf_dir, "bq")
-    if key not in _MODEL_CACHE:
+    def fit():
         model, n = fit_bq(corpus, "embedding", dim=dim)
-        _MODEL_CACHE[key] = (model, model.encode(corpus), n)
-    return _MODEL_CACHE[key]
+        return model, model.encode(corpus), n
+
+    return _model(spark, sf_dir, "bq", fit)
 
 
 def _recall_report(
@@ -871,15 +840,14 @@ def p_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.pca import fit_pca
     from ..operators.cohort import PatientSimilaritySearch
 
-    if "pca_model" not in _MODEL_CACHE:
-        _pts = _embed_patients(spark)
+    def fit():
+        pts = _embed_patients(spark)
         feats = PatientSimilaritySearch(
-            _pts, params=_zparams(spark, _pts, 'e433')
-        ).store.select(
-            "features"
-        )
-        _MODEL_CACHE["pca_model"] = fit_pca(feats, "features", k=8)
-    m = _MODEL_CACHE["pca_model"]
+            pts, params=_zparams(spark, pts, 'e433')
+        ).store.select("features")
+        return fit_pca(feats, "features", k=8)
+
+    m = _model(spark, None, "pca_model", fit)
     ratio = m.explained_ratio
     cum = ratio.cumsum()
     return spark.createDataFrame(
@@ -1227,16 +1195,12 @@ def s_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import cluster_aware_split
 
     emb = t(spark, sf_dir, "embeddings")
-    key = _model_key(spark, sf_dir, "cluster_split")
-    if key not in _MODEL_CACHE:
-        pairs = embedding_neardup_blocked(emb, threshold=0.4)
-        _MODEL_CACHE[key] = cluster_aware_split(
-            emb,
-            pairs,
-            {"train": 0.8, "val": 0.1, "test": 0.1},
-            id_col="vec_id",
-        )
-    return _MODEL_CACHE[key]
+    return _model(spark, sf_dir, "cluster_split", lambda: cluster_aware_split(
+        emb,
+        embedding_neardup_blocked(emb, threshold=0.4),
+        {"train": 0.8, "val": 0.1, "test": 0.1},
+        id_col="vec_id",
+    ))
 
 
 @query("m_phash_neardup", oracle=_expected_oracle("m_phash_neardup"))
@@ -1310,8 +1274,7 @@ def r_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python replica parity pinned in tests/test_graph.py)."""
     from ..operators.graph import pagerank
 
-    key = _model_key(spark, sf_dir, "pagerank_suppliers")
-    if key not in _MODEL_CACHE:
+    def fit():
         o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         edges = o.join(
@@ -1320,9 +1283,10 @@ def r_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("c:"), F.col("o_custkey")).alias("src"),
             F.concat(F.lit("s:"), F.col("l_suppkey")).alias("dst"),
         )
-        _MODEL_CACHE[key] = pagerank(edges, n_iter=8)
+        return pagerank(edges, n_iter=8)
+
     return (
-        _MODEL_CACHE[key]
+        _model(spark, sf_dir, "pagerank_suppliers", fit)
         .filter(F.col("node").startswith("s:"))
         .orderBy(F.col("rank_units").desc(), F.col("node").asc())
         .limit(10)
@@ -1419,8 +1383,7 @@ def d_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dedup_clusters
     from ..operators.graph import knn_graph
 
-    key = _model_key(spark, sf_dir, "knn_components")
-    if key not in _MODEL_CACHE:
+    def fit():
         g = knn_graph(t(spark, sf_dir, "embeddings"), k=2)
         folded = g.select(
             F.least("src", "dst").alias("id_a"),
@@ -1432,8 +1395,9 @@ def d_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_n") == 2)
             .select("id_a", "id_b")
         )
-        _MODEL_CACHE[key] = dedup_clusters(mutual)
-    comp = _MODEL_CACHE[key]
+        return dedup_clusters(mutual)
+
+    comp = _model(spark, sf_dir, "knn_components", fit)
     return (
         comp.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("sz"))
@@ -1463,8 +1427,7 @@ def r_als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     independence; fixture verified cold under local[4] and local[16])."""
     from ..ml.als import als_fit, als_recommend
 
-    key = _model_key(spark, sf_dir, "als4")
-    if key not in _MODEL_CACHE:
+    def fit():
         o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
         ratings = (
@@ -1479,8 +1442,9 @@ def r_als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rating")
             )
         )
-        _MODEL_CACHE[key] = als_fit(ratings, rank=4, reg=0.1, n_iter=2)
-    uf, itf, _ = _MODEL_CACHE[key]
+        return als_fit(ratings, rank=4, reg=0.1, n_iter=2)
+
+    uf, itf, _ = _model(spark, sf_dir, "als4", fit)
     return als_recommend(uf, itf, [1, 2, 3, 4, 5], k=3)
 
 
@@ -1489,8 +1453,7 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     16-cell IVF centers (same cells v_ivf_knn probes) + the session PQ
     model (m=16, k=32, sorted-sample fit — deterministic), written
     cell-partitioned with normalized codes and RAW float vectors (see
-    ivfpq_write_index). Same crash-safe tmp-dir caching as
-    _ivf_index_for: a marker file commits only after the parquet write."""
+    ivfpq_write_index), memoized like _ivf_index_for."""
     from ..operators.ann import ivfpq_write_index
 
     ivf, _ = _ivf_index_for(spark, sf_dir, n_cells=16)
@@ -1498,26 +1461,18 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     corpus = emb.filter(F.col("vec_id") != 0)
     pq, _codes = _pq_state(spark, sf_dir, corpus)
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        # cache-format tag v2: the marker carries the corpus row count
-        f"{os.path.abspath(sf_dir)}|ivfpq16v2|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"vss_ivfpq_{key}")
-    index_path = os.path.join(base, "index")
-    marker = os.path.join(base, "_built")
-    if not os.path.exists(marker):
-        ivfpq_write_index(ivf, pq, corpus, index_path, normalize_codes=True)
-        os.makedirs(base, exist_ok=True)
-        # commit the corpus row count with the build: the serving query
+    def build(base: str) -> None:
+        ivfpq_write_index(ivf, pq, corpus, f"{base}/index", normalize_codes=True)
+        # record the corpus row count with the build: the serving query
         # sizes its rescore window from it so the ADC screen can never
         # truncate below full coverage, whatever sf the fixture grows to
-        with open(marker, "w") as fh:
+        with open(f"{base}/n_rows", "w") as fh:
             fh.write(str(corpus.count()))
-    with open(marker) as fh:
+
+    base = cache.memo_dir("ivfpq", [os.path.join(sf_dir, "embeddings.parquet")], build=build)
+    with open(f"{base}/n_rows") as fh:
         n_rows = int(fh.read().strip())
-    return ivf, pq, index_path, n_rows
+    return ivf, pq, f"{base}/index", n_rows
 
 
 # v_ivfpq_knn shares v_ivf_knn's expected-parquet fixture VERBATIM, so its
@@ -1862,16 +1817,14 @@ def r_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import dedup_clusters
     from ..operators.linkage import fuzzy_self_pairs
 
-    key = _model_key(spark, sf_dir, "entity_resolution")
-    if key not in _MODEL_CACHE:
+    def fit():
         p = t(spark, sf_dir, "part")
         pairs = fuzzy_self_pairs(
             p, "p_name", F.substring_index(F.col("name"), " ", 1), 8
         )
-        _MODEL_CACHE[key] = dedup_clusters(
-            pairs, id_a="name_a", id_b="name_b"
-        )
-    comp = _MODEL_CACHE[key]
+        return dedup_clusters(pairs, id_a="name_a", id_b="name_b")
+
+    comp = _model(spark, sf_dir, "entity_resolution", fit)
     golden = comp.groupBy(
         F.col("cluster_id").alias("canonical_name")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_variants"))
@@ -1911,16 +1864,13 @@ def v_adaptive_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qv = _query_vec(spark, sf_dir, 0)
     model, index_path = _ivf_index_for(spark, sf_dir, n_cells=16)
-    key = _model_key(spark, sf_dir, "adaptive_knn")
-    if key not in _MODEL_CACHE:
-        # the escalation loop runs probe+count jobs — a serving loop, not
-        # a lazy plan build; memoize (result plan, nprobe_used) like the
-        # other iterative builds so rebuilds stay zero-job
-        _MODEL_CACHE[key] = ivf_search_until_k(
-            spark, index_path, model, qv, k=10,
-            start_nprobe=1, predicate=F.col("label") == 1,
-        )
-    res, nprobe_used = _MODEL_CACHE[key]
+    # the escalation loop runs probe+count jobs — a serving loop, not
+    # a lazy plan build; memoize (result plan, nprobe_used) like the
+    # other iterative builds so rebuilds stay zero-job
+    res, nprobe_used = _model(spark, sf_dir, "adaptive_knn", lambda: ivf_search_until_k(
+        spark, index_path, model, qv, k=10,
+        start_nprobe=1, predicate=F.col("label") == 1,
+    ))
     return res.select(
         "vec_id",
         "label",
@@ -1939,36 +1889,24 @@ def _stream_audit_targets(
     streaming/vectors.apply_vector_batch), including one REPLAY of an
     already-committed batch per target (the at-least-once delivery case
     the ledgers exist for — it must be a no-op in both the ledger and the
-    table). Memoized under the system tmp dir like _ivf_index_for; the
-    DONE marker commits the workspace atomically."""
-    import shutil
+    table). Memoized like _ivf_index_for; the scenario consumes BOTH
+    fixture tables, so both are its memo sources."""
+    sources = [os.path.join(sf_dir, n) for n in ("events.parquet", "embeddings.parquet")]
+    base = cache.memo_dir(
+        "streamaudit", sources, build=lambda base: _build_stream_audit(spark, sf_dir, base)
+    )
+    return [
+        ("rollup_hourly", os.path.join(base, "rollup")),
+        ("vector_index", os.path.join(base, "vecidx")),
+    ]
 
+
+def _build_stream_audit(spark: SparkSession, sf_dir: str, base: str) -> None:
     from ..streaming.events import apply_rollup_batch
     from ..streaming.vectors import apply_vector_batch
 
-    # the scenario consumes BOTH fixture tables — fingerprint both, or a
-    # regenerated embeddings fixture would serve a stale workspace while
-    # the expected-parquet oracle rebuilds from the new data
-    stats = "|".join(
-        f"{s.st_mtime_ns}:{s.st_size}"
-        for s in (
-            os.stat(os.path.join(sf_dir, name))
-            for name in ("events.parquet", "embeddings.parquet")
-        )
-    )
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|audit1|{stats}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"vss_streamaudit_{key}")
     rollup_path = os.path.join(base, "rollup")
     index_path = os.path.join(base, "vecidx")
-    targets = [("rollup_hourly", rollup_path), ("vector_index", index_path)]
-    done = os.path.join(base, "_DONE")
-    if os.path.exists(done):
-        return targets
-    shutil.rmtree(base, ignore_errors=True)  # half-built: rebuild
-    os.makedirs(base, exist_ok=True)
-
     # rollup target: 3 content-hash micro-batches + a replay of batch 1
     events = t(spark, sf_dir, "events")
     batches = [
@@ -2009,11 +1947,6 @@ def _stream_audit_targets(
     _applied(False, apply_vector_batch(ins[0], 0, model, index_path,
                                        delete_col="_del"),
              "vector replay of batch 0")
-
-    with open(done + ".tmp", "w"):
-        pass
-    os.replace(done + ".tmp", done)
-    return targets
 
 
 @query(
@@ -2448,11 +2381,16 @@ def _stream_sketch_ledger(spark: SparkSession, sf_dir: str) -> str:
     drive), plus one REPLAY of batch 1 per kind that the applied-batch
     marker must turn into a no-op. Returns the scenario base dir
     holding ``hll`` / ``cms`` / ``qsk`` / ``theta`` / ``hh`` /
-    ``sample`` / ``stratified`` subdir ledgers. Memoized
-    under the system tmp dir; the DONE marker commits atomically (the
-    _stream_audit_targets pattern)."""
-    import shutil
+    ``sample`` / ``stratified`` subdir ledgers. Memoized like
+    _stream_audit_targets."""
+    return cache.memo_dir(
+        "sketchaudit",
+        [os.path.join(sf_dir, "events.parquet")],
+        build=lambda base: _build_stream_sketch_ledger(spark, sf_dir, base),
+    )
 
+
+def _build_stream_sketch_ledger(spark: SparkSession, sf_dir: str, base: str) -> None:
     from ..streaming.events import (
         apply_cms_batch,
         apply_hh_batch,
@@ -2462,18 +2400,6 @@ def _stream_sketch_ledger(spark: SparkSession, sf_dir: str) -> str:
         apply_stratified_batch,
         apply_theta_batch,
     )
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|sketchaudit5|"
-        f"{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"vss_sketchaudit_{key}")
-    done = os.path.join(base, "_DONE")
-    if os.path.exists(done):
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
 
     events = t(spark, sf_dir, "events")
     batches = [
@@ -2504,21 +2430,13 @@ def _stream_sketch_ledger(spark: SparkSession, sf_dir: str) -> str:
         _applied(
             False, apply_fn(batches[1], 1, ledger), f"{kind} replay of 1"
         )
-    with open(done + ".tmp", "w"):
-        pass
-    os.replace(done + ".tmp", done)
-    return base
 
 
 def _stream_ledger_frame(spark: SparkSession, base: str, kind: str):
     """Memoized read of one scenario ledger: spark.read.parquet pays a
     1-task footer job per call, and the build-time zero-jobs discipline
     (tests/test_lazy_build.py) applies to this query like any other."""
-    path = os.path.join(base, kind)
-    key = _model_key(spark, f"stream_sketch_{kind}", path)
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = spark.read.parquet(path)
-    return _MODEL_CACHE[key]
+    return _index_scan(spark, os.path.join(base, kind))
 
 
 def _cells_match(

@@ -5,9 +5,12 @@ quality scoring, heuristic language ID. North-star LLM-pipeline text ops.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..functions.text import (
     LANG_MARKERS,
     avg_token_len,
@@ -1399,24 +1402,15 @@ def t_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_index_for(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/probe-many inverted index for the documents fixture
     (same offline-build contract as nonsql_queries._ivf_index_for: index
-    construction is an offline job, not query work). Cached per source
-    (mtime, size) under the system tmp dir; the json sidecar is the
-    build's commit marker, so a half-built store is never probed."""
-    import hashlib
-    import os
-    import tempfile
+    construction is an offline job, not query work), memoized with
+    cache.memo_dir."""
+    from ..operators.invindex import text_index_write
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|tidx16|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"vss_tidx_{key}")
-    if not os.path.exists(os.path.join(path, "_meta.json")):
-        from ..operators.invindex import text_index_write
-
-        text_index_write(t(spark, sf_dir, "documents"), path, num_buckets=16)
-    return path
+    return cache.memo_dir(
+        "tidx",
+        [os.path.join(sf_dir, "documents.parquet")],
+        build=lambda path: text_index_write(t(spark, sf_dir, "documents"), path, num_buckets=16),
+    )
 
 
 @query("t_bm25_indexed", oracle=_sql_bm25(_BM25_TERMS))
@@ -1440,35 +1434,17 @@ def _text_index_incremental_for(spark: SparkSession, sf_dir: str) -> str:
     """Build-80%/append-20% inverted index for t_bm25_incremental: the
     store is constructed through the INGEST path (text_index_write on the
     hash-keyed 80% split, text_index_append for the rest) rather than one
-    offline build. Memoized like _text_index_for; the append removes the
-    _append_pending marker as its own commit, so the _DONE check is the
-    marker-free _meta.json + a completed append (absence of the pending
-    marker plus the appended doc count recorded in _DONE)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    offline build. Memoized like _text_index_for."""
+    from ..operators.invindex import text_index_append, text_index_write
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|tidxinc16|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"vss_tidxinc_{key}")
-    done = os.path.join(path, "_DONE")
-    if not os.path.exists(done):
-        from ..operators.invindex import text_index_append, text_index_write
-
-        shutil.rmtree(path, ignore_errors=True)  # half-built: rebuild
+    def build(path: str) -> None:
         d = t(spark, sf_dir, "documents")
         old = d.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) != 0)
         new = d.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0)
         text_index_write(old, path, num_buckets=16)
-        n = text_index_append(new, path)
-        with open(done + ".tmp", "w") as fh:
-            fh.write(str(n))
-        os.replace(done + ".tmp", done)
-    return path
+        text_index_append(new, path)
+
+    return cache.memo_dir("tidxinc", [os.path.join(sf_dir, "documents.parquet")], build=build)
 
 
 @query("t_bm25_incremental", oracle=_sql_bm25(_BM25_TERMS))

@@ -13,36 +13,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..operators.topk import knn, similarity_join
-from ..util import evict_other_apps
 from .catalog import expected_oracle as _expected_oracle
 from .catalog import query, t
-
-
-# One tiny driver job per DISTINCT (session, sf_dir, vec_id) — repeat query
-# builds against the same corpus reuse the fetched parameter, so the second
-# build of any vector query is zero-job (tests/test_lazy_build.py pins it).
-# Keyed by applicationId like sources/tables._SCAN_CACHE so a new session
-# never reads a dead session's value.
-_QVEC_CACHE: dict[tuple[str, str, int], list[float]] = {}
 
 
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
     """Fetch the query vector (a query *parameter*, like the reference's
     query patient dict, similarity_search.py:613-634 — one driver-side row,
     not a data-path collect), memoized per (session, sf_dir, vec_id)."""
-    key = (spark.sparkContext.applicationId, sf_dir, vec_id)
-    evict_other_apps(_QVEC_CACHE, key[0])
-    cached = _QVEC_CACHE.get(key)
-    if cached is None:
+
+    def fetch() -> list[float]:
         row = (
             t(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == vec_id)
             .select("embedding")
             .head()
         )
-        cached = _QVEC_CACHE[key] = list(row[0])
-    return list(cached)
+        return list(row[0])
+
+    return list(
+        cache.get(spark, "model", sf_dir, "query_vec", vec_id, reads=(sf_dir,), build=fetch)
+    )
 
 
 @query(

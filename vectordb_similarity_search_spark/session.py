@@ -17,6 +17,20 @@ from pyspark.sql import SparkSession
 _PKG_ZIP: str | None = None
 
 
+def package_py_files() -> list[tuple[str, str]]:
+    """``(absolute path, path relative to the repo root)`` of every ``.py``
+    source of this package."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    files = []
+    for dirpath, _dirnames, filenames in os.walk(pkg_dir):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                files.append((full, os.path.relpath(full, root)))
+    return files
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to Python workers via ``sc.addPyFile``.
 
@@ -37,16 +51,11 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     if getattr(sc, "_vss_pkg_shipped", False):
         return
     if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        root = os.path.dirname(pkg_dir)
         fd, zip_path = tempfile.mkstemp(prefix="vss_pkg_", suffix=".zip")
         os.close(fd)
         with zipfile.ZipFile(zip_path, "w") as zf:
-            for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-                for fn in filenames:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        zf.write(full, os.path.relpath(full, root))
+            for full, rel in package_py_files():
+                zf.write(full, rel)
         _PKG_ZIP = zip_path
     sc.addPyFile(_PKG_ZIP)
     sc._vss_pkg_shipped = True

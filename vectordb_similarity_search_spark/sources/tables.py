@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..util import evict_other_apps
+from .. import cache
 
 TABLES = (
     "region",
@@ -26,15 +26,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# One logical-plan per (session, sf_dir, table): spark.read.parquet runs a
-# 1-task footer job per CALL (schema read), so uncached repeat builds pay a
-# job each. DataFrames are immutable lazy plans — sharing one across queries
-# is free and keeps query BUILD zero-job after first touch (pinned by
-# tests/test_lazy_build.py). Keyed by applicationId so a new session never
-# sees a dead session's plans.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -52,11 +43,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (no double round-trip, 2^63 ns is beyond double's 53-bit mantissa); NTZ
     path reinterprets the wall-clock as UTC (session tz pinned below), so
     both builds produce identical micros."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    evict_other_apps(_SCAN_CACHE, key[0])
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    path = f"{sf_dir}/{name}.parquet"
+    return cache.get(
+        spark, "scan", sf_dir, name, reads=(path,), build=lambda: _scan(spark, path, name)
+    )
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
     # The engine's timestamp semantics are UTC (matches the DuckDB oracle
     # and is cluster-stable); pin it here too since the caller's session
     # may not come from our factory.
@@ -70,7 +63,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
@@ -80,7 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # and the session tz is pinned to UTC above), so the cast is a
             # pure type change, not a value shift.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _SCAN_CACHE[key] = df
     return df
 
 

@@ -63,21 +63,6 @@ def ledger_state(target_path: str) -> dict:
     }
 
 
-# One scan plan per (session, table path, ON-DISK STATE): spark.read
-# .parquet pays a 1-task footer job per CALL; reusing the lazy plan keeps
-# audit REBUILDS zero-job (the catalog's lazy-build contract,
-# tests/test_lazy_build.py). Unlike sources/tables._SCAN_CACHE the audited
-# targets are LIVE (streams append / snapshot-swap them between audits), so
-# the key carries a filesystem fingerprint: a cached plan pins the parquet
-# file listing, and reusing it across a swap reads deleted files
-# (FileNotFound) or silently undercounts appended rows. Any mutation bumps
-# the fingerprint (marker files land next to the dir; appends/swaps touch
-# entry mtimes), so the stale plan is evicted on the next build — and
-# foreign writers (merge/compact on an audited path) invalidate explicitly
-# via invalidate_audit_scans.
-_AUDIT_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _dir_fingerprint(path: str) -> str:
     """Cheap driver-side mutation fingerprint: entry names + mtimes at the
     top level AND one level into subdirectories. The extra level matters
@@ -126,26 +111,15 @@ def _dir_fingerprint(path: str) -> str:
 
 
 def _scan(spark: SparkSession, path: str, fingerprint: str) -> DataFrame:
-    from ..util import evict_other_apps
+    """Session-cached scan of a live target at one listing fingerprint."""
+    from .. import cache
 
-    key = (spark.sparkContext.applicationId, path, fingerprint)
-    evict_other_apps(_AUDIT_SCAN_CACHE, key[0])
-    df = _AUDIT_SCAN_CACHE.get(key)
-    if df is None:
-        # Only the CURRENT state's plan is worth holding: drop superseded
-        # fingerprints so the cache stays one entry per live path.
-        for k in [k for k in _AUDIT_SCAN_CACHE if k[1] == path]:
-            del _AUDIT_SCAN_CACHE[k]
-        df = _AUDIT_SCAN_CACHE[key] = spark.read.parquet(path)
-    return df
+    def read() -> DataFrame:
+        # only the CURRENT state's plan is worth holding
+        cache.clear("audit_scan", path)
+        return spark.read.parquet(path)
 
-
-def invalidate_audit_scans(path: str) -> None:
-    """Drop cached audit scan plans over ``path`` (writer hook — merge/
-    compact call this via operators.merge._invalidate_foreign_scan_caches
-    when they rewrite a table an audit may have scanned)."""
-    for key in [k for k in _AUDIT_SCAN_CACHE if k[1] == path]:
-        del _AUDIT_SCAN_CACHE[key]
+    return cache.get(spark, "audit_scan", path, fingerprint, reads=(path,), build=read)
 
 
 def ledger_audit(

@@ -54,28 +54,6 @@ def _scan_shaped(df: DataFrame) -> bool:
     return True
 
 
-def invalidate_snapshot_caches(table_path: str) -> None:
-    """Called by every snapshot-swap writer (``swap_snapshot`` and the
-    timetravel variants): a swap replaces the directory listing, so any
-    memoized LAZY plan that pinned the old file index would read deleted
-    files (FileNotFound, or silently-empty under ignoreMissingFiles) on
-    its next action — the round-9 verdict's latent staleness trap.
-
-    The registry plan cache does not track which paths a plan scans, so
-    it is cleared WHOLESALE: correct over clever. Cost is bounded — the
-    bench runs its write group last and against scratch copies, and
-    plans over the immutable fixture/ledger dirs simply refill once on
-    next use. The path-keyed ANN index and ledger-audit scan caches are
-    evicted per path (same calls the merge writers already made)."""
-    from .operators.ann import _invalidate_index_scans
-    from .plans.catalog import clear_plan_cache
-    from .streaming.audit import invalidate_audit_scans
-
-    clear_plan_cache()
-    _invalidate_index_scans(table_path)
-    invalidate_audit_scans(table_path)
-
-
 def swap_snapshot(table_path: str, new_path: str) -> None:
     """Replace the directory at ``table_path`` with ``new_path`` by two
     renames, parking the previous snapshot at ``<table>__old_<uuid>`` until
@@ -92,11 +70,15 @@ def swap_snapshot(table_path: str, new_path: str) -> None:
     import shutil
     import uuid
 
+    from . import cache
+
     old = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(table_path, old)
-    os.rename(new_path, table_path)
-    shutil.rmtree(old)
-    invalidate_snapshot_caches(table_path)
+    try:
+        os.rename(table_path, old)
+        os.rename(new_path, table_path)
+        shutil.rmtree(old)
+    finally:
+        cache.invalidate(table_path)
 
 
 def restore_snapshot(table_path: str) -> bool:
@@ -113,86 +95,3 @@ def restore_snapshot(table_path: str) -> bool:
         return False
     os.rename(parked[-1], table_path)
     return True
-
-
-def evict_other_apps(cache: dict, app_id: str) -> None:
-    """Drop cache entries that belong to a DIFFERENT Spark application.
-
-    The per-session plan/model caches (sources/tables._SCAN_CACHE,
-    operators/ann._INDEX_SCAN_CACHE, plans' _MODEL_CACHE/_QVEC_CACHE) key
-    tuples by ``applicationId`` first. Entries of a stopped session are
-    unreachable once a new session starts (fresh appId) but would
-    otherwise be pinned for the process lifetime, holding plan objects
-    into dead JVM contexts — a leak in any long-lived process that
-    restarts sessions. Sweeping on insert keeps exactly one session's
-    entries alive."""
-    for k in [k for k in cache if isinstance(k, tuple) and k and k[0] != app_id]:
-        del cache[k]
-
-
-class PersistRegistry:
-    """App-scoped registry of persisted DataFrames shared by the bm25 /
-    dedup / ranking operator modules.
-
-    Rebuilding a semantically equal plan in the same session returns the
-    ALREADY-registered handle (Spark's CacheManager dedupes the cached
-    data anyway — reusing the Python handle keeps the registry bounded by
-    the number of DISTINCT cached plans, not the number of builds), and a
-    ``release()`` hook lets bench/drive teardowns free everything.
-
-    Hit verification: entries are bucketed by the cheap
-    ``(applicationId, semanticHash, schema)`` key, but ``semanticHash``
-    is a 32-bit digest, so a bucket hit is CONFIRMED with the public
-    ``DataFrame.sameSemantics`` check (canonicalized-plan equality)
-    before the cached handle is returned — two different plans that
-    collide on the 32-bit hash coexist in one bucket instead of aliasing.
-    """
-
-    def __init__(self) -> None:
-        self._frames: dict[tuple, list[DataFrame]] = {}
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        app = df.sparkSession.sparkContext.applicationId
-        for k in [k for k in self._frames if k[0] != app]:
-            self._frames.pop(k)  # dead sessions: JVM cache died with them
-        key = (app, df.semanticHash(), str(df.schema))
-        for cached in self._frames.get(key, []):
-            if df.sameSemantics(cached):
-                return cached
-        df = df.persist()
-        self._frames.setdefault(key, []).append(df)
-        return df
-
-    def discard(self, df: DataFrame) -> bool:
-        """Unpersist + deregister ONE frame (matched by Python identity).
-        For serving loops that persist speculative rounds and keep only
-        the terminal one — interim rounds must leave the registry, or it
-        regrows per call. Returns True when the frame was registered."""
-        for key, frames in list(self._frames.items()):
-            for i, frame in enumerate(frames):
-                if frame is df:
-                    frames.pop(i)
-                    if not frames:
-                        del self._frames[key]
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-                    return True
-        return False
-
-    def release(self) -> int:
-        """Unpersist every registered DataFrame; returns count."""
-        n = 0
-        for frames in self._frames.values():
-            for frame in frames:
-                try:
-                    frame.unpersist()
-                    n += 1
-                except Exception:
-                    pass
-        self._frames.clear()
-        return n
-
-    def __len__(self) -> int:
-        return len(self._frames)
