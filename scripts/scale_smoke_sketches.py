@@ -50,10 +50,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        HLL,
         daily_hll_sketches,
         rolling_distinct,
         sketch_ledger_merge_batch,
-        sketch_ledger_write,
     )
 
     # 8g heap: the NAIVE contender's partial-distinct hash state (rows x
@@ -166,7 +166,7 @@ def main() -> None:
 
     store = tempfile.mkdtemp(prefix="smoke_sketch_ledger_")
     path = os.path.join(store, "ledger")
-    sketch_ledger_write(ledger, path)
+    HLL.write(ledger, path)
     batch = gen(N_ROWS // 20, N_DAYS, N_DAYS + 1)
 
     t0 = time.perf_counter()

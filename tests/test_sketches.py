@@ -15,11 +15,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.sketches import (
+    HLL,
     daily_hll_sketches,
     rolling_distinct,
     rollup_distinct,
     sketch_ledger_merge_batch,
-    sketch_ledger_write,
 )
 
 
@@ -134,7 +134,7 @@ def test_incremental_merge_matches_full_rebuild(spark, events, tmp_path):
     old = events.filter(F.to_date("ts") < F.lit("2026-01-15"))
     new = events.filter(F.to_date("ts") >= F.lit("2026-01-15"))
     path = str(tmp_path / "ledger")
-    n = sketch_ledger_write(daily_hll_sketches(old), path)
+    n = HLL.write(daily_hll_sketches(old), path)
     assert n > 0
     merged = sketch_ledger_merge_batch(spark, new, path)
     rebuilt = daily_hll_sketches(events)
@@ -237,8 +237,8 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
     import shutil
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        HLL,
         sketch_ledger_repair,
-        sketch_ledger_upsert_batch,
     )
 
     path = str(tmp_path / "ledger")
@@ -246,7 +246,7 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
         (1, dt.datetime(2026, 4, 1, 9), 1, "click", 1.0),
         (2, dt.datetime(2026, 4, 2, 9), 2, "click", 1.0),
     ]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, base), path) == 2
+    assert HLL.upsert(_mk_batch(spark, base), path) == 2
 
     # build the torn state a mid-commit crash leaves: stage the merged
     # slice for day 2 via a REAL upsert against a copy, then transplant
@@ -255,7 +255,7 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
     shadow = str(tmp_path / "shadow")
     shutil.copytree(path, shadow)
     batch = [(3, dt.datetime(2026, 4, 2, 15), 9, "view", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, batch), shadow) == 1
+    assert HLL.upsert(_mk_batch(spark, batch), shadow) == 1
     staged = os.path.join(path, "_staging", "day=2026-04-02")
     shutil.copytree(os.path.join(shadow, "day=2026-04-02"), staged)
     with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
@@ -280,14 +280,14 @@ def test_ledger_meta_rejects_mismatched_maintenance(spark, tmp_path):
     from the stored ledger's build configuration must be refused up
     front, not silently accepted."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        HLL,
     )
 
     path = str(tmp_path / "ledger")
     rows = [(1, dt.datetime(2026, 5, 1, 9), 1, "click", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
+    assert HLL.upsert(_mk_batch(spark, rows), path) == 1
     with pytest.raises(ValueError, match="lg_k"):
-        sketch_ledger_upsert_batch(_mk_batch(spark, rows), path, lg_k=14)
+        HLL.upsert(_mk_batch(spark, rows), path, lg_k=14)
     with pytest.raises(ValueError, match="key_col"):
         sketch_ledger_merge_batch(
             spark, _mk_batch(spark, rows), path, key_col="event_id"
@@ -298,7 +298,7 @@ def test_ledger_custom_columns_thread_through_maintenance(spark, tmp_path):
     """Advisory fix: a ledger built over non-default key/type/ts columns
     is incrementally maintainable by passing the same mapping."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        HLL,
     )
 
     def mk(rows):
@@ -309,13 +309,13 @@ def test_ledger_custom_columns_thread_through_maintenance(spark, tmp_path):
     path = str(tmp_path / "ledger")
     kw = {"key_col": "actor", "type_col": "action", "ts_col": "stamp"}
     assert (
-        sketch_ledger_upsert_batch(
+        HLL.upsert(
             mk([(dt.datetime(2026, 6, 1, 9), 1, "click")]), path, **kw
         )
         == 1
     )
     assert (
-        sketch_ledger_upsert_batch(
+        HLL.upsert(
             mk([(dt.datetime(2026, 6, 1, 15), 2, "view")]), path, **kw
         )
         == 1
@@ -413,7 +413,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_upsert_batch,
+        CMS,
         daily_cms_sketches,
     )
 
@@ -423,7 +423,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
         (2, dt.datetime(2026, 7, 2, 9), 12, "click", 1.0),
         (3, dt.datetime(2026, 7, 3, 9), 13, "click", 1.0),
     ]
-    assert cms_ledger_upsert_batch(_mk_batch(spark, base), path) == 3
+    assert CMS.upsert(_mk_batch(spark, base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -435,7 +435,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
 
     before_d1 = file_state("2026-07-01")
     batch = [(4, dt.datetime(2026, 7, 2, 15), 11, "view", 1.0)]
-    assert cms_ledger_upsert_batch(_mk_batch(spark, batch), path) == 1
+    assert CMS.upsert(_mk_batch(spark, batch), path) == 1
     assert file_state("2026-07-01") == before_d1
 
     def cells(df):
@@ -447,7 +447,7 @@ def test_cms_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     assert cells(spark.read.parquet(path)) == cells(rebuilt)
 
     with pytest.raises(ValueError, match="width"):
-        cms_ledger_upsert_batch(_mk_batch(spark, batch), path, width=1024)
+        CMS.upsert(_mk_batch(spark, batch), path, width=1024)
 
 
 # ---------------------------------------------------------------------------
@@ -464,11 +464,8 @@ def test_upsert_rejects_null_day_and_stream_apply_drops(spark, tmp_path):
     cannot wedge the stream on every retry."""
     import os
 
-    from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
-    )
     from vectordb_similarity_search_spark.streaming.events import (
-        apply_sketch_batch,
+        apply_ledger_batch,
     )
 
     rows = [
@@ -477,10 +474,10 @@ def test_upsert_rejects_null_day_and_stream_apply_drops(spark, tmp_path):
     ]
     path = str(tmp_path / "ledger")
     with pytest.raises(ValueError, match="NULL day"):
-        sketch_ledger_upsert_batch(_mk_batch(spark, rows), path)
+        HLL.upsert(_mk_batch(spark, rows), path)
     assert not os.path.isdir(path)  # refused BEFORE any store mutation
 
-    assert apply_sketch_batch(_mk_batch(spark, rows), 0, path) is True
+    assert apply_ledger_batch(HLL, _mk_batch(spark, rows), 0, path) is True
     got = {
         (str(r["day"]), r["event_type"]): r["n_events"]
         for r in spark.read.parquet(path).collect()
@@ -496,22 +493,22 @@ def test_upsert_empty_delta_is_noop(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_upsert_batch,
-        sketch_ledger_upsert_batch,
+        CMS,
+        HLL,
     )
 
     path = str(tmp_path / "ledger")
     empty = _mk_batch(spark, [])
-    assert sketch_ledger_upsert_batch(empty, path) == 0
+    assert HLL.upsert(empty, path) == 0
     assert not os.path.isdir(path)  # no unreadable husk left behind
 
     rows = [(1, dt.datetime(2026, 8, 2, 9), 1, "click", 1.0)]
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
-    assert sketch_ledger_upsert_batch(empty, path) == 0
+    assert HLL.upsert(_mk_batch(spark, rows), path) == 1
+    assert HLL.upsert(empty, path) == 0
     assert spark.read.parquet(path).count() == 1
 
     cpath = str(tmp_path / "cms")
-    assert cms_ledger_upsert_batch(empty, cpath) == 0
+    assert CMS.upsert(empty, cpath) == 0
     assert not os.path.isdir(cpath)
 
 
@@ -528,7 +525,7 @@ def test_concurrent_upsert_raises_descriptive_error(
 
     path = str(tmp_path / "ledger")
     rows = [(1, dt.datetime(2026, 8, 3, 9), 1, "click", 1.0)]
-    assert sk.sketch_ledger_upsert_batch(_mk_batch(spark, rows), path) == 1
+    assert sk.HLL.upsert(_mk_batch(spark, rows), path) == 1
 
     # freeze entry-time repair so the hand-planted marker survives to the
     # commit point, simulating a concurrent writer's marker
@@ -536,18 +533,17 @@ def test_concurrent_upsert_raises_descriptive_error(
     with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
         fh.write('{"days": [], "staging": "_staging"}')
     with pytest.raises(RuntimeError, match="concurrent"):
-        sk.sketch_ledger_upsert_batch(_mk_batch(spark, rows), path)
+        sk.HLL.upsert(_mk_batch(spark, rows), path)
 
 
 def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
-    """Advisory fix: sketch_ledger_write/cms_ledger_write must not
-    record caller kwargs the frame contradicts — a wrong sidecar later
-    rejects correct maintenance and validates wrong maintenance."""
+    """Advisory fix: HLL.write/CMS.write must not record caller kwargs
+    the frame contradicts — a wrong sidecar later rejects correct
+    maintenance and validates wrong maintenance."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        cms_ledger_write,
+        CMS,
         daily_cms_sketches,
         daily_hll_sketches,
-        sketch_ledger_write,
     )
 
     rows = [
@@ -558,15 +554,15 @@ def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
 
     # HLL: frame built with lg_k=14, write claims the default 12
     with pytest.raises(ValueError, match="lg_k"):
-        sketch_ledger_write(
+        HLL.write(
             daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h1")
         )
     # not a ledger frame at all
     with pytest.raises(ValueError, match="missing columns"):
-        sketch_ledger_write(batch, str(tmp_path / "h2"))
+        HLL.write(batch, str(tmp_path / "h2"))
     # matching config passes
     assert (
-        sketch_ledger_write(
+        HLL.write(
             daily_hll_sketches(batch, lg_k=14), str(tmp_path / "h3"), lg_k=14
         )
         > 0
@@ -574,11 +570,11 @@ def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
 
     # CMS: frame built with depth=8, write claims the default 4
     with pytest.raises(ValueError, match="hash family"):
-        cms_ledger_write(daily_cms_sketches(batch, depth=8), str(tmp_path / "c1"))
+        CMS.write(daily_cms_sketches(batch, depth=8), str(tmp_path / "c1"))
     with pytest.raises(ValueError, match="missing columns"):
-        cms_ledger_write(batch, str(tmp_path / "c2"))
+        CMS.write(batch, str(tmp_path / "c2"))
     assert (
-        cms_ledger_write(
+        CMS.write(
             daily_cms_sketches(batch, depth=2, width=64),
             str(tmp_path / "c3"),
             depth=2,
@@ -715,8 +711,8 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        QSK,
         daily_qsk_sketches,
-        qsk_ledger_upsert_batch,
     )
 
     path = str(tmp_path / "qsk")
@@ -725,7 +721,7 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
         (2, dt.datetime(2026, 9, 12, 9), 12, "click", 40.0),
         (3, dt.datetime(2026, 9, 13, 9), 13, "click", 0.0),
     ]
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, base), path) == 3
+    assert QSK.upsert(_mk_batch(spark, base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -737,7 +733,7 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
 
     before_d1 = file_state("2026-09-11")
     batch = [(4, dt.datetime(2026, 9, 12, 15), 11, "view", -3.5)]
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, batch), path) == 1
+    assert QSK.upsert(_mk_batch(spark, batch), path) == 1
     assert file_state("2026-09-11") == before_d1
 
     def cells(df):
@@ -750,13 +746,13 @@ def test_qsk_upsert_touched_days_only_and_matches_rebuild(spark, tmp_path):
     assert cells(spark.read.parquet(path)) == cells(rebuilt)
 
     with pytest.raises(ValueError, match="'k'"):
-        qsk_ledger_upsert_batch(_mk_batch(spark, batch), path, k=64)
+        QSK.upsert(_mk_batch(spark, batch), path, k=64)
 
 
 def test_qsk_validation_and_write_cross_check(spark, tmp_path):
     from vectordb_similarity_search_spark.operators.sketches import (
+        QSK,
         daily_qsk_sketches,
-        qsk_ledger_write,
         rolling_percentiles,
     )
 
@@ -766,9 +762,9 @@ def test_qsk_validation_and_write_cross_check(spark, tmp_path):
         rolling_percentiles(None, 0)
     rows = [(1, dt.datetime(2026, 9, 14, 9), 1, "click", 2.0)]
     with pytest.raises(ValueError, match="missing columns"):
-        qsk_ledger_write(_mk_batch(spark, rows), str(tmp_path / "q1"))
+        QSK.write(_mk_batch(spark, rows), str(tmp_path / "q1"))
     assert (
-        qsk_ledger_write(
+        QSK.write(
             daily_qsk_sketches(_mk_batch(spark, rows)), str(tmp_path / "q2")
         )
         == 1
@@ -780,11 +776,12 @@ def test_qsk_stream_apply_exactly_once(spark, tmp_path):
     marker-protected replay is a no-op (bucket counts are NOT replay-safe
     by algebra), and the stored ledger equals a one-shot build."""
     from vectordb_similarity_search_spark.operators.sketches import (
+        CMS,
+        QSK,
         daily_qsk_sketches,
     )
     from vectordb_similarity_search_spark.streaming.events import (
-        apply_cms_batch,
-        apply_qsk_batch,
+        apply_ledger_batch,
     )
 
     rows = [
@@ -793,9 +790,9 @@ def test_qsk_stream_apply_exactly_once(spark, tmp_path):
         (3, dt.datetime(2026, 9, 21, 10), 3, "view", 27.0),
     ]
     path = str(tmp_path / "qsk")
-    assert apply_qsk_batch(_mk_batch(spark, rows[:2]), 0, path) is True
-    assert apply_qsk_batch(_mk_batch(spark, rows[2:]), 1, path) is True
-    assert apply_qsk_batch(_mk_batch(spark, rows[:2]), 0, path) is False
+    assert apply_ledger_batch(QSK, _mk_batch(spark, rows[:2]), 0, path) is True
+    assert apply_ledger_batch(QSK, _mk_batch(spark, rows[2:]), 1, path) is True
+    assert apply_ledger_batch(QSK, _mk_batch(spark, rows[:2]), 0, path) is False
 
     def cells(df):
         return sorted(
@@ -809,8 +806,8 @@ def test_qsk_stream_apply_exactly_once(spark, tmp_path):
 
     # CMS twin of the same protocol
     cpath = str(tmp_path / "cms")
-    assert apply_cms_batch(_mk_batch(spark, rows[:2]), 0, cpath) is True
-    assert apply_cms_batch(_mk_batch(spark, rows[:2]), 0, cpath) is False
+    assert apply_ledger_batch(CMS, _mk_batch(spark, rows[:2]), 0, cpath) is True
+    assert apply_ledger_batch(CMS, _mk_batch(spark, rows[:2]), 0, cpath) is False
 
 
 # ---------------------------------------------------------------------------
@@ -885,9 +882,8 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        THETA,
         daily_theta_sketches,
-        theta_ledger_upsert_batch,
-        theta_ledger_write,
         theta_overlap,
     )
 
@@ -899,7 +895,7 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
         (1000 + i, dt.datetime(2026, 10, 1 + i % 3, 10), i % 25, "view", 1.0)
         for i in range(75)
     ]
-    assert theta_ledger_upsert_batch(_mk_batch(spark, rows), path) == 3
+    assert THETA.upsert(_mk_batch(spark, rows), path) == 3
 
     def cells(df):
         return sorted(
@@ -908,23 +904,23 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
 
     before = cells(spark.read.parquet(path))
     # replayed upsert: distinct-union is idempotent — store unchanged
-    assert theta_ledger_upsert_batch(_mk_batch(spark, rows), path) == 3
+    assert THETA.upsert(_mk_batch(spark, rows), path) == 3
     assert cells(spark.read.parquet(path)) == before
     assert cells(spark.read.parquet(path)) == cells(
         daily_theta_sketches(_mk_batch(spark, rows))
     )
 
     with pytest.raises(ValueError, match="den"):
-        theta_ledger_upsert_batch(_mk_batch(spark, rows), path, num=1, den=2)
+        THETA.upsert(_mk_batch(spark, rows), path, num=1, den=2)
 
     # write cross-check: a full-rate (den=1 impossible; use num=7,den=8)
     # ledger written claiming a STRICTER predicate is caught
     led_78 = daily_theta_sketches(_mk_batch(spark, rows), num=7, den=8)
     with pytest.raises(ValueError, match="sampling"):
-        theta_ledger_write(led_78, str(tmp_path / "t2"), num=1, den=8)
+        THETA.write(led_78, str(tmp_path / "t2"), num=1, den=8)
     with pytest.raises(ValueError, match="missing columns"):
-        theta_ledger_write(_mk_batch(spark, rows), str(tmp_path / "t3"))
-    assert theta_ledger_write(led_78, str(tmp_path / "t4"), num=7, den=8) > 0
+        THETA.write(_mk_batch(spark, rows), str(tmp_path / "t3"))
+    assert THETA.write(led_78, str(tmp_path / "t4"), num=7, den=8) > 0
 
     # estimates survive the parquet round-trip
     est = theta_overlap(spark.read.parquet(path))
@@ -932,12 +928,12 @@ def test_theta_ledger_lifecycle_and_validation(spark, tmp_path):
 
     # streaming apply: marker-gated no-op on replay
     from vectordb_similarity_search_spark.streaming.events import (
-        apply_theta_batch,
+        apply_ledger_batch,
     )
 
     spath = str(tmp_path / "theta_stream")
-    assert apply_theta_batch(_mk_batch(spark, rows), 0, spath) is True
-    assert apply_theta_batch(_mk_batch(spark, rows), 0, spath) is False
+    assert apply_ledger_batch(THETA, _mk_batch(spark, rows), 0, spath) is True
+    assert apply_ledger_batch(THETA, _mk_batch(spark, rows), 0, spath) is False
     with pytest.raises(ValueError, match="num"):
         daily_theta_sketches(None, num=2, den=2)
 
@@ -1002,12 +998,14 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
     reads and rolling queries over the retained horizon still work, and
     the validation knob is checked."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
-        qsk_ledger_upsert_batch,
+        HH,
+        HLL,
+        QSK,
+        SAMPLE,
+        STRATIFIED,
         rolling_hh,
         rolling_percentiles,
         sketch_ledger_retention,
-        sketch_ledger_upsert_batch,
     )
 
     rows = [
@@ -1017,9 +1015,9 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
     hll = str(tmp_path / "hll")
     qsk = str(tmp_path / "qsk")
     hh = str(tmp_path / "hh")
-    assert sketch_ledger_upsert_batch(_mk_batch(spark, rows), hll) == 6
-    assert qsk_ledger_upsert_batch(_mk_batch(spark, rows), qsk) == 6
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows), hh, k=4) == 6
+    assert HLL.upsert(_mk_batch(spark, rows), hll) == 6
+    assert QSK.upsert(_mk_batch(spark, rows), qsk) == 6
+    assert HH.upsert(_mk_batch(spark, rows), hh, k=4) == 6
 
     assert sketch_ledger_retention(hll, keep_days=3) == [
         "2026-11-01", "2026-11-02", "2026-11-03",
@@ -1037,14 +1035,9 @@ def test_ledger_retention_prunes_old_days_across_kinds(spark, tmp_path):
 
     # the two sample kinds share the same day layout — one GC serves
     # all seven ledger kinds
-    from vectordb_similarity_search_spark.operators.sketches import (
-        sample_ledger_upsert_batch,
-        stratified_ledger_upsert_batch,
-    )
-
     for name, fn in (
-        ("sample", sample_ledger_upsert_batch),
-        ("strat", stratified_ledger_upsert_batch),
+        ("sample", SAMPLE.upsert),
+        ("strat", STRATIFIED.upsert),
     ):
         store = str(tmp_path / name)
         assert fn(_mk_batch(spark, rows), store) == 6
@@ -1295,7 +1288,7 @@ def test_hh_upsert_matches_invariants_and_layout_independent(
     bit-identical across input partitioning AND tournament fan-in
     (buckets is an execution knob, not a semantic one)."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
+        HH,
     )
 
     k = 8
@@ -1313,7 +1306,7 @@ def test_hh_upsert_matches_invariants_and_layout_independent(
             )
             if part:
                 batch = batch.repartition(part)
-            hh_ledger_upsert_batch(batch, path, k=k, buckets=buckets)
+            HH.upsert(batch, path, k=k, buckets=buckets)
     stored = spark.read.parquet(paths[0])
     assert _hh_mass_violations(stored, k) == 0
     exact = _hh_exact_counts(ev)
@@ -1351,7 +1344,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
     later same-day merge of such a summary goes through the left-join
     coalesce path and the bounds stay valid."""
     from vectordb_similarity_search_spark.operators.sketches import (
-        hh_ledger_upsert_batch,
+        HH,
     )
 
     k = 2
@@ -1360,7 +1353,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
         for i in range(9)
     ]  # 3 keys x 3 events: top-(k+1) all equal -> items empty, err=3
     path = str(tmp_path / "hh")
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows), path, k=k) == 1
+    assert HH.upsert(_mk_batch(spark, rows), path, k=k) == 1
     first = spark.read.parquet(path).collect()
     assert len(first) == 1
     assert first[0]["items"] == [] and first[0]["err"] == 3
@@ -1369,7 +1362,7 @@ def test_hh_merge_survives_all_subtracted_summaries(spark, tmp_path):
         (100 + i, dt.datetime(2026, 11, 1, 10), 7, "click", 1.0)
         for i in range(10)
     ]
-    assert hh_ledger_upsert_batch(_mk_batch(spark, rows2), path, k=k) == 1
+    assert HH.upsert(_mk_batch(spark, rows2), path, k=k) == 1
     merged = spark.read.parquet(path).collect()[0]
     assert merged["n_events"] == 19
     assert _hh_mass_violations(spark.read.parquet(path), k) == 0
@@ -1384,8 +1377,8 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
     whenever any summary evicted; a corrupted items column is caught by
     the counter-positivity check."""
     from vectordb_similarity_search_spark.operators.sketches import (
+        HH,
         daily_hh_sketches,
-        hh_ledger_write,
         rolling_hh,
     )
 
@@ -1396,12 +1389,12 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
     with pytest.raises(ValueError, match="window_days"):
         rolling_hh(daily_hh_sketches(events, k=4), 0)
     with pytest.raises(ValueError, match="missing columns"):
-        hh_ledger_write(events, str(tmp_path / "x"))
+        HH.write(events, str(tmp_path / "x"))
 
     ledger = daily_hh_sketches(events, k=8).cache()
-    assert hh_ledger_write(ledger, str(tmp_path / "ok"), k=8) > 0
+    assert HH.write(ledger, str(tmp_path / "ok"), k=8) > 0
     with pytest.raises(ValueError, match="claimed k"):
-        hh_ledger_write(ledger, str(tmp_path / "badk"), k=512)
+        HH.write(ledger, str(tmp_path / "badk"), k=512)
     broken = ledger.withColumn(
         "items",
         F.transform(
@@ -1412,7 +1405,7 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
         ),
     )
     with pytest.raises(ValueError, match="claimed k"):
-        hh_ledger_write(broken, str(tmp_path / "neg"), k=8)
+        HH.write(broken, str(tmp_path / "neg"), k=8)
 
 
 def test_hh_plans_stay_scale_shaped(spark, events):
@@ -1630,8 +1623,8 @@ def test_sample_upsert_idempotent_and_matches_one_shot(
     the stored sample equals the one-shot build row-for-row, and the
     replay changes nothing (distinct-union on a unique id)."""
     from vectordb_similarity_search_spark.operators.sketches import (
+        SAMPLE,
         daily_sample_rows,
-        sample_ledger_upsert_batch,
     )
 
     path = str(tmp_path / "s")
@@ -1639,13 +1632,13 @@ def test_sample_upsert_idempotent_and_matches_one_shot(
         batch = sample_events.filter(
             F.pmod(F.xxhash64("event_id"), F.lit(3)) == b
         )
-        assert sample_ledger_upsert_batch(batch, path) > 0
+        assert SAMPLE.upsert(batch, path) > 0
     snap = lambda df: sorted(  # noqa: E731
         (str(r["day"]), r["id"], r["event_type"], r["value"])
         for r in df.collect()
     )
     s1 = snap(spark.read.parquet(path))
-    sample_ledger_upsert_batch(
+    SAMPLE.upsert(
         sample_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
         path,
     )
@@ -1663,10 +1656,10 @@ def test_sample_validation_and_write_cross_check(
     cross-check (a non-identity id column biases every estimate — must
     be caught at write time)."""
     from vectordb_similarity_search_spark.operators.sketches import (
+        SAMPLE,
         daily_sample_rows,
         rolling_sample_stats,
         sample_grouped_stats,
-        sample_ledger_write,
     )
 
     with pytest.raises(ValueError, match="num"):
@@ -1676,14 +1669,14 @@ def test_sample_validation_and_write_cross_check(
     with pytest.raises(ValueError, match="window_days"):
         rolling_sample_stats(None, 0)
     with pytest.raises(ValueError, match="missing columns"):
-        sample_ledger_write(sample_events, str(tmp_path / "x"))
+        SAMPLE.write(sample_events, str(tmp_path / "x"))
 
     led = daily_sample_rows(sample_events).cache()
-    assert sample_ledger_write(led, str(tmp_path / "ok")) > 0
+    assert SAMPLE.write(led, str(tmp_path / "ok")) > 0
     with pytest.raises(ValueError, match="keep-predicate"):
-        sample_ledger_write(led, str(tmp_path / "rate"), num=1, den=64)
+        SAMPLE.write(led, str(tmp_path / "rate"), num=1, den=64)
     with pytest.raises(ValueError, match="duplicate id"):
-        sample_ledger_write(
+        SAMPLE.write(
             led.unionByName(led.limit(3)), str(tmp_path / "dup")
         )
 
@@ -1811,8 +1804,8 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
     sampled rows untouched (idempotent by id) while n would inflate —
     the documented marker-guarded column, exactly HLL's n_events."""
     from vectordb_similarity_search_spark.operators.sketches import (
+        STRATIFIED,
         daily_stratified_sample,
-        stratified_ledger_upsert_batch,
     )
 
     path = str(tmp_path / "st")
@@ -1820,7 +1813,7 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
         batch = skewed_events.filter(
             F.pmod(F.xxhash64("event_id"), F.lit(3)) == b
         )
-        stratified_ledger_upsert_batch(batch, path, cap=64, buckets=32)
+        STRATIFIED.upsert(batch, path, cap=64)
 
     def snap(df):
         return sorted(
@@ -1829,16 +1822,13 @@ def test_stratified_merge_bit_equal_and_replay_semantics(
         )
 
     stored = snap(spark.read.parquet(path))
-    one_shot = snap(
-        daily_stratified_sample(skewed_events, cap=64, buckets=16)
-    )
-    assert stored == one_shot  # bit-equal incl. n, any fan-in/partitioning
+    one_shot = snap(daily_stratified_sample(skewed_events, cap=64))
+    assert stored == one_shot  # bit-equal incl. n, any partitioning
 
-    stratified_ledger_upsert_batch(
+    STRATIFIED.upsert(
         skewed_events.filter(F.pmod(F.xxhash64("event_id"), F.lit(3)) == 1),
         path,
         cap=64,
-        buckets=32,
     )
     replayed = snap(spark.read.parquet(path))
     assert [r[3] for r in replayed] == [r[3] for r in stored]  # rows fixed
@@ -1849,21 +1839,183 @@ def test_stratified_validation_and_write_cross_check(
     spark, skewed_events, tmp_path
 ):
     from vectordb_similarity_search_spark.operators.sketches import (
+        STRATIFIED,
         daily_stratified_sample,
-        stratified_ledger_write,
     )
 
     with pytest.raises(ValueError, match="cap"):
         daily_stratified_sample(skewed_events, cap=0)
-    with pytest.raises(ValueError, match="buckets"):
-        daily_stratified_sample(skewed_events, buckets=0)
     with pytest.raises(ValueError, match="missing columns"):
-        stratified_ledger_write(skewed_events, str(tmp_path / "x"))
+        STRATIFIED.write(skewed_events, str(tmp_path / "x"))
 
     led = daily_stratified_sample(skewed_events, cap=64).cache()
-    assert stratified_ledger_write(led, str(tmp_path / "ok"), cap=64) > 0
+    assert STRATIFIED.write(led, str(tmp_path / "ok"), cap=64) > 0
     with pytest.raises(ValueError, match="contract"):
-        stratified_ledger_write(led, str(tmp_path / "cap"), cap=10)
+        STRATIFIED.write(led, str(tmp_path / "cap"), cap=10)
     broken = led.withColumn("h", F.col("h") + 1)
     with pytest.raises(ValueError, match="contract"):
-        stratified_ledger_write(broken, str(tmp_path / "hash"), cap=64)
+        STRATIFIED.write(broken, str(tmp_path / "hash"), cap=64)
+
+
+def test_stratified_write_validates_in_one_aggregate(
+    spark, tmp_path, count_jobs
+):
+    """The write runs ONE read-back aggregate: its row count is Σm of the
+    per-stratum validation aggregate, not a second full count (8 jobs
+    when it also ran ``count()``; 6 with the one aggregate)."""
+    from vectordb_similarity_search_spark.operators.sketches import (
+        STRATIFIED,
+        daily_stratified_sample,
+    )
+
+    rows = [
+        (i, dt.datetime(2026, 5, 1 + i % 4, 9), i % 7, "abc"[i % 3], 1.0 * i)
+        for i in range(300)
+    ]
+    led = daily_stratified_sample(_mk_batch(spark, rows), cap=16).cache()
+    kept = led.count()
+    n, jobs = count_jobs(STRATIFIED.write, led, str(tmp_path / "st"), cap=16)
+    assert n == kept == 4 * 3 * 16
+    assert jobs <= 6, jobs
+
+
+# ---------------------------------------------------------------------------
+# One ledger engine: the same contract for every kind
+# ---------------------------------------------------------------------------
+
+# The default-config sidecar of each kind as written before the kinds
+# became LedgerKind specs; ledgers written then must stay maintainable.
+_SIDECARS = {
+    "hll": {"kind": "hll", "key_col": "user_id", "type_col": "event_type",
+            "ts_col": "ts", "lg_k": 12},
+    "cms": {"kind": "cms", "key_col": "user_id", "ts_col": "ts",
+            "depth": 4, "width": 4096},
+    "qsk": {"kind": "qsk", "value_col": "value", "type_col": "event_type",
+            "ts_col": "ts", "k": 32},
+    "theta": {"kind": "theta", "key_col": "user_id",
+              "type_col": "event_type", "ts_col": "ts", "num": 3, "den": 4},
+    "hh": {"kind": "hh", "key_col": "user_id", "type_col": "event_type",
+           "ts_col": "ts", "k": 64},
+    "sample": {"kind": "sample", "id_col": "event_id", "ts_col": "ts",
+               "payload": ["event_type", "value"], "num": 3, "den": 4},
+    "stratified": {"kind": "stratified", "id_col": "event_id",
+                   "ts_col": "ts", "strata": ["event_type"],
+                   "payload": ["value"], "cap": 1024},
+}
+
+# per kind: one config key and a value that differs from the default
+_MISMATCH = {
+    "hll": ("lg_k", 14),
+    "cms": ("width", 1024),
+    "qsk": ("k", 64),
+    "theta": ("den", 8),
+    "hh": ("k", 8),
+    "sample": ("den", 8),
+    "stratified": ("cap", 64),
+}
+
+
+def _file_bytes(path):
+    import os
+
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_SIDECARS))
+def test_ledger_kind_contract(spark, tmp_path, name):
+    """Every kind runs the same write/upsert/apply engine, so the
+    maintenance contract holds for all seven alike: an empty first batch
+    creates no store; a NULL-day upsert is refused with the store
+    byte-identical, while the streaming apply drops the null-ts row; a
+    replayed batch id changes no byte; a mismatched config is refused
+    naming the key; an unknown config key is a TypeError; and the
+    default sidecar is the one existing ledgers carry."""
+    import json
+    import os
+    import re
+
+    from vectordb_similarity_search_spark.operators.sketches import (
+        LEDGER_KINDS,
+    )
+    from vectordb_similarity_search_spark.streaming.events import (
+        apply_ledger_batch,
+    )
+
+    kind = LEDGER_KINDS[name]
+    path = str(tmp_path / name)
+    rows = [
+        (1, dt.datetime(2026, 12, 1, 9), 1, "click", 1.0),
+        (2, dt.datetime(2026, 12, 2, 9), 2, "view", 2.0),
+    ]
+    null = [(3, None, 3, "click", 3.0)]
+
+    assert kind.upsert(_mk_batch(spark, []), path) == 0
+    assert not os.path.exists(path)
+
+    assert kind.upsert(_mk_batch(spark, rows), path) == 2
+    with open(os.path.join(path, "_ledger_meta.json")) as fh:
+        assert json.load(fh) == _SIDECARS[name]
+    before = _file_bytes(path)
+    with pytest.raises(ValueError, match="NULL day"):
+        kind.upsert(_mk_batch(spark, rows + null), path)
+    assert _file_bytes(path) == before
+
+    key, value = _MISMATCH[name]
+    with pytest.raises(ValueError, match=re.escape(f"disagrees on {{'{key}'")):
+        kind.upsert(_mk_batch(spark, rows), path, **{key: value})
+    assert _file_bytes(path) == before
+    with pytest.raises(TypeError, match="bogus"):
+        kind.upsert(_mk_batch(spark, rows), path, bogus=1)
+    with pytest.raises(TypeError, match="bogus"):
+        kind.write(None, str(tmp_path / "w"), bogus=1)
+
+    stream = str(tmp_path / f"{name}_stream")
+    batch = _mk_batch(spark, rows + null)
+    assert apply_ledger_batch(kind, batch, 0, stream) is True
+
+    def cells(p):
+        return sorted(str(r) for r in spark.read.parquet(p).collect())
+
+    assert cells(stream) == cells(path)  # the null-ts row was dropped
+    applied = _file_bytes(stream)
+    assert apply_ledger_batch(kind, batch, 0, stream) is False
+    assert _file_bytes(stream) == applied
+
+
+def test_ledger_writers_invalidate_cached_scans(spark, tmp_path):
+    """Ledger writers keep cache.py's contract: an upsert that rewrites a
+    stored day, and a retention pass that deletes one, drop the session's
+    cached scan of the ledger, so the next scan lists the new files
+    instead of serving the old listing."""
+    from vectordb_similarity_search_spark.operators import ann
+    from vectordb_similarity_search_spark.operators.sketches import (
+        sketch_ledger_retention,
+    )
+
+    path = str(tmp_path / "ledger")
+    assert HLL.upsert(
+        _mk_batch(spark, [(1, dt.datetime(2026, 12, 5, 9), 1, "click", 1.0)]),
+        path,
+    ) == 1
+    cached = ann._index_scan(spark, path)
+    assert cached.count() == 1
+    assert ann._index_scan(spark, path) is cached
+
+    batch = [
+        (2, dt.datetime(2026, 12, 5, 10), 2, "view", 1.0),
+        (3, dt.datetime(2026, 12, 6, 10), 2, "view", 1.0),
+    ]
+    assert HLL.upsert(_mk_batch(spark, batch), path) == 2
+    fresh = ann._index_scan(spark, path)
+    assert fresh is not cached
+    assert fresh.count() == 3
+
+    assert sketch_ledger_retention(path, keep_days=1) == ["2026-12-05"]
+    pruned = ann._index_scan(spark, path)
+    assert pruned is not fresh
+    assert pruned.count() == 1

@@ -1096,10 +1096,11 @@ def test_sketch_ingest_stream_matches_batch(spark, stream_env, tmp_path):
     from pyspark.sql import functions as F
 
     from vectordb_similarity_search_spark.operators.sketches import (
+        HLL,
         daily_hll_sketches,
     )
     from vectordb_similarity_search_spark.streaming.events import (
-        apply_sketch_batch,
+        apply_ledger_batch,
         sketch_ingest_stream,
     )
 
@@ -1146,7 +1147,7 @@ def test_sketch_ingest_stream_matches_batch(spark, stream_env, tmp_path):
         rows2,
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    assert apply_sketch_batch(replay, 1, path) is False
+    assert apply_ledger_batch(HLL, replay, 1, path) is False
     assert summary(spark.read.parquet(path)) == summary(batch_equiv)
 
 
@@ -1156,7 +1157,7 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
     import os
 
     from vectordb_similarity_search_spark.operators.sketches import (
-        sketch_ledger_upsert_batch,
+        HLL,
     )
 
     def mk(rows):
@@ -1171,7 +1172,7 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
         (2, dt.datetime(2026, 3, 2, 9), 2, "click", 1.0),
         (3, dt.datetime(2026, 3, 3, 9), 3, "click", 1.0),
     ]
-    assert sketch_ledger_upsert_batch(mk(base), path) == 3
+    assert HLL.upsert(mk(base), path) == 3
 
     def file_state(day):
         d = os.path.join(path, f"day={day}")
@@ -1183,7 +1184,7 @@ def test_sketch_upsert_rewrites_only_touched_days(spark, tmp_path):
 
     before_d1 = file_state("2026-03-01")
     before_d3 = file_state("2026-03-03")
-    touched = sketch_ledger_upsert_batch(
+    touched = HLL.upsert(
         mk([(4, dt.datetime(2026, 3, 2, 15), 9, "view", 1.0)]), path
     )
     assert touched == 1

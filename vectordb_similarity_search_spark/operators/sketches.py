@@ -1,27 +1,40 @@
-"""Mergeable-sketch ledgers: pre-aggregated HyperLogLog distinct-count
-sketches that answer ANY later rollup without rescanning raw data.
+"""Mergeable-sketch ledgers: pre-aggregated per-(day, segment) summaries
+that answer later rollups and trailing windows without rescanning the
+raw event log.
 
 The 100 TB problem this solves: "distinct users per 7-day window, per
 month, per event type, overall" each naively re-shuffle the raw event log
-per question. Apache DataSketches HLL (Spark's built-in
-``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``) makes
-distinct-count state a ~2^lg_k-byte MERGEABLE value: sketch once per
-(day, event_type) leaf — ONE linear pass over the log — then every
-rollup (rolling windows, type totals, grand total) is an aggregation
-over the tiny ledger, never the log. A day's late data is one
-``hll_union`` against that day's stored sketch: incremental maintenance
-without history rescans.
+per question. A mergeable summary (leaves plus an associative merge —
+Agarwal et al., "Mergeable Summaries", PODS 2012) is sketched once per
+(day, segment) leaf in ONE linear pass over the log; every rollup is then
+an aggregation over the tiny ledger, and a day's late data is one merge
+against that day's stored leaves.
 
-Determinism contract (verified in tests/test_sketches.py): HLL register
-state is a pure max over per-item hashes, so ESTIMATES are independent
-of partitioning, merge grouping, and row order — a leaf-union rollup
-equals the direct sketch over the base rows bit-for-bit, and the
-expected-parquet oracles of the catalog queries are stable across
-sessions. (Serialized sketch BYTES are not canonical across merge
-orders — sparse/dense internal modes differ — so parity is pinned on
-estimates, never on blob bytes. KLL quantile sketches were evaluated
-and EXCLUDED: Spark's implementation is randomized per run, which
-breaks the repo's oracle bar.)
+Seven kinds, each a :class:`LedgerKind` spec over one engine (write,
+O(touched-days) upsert, repair, retention and the trailing-window
+expansion :func:`_trailing`):
+
+- ``HLL`` — distinct counts (DataSketches HLL via Spark's
+  ``hll_sketch_agg`` / ``hll_union_agg``);
+- ``CMS`` — count-min point frequencies;
+- ``QSK`` — log-bucket rank sketch for percentiles;
+- ``THETA`` — sampled key hashes for set intersection/union;
+- ``HH`` — Misra-Gries heavy hitters with interval bounds;
+- ``SAMPLE`` — uniform row sample for ad-hoc grouped estimates;
+- ``STRATIFIED`` — per-stratum bottom-k sample that keeps rare strata exact.
+
+``LEDGER_KINDS`` maps each kind's name (also its sidecar ``kind``) to its
+spec; ``streaming/events.apply_ledger_batch`` is the micro-batch apply.
+
+Determinism contract (verified in tests/test_sketches.py): every leaf is
+a pure function of its rows and every merge is order-independent, so
+readouts are independent of partitioning, merge grouping, and row order.
+For HLL, a leaf-union rollup equals the direct sketch over the base rows
+bit-for-bit on ESTIMATES (serialized sketch BYTES are not canonical
+across merge orders — sparse/dense internal modes differ — so parity is
+pinned on estimates, never on blob bytes). KLL quantile sketches were
+evaluated and EXCLUDED: Spark's implementation is randomized per run,
+which breaks the repo's oracle bar.
 
 Reference parity: the reference engine has no sketch surface
 (similarity_search.py is exact-only); this module is part of the
@@ -30,12 +43,20 @@ mandated large-scale-pipeline superset.
 
 from __future__ import annotations
 
+import datetime
+import functools
 import json
 import os
+import re
 import shutil
+from collections.abc import Callable
+from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .. import cache
 
 # 2^12 registers ≈ 0.8% relative standard error — the classic
 # cost/accuracy point; callers can widen for tighter bounds.
@@ -75,45 +96,48 @@ def hll_estimate(sk: Column | str) -> Column:
     return F.hll_sketch_estimate(sk).cast("long")
 
 
-def _rolling(
-    ledger: DataFrame, window_days: int, extra_keys: tuple[str, ...]
-) -> DataFrame:
-    """Shared trailing-window engine: each ledger row EXPLODES into the
-    ``window_days`` output days it contributes to (a Generate, no join
-    predicate), a broadcast equi semi-join keeps only days that actually
-    occur in the ledger, then one ``hll_union_agg`` per (day, *extra
-    keys). ONE copy serves the all-types and per-type forms so the
-    window semantics cannot diverge."""
+def _trailing(ledger: DataFrame, window_days: int, *cols: str) -> DataFrame:
+    """The one trailing-window expansion every rolling readout shares:
+    each ledger row EXPLODES into the ``window_days`` output days it
+    contributes to (a Generate, no join predicate), and a broadcast equi
+    semi-join keeps only days that actually occur in the ledger. Output:
+    ``(day, *cols)`` with ``day`` the OUTPUT day; the caller merges its
+    kind's leaves per day. (A day-range self-join spells the same thing
+    but plans a BroadcastNestedLoopJoin — the repo's plan-invariant
+    sweep rejects non-equi joins on principle; this form is pure
+    Generate + hash join.)"""
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1, got {window_days}")
     days = ledger.select("day").distinct().select(F.col("day").alias("out_day"))
-    contrib = ledger.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(window_days - 1))
-        ).alias("_off"),
-        "day",
-        *extra_keys,
-        "n_events",
-        "sk",
-    ).select(
-        F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-        *extra_keys,
-        "n_events",
-        "sk",
+    return (
+        ledger.select(
+            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias("_off"),
+            "day",
+            *cols,
+        )
+        .select(F.date_add(F.col("day"), F.col("_off")).alias("out_day"), *cols)
+        .join(F.broadcast(days), "out_day", "left_semi")
+        .withColumnRenamed("out_day", "day")
     )
+
+
+def _rolling(
+    ledger: DataFrame, window_days: int, extra_keys: tuple[str, ...]
+) -> DataFrame:
+    """HLL trailing windows: :func:`_trailing`, then one
+    ``hll_union_agg`` per (day, *extra keys). ONE copy serves the
+    all-types and per-type forms so the window semantics cannot
+    diverge."""
     rolled = (
-        contrib.join(F.broadcast(days), "out_day", "left_semi")
-        .groupBy("out_day", *extra_keys)
+        _trailing(ledger, window_days, *extra_keys, "n_events", "sk")
+        .groupBy("day", *extra_keys)
         .agg(
             F.sum("n_events").cast("long").alias("n_events"),
             F.hll_union_agg("sk").alias("sk"),
         )
     )
     return rolled.select(
-        F.col("out_day").alias("day"),
-        *extra_keys,
-        "n_events",
-        hll_estimate("sk").alias("est_distinct"),
+        "day", *extra_keys, "n_events", hll_estimate("sk").alias("est_distinct")
     )
 
 
@@ -121,10 +145,7 @@ def rolling_distinct(ledger: DataFrame, window_days: int = 7) -> DataFrame:
     """Trailing ``window_days``-day distinct-key estimate per day from
     the LEAF LEDGER alone. Cost is O(|ledger| · window_days) on rows
     that are days×types in number — independent of the raw log size,
-    which is the whole point. (A day-range self-join spells the same
-    thing but plans a BroadcastNestedLoopJoin — the repo's
-    plan-invariant sweep rejects non-equi joins on principle; the
-    explode form in :func:`_rolling` is pure Generate + hash join.)
+    which is the whole point (window expansion: :func:`_trailing`).
     Distinct-count is NOT sum-decomposable across days (a user active
     twice in the window counts once); the sketch union gets the
     de-duplicated semantics that a sum of daily counts cannot."""
@@ -161,7 +182,8 @@ def rollup_distinct(ledger: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Persisted ledger with incremental maintenance
+# Persisted ledgers: one engine (write, upsert, repair, retention); each
+# kind is a LedgerKind spec declared after its builder and merge
 # ---------------------------------------------------------------------------
 
 
@@ -210,40 +232,34 @@ def sketch_ledger_repair(path: str) -> int:
         pending = json.load(fh)
     staging = os.path.join(path, pending["staging"])
     fixed = 0
-    for day in pending["days"]:
-        staged = os.path.join(staging, f"day={day}")
-        if not os.path.isdir(staged):
-            continue  # this day's swap already completed pre-crash
-        live = os.path.join(path, f"day={day}")
-        if os.path.isdir(live):
-            shutil.rmtree(live)
-        os.replace(staged, live)
-        fixed += 1
+    try:
+        for day in pending["days"]:
+            staged = os.path.join(staging, f"day={day}")
+            if not os.path.isdir(staged):
+                continue  # this day's swap already completed pre-crash
+            live = os.path.join(path, f"day={day}")
+            if os.path.isdir(live):
+                shutil.rmtree(live)
+            os.replace(staged, live)
+            fixed += 1
+    finally:
+        if fixed:
+            cache.invalidate(path)
     if os.path.isdir(staging):
         shutil.rmtree(staging)
     os.remove(marker)
     return fixed
 
 
-def _hll_meta(key_col: str, type_col: str, ts_col: str, lg_k: int) -> dict:
-    return {
-        "kind": "hll",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "lg_k": lg_k,
-    }
-
-
 def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int:
-    """Shared O(touched-days) persisted-ledger upsert engine (HLL and
-    CMS ledgers delegate here; ``merge_fn(stored_slice, delta)`` is the
-    only sketch-specific part): bootstrap a missing store from the delta
-    alone; otherwise repair any torn commit, validate the stored
-    configuration, read back ONLY the touched day partitions, merge,
-    STAGE the merged slice executor-side (no sketch state through the
-    driver), and swap day dirs under an O_EXCL pending marker. Crash
-    semantics as documented on :func:`sketch_ledger_upsert_batch`.
+    """The O(touched-days) persisted-ledger upsert behind
+    :meth:`LedgerKind.upsert`, its one caller (``merge_fn(stored_slice,
+    delta)`` is the only sketch-specific part): bootstrap a missing store
+    from the delta alone; otherwise repair any torn commit, validate the
+    stored configuration, read back ONLY the touched day partitions,
+    merge, STAGE the merged slice executor-side (no sketch state through
+    the driver), and swap day dirs under an O_EXCL pending marker. Crash
+    semantics as documented on :meth:`LedgerKind.upsert`.
     SINGLE-WRITER: concurrent upserts against one ledger path are a
     contract violation (the entry-time repair would sweep a live
     writer's staging); a concurrent commit is detected at the marker
@@ -260,8 +276,8 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
         # day-partitioned ledger: F.col('day').isin(...) never matches
         # NULL and the dir-name swap would look for 'day=None' while
         # Spark stages '__HIVE_DEFAULT_PARTITION__' — a lossy torn
-        # commit. Refuse loudly; the streaming apply_*_batch paths drop
-        # null-ts rows up front under their documented contract.
+        # commit. Refuse loudly; the streaming apply_ledger_batch drops
+        # null-ts rows up front under its documented contract.
         raise ValueError(
             "ledger delta contains a NULL day (null or unparseable "
             "timestamps): filter null-ts rows before the upsert — a "
@@ -320,93 +336,155 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
     return len(touched)
 
 
-def sketch_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> int:
-    """Materialize the leaf ledger (binary sketch column round-trips
-    through parquet). Partitioned by day so maintenance and windowed
-    reads prune to the touched days. A ``_ledger_meta.json`` sidecar
-    records the build configuration (key/type/ts columns, lg_k) so the
-    incremental maintenance entry points can validate against it instead
-    of silently accepting a mismatched merge.
+def _n_true(cond: Column) -> Column:
+    """Number of rows where ``cond`` holds (0 on an empty frame)."""
+    return F.coalesce(F.sum(cond.cast("int")), F.lit(0))
 
-    The sidecar is CROSS-CHECKED against the frame before it is trusted
-    (advisory fix: a ledger built one way but written with different
-    kwargs used to get a wrong sidecar, after which correct maintenance
-    was rejected and wrong maintenance validated): the ledger schema
-    must be the canonical ``(day, event_type, n_events, sk)`` and every
-    sketch blob's serialized lgK header byte must equal the claimed
-    ``lg_k`` — both piggyback on the read-back pass the row count
-    already pays. The source key/type/ts column NAMES are not
-    recoverable from the frame and stay caller-asserted."""
-    need = {"day", "event_type", "n_events", "sk"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"HLL ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_hll_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
-    # DataSketches HLL preamble: serialized byte 3 (1-indexed pos 4) is
-    # lgK in every mode (LIST/SET/HLL) — verified in tests
-    stats = back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                (F.substring("sk", 4, 1) != F.lit(bytes([lg_k]))).cast("int")
-            ),
-            F.lit(0),
-        ).alias("bad_lgk"),
-    ).first()
-    if stats["bad_lgk"]:
-        raise ValueError(
-            f"{stats['bad_lgk']} sketch blob(s) were built with a "
-            f"different lg_k than the claimed {lg_k}; pass the lg_k the "
-            "ledger was built with"
-        )
-    _write_ledger_meta(path, _hll_meta(key_col, type_col, ts_col, lg_k))
-    return stats["n"]
+
+@dataclass(frozen=True)
+class LedgerKind:
+    """One persisted ledger kind as a spec over the shared engine.
+
+    - ``doc``: what the kind summarizes and its replay-safety note —
+      every streaming apply sits behind the applied-batch marker, and the
+      note says whether the marker guards correctness (additive counts)
+      or only cost (idempotent merge);
+    - ``columns(**cfg)``: the canonical ledger columns;
+    - ``build(events, **cfg)``: the ``daily_*`` leaf builder;
+    - ``merge(stored, delta, **cfg)``: the same-day merge of two leaf
+      frames;
+    - ``check(back, **cfg)``: ONE aggregate over the written store,
+      returning ``(rows, problem)`` — ``problem`` is the error message
+      when the stored frame contradicts the claimed config, else None;
+    - ``config``: the sidecar keys and their defaults, in sidecar order;
+    - ``knobs``: execution-only upsert keys and their defaults, not
+      recorded (results are identical for any value).
+
+    A config key the kind does not know raises ``TypeError``, as an
+    unknown keyword would."""
+
+    name: str
+    doc: str
+    columns: Callable[..., tuple[str, ...]]
+    build: Callable[..., DataFrame]
+    merge: Callable[..., DataFrame]
+    check: Callable[..., tuple[int, str | None]]
+    config: dict[str, Any]
+    knobs: dict[str, Any] = field(default_factory=dict)
+
+    def resolve(self, cfg: dict, *, knobs: bool = False) -> dict:
+        """``cfg`` over the defaults; ``knobs`` admits the upsert-only
+        keys."""
+        known = {**self.config, **(self.knobs if knobs else {})}
+        unknown = sorted(set(cfg) - set(known))
+        if unknown:
+            raise TypeError(
+                f"{self.name} ledger got unexpected config keys {unknown}"
+            )
+        return {**known, **cfg}
+
+    def meta(self, cfg: dict) -> dict:
+        """The ``_ledger_meta.json`` sidecar of a resolved ``cfg``."""
+        return {
+            "kind": self.name,
+            **{
+                k: list(cfg[k]) if isinstance(cfg[k], tuple) else cfg[k]
+                for k in self.config
+            },
+        }
+
+    def write(self, ledger: DataFrame, path: str, **cfg) -> int:
+        """Materialize a built ledger at ``path``, partitioned by day so
+        maintenance and windowed reads prune to the touched days, and
+        return its row count. The ``_ledger_meta.json`` sidecar records
+        the build configuration so the maintenance entry points validate
+        against it instead of silently accepting a mismatched merge.
+
+        Steps, in order: missing-column check, partitioned write, ONE
+        read-back aggregate (row count plus the kind's violation
+        columns), the kind's error on any violation, then the sidecar —
+        so a sidecar is only ever written for a store CROSS-CHECKED
+        against it (a ledger built one way but written with different
+        kwargs used to get a wrong sidecar, after which correct
+        maintenance was rejected and wrong maintenance validated). What
+        each kind can and cannot detect is on its ``check``; the source
+        column NAMES are not recoverable from the frame and stay
+        caller-asserted."""
+        cfg = self.resolve(cfg)
+        missing = set(self.columns(**cfg)) - set(ledger.columns)
+        if missing:
+            raise ValueError(
+                f"{self.name} ledger frame is missing columns "
+                f"{sorted(missing)}; build it with {self.build.__name__}"
+            )
+        try:
+            ledger.write.partitionBy("day").mode("overwrite").parquet(path)
+        finally:
+            cache.invalidate(path)
+        n, problem = self.check(ledger.sparkSession.read.parquet(path), **cfg)
+        if problem:
+            raise ValueError(problem)
+        _write_ledger_meta(path, self.meta(cfg))
+        return n
+
+    def upsert(self, batch: DataFrame, path: str, **cfg) -> int:
+        """O(touched-days) maintenance: build the batch's leaves, read
+        back ONLY the stored day-partitions the batch touches
+        (partition-pruned scan), merge, and swap just those day dirs —
+        untouched history is never read or rewritten (the repo's
+        partitioned-merge discipline). Bootstrap: a missing store is
+        created from the batch alone; an empty batch writes nothing.
+        Returns the number of day partitions written.
+
+        Write path: the merged touched-day slice is STAGED executor-side
+        (one partitioned parquet write under ``_staging`` — an underscore
+        dir, invisible to parquet readers of the store), then committed
+        by swapping day dirs under an O_EXCL pending marker. Leaf state
+        never round-trips through the driver, so a year-wide backfill
+        over a high-cardinality type column streams through executors
+        like any other write. Crash semantics: a crash BEFORE the marker
+        leaves the store untouched (stale staging is swept on the next
+        call); a crash mid-commit is repaired from the staged slice by
+        :func:`sketch_ledger_repair` (run at every entry) — no
+        touched-day history can be lost. The residual at-least-once
+        window is the caller's: a crash between a completed commit and
+        the applied-batch marker re-applies one batch (see the kind's
+        ``doc`` for what that does to it).
+
+        Contract: SINGLE WRITER per ledger path (serialize maintenance; a
+        detected concurrent commit raises), and NO null-day rows in the
+        batch (null/unparseable ``ts`` cannot live in a day-partitioned
+        store — the streaming apply path drops them before calling here,
+        direct callers must filter or the upsert raises)."""
+        cfg = self.resolve(cfg, knobs=True)
+        delta = self.build(batch, **cfg)
+        try:
+            return _staged_day_upsert(
+                path, delta, functools.partial(self.merge, **cfg), self.meta(cfg)
+            )
+        finally:
+            cache.invalidate(path)
 
 
 def sketch_ledger_merge_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
+    spark: SparkSession, batch: DataFrame, path: str, **cfg
 ) -> DataFrame:
-    """Incremental maintenance: fold a NEW batch of raw events into the
-    stored ledger WITHOUT rescanning history — sketch the batch (one
-    pass over batch rows only), then per (day, event_type) union against
-    the stored sketch where one exists. Returns the merged ledger frame
-    LAZILY — no sketch blob ever passes through the driver; the caller
-    snapshots it with :func:`sketch_ledger_upsert_batch` (staged
-    executor-side write) or pins merged == full-rebuild estimates in
-    tests. Late-arriving data for an old day is just another union.
-    Replay semantics: the DISTINCT estimates are replay-safe (HLL union
-    is a register max — identical keys cannot drift it), but the
-    ``n_events`` sum assumes exactly-once batches; an at-least-once
-    upstream must dedupe before merging."""
+    """Incremental maintenance of an ``HLL`` ledger (keywords: its
+    config): fold a NEW batch of raw events into the stored ledger
+    WITHOUT rescanning history — sketch the batch (one pass over batch
+    rows only), then per (day, event_type) union against the stored
+    sketch where one exists. Returns the merged ledger frame LAZILY — no
+    sketch blob ever passes through the driver; the caller snapshots it
+    with ``HLL.upsert`` (staged executor-side write) or pins merged ==
+    full-rebuild estimates in tests. Late-arriving data for an old day is
+    just another union. Replay semantics: see ``HLL.doc``."""
+    cfg = HLL.resolve(cfg)
     sketch_ledger_repair(path)
-    _check_ledger_meta(path, _hll_meta(key_col, type_col, ts_col, lg_k))
-    stored = spark.read.parquet(path)
-    delta = daily_hll_sketches(
-        batch, key_col=key_col, type_col=type_col, ts_col=ts_col, lg_k=lg_k
-    )
-    return _hll_merge(stored, delta)
+    _check_ledger_meta(path, HLL.meta(cfg))
+    return HLL.merge(spark.read.parquet(path), HLL.build(batch, **cfg))
 
 
-def _hll_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+def _hll_merge(stored: DataFrame, delta: DataFrame, **_) -> DataFrame:
     return (
         stored.select("day", "event_type", "n_events", "sk")
         .unionByName(delta)
@@ -418,49 +496,42 @@ def _hll_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def sketch_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    lg_k: int = DEFAULT_LG_K,
-) -> int:
-    """O(touched-days) ledger maintenance: sketch the batch, read back
-    ONLY the stored day-partitions the batch touches (partition-pruned
-    scan), union-merge, and swap just those day dirs — untouched history
-    is never read or rewritten (the repo's partitioned-merge
-    discipline). Bootstrap: a missing store is created from the batch
-    alone. Returns the number of day partitions written.
-
-    Write path (round-8, replacing the driver-side collect): the merged
-    touched-day slice is STAGED executor-side (one partitioned parquet
-    write under ``_staging`` — an underscore dir, invisible to parquet
-    readers of the store), then committed by swapping day dirs under an
-    O_EXCL pending marker. Sketch blobs never round-trip through the
-    driver, so a year-wide backfill over a high-cardinality type column
-    streams through executors like any other write. Crash semantics: a
-    crash BEFORE the marker leaves the store untouched (stale staging is
-    swept on the next call); a crash mid-commit is repaired from the
-    staged slice by :func:`sketch_ledger_repair` (run at every entry) —
-    no touched-day history can be lost, closing the torn-overwrite
-    window the dynamic-overwrite form had. The residual at-least-once
-    window is the documented one: a crash between a completed commit and
-    the caller's applied-batch marker re-applies one batch's
-    ``n_events`` (estimates cannot drift — register max).
-
-    Contract: SINGLE WRITER per ledger path (serialize maintenance; a
-    detected concurrent commit raises), and NO null-day rows in the
-    batch (null/unparseable ``ts`` cannot live in a day-partitioned
-    store — the streaming apply path drops them before calling here,
-    direct callers must filter or the upsert raises)."""
-    delta = daily_hll_sketches(
-        batch, key_col=key_col, type_col=type_col, ts_col=ts_col, lg_k=lg_k
+def _hll_check(back: DataFrame, lg_k: int, **_) -> tuple[int, str | None]:
+    """Every sketch blob's serialized lgK header byte must equal the
+    claimed ``lg_k``. DataSketches HLL preamble: serialized byte 3
+    (1-indexed pos 4) is lgK in every mode (LIST/SET/HLL) — verified in
+    tests."""
+    s = back.agg(
+        F.count(F.lit(1)).alias("n"),
+        _n_true(F.substring("sk", 4, 1) != F.lit(bytes([lg_k]))).alias("bad"),
+    ).first()
+    if not s["bad"]:
+        return s["n"], None
+    return s["n"], (
+        f"{s['bad']} sketch blob(s) were built with a different lg_k than "
+        f"the claimed {lg_k}; pass the lg_k the ledger was built with"
     )
-    return _staged_day_upsert(
-        path, delta, _hll_merge, _hll_meta(key_col, type_col, ts_col, lg_k)
-    )
+
+
+HLL = LedgerKind(
+    "hll",
+    doc="""Distinct keys per (day, event_type): ``(day, event_type,
+    n_events, sk)``. The distinct ESTIMATES are replay-safe by algebra
+    (HLL union is a register max — identical keys cannot drift it), but
+    the exact ``n_events`` sums are additive: a replayed batch
+    double-counts them, so the applied-batch marker keeps them
+    exactly-once.""",
+    columns=lambda **_: ("day", "event_type", "n_events", "sk"),
+    build=daily_hll_sketches,
+    merge=_hll_merge,
+    check=_hll_check,
+    config={
+        "key_col": "user_id",
+        "type_col": "event_type",
+        "ts_col": "ts",
+        "lg_k": DEFAULT_LG_K,
+    },
+)
 
 
 def rolling_distinct_by_type(
@@ -590,17 +661,7 @@ def cms_estimate(
     )
 
 
-def _cms_meta(key_col: str, ts_col: str, depth: int, width: int) -> dict:
-    return {
-        "kind": "cms",
-        "key_col": key_col,
-        "ts_col": ts_col,
-        "depth": depth,
-        "width": width,
-    }
-
-
-def _cms_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+def _cms_merge(stored: DataFrame, delta: DataFrame, **_) -> DataFrame:
     # counter merge IS integer addition — the whole mergeability story
     return (
         stored.select("day", "r", "c", "cnt")
@@ -610,82 +671,49 @@ def _cms_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def cms_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> int:
-    """Materialize a count-min ledger, day-partitioned like the HLL
-    store, with the hash-family configuration (depth/width + column
-    mapping) in the ``_ledger_meta.json`` sidecar — a probe or merge
-    built with a DIFFERENT family would silently read garbage cells, so
-    maintenance validates against the stored config up front.
-
-    The sidecar is CROSS-CHECKED against the frame before it is trusted
-    (advisory fix, same rationale as :func:`sketch_ledger_write`): the
-    schema must be ``(day, r, c, cnt)``, and the cell coordinates must
-    fit the claimed family — a nonempty ledger's max row index must be
-    exactly ``depth - 1`` (every key writes all ``depth`` rows) and its
-    max column must be ``< width``. A width LARGER than the build's is
-    not detectable from coordinates alone and stays caller-asserted, as
-    do the source column names."""
-    need = {"day", "r", "c", "cnt"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"CMS ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_cms_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
-    stats = back.agg(
+def _cms_check(
+    back: DataFrame, depth: int, width: int, **_
+) -> tuple[int, str | None]:
+    """The cell coordinates must fit the claimed hash family: a nonempty
+    ledger's max row index must be exactly ``depth - 1`` (every key
+    writes all ``depth`` rows) and its max column must be ``< width``. A
+    width LARGER than the build's is not detectable from coordinates
+    alone and stays caller-asserted."""
+    s = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.max("r").alias("max_r"),
         F.max("c").alias("max_c"),
     ).first()
-    if stats["n"] and (
-        stats["max_r"] != depth - 1 or stats["max_c"] >= width
-    ):
-        raise ValueError(
-            f"CMS ledger cells (max r={stats['max_r']}, max "
-            f"c={stats['max_c']}) do not fit the claimed hash family "
-            f"(depth={depth}, width={width}); pass the family the "
-            "ledger was built with"
-        )
-    _write_ledger_meta(path, _cms_meta(key_col, ts_col, depth, width))
-    return stats["n"]
+    if not s["n"] or (s["max_r"] == depth - 1 and s["max_c"] < width):
+        return s["n"], None
+    return s["n"], (
+        f"CMS ledger cells (max r={s['max_r']}, max "
+        f"c={s['max_c']}) do not fit the claimed hash family "
+        f"(depth={depth}, width={width}); pass the family the "
+        "ledger was built with"
+    )
 
 
-def cms_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> int:
-    """O(touched-days) count-min maintenance through the SAME staged
-    day-swap engine as the HLL ledger (:func:`_staged_day_upsert`:
-    partition-pruned read-back, executor-side staging, O_EXCL pending
-    marker, lossless crash repair) — only the merge differs, and for CMS
-    it is plain integer addition of counter cells. Unlike HLL estimates,
+CMS = LedgerKind(
+    "cms",
+    doc="""Count-min point frequencies per day: ``(day, r, c, cnt)``, the
+    hash family (depth/width) in the sidecar — a probe or merge built
+    with a DIFFERENT family would silently read garbage cells. The merge
+    is plain integer addition of counter cells, so unlike HLL estimates
     CMS counts are NOT replay-safe by algebra (re-adding a batch doubles
-    its mass), so this path must sit behind an applied-batch marker
-    (streaming/events._apply_once) exactly like the exact ``n_events``
-    column of the HLL ledger. Returns the number of day partitions
-    written. Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_cms_sketches(
-        batch, key_col=key_col, ts_col=ts_col, depth=depth, width=width
-    )
-    return _staged_day_upsert(
-        path, delta, _cms_merge, _cms_meta(key_col, ts_col, depth, width)
-    )
+    its mass): the applied-batch marker is what makes the stream
+    exactly-once.""",
+    columns=lambda **_: ("day", "r", "c", "cnt"),
+    build=daily_cms_sketches,
+    merge=_cms_merge,
+    check=_cms_check,
+    config={
+        "key_col": "user_id",
+        "ts_col": "ts",
+        "depth": CMS_DEPTH,
+        "width": CMS_WIDTH,
+    },
+)
 
 
 # ---------------------------------------------------------------------------
@@ -839,8 +867,8 @@ def rolling_percentiles(
 ) -> DataFrame:
     """Trailing ``window_days``-day value percentiles per day from the
     LEAF LEDGER alone — the daily p50/p99 monitor that motivates the
-    ledger. Same explode + broadcast-semi-join window engine as the HLL
-    :func:`_rolling` (Generate + hash join, no BNLJ); the per-day merge
+    ledger. Window expansion by :func:`_trailing` (Generate + hash
+    join, no BNLJ); the per-day merge
     is an integer bucket-count sum, then the shared in-array estimator
     reads the quantiles. Output: ``(day, n, p5, p9, p99, ...)`` with
     one ``p*`` column per requested quantile.
@@ -850,25 +878,12 @@ def rolling_percentiles(
     ranks are exact, the order statistics provably sit in the buckets
     the scan finds, and the (n-1)p interpolation is a convex
     combination of two per-point-bounded estimates."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(F.col("day").alias("out_day"))
     contrib = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            "b",
-            "cnt",
-        )
-        .select(F.date_add(F.col("day"), F.col("_off")).alias("out_day"), "b", "cnt")
-        .join(F.broadcast(days), "out_day", "left_semi")
-        .groupBy("out_day", "b")
+        _trailing(ledger, window_days, "b", "cnt")
+        .groupBy("day", "b")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    out = _qsk_percentiles_from_buckets(contrib, ["out_day"], qs, k)
-    return out.withColumnRenamed("out_day", "day")
+    return _qsk_percentiles_from_buckets(contrib, ["day"], qs, k)
 
 
 def rolling_percentiles_by_type(
@@ -883,33 +898,12 @@ def rolling_percentiles_by_type(
     window engine, bucket counts merged per (day, type) before the
     shared in-array estimator. Output: ``(day, event_type, n, p*...)``.
     Same error contract as :func:`rolling_percentiles`."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(F.col("day").alias("out_day"))
     contrib = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            "event_type",
-            "b",
-            "cnt",
-        )
-        .select(
-            F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-            "event_type",
-            "b",
-            "cnt",
-        )
-        .join(F.broadcast(days), "out_day", "left_semi")
-        .groupBy("out_day", "event_type", "b")
+        _trailing(ledger, window_days, "event_type", "b", "cnt")
+        .groupBy("day", "event_type", "b")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    out = _qsk_percentiles_from_buckets(
-        contrib, ["out_day", "event_type"], qs, k
-    )
-    return out.withColumnRenamed("out_day", "day")
+    return _qsk_percentiles_from_buckets(contrib, ["day", "event_type"], qs, k)
 
 
 def rollup_percentiles(
@@ -948,17 +942,7 @@ def _q_names(qs: tuple[float, ...]) -> list[str]:
     return [f"p{str(q).replace('0.', '')}" for q in qs]
 
 
-def _qsk_meta(value_col: str, type_col: str, ts_col: str, k: int) -> dict:
-    return {
-        "kind": "qsk",
-        "value_col": value_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "k": k,
-    }
-
-
-def _qsk_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+def _qsk_merge(stored: DataFrame, delta: DataFrame, **_) -> DataFrame:
     # like CMS: the merge IS integer addition of bucket counts
     return (
         stored.select("day", "event_type", "b", "cnt")
@@ -968,58 +952,27 @@ def _qsk_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def qsk_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    value_col: str = "value",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = QSK_SUB_BUCKETS,
-) -> int:
-    """Materialize a rank-sketch ledger, day-partitioned, with the
-    bucketing configuration in the ``_ledger_meta.json`` sidecar (a
-    probe or merge with a different ``k`` reads garbage buckets, so
-    maintenance validates up front). Schema is cross-checked against
-    the frame; ``k`` itself is not recoverable from bucket indices
-    (any k yields in-range longs) and stays caller-asserted, like the
-    CMS width-larger case."""
-    need = {"day", "event_type", "b", "cnt"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"rank-sketch ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_qsk_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    _write_ledger_meta(path, _qsk_meta(value_col, type_col, ts_col, k))
-    return ledger.sparkSession.read.parquet(path).count()
-
-
-def qsk_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    value_col: str = "value",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = QSK_SUB_BUCKETS,
-) -> int:
-    """O(touched-days) rank-sketch maintenance through the SAME staged
-    day-swap engine as the HLL/CMS ledgers (partition-pruned read-back,
-    executor-side staging, O_EXCL pending marker, lossless crash
-    repair); the merge is integer addition of bucket counts. Like CMS —
-    and unlike HLL register-max — bucket counts are NOT replay-safe by
-    algebra, so this path sits behind an applied-batch marker
-    (streaming/events.apply_qsk_batch). Returns the number of day
-    partitions written. Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_qsk_sketches(
-        batch, value_col=value_col, type_col=type_col, ts_col=ts_col, k=k
-    )
-    return _staged_day_upsert(
-        path, delta, _qsk_merge, _qsk_meta(value_col, type_col, ts_col, k)
-    )
+QSK = LedgerKind(
+    "qsk",
+    doc="""Value percentiles per (day, event_type): ``(day, event_type, b,
+    cnt)`` log-bucket counts, the bucketing ``k`` in the sidecar (a probe
+    or merge with a different ``k`` reads garbage buckets). The merge is
+    integer addition of bucket counts — like CMS, and unlike HLL register
+    max, NOT replay-safe by algebra, so the applied-batch marker guards
+    correctness. The write checks the schema only: ``k`` is not
+    recoverable from bucket indices (any k yields in-range longs) and
+    stays caller-asserted, like the CMS width-larger case.""",
+    columns=lambda **_: ("day", "event_type", "b", "cnt"),
+    build=daily_qsk_sketches,
+    merge=_qsk_merge,
+    check=lambda back, **_: (back.count(), None),
+    config={
+        "value_col": "value",
+        "type_col": "event_type",
+        "ts_col": "ts",
+        "k": QSK_SUB_BUCKETS,
+    },
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1107,7 +1060,7 @@ def _theta_pairwise(
 ) -> DataFrame:
     """Shared pairwise estimator over a DISTINCT ``(*keys, event_type,
     h)`` sample frame — whole-range (keys=[]) and day-windowed
-    (keys=["out_day"]) forms spell the same algebra through one copy."""
+    (keys=["day"]) forms spell the same algebra through one copy."""
     per_type = th.groupBy(*keys, "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("m")
     )
@@ -1184,7 +1137,7 @@ def rolling_theta_overlap(
     """Per-day TRAILING-WINDOW pairwise overlap estimates — the rolling
     audience-overlap metric ("7-day Jaccard between segments, daily")
     from the ledger alone: the same explode + broadcast-semi-join
-    window engine as the HLL/QSK rolling readouts builds a per-out_day
+    window engine as the HLL/QSK rolling readouts builds a per-day
     distinct sample frame (a key active on several window days counts
     once — set semantics, deduped by the distinct), then the shared
     pairwise estimator runs grouped by day. Output: ``(day, type_a,
@@ -1192,28 +1145,8 @@ def rolling_theta_overlap(
     ``day``."""
     if not 1 <= num < den:
         raise ValueError(f"need 1 <= num < den, got num={num} den={den}")
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(F.col("day").alias("out_day"))
-    th = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            "event_type",
-            "h",
-        )
-        .select(
-            F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-            "event_type",
-            "h",
-        )
-        .join(F.broadcast(days), "out_day", "left_semi")
-        .distinct()
-    )
-    out = _theta_pairwise(th, ["out_day"], float(den) / float(num))
-    return out.withColumnRenamed("out_day", "day")
+    th = _trailing(ledger, window_days, "event_type", "h").distinct()
+    return _theta_pairwise(th, ["day"], float(den) / float(num))
 
 
 def theta_rollup_distinct(
@@ -1243,104 +1176,53 @@ def theta_rollup_distinct(
     )
 
 
-def _theta_meta(
-    key_col: str, type_col: str, ts_col: str, num: int, den: int
-) -> dict:
-    return {
-        "kind": "theta",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "num": num,
-        "den": den,
-    }
-
-
-def _theta_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+def _theta_merge(stored: DataFrame, delta: DataFrame, **_) -> DataFrame:
     # set union IS distinct — idempotent, hence replay-safe by algebra
     return (
         stored.select("day", "event_type", "h").unionByName(delta).distinct()
     )
 
 
-def theta_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    num: int = THETA_NUM,
-    den: int = THETA_DEN,
-) -> int:
-    """Materialize a theta ledger, day-partitioned, sampling-rate config
-    in the sidecar. Cross-check (advisory discipline): the schema must
-    be ``(day, event_type, h)`` and every stored hash must satisfy the
-    claimed keep-predicate ``h mod den < num`` — a ledger sampled at a
-    LOWER rate than claimed can slip through when its kept set is a
-    subset of the claimed one (documented residual, like the CMS
-    width-larger case); a higher-rate or wrong-hash ledger is caught."""
-    need = {"day", "event_type", "h"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"theta ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_theta_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
-    stats = back.agg(
+def _theta_check(
+    back: DataFrame, num: int, den: int, **_
+) -> tuple[int, str | None]:
+    """Every stored hash must satisfy the claimed keep-predicate ``h mod
+    den < num``. A ledger sampled at a LOWER rate than claimed can slip
+    through when its kept set is a subset of the claimed one (documented
+    residual, like the CMS width-larger case); a higher-rate or
+    wrong-hash ledger is caught."""
+    s = back.agg(
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                (~(F.pmod(F.col("h"), F.lit(den)) < F.lit(num))).cast("int")
-            ),
-            F.lit(0),
-        ).alias("bad"),
+        _n_true(~(F.pmod(F.col("h"), F.lit(den)) < F.lit(num))).alias("bad"),
     ).first()
-    if stats["bad"]:
-        raise ValueError(
-            f"{stats['bad']} stored hash(es) violate the claimed sampling "
-            f"predicate (h mod {den} < {num}); pass the num/den the "
-            "ledger was built with"
-        )
-    _write_ledger_meta(
-        path, _theta_meta(key_col, type_col, ts_col, num, den)
+    if not s["bad"]:
+        return s["n"], None
+    return s["n"], (
+        f"{s['bad']} stored hash(es) violate the claimed sampling "
+        f"predicate (h mod {den} < {num}); pass the num/den the "
+        "ledger was built with"
     )
-    return stats["n"]
 
 
-def theta_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    num: int = THETA_NUM,
-    den: int = THETA_DEN,
-) -> int:
-    """O(touched-days) theta maintenance through the shared staged
-    day-swap engine; the merge is distinct-union, which is IDEMPOTENT —
-    unlike CMS/QSK counts, a replayed batch cannot drift a theta ledger,
-    so the applied-batch marker on the streaming path is purely a cost
-    guard. Returns the number of day partitions written. Same
-    single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_theta_sketches(
-        batch,
-        key_col=key_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        num=num,
-        den=den,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _theta_merge,
-        _theta_meta(key_col, type_col, ts_col, num, den),
-    )
+THETA = LedgerKind(
+    "theta",
+    doc="""Sampled key hashes per (day, event_type) for set algebra:
+    ``(day, event_type, h)``, the sampling rate num/den in the sidecar.
+    The merge is distinct-union, which is IDEMPOTENT — unlike CMS/QSK
+    counts, a replayed batch cannot drift a theta ledger, so the
+    applied-batch marker is purely a cost guard.""",
+    columns=lambda **_: ("day", "event_type", "h"),
+    build=daily_theta_sketches,
+    merge=_theta_merge,
+    check=_theta_check,
+    config={
+        "key_col": "user_id",
+        "type_col": "event_type",
+        "ts_col": "ts",
+        "num": THETA_NUM,
+        "den": THETA_DEN,
+    },
+)
 
 
 def ledger_percentiles(
@@ -1362,9 +1244,9 @@ def ledger_percentiles(
 
 
 def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
-    """Retention GC for ANY day-partitioned sketch ledger — HLL, CMS,
-    QSK, and theta stores share the ``day=YYYY-MM-DD`` layout, so one
-    function serves all four (the ledger sibling of
+    """Retention GC for ANY day-partitioned sketch ledger — all seven
+    kinds share the ``day=YYYY-MM-DD`` layout, so one function serves
+    them all (the ledger sibling of
     ``timetravel.vacuum_versions``, round-9): drop day partitions older
     than ``keep_days`` behind the NEWEST stored day. The horizon is
     DATA-relative, not wall-clock — deterministic for a given store, so
@@ -1378,9 +1260,6 @@ def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
     first, exactly like the maintenance entry points; the single-writer
     contract applies here too (retention racing an upsert could delete
     a day the upsert is re-staging)."""
-    import datetime
-    import re
-
     if keep_days < 1:
         raise ValueError(f"keep_days must be >= 1, got {keep_days}")
     if not os.path.isdir(path):
@@ -1398,8 +1277,12 @@ def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
     doomed = sorted(
         d for d in days if datetime.date.fromisoformat(d) < cutoff
     )
-    for d in doomed:
-        shutil.rmtree(os.path.join(path, f"day={d}"))
+    try:
+        for d in doomed:
+            shutil.rmtree(os.path.join(path, f"day={d}"))
+    finally:
+        if doomed:
+            cache.invalidate(path)
     return doomed
 
 
@@ -1646,44 +1529,13 @@ def rolling_hh(
     readouts, then the shared interval-merge readout grouped by day.
     Output: ``(day, rank, key, lb, ub)``; same bound contract as
     :func:`hh_rollup` per window."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(
-        F.col("day").alias("out_day")
-    )
-    contrib = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            "n_events",
-            "err",
-            "items",
-        )
-        .select(
-            F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-            "n_events",
-            "err",
-            "items",
-        )
-        .join(F.broadcast(days), "out_day", "left_semi")
-    )
-    out = _hh_scope_bounds(contrib, ["out_day"], top_n, buckets)
-    return out.withColumnRenamed("out_day", "day")
+    contrib = _trailing(ledger, window_days, "n_events", "err", "items")
+    return _hh_scope_bounds(contrib, ["day"], top_n, buckets)
 
 
-def _hh_meta(key_col: str, type_col: str, ts_col: str, k: int) -> dict:
-    return {
-        "kind": "hh",
-        "key_col": key_col,
-        "type_col": type_col,
-        "ts_col": ts_col,
-        "k": k,
-    }
-
-
-def _hh_merge_fn(k: int, buckets: int):
+def _hh_merge(
+    stored: DataFrame, delta: DataFrame, *, k: int, buckets: int, **_
+) -> DataFrame:
     """Same-day summary merge (late data / micro-batches) — the PODS'12
     mergeable-summaries rule: sum counters per key, find ``c_sub`` = the
     (k+1)-th combined counter (0 when ≤ k keys survive), SUBTRACT it
@@ -1694,96 +1546,72 @@ def _hh_merge_fn(k: int, buckets: int):
     tests); counters remain lower bounds throughout. Deterministic and
     layout-independent: counter sums are exact and the tournament
     tie-break is total."""
-
-    def merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
-        u = stored.select(
-            "day", "event_type", "n_events", "items", "err"
-        ).unionByName(delta.select(
-            "day", "event_type", "n_events", "items", "err"
-        ))
-        meta = u.groupBy("day", "event_type").agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("err").cast("long").alias("_err_in"),
+    u = stored.select(
+        "day", "event_type", "n_events", "items", "err"
+    ).unionByName(delta.select(
+        "day", "event_type", "n_events", "items", "err"
+    ))
+    meta = u.groupBy("day", "event_type").agg(
+        F.sum("n_events").cast("long").alias("n_events"),
+        F.sum("err").cast("long").alias("_err_in"),
+    )
+    cnts = (
+        u.select("day", "event_type", F.explode("items").alias("it"))
+        .groupBy("day", "event_type", F.col("it.k").alias("_k"))
+        .agg(F.sum("it.c").cast("long").alias("_c"))
+    )
+    # ledger-sized merge input (summary items of the touched days) —
+    # tournament form, same reasoning as the rollup readout
+    arr = _hh_topn_arr(
+        cnts, ["day", "event_type"], k + 1, buckets, via="tournament"
+    ).drop("_tot")
+    empty = F.expr("array()").cast(
+        "array<struct<nc:bigint,k:string>>"
+    )
+    # left join: a group whose every item was subtracted away on a
+    # previous merge has summary rows but no exploded counters
+    joined = meta.join(arr, ["day", "event_type"], "left").select(
+        "day",
+        "event_type",
+        "n_events",
+        "_err_in",
+        F.coalesce(F.col("_arr"), empty).alias("_arr"),
+    )
+    c_sub = (
+        F.when(
+            F.size("_arr") > k, -F.element_at("_arr", k + 1)["nc"]
         )
-        cnts = (
-            u.select("day", "event_type", F.explode("items").alias("it"))
-            .groupBy("day", "event_type", F.col("it.k").alias("_k"))
-            .agg(F.sum("it.c").cast("long").alias("_c"))
-        )
-        # ledger-sized merge input (summary items of the touched days) —
-        # tournament form, same reasoning as the rollup readout
-        arr = _hh_topn_arr(
-            cnts, ["day", "event_type"], k + 1, buckets, via="tournament"
-        ).drop("_tot")
-        empty = F.expr("array()").cast(
-            "array<struct<nc:bigint,k:string>>"
-        )
-        # left join: a group whose every item was subtracted away on a
-        # previous merge has summary rows but no exploded counters
-        joined = meta.join(arr, ["day", "event_type"], "left").select(
-            "day",
-            "event_type",
-            "n_events",
-            "_err_in",
-            F.coalesce(F.col("_arr"), empty).alias("_arr"),
-        )
-        c_sub = (
-            F.when(
-                F.size("_arr") > k, -F.element_at("_arr", k + 1)["nc"]
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        items = F.filter(
-            F.transform(
-                F.slice("_arr", 1, k),
-                lambda x: F.struct(
-                    x["k"].alias("k"),
-                    (-x["nc"] - c_sub).cast("long").alias("c"),
-                ),
+        .otherwise(F.lit(0))
+        .cast("long")
+    )
+    items = F.filter(
+        F.transform(
+            F.slice("_arr", 1, k),
+            lambda x: F.struct(
+                x["k"].alias("k"),
+                (-x["nc"] - c_sub).cast("long").alias("c"),
             ),
-            lambda x: x["c"] > 0,
-        )
-        return joined.select(
-            "day",
-            "event_type",
-            "n_events",
-            items.alias("items"),
-            (F.col("_err_in") + c_sub).cast("long").alias("err"),
-        )
+        ),
+        lambda x: x["c"] > 0,
+    )
+    return joined.select(
+        "day",
+        "event_type",
+        "n_events",
+        items.alias("items"),
+        (F.col("_err_in") + c_sub).cast("long").alias("err"),
+    )
 
-    return merge
 
-
-def hh_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = HH_K,
-) -> int:
-    """Materialize a heavy-hitters ledger, day-partitioned, summary
-    configuration in the ``_ledger_meta.json`` sidecar. Cross-check
-    (advisory discipline): the schema must be the canonical five
-    columns, no summary may hold MORE than ``k`` items, every stored
-    counter must be positive, ``err`` non-negative, and the mass
-    invariant (b) — ``Σ counters + (k+1)·err ≤ n_events`` — must hold
-    per summary row under the claimed ``k`` (the invariant the merge
-    bound telescopes through; a k LARGER than the build's inflates the
-    (k+1)·err term and is caught here whenever any summary evicted).
-    A SMALLER-k claim on an eviction-free ledger is not detectable from
-    the frame (documented residual, like the CMS width-larger case)."""
-    need = {"day", "event_type", "n_events", "items", "err"}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"heavy-hitters ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_hh_sketches"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
+def _hh_check(back: DataFrame, k: int, **_) -> tuple[int, str | None]:
+    """No summary may hold MORE than ``k`` items, every stored counter
+    must be positive, ``err`` non-negative, and the mass invariant (b) —
+    ``Σ counters + (k+1)·err ≤ n_events`` — must hold per summary row
+    under the claimed ``k`` (the invariant the merge bound telescopes
+    through; a k LARGER than the build's inflates the (k+1)·err term and
+    is caught here whenever any summary evicted). A SMALLER-k claim on an
+    eviction-free ledger is not detectable from the frame (documented
+    residual, like the CMS width-larger case)."""
     mass = F.coalesce(
         F.aggregate(
             "items",
@@ -1792,7 +1620,7 @@ def hh_ledger_write(
         ),
         F.lit(0).cast("long"),
     )
-    stats = back.agg(
+    s = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.max(F.size("items")), F.lit(0)).alias("max_items"),
         F.coalesce(F.min("err"), F.lit(0)).alias("min_err"),
@@ -1805,66 +1633,47 @@ def hh_ledger_write(
             ),
             F.lit(1).cast("long"),
         ).alias("min_c"),
-        F.coalesce(
-            F.sum(
-                (
-                    mass + F.lit(k + 1) * F.col("err") > F.col("n_events")
-                ).cast("int")
-            ),
-            F.lit(0),
+        _n_true(
+            mass + F.lit(k + 1) * F.col("err") > F.col("n_events")
         ).alias("bad_mass"),
     ).first()
-    if stats["n"] and (
-        stats["max_items"] > k
-        or stats["min_err"] < 0
-        or stats["min_c"] < 1
-        or stats["bad_mass"]
+    if not s["n"] or not (
+        s["max_items"] > k
+        or s["min_err"] < 0
+        or s["min_c"] < 1
+        or s["bad_mass"]
     ):
-        raise ValueError(
-            f"heavy-hitters ledger summaries (max items "
-            f"{stats['max_items']}, min err {stats['min_err']}, min "
-            f"counter {stats['min_c']}, mass-invariant violations "
-            f"{stats['bad_mass']}) do not fit the claimed k={k}; "
-            "pass the k the ledger was built with"
-        )
-    _write_ledger_meta(path, _hh_meta(key_col, type_col, ts_col, k))
-    return stats["n"]
+        return s["n"], None
+    return s["n"], (
+        f"heavy-hitters ledger summaries (max items "
+        f"{s['max_items']}, min err {s['min_err']}, min "
+        f"counter {s['min_c']}, mass-invariant violations "
+        f"{s['bad_mass']}) do not fit the claimed k={k}; "
+        "pass the k the ledger was built with"
+    )
 
 
-def hh_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    k: int = HH_K,
-    buckets: int = HH_BUCKETS,
-) -> int:
-    """O(touched-days) heavy-hitters maintenance through the SAME staged
-    day-swap engine as the other four ledgers (partition-pruned
-    read-back, executor-side staging, O_EXCL pending marker, lossless
-    crash repair); the merge is the PODS'12 compress rule of
-    :func:`_hh_merge_fn`. Like CMS/QSK counts — and unlike HLL register
-    max / theta distinct-union — summary counters are NOT replay-safe by
-    algebra (a replayed batch inflates counts), so this path sits behind
-    an applied-batch marker (streaming/events.apply_hh_batch). Returns
-    the number of day partitions written. Same single-writer and
-    no-null-day contracts as :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_hh_sketches(
-        batch,
-        key_col=key_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        k=k,
-        buckets=buckets,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _hh_merge_fn(k, buckets),
-        _hh_meta(key_col, type_col, ts_col, k),
-    )
+HH = LedgerKind(
+    "hh",
+    doc="""Heavy hitters per (day, event_type): ``(day, event_type,
+    n_events, items, err)`` Misra-Gries summaries, merged by the PODS'12
+    compress rule of :func:`_hh_merge`. Like CMS/QSK counts — and unlike
+    HLL register max / theta distinct-union — summary counters are NOT
+    replay-safe by algebra (a replayed batch inflates counts), so the
+    applied-batch marker guards correctness. ``buckets`` is the merge's
+    tournament fan-in: an execution knob, not recorded.""",
+    columns=lambda **_: ("day", "event_type", "n_events", "items", "err"),
+    build=daily_hh_sketches,
+    merge=_hh_merge,
+    check=_hh_check,
+    config={
+        "key_col": "user_id",
+        "type_col": "event_type",
+        "ts_col": "ts",
+        "k": HH_K,
+    },
+    knobs={"buckets": HH_BUCKETS},
+)
 
 
 def hh_estimate(
@@ -1920,33 +1729,10 @@ def rolling_hh_by_type(
     broadcast-semi-join window engine, interval-merged per (day, type).
     Output: ``(day, event_type, rank, key, lb, ub)``; the bound contract
     of :func:`hh_rollup` holds per (window, type) scope."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(
-        F.col("day").alias("out_day")
+    contrib = _trailing(
+        ledger, window_days, "event_type", "n_events", "err", "items"
     )
-    contrib = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            "event_type",
-            "n_events",
-            "err",
-            "items",
-        )
-        .select(
-            F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-            "event_type",
-            "n_events",
-            "err",
-            "items",
-        )
-        .join(F.broadcast(days), "out_day", "left_semi")
-    )
-    out = _hh_scope_bounds(contrib, ["out_day", "event_type"], top_n, buckets)
-    return out.withColumnRenamed("out_day", "day")
+    return _hh_scope_bounds(contrib, ["day", "event_type"], top_n, buckets)
 
 
 # ---------------------------------------------------------------------------
@@ -2050,140 +1836,65 @@ def rolling_sample_stats(
     row counts in every window day it falls in) — the estimators stay
     unbiased because inclusion is decided once per row, independent of
     the window."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    days = ledger.select("day").distinct().select(
-        F.col("day").alias("out_day")
+    contrib = _trailing(ledger, window_days, *keys, value_col)
+    return sample_grouped_stats(
+        contrib, ("day", *keys), value_col, num=num, den=den
     )
-    contrib = (
-        ledger.select(
-            F.explode(F.sequence(F.lit(0), F.lit(window_days - 1))).alias(
-                "_off"
-            ),
-            "day",
-            *keys,
-            value_col,
-        )
-        .select(
-            F.date_add(F.col("day"), F.col("_off")).alias("out_day"),
-            *keys,
-            value_col,
-        )
-        .join(F.broadcast(days), "out_day", "left_semi")
-    )
-    out = sample_grouped_stats(
-        contrib, ("out_day", *keys), value_col, num=num, den=den
-    )
-    return out.withColumnRenamed("out_day", "day")
 
 
-def _sample_meta(
-    id_col: str, ts_col: str, payload: tuple[str, ...], num: int, den: int
-) -> dict:
-    return {
-        "kind": "sample",
-        "id_col": id_col,
-        "ts_col": ts_col,
-        "payload": list(payload),
-        "num": num,
-        "den": den,
-    }
-
-
-def _sample_merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+def _sample_merge(stored: DataFrame, delta: DataFrame, **_) -> DataFrame:
     # distinct-union on full rows, keyed by (day, id): a row id is
     # unique, so identical replayed rows collapse — idempotent, the
     # theta property (payload columns ride along unchanged)
     return stored.select(*delta.columns).unionByName(delta).distinct()
 
 
-def sample_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    payload: tuple[str, ...] = ("event_type", "value"),
-    num: int = SAMPLE_NUM,
-    den: int = SAMPLE_DEN,
-) -> int:
-    """Materialize a sample ledger, day-partitioned, sampling config in
-    the sidecar. Cross-check (advisory discipline): the schema must be
-    ``(day, id, *payload)``, every stored id must satisfy the claimed
-    keep-predicate, and ids must be UNIQUE — a duplicate id means the
-    source id column was not a row identity and every estimate is
-    biased (caught here, not in production reads). A lower-rate ledger
-    can slip through a higher-rate claim (the theta residual)."""
-    need = {"day", "id", *payload}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"sample ledger frame is missing columns {sorted(missing)}; "
-            "build it with daily_sample_rows"
-        )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
-    stats = back.agg(
+def _sample_check(
+    back: DataFrame, num: int, den: int, **_
+) -> tuple[int, str | None]:
+    """Every stored id must satisfy the claimed keep-predicate, and ids
+    must be UNIQUE — a duplicate id means the source id column was not a
+    row identity and every estimate is biased (caught here, not in
+    production reads). A lower-rate ledger can slip through a
+    higher-rate claim (the theta residual)."""
+    s = back.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("id").alias("n_ids"),
-        F.coalesce(
-            F.sum(
-                (
-                    ~(
-                        F.pmod(
-                            F.xxhash64(F.col("id").cast("string")),
-                            F.lit(den),
-                        )
-                        < F.lit(num)
-                    )
-                ).cast("int")
-            ),
-            F.lit(0),
+        _n_true(
+            ~(
+                F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(den))
+                < F.lit(num)
+            )
         ).alias("bad"),
     ).first()
-    if stats["bad"] or stats["n"] != stats["n_ids"]:
-        raise ValueError(
-            f"sample ledger violates its contract ({stats['bad']} id(s) "
-            f"outside the claimed keep-predicate h mod {den} < {num}; "
-            f"{stats['n'] - stats['n_ids']} duplicate id(s)); pass the "
-            "num/den the ledger was built with and a UNIQUE id column"
-        )
-    _write_ledger_meta(
-        path, _sample_meta(id_col, ts_col, payload, num, den)
+    if not s["bad"] and s["n"] == s["n_ids"]:
+        return s["n"], None
+    return s["n"], (
+        f"sample ledger violates its contract ({s['bad']} id(s) "
+        f"outside the claimed keep-predicate h mod {den} < {num}; "
+        f"{s['n'] - s['n_ids']} duplicate id(s)); pass the "
+        "num/den the ledger was built with and a UNIQUE id column"
     )
-    return stats["n"]
 
 
-def sample_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    payload: tuple[str, ...] = ("event_type", "value"),
-    num: int = SAMPLE_NUM,
-    den: int = SAMPLE_DEN,
-) -> int:
-    """O(touched-days) sample maintenance through the shared staged
-    day-swap engine; the merge is distinct-union on (day, id) — like
-    theta, IDEMPOTENT: a replayed batch cannot change the sample, so
-    the streaming applied-batch marker is purely a cost guard. Returns
-    the number of day partitions written. Same single-writer and
-    no-null-day contracts as :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_sample_rows(
-        batch,
-        id_col=id_col,
-        ts_col=ts_col,
-        payload=payload,
-        num=num,
-        den=den,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _sample_merge,
-        _sample_meta(id_col, ts_col, payload, num, den),
-    )
+SAMPLE = LedgerKind(
+    "sample",
+    doc="""Uniform row sample: ``(day, id, *payload)``, the sampling rate
+    num/den in the sidecar. The merge is distinct-union on (day, id) —
+    like theta, IDEMPOTENT: a replayed batch cannot change the sample, so
+    the applied-batch marker is purely a cost guard.""",
+    columns=lambda payload, **_: ("day", "id", *payload),
+    build=daily_sample_rows,
+    merge=_sample_merge,
+    check=_sample_check,
+    config={
+        "id_col": "event_id",
+        "ts_col": "ts",
+        "payload": ("event_type", "value"),
+        "num": SAMPLE_NUM,
+        "den": SAMPLE_DEN,
+    },
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2217,7 +1928,6 @@ def daily_stratified_sample(
     strata: tuple[str, ...] = ("event_type",),
     payload: tuple[str, ...] = ("value",),
     cap: int = STRATIFIED_CAP,
-    buckets: int = HH_BUCKETS,
 ) -> DataFrame:
     """ONE pass over the log → the stratified sample ledger ``(day,
     *strata, n, id, h, *payload)``: per (day, strata) the ``cap``
@@ -2230,8 +1940,6 @@ def daily_stratified_sample(
     aggregate."""
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    if buckets < 1:
-        raise ValueError(f"buckets must be >= 1, got {buckets}")
     idc = F.col(id_col)
     rows = events.select(
         F.to_date(ts_col).alias("day"),
@@ -2247,8 +1955,7 @@ def daily_stratified_sample(
     # the exchange plus a final per-group cut: bounded task memory like
     # the old two-level collect_list tournament, without materializing
     # and array-sorting whole level-1 buffers (0.64 -> measured faster at
-    # sf0.1, identical output rows). `buckets` stays for signature
-    # compatibility with the streaming apply path.
+    # sf0.1, identical output rows).
     w = Window.partitionBy(*keys).orderBy("h", "id")
     kept = (
         rows.withColumn("_rk", F.row_number().over(w))
@@ -2318,165 +2025,114 @@ def stratified_grouped_stats(
     )
 
 
-def _stratified_meta(
-    id_col: str,
-    ts_col: str,
+def _stratified_merge(
+    stored: DataFrame,
+    delta: DataFrame,
+    *,
     strata: tuple[str, ...],
     payload: tuple[str, ...],
     cap: int,
-) -> dict:
-    return {
-        "kind": "stratified",
-        "id_col": id_col,
-        "ts_col": ts_col,
-        "strata": list(strata),
-        "payload": list(payload),
-        "cap": cap,
-    }
-
-
-def _stratified_merge_fn(strata: tuple[str, ...], payload: tuple[str, ...], cap: int):
-    def merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
-        keys = ["day", *strata]
-        cols = [*keys, "n", "id", "h", *payload]
-        # n is additive ACROSS batches but constant WITHIN one side's
-        # stratum rows: recover each side's per-stratum n, sum, restamp
-        s_n = stored.groupBy(*keys).agg(F.first("n").alias("_sn"))
-        d_n = delta.groupBy(*keys).agg(F.first("n").alias("_dn"))
-        n_new = s_n.join(d_n, keys, "full_outer").select(
-            *keys,
-            (
-                F.coalesce("_sn", F.lit(0)) + F.coalesce("_dn", F.lit(0))
-            ).cast("long").alias("n"),
-        )
-        u = (
-            stored.select(*cols)
-            .unionByName(delta.select(*cols))
-            .drop("n")
-            .dropDuplicates([*keys, "id"])  # replayed rows collapse
-        )
-        item = F.struct(F.col("h"), F.col("id"), *[F.col(c) for c in payload])
-        low = u.groupBy(*keys).agg(
-            F.slice(F.array_sort(F.collect_list(item)), 1, cap).alias("_low")
-        )
-        return (
-            low.join(n_new, keys)
-            .select(*keys, "n", F.explode("_low").alias("_r"))
-            .select(
-                *keys,
-                "n",
-                F.col("_r.id").alias("id"),
-                F.col("_r.h").alias("h"),
-                *[F.col(f"_r.{c}").alias(c) for c in payload],
-            )
-        )
-
-    return merge
-
-
-def stratified_ledger_write(
-    ledger: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    strata: tuple[str, ...] = ("event_type",),
-    payload: tuple[str, ...] = ("value",),
-    cap: int = STRATIFIED_CAP,
-) -> int:
-    """Materialize a stratified ledger, day-partitioned, config in the
-    sidecar. Cross-check: canonical schema; per (day, strata) at most
-    ``cap`` rows, a single consistent ``n`` with n ≥ m, unique ids, and
-    ``h == xxhash64(id)`` recomputable for every row (a corrupted hash
-    column would silently break the bottom-k merge order)."""
+    **_,
+) -> DataFrame:
     keys = ["day", *strata]
-    need = {*keys, "n", "id", "h", *payload}
-    missing = need - set(ledger.columns)
-    if missing:
-        raise ValueError(
-            f"stratified ledger frame is missing columns "
-            f"{sorted(missing)}; build it with daily_stratified_sample"
+    cols = [*keys, "n", "id", "h", *payload]
+    # n is additive ACROSS batches but constant WITHIN one side's
+    # stratum rows: recover each side's per-stratum n, sum, restamp
+    s_n = stored.groupBy(*keys).agg(F.first("n").alias("_sn"))
+    d_n = delta.groupBy(*keys).agg(F.first("n").alias("_dn"))
+    n_new = s_n.join(d_n, keys, "full_outer").select(
+        *keys,
+        (
+            F.coalesce("_sn", F.lit(0)) + F.coalesce("_dn", F.lit(0))
+        ).cast("long").alias("n"),
+    )
+    u = (
+        stored.select(*cols)
+        .unionByName(delta.select(*cols))
+        .drop("n")
+        .dropDuplicates([*keys, "id"])  # replayed rows collapse
+    )
+    item = F.struct(F.col("h"), F.col("id"), *[F.col(c) for c in payload])
+    low = u.groupBy(*keys).agg(
+        F.slice(F.array_sort(F.collect_list(item)), 1, cap).alias("_low")
+    )
+    return (
+        low.join(n_new, keys)
+        .select(*keys, "n", F.explode("_low").alias("_r"))
+        .select(
+            *keys,
+            "n",
+            F.col("_r.id").alias("id"),
+            F.col("_r.h").alias("h"),
+            *[F.col(f"_r.{c}").alias(c) for c in payload],
         )
-    ledger.write.partitionBy("day").mode("overwrite").parquet(path)
-    back = ledger.sparkSession.read.parquet(path)
-    per = back.groupBy(*keys).agg(
+    )
+
+
+def _stratified_check(
+    back: DataFrame, strata: tuple[str, ...], cap: int, **_
+) -> tuple[int, str | None]:
+    """Per (day, strata) at most ``cap`` rows, a single consistent ``n``
+    with n ≥ m, unique ids, and ``h == xxhash64(id)`` recomputable for
+    every row (a corrupted hash column would silently break the bottom-k
+    merge order). The row count is Σm of the same per-stratum
+    aggregate."""
+    per = back.groupBy("day", *strata).agg(
         F.count(F.lit(1)).alias("m"),
         F.countDistinct("id").alias("m_ids"),
         F.countDistinct("n").alias("n_vals"),
         F.first("n").alias("n"),
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("h")
-                    != F.xxhash64(F.col("id").cast("string"))
-                ).cast("int")
-            ),
-            F.lit(0),
-        ).alias("bad_h"),
+        _n_true(F.col("h") != F.xxhash64(F.col("id").cast("string"))).alias(
+            "bad_h"
+        ),
     )
-    stats = per.agg(
-        F.count(F.lit(1)).alias("groups"),
+    s = per.agg(
+        F.coalesce(F.sum("m"), F.lit(0)).alias("rows"),
         F.coalesce(F.max("m"), F.lit(0)).alias("max_m"),
-        F.coalesce(
-            F.sum(
-                (
-                    (F.col("m") != F.col("m_ids"))
-                    | (F.col("n_vals") != 1)
-                    | (F.col("n") < F.col("m"))
-                    | (F.col("bad_h") > 0)
-                ).cast("int")
-            ),
-            F.lit(0),
+        _n_true(
+            (F.col("m") != F.col("m_ids"))
+            | (F.col("n_vals") != 1)
+            | (F.col("n") < F.col("m"))
+            | (F.col("bad_h") > 0)
         ).alias("bad"),
     ).first()
-    if stats["groups"] and (stats["max_m"] > cap or stats["bad"]):
-        raise ValueError(
-            f"stratified ledger violates its contract (max stratum rows "
-            f"{stats['max_m']} vs cap {cap}; {stats['bad']} stratum(s) "
-            "with duplicate ids, inconsistent n, n < m, or a hash "
-            "column that does not equal xxhash64(id)); pass the build "
-            "configuration and a UNIQUE id column"
-        )
-    _write_ledger_meta(
-        path, _stratified_meta(id_col, ts_col, strata, payload, cap)
-    )
-    return int(
-        back.count()
+    if not s["rows"] or (s["max_m"] <= cap and not s["bad"]):
+        return s["rows"], None
+    return s["rows"], (
+        f"stratified ledger violates its contract (max stratum rows "
+        f"{s['max_m']} vs cap {cap}; {s['bad']} stratum(s) "
+        "with duplicate ids, inconsistent n, n < m, or a hash "
+        "column that does not equal xxhash64(id)); pass the build "
+        "configuration and a UNIQUE id column"
     )
 
 
-def stratified_ledger_upsert_batch(
-    batch: DataFrame,
-    path: str,
-    *,
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    strata: tuple[str, ...] = ("event_type",),
-    payload: tuple[str, ...] = ("value",),
-    cap: int = STRATIFIED_CAP,
-    buckets: int = HH_BUCKETS,
-) -> int:
-    """O(touched-days) stratified-sample maintenance through the shared
-    staged day-swap engine; the merge is bottom-cap OF THE UNION with n
-    summed — associative AND idempotent (replayed rows collapse by id
-    before the cut), so the streamed ledger is BIT-EQUAL to a one-shot
-    build and the applied-batch marker guards only the additive ``n``
-    column (a replayed batch would double-count it, exactly the HLL
-    n_events situation). Returns the number of day partitions written.
-    Same single-writer and no-null-day contracts as
-    :func:`sketch_ledger_upsert_batch`."""
-    delta = daily_stratified_sample(
-        batch,
-        id_col=id_col,
-        ts_col=ts_col,
-        strata=strata,
-        payload=payload,
-        cap=cap,
-        buckets=buckets,
-    )
-    return _staged_day_upsert(
-        path,
-        delta,
-        _stratified_merge_fn(strata, payload, cap),
-        _stratified_meta(id_col, ts_col, strata, payload, cap),
-    )
+STRATIFIED = LedgerKind(
+    "stratified",
+    doc="""Per-stratum bottom-k sample: ``(day, *strata, n, id, h,
+    *payload)``, the strata, payload and cap in the sidecar. The merge is
+    bottom-cap OF THE UNION with n summed — associative AND idempotent
+    for the sampled ROWS (replayed rows collapse by id before the cut),
+    so the streamed ledger is BIT-EQUAL to a one-shot build; the
+    applied-batch marker guards only the additive ``n`` column (a
+    replayed batch would double-count it, exactly the HLL n_events
+    situation).""",
+    columns=lambda strata, payload, **_: (
+        "day", *strata, "n", "id", "h", *payload
+    ),
+    build=daily_stratified_sample,
+    merge=_stratified_merge,
+    check=_stratified_check,
+    config={
+        "id_col": "event_id",
+        "ts_col": "ts",
+        "strata": ("event_type",),
+        "payload": ("value",),
+        "cap": STRATIFIED_CAP,
+    },
+)
+
+LEDGER_KINDS: dict[str, LedgerKind] = {
+    k.name: k for k in (HLL, CMS, QSK, THETA, HH, SAMPLE, STRATIFIED)
+}
+

@@ -2374,14 +2374,12 @@ def _stream_sketch_ledger(spark: SparkSession, sf_dir: str) -> str:
     """Build-once streaming sketch-ledger scenario for
     ``e_stream_sketch_audit``: three deterministic content-hash
     micro-batches of the events table applied through the PRODUCTION
-    foreachBatch paths for ALL SEVEN ledger kinds (streaming/events.
-    apply_sketch_batch / apply_cms_batch / apply_qsk_batch /
-    apply_theta_batch / apply_hh_batch / apply_sample_batch /
-    apply_stratified_batch — the same functions the ingest streams
-    drive), plus one REPLAY of batch 1 per kind that the applied-batch
-    marker must turn into a no-op. Returns the scenario base dir
-    holding ``hll`` / ``cms`` / ``qsk`` / ``theta`` / ``hh`` /
-    ``sample`` / ``stratified`` subdir ledgers. Memoized like
+    foreachBatch path (streaming/events.apply_ledger_batch — the same
+    function the ingest streams drive) for ALL SEVEN ledger kinds of
+    operators/sketches.LEDGER_KINDS, plus one REPLAY of batch 1 per kind
+    that the applied-batch marker must turn into a no-op. Returns the
+    scenario base dir holding ``hll`` / ``cms`` / ``qsk`` / ``theta`` /
+    ``hh`` / ``sample`` / ``stratified`` subdir ledgers. Memoized like
     _stream_audit_targets."""
     return cache.memo_dir(
         "sketchaudit",
@@ -2391,15 +2389,8 @@ def _stream_sketch_ledger(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _build_stream_sketch_ledger(spark: SparkSession, sf_dir: str, base: str) -> None:
-    from ..streaming.events import (
-        apply_cms_batch,
-        apply_hh_batch,
-        apply_qsk_batch,
-        apply_sample_batch,
-        apply_sketch_batch,
-        apply_stratified_batch,
-        apply_theta_batch,
-    )
+    from ..operators.sketches import LEDGER_KINDS
+    from ..streaming.events import apply_ledger_batch
 
     events = t(spark, sf_dir, "events")
     batches = [
@@ -2414,21 +2405,18 @@ def _build_stream_sketch_ledger(spark: SparkSession, sf_dir: str, base: str) -> 
                 f"{what} returned {actual}, expected {expected}"
             )
 
-    kinds = {
-        "hll": apply_sketch_batch,
-        "cms": apply_cms_batch,
-        "qsk": apply_qsk_batch,
-        "theta": apply_theta_batch,
-        "hh": apply_hh_batch,
-        "sample": apply_sample_batch,
-        "stratified": apply_stratified_batch,
-    }
-    for kind, apply_fn in kinds.items():
-        ledger = os.path.join(base, kind)
+    for name, kind in LEDGER_KINDS.items():
+        ledger = os.path.join(base, name)
         for b, batch in enumerate(batches):
-            _applied(True, apply_fn(batch, b, ledger), f"{kind} batch {b}")
+            _applied(
+                True,
+                apply_ledger_batch(kind, batch, b, ledger),
+                f"{name} batch {b}",
+            )
         _applied(
-            False, apply_fn(batches[1], 1, ledger), f"{kind} replay of 1"
+            False,
+            apply_ledger_batch(kind, batches[1], 1, ledger),
+            f"{name} replay of 1",
         )
 
 

@@ -623,7 +623,7 @@ def sketch_ingest_stream(
     events: DataFrame, ledger_path: str, checkpoint_dir: str
 ):
     """Streaming ingest into the mergeable HLL sketch ledger
-    (operators/sketches.py): each micro-batch folds into the stored
+    (operators/sketches.HLL): each micro-batch folds into the stored
     per-(day, event_type) distinct-user sketches via the O(touched-days)
     partition-pruned upsert — a continuous distinct-count feed whose
     serving queries (rolling windows, type rollups) never rescan the
@@ -637,9 +637,10 @@ def sketch_ingest_stream(
     double-count. Same honest crash window as every plain-parquet sink:
     dying between the merge and the marker write re-applies one batch's
     event counts on restart (the estimates still cannot drift)."""
+    from ..operators.sketches import HLL
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_sketch_batch(batch_df, batch_id, ledger_path)
+        apply_ledger_batch(HLL, batch_df, batch_id, ledger_path)
 
     return (
         events.writeStream.foreachBatch(apply_batch)
@@ -648,145 +649,28 @@ def sketch_ingest_stream(
     )
 
 
-def apply_sketch_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
+def apply_ledger_batch(
+    kind, batch_df: DataFrame, batch_id: int, ledger_path: str
 ) -> bool:
-    """The micro-batch apply behind :func:`sketch_ingest_stream`
-    (module-level so replay/audit tooling exercises the PRODUCTION apply
-    path). Returns True if the batch was merged, False if the ledger
-    marked it as a replay.
+    """The micro-batch apply of any sketch ledger ``kind``
+    (operators/sketches.LedgerKind — the one behind
+    :func:`sketch_ingest_stream`; module-level so replay/audit tooling
+    exercises the PRODUCTION apply path): ``kind.upsert`` behind the
+    applied-batch marker. Returns True if the batch was merged, False if
+    the marker identified it as a replay. Whether the marker guards
+    correctness (additive counts) or only cost (an idempotent merge) is
+    the kind's ``doc``.
 
-    Null-ts contract (advisory fix): rows with a NULL/unparseable ``ts``
-    cannot live in a day-partitioned ledger (the upsert would raise on
-    every retry, wedging the stream with its staged slice discarded), so
-    they are DROPPED here before the merge — the documented availability
-    trade; a pipeline that must not lose malformed rows routes them to a
+    Null-ts contract: rows with a NULL/unparseable ``ts`` cannot live in
+    a day-partitioned ledger (the upsert would raise on every retry,
+    wedging the stream with its staged slice discarded), so they are
+    DROPPED here before the merge — the documented availability trade;
+    a pipeline that must not lose malformed rows routes them to a
     dead-letter sink upstream."""
-    from ..operators.sketches import sketch_ledger_upsert_batch
-
     return _apply_once(
         batch_id,
         ledger_path,
-        lambda: sketch_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_cms_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the COUNT-MIN frequency ledger
-    (operators/sketches.cms_ledger_upsert_batch) behind the same
-    applied-batch marker — CMS counters are NOT replay-safe by algebra
-    (re-adding a batch doubles its mass), so the marker is what makes
-    the stream exactly-once. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import cms_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: cms_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_theta_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the THETA set-operation ledger
-    (operators/sketches.theta_ledger_upsert_batch). The distinct-union
-    merge is IDEMPOTENT — a replayed batch cannot drift the ledger —
-    so the applied-batch marker here is purely a cost guard, not a
-    correctness requirement. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import theta_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: theta_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_qsk_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the QUANTILE rank-sketch ledger
-    (operators/sketches.qsk_ledger_upsert_batch) behind the same
-    applied-batch marker — bucket counts, like CMS counters, are NOT
-    replay-safe by algebra. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import qsk_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: qsk_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_hh_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the HEAVY-HITTERS summary ledger
-    (operators/sketches.hh_ledger_upsert_batch) behind the same
-    applied-batch marker — Misra-Gries counters, like CMS/QSK counts,
-    are NOT replay-safe by algebra (a replayed batch inflates them).
-    Null-ts rows are dropped under the :func:`apply_sketch_batch`
-    contract."""
-    from ..operators.sketches import hh_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: hh_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_sample_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the row-SAMPLE (AQP) ledger
-    (operators/sketches.sample_ledger_upsert_batch). Like theta, the
-    distinct-union-on-id merge is IDEMPOTENT — a replayed batch cannot
-    change the sample — so the applied-batch marker here is purely a
-    cost guard. Null-ts rows are dropped under the
-    :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import sample_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: sample_ledger_upsert_batch(
-            batch_df.filter(F.col("ts").isNotNull()), ledger_path
-        ),
-    )
-
-
-def apply_stratified_batch(
-    batch_df: DataFrame, batch_id: int, ledger_path: str
-) -> bool:
-    """Micro-batch apply for the STRATIFIED bottom-k sample ledger
-    (operators/sketches.stratified_ledger_upsert_batch). The bottom-cap
-    merge is idempotent for the sampled ROWS (replayed rows collapse by
-    id), but the additive ``n`` column is NOT replay-safe — the marker
-    guards it, exactly the HLL n_events situation. Null-ts rows are
-    dropped under the :func:`apply_sketch_batch` contract."""
-    from ..operators.sketches import stratified_ledger_upsert_batch
-
-    return _apply_once(
-        batch_id,
-        ledger_path,
-        lambda: stratified_ledger_upsert_batch(
+        lambda: kind.upsert(
             batch_df.filter(F.col("ts").isNotNull()), ledger_path
         ),
     )
