@@ -63,6 +63,31 @@ def count_jobs(spark):
 
 
 @pytest.fixture()
+def fail_move(monkeypatch):
+    """``fail_move(n)`` makes the ``n``-th directory move of ``commit``
+    (1-based, counted from the call) raise ``OSError`` — the torn state a
+    crash at that point of a publish leaves behind — and returns the list
+    of ``(src, dst)`` moves attempted so far. Later moves run normally."""
+    from vectordb_similarity_search_spark import commit
+
+    real = commit._move
+
+    def arm(n: int) -> list:
+        moves = []
+
+        def move(src, dst):
+            moves.append((src, dst))
+            if len(moves) == n:
+                raise OSError(f"injected failure in commit move {n}")
+            real(src, dst)
+
+        monkeypatch.setattr(commit, "_move", move)
+        return moves
+
+    return arm
+
+
+@pytest.fixture()
 def count_py4j_calls(monkeypatch):
     """``count_py4j_calls(fn, *args)`` returns ``(result, py4j round trips)``:
     every ``ClientServerConnection.send_command`` made by the calling

@@ -390,3 +390,43 @@ def test_ivf_maintain_validation(spark, tmp_path):
     ann.ivf_write_index(model, emb, path)
     with _pytest.raises(ValueError, match="rebalance_ratio"):
         ann.ivf_maintain(spark, path, model, rebalance_ratio=0.5)
+
+
+class _StubPQ:
+    """Enough of a PQ model for ``ivfpq_write_index`` to reach its write."""
+
+    def encode(self, df, vec_col, code_col):
+        return df.select("vec_id", "cell", F.lit(b"").alias(code_col))
+
+
+@pytest.mark.parametrize("writer", ["ivf_write_index", "ivf_append", "ivfpq_write_index"])
+def test_failed_index_write_leaves_no_cached_scan(spark, tmp_path, monkeypatch, writer):
+    """A failed overwrite may already have deleted the index files, so
+    every index writer invalidates in a ``finally``: after an injected
+    write failure no cache entry over the index path survives."""
+    from pyspark.sql import DataFrameWriter
+
+    from vectordb_similarity_search_spark import cache
+    from vectordb_similarity_search_spark.operators import ann
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    model = ann.ivf_fit(emb, n_cells=2, seed=1)
+    path = str(tmp_path / "idx")
+    ann.ivf_write_index(model, emb, path)
+    assert ann._index_scan(spark, path).count() == 20
+
+    def boom(self, *a, **k):
+        raise OSError("injected write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    args = (model, _StubPQ()) if writer == "ivfpq_write_index" else (model,)
+    with pytest.raises(OSError, match="injected write failure"):
+        getattr(ann, writer)(*args, emb, path)
+    over_path = [
+        k for k, (_, reads) in cache._ENTRIES.items()
+        if any(r == path or r.startswith(path + "/") for r in reads)
+    ]
+    assert not over_path, over_path

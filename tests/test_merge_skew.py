@@ -495,9 +495,10 @@ def test_pruned_merge_requires_key_determined_partition(spark, tmp_path):
         merge_parquet_partitioned(spark, path, upd, ["k"], ["bucket"])
 
 
-def test_pruned_merge_recovers_parked_partition(spark, tmp_path):
-    """A crash between the two swap renames leaves the partition dir
-    parked; the next pruned merge restores it before proceeding."""
+def test_pruned_merge_recovers_parked_partition(spark, tmp_path, fail_move):
+    """A crash inside the partition commit leaves the partition dir
+    missing from the live table; the next pruned merge finishes the
+    commit before proceeding."""
     import os
 
     from vectordb_similarity_search_spark.operators.merge import (
@@ -505,15 +506,64 @@ def test_pruned_merge_recovers_parked_partition(spark, tmp_path):
     )
 
     path = _part_table(spark, tmp_path)
-    os.rename(
-        os.path.join(path, "bucket=1"),
-        os.path.join(path, "bucket=1__old_deadbeef"),
-    )
+    fail_move(1)
+    upd = spark.createDataFrame([(1, "v1x", 1)], "k int, v string, bucket int")
+    with pytest.raises(OSError, match="injected"):
+        merge_parquet_partitioned(spark, path, upd, ["k", "bucket"], ["bucket"])
+    assert not os.path.exists(os.path.join(path, "bucket=1"))  # torn
+    fail_move(0)
     upd = spark.createDataFrame([(0, "fixed", 0)], "k int, v string, bucket int")
     merge_parquet_partitioned(spark, path, upd, ["k", "bucket"], ["bucket"])
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert (0, "fixed") in got
+    assert (0, "fixed") in got and (1, "v1x") in got
     assert len(got) == 30  # bucket=1's rows are back
+
+
+def test_pruned_merge_torn_commit_rolls_forward_on_next_entry(
+    spark, tmp_path, fail_move
+):
+    """A failure on the SECOND partition move leaves one partition
+    published and one removed; the next writer's entry finishes the
+    commit, and the table equals the same merges run without a crash —
+    the batch is neither lost nor applied twice."""
+    import os
+    import shutil
+
+    from vectordb_similarity_search_spark import commit
+    from vectordb_similarity_search_spark.operators.merge import (
+        merge_parquet_partitioned,
+    )
+
+    path = _part_table(spark, tmp_path)
+    control = str(tmp_path / "control")
+    shutil.copytree(path, control)
+    schema = "k int, v string, bucket int"
+    # replaces bucket=0 and bucket=1, brings in a new bucket=3
+    batch1 = spark.createDataFrame(
+        [(0, "b1", 0), (1, "b1", 1), (100, "b1", 3)], schema
+    )
+    batch2 = spark.createDataFrame([(2, "b2", 2)], schema)
+
+    def merge(table, batch):
+        merge_parquet_partitioned(spark, table, batch, ["k", "bucket"], ["bucket"])
+
+    moves = fail_move(2)
+    with pytest.raises(OSError, match="injected"):
+        merge(path, batch1)
+    assert len(moves) == 2
+    assert os.path.exists(os.path.join(path, commit.PENDING))
+    fail_move(0)
+    merge(path, batch2)
+    merge(control, batch1)
+    merge(control, batch2)
+
+    def rows(table):
+        return sorted(tuple(r) for r in spark.read.parquet(table).collect())
+
+    assert rows(path) == rows(control)
+    assert len(rows(path)) == 31
+    assert not os.path.exists(os.path.join(path, commit.PENDING))
+    assert not [d for d in os.listdir(tmp_path) if "__pmerge_" in d]
 
 
 def _part_dim(spark, tmp_path, name="pdim"):
@@ -842,6 +892,7 @@ def test_pruned_merge_evolution_crash_before_reconcile_is_rerunnable(
     pre-existing so the sidecar was never written."""
     import os
 
+    from vectordb_similarity_search_spark import commit
     from vectordb_similarity_search_spark.operators import merge as M
 
     path = _part_table(spark, tmp_path)
@@ -849,12 +900,12 @@ def test_pruned_merge_evolution_crash_before_reconcile_is_rerunnable(
         [(3, "v3_new", 0, "eu")], "k int, v string, bucket int, region string"
     )
 
-    real = M._reconcile_partition_dirs
+    real = commit.commit_partitions
 
     def boom(*a, **k):
         raise RuntimeError("simulated crash before reconcile")
 
-    monkeypatch.setattr(M, "_reconcile_partition_dirs", boom)
+    monkeypatch.setattr(commit, "commit_partitions", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         M.merge_parquet_partitioned(
             spark, path, updates, ["k", "bucket"], ["bucket"],
@@ -869,7 +920,7 @@ def test_pruned_merge_evolution_crash_before_reconcile_is_rerunnable(
 
     # the re-run completes the evolution (column now pre-exists via the
     # sidecar: evolved=False, but the data merge still lands)
-    monkeypatch.setattr(M, "_reconcile_partition_dirs", real)
+    monkeypatch.setattr(commit, "commit_partitions", real)
     n = M.merge_parquet_partitioned(
         spark, path, updates, ["k", "bucket"], ["bucket"],
         schema_evolution=True,

@@ -66,7 +66,7 @@ def test_cached_reader_sees_post_merge_data(spark, tmp_path):
     memoized plan handles — a cached lazy plan pins the pre-swap file
     listing and would read deleted files on its next action. Pinned
     end-to-end: cache a reader plan on a scratch table, MERGE into the
-    table (swap_snapshot under the hood), and require (a) the plan cache
+    table (commit.swap under the hood), and require (a) the plan cache
     was invalidated and (b) a re-obtained reader sees the merged data."""
     from pyspark.sql import functions as F
 
@@ -87,7 +87,7 @@ def test_cached_reader_sees_post_merge_data(spark, tmp_path):
     merge_parquet(spark, tbl, upd, ["k"])
 
     assert key not in cache._ENTRIES, (
-        "swap_snapshot must clear the registry plan cache"
+        "commit.swap must clear the registry plan cache"
     )
     fresh = spark.read.parquet(tbl)
     assert fresh.agg(F.sum("v")).head()[0] == 90 + 10 * 5
@@ -95,7 +95,7 @@ def test_cached_reader_sees_post_merge_data(spark, tmp_path):
 
 def test_cached_reader_evicted_by_partitioned_merge(spark, tmp_path):
     """The PARTITIONED rewrite paths rename individual partition dirs and
-    never go through swap_snapshot — they must evict through the same
+    never go through commit.swap — they must evict through the same
     helper (round-10 review finding), including when the batch only ADDS
     a brand-new partition."""
     from pyspark.sql import functions as F
@@ -216,10 +216,10 @@ def test_registry_plans_survive_unrelated_writes(spark, sf_dir, tmp_path):
     assert rebuilt.collect() == plan.collect()
 
 
-def test_partition_swap_crash_leaves_no_entry_over_table(spark, tmp_path, monkeypatch):
-    """A partitioned merge whose SECOND partition swap raises must still
+def test_partition_swap_crash_leaves_no_entry_over_table(spark, tmp_path, fail_move):
+    """A partitioned merge whose SECOND partition move raises must still
     invalidate the table's entries (the invalidation runs in a finally
-    after the reconcile)."""
+    around the partition commit)."""
     from pyspark.sql import functions as F
 
     from vectordb_similarity_search_spark.operators import merge
@@ -231,20 +231,13 @@ def test_partition_swap_crash_leaves_no_entry_over_table(spark, tmp_path, monkey
     part = f"{tbl}/p=0"
     cache.get(spark, "index_scan", part, reads=(part,), build=lambda: spark.read.parquet(part))
 
-    calls = []
-
-    def flaky_swap(table_path: str, new_path: str) -> None:
-        # the first swap "lands" without touching the cache, so only the
-        # writer's own invalidation can clear the entries
-        calls.append(table_path)
-        if len(calls) == 2:
-            raise OSError("injected failure in the second partition swap")
-
-    monkeypatch.setattr(merge, "swap_snapshot", flaky_swap)
+    # a move never touches the cache, so only the commit's own
+    # invalidation can clear the entries
+    calls = fail_move(2)
     upd = spark.range(0, 4).select(
         F.col("id").alias("k"), (F.col("id") % 2).alias("p"), F.lit(9).alias("v")
     )
-    with pytest.raises(OSError, match="second partition swap"):
+    with pytest.raises(OSError, match="commit move 2"):
         merge.merge_parquet_partitioned(spark, tbl, upd, ["k", "p"], ["p"])
     assert len(calls) == 2
     over_table = [

@@ -4,8 +4,10 @@ batch must only rewrite the day partitions it touches."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.rollup import (
@@ -98,27 +100,58 @@ def test_read_rollup_derives_avg(spark, tmp_path):
     assert row[0] == 0.0
 
 
-def test_crashed_swap_recovers(spark, tmp_path):
-    """A crash between the two renames of a day swap leaves the partition
-    parked under day=X__old_*; the next upsert must restore it first."""
-    import shutil
+def _events(spark, rows):
+    return spark.createDataFrame(
+        rows, "ts timestamp, event_type string, value double"
+    )
 
-    events = load_table(spark, SMOKE_SF, "events")
+
+def _day_rows(day: int, n: int, value: float):
+    return [
+        (dt.datetime(2026, 5, day, h % 24, 7), "click" if h % 2 else "view", value + h)
+        for h in range(n)
+    ]
+
+
+def test_crashed_swap_recovers(spark, tmp_path, fail_move):
+    """A crash inside the day commit leaves a touched day missing from the
+    live rollup; the next upsert must restore it first."""
     path = str(tmp_path / "rollup")
-    upsert_rollup(spark, path, events)
-    day_dirs = sorted(
-        d for d in os.listdir(path) if d.startswith("day=") and "__old_" not in d
-    )
-    victim = os.path.join(path, day_dirs[0])
-
-    # simulate the crash window: live dir gone, old snapshot parked
-    os.rename(victim, victim + "__old_deadbeef")
-
-    # next maintenance run restores it (no events for that day in batch 2)
-    last_day = day_dirs[-1].split("=", 1)[1]
-    upsert_rollup(
-        spark, path, events.filter(F.date_format("ts", "yyyy-MM-dd") == last_day)
-    )
+    upsert_rollup(spark, path, _events(spark, _day_rows(1, 10, 1.0) + _day_rows(2, 10, 2.0)))
+    batch = _events(spark, _day_rows(1, 3, 5.0))
+    victim = os.path.join(path, f"day={hourly_rollup(batch).head()['day']}")
     assert os.path.exists(victim)
-    assert not os.path.exists(victim + "__old_deadbeef")
-    shutil.rmtree(path)  # keep tmp_path reusable across pytest reruns
+
+    fail_move(1)
+    with pytest.raises(OSError, match="injected"):
+        upsert_rollup(spark, path, batch)
+    assert not os.path.exists(victim)  # the crash window: live dir gone
+
+    # next maintenance run restores it (no events for that day in batch 3)
+    fail_move(0)
+    upsert_rollup(spark, path, _events(spark, _day_rows(2, 3, 9.0)))
+    assert os.path.exists(victim)
+    assert not [d for d in os.listdir(path) if not d.startswith(("day=", "_"))]
+
+
+def test_torn_commit_neither_double_counts_nor_loses_days(
+    spark, tmp_path, fail_move
+):
+    """A failure on the SECOND day move of a batch touching three days:
+    the next upsert's entry finishes the batch, so the rollup equals a
+    one-shot rollup of every event — no day counted twice or lost."""
+    b1 = _day_rows(1, 8, 1.0) + _day_rows(2, 8, 2.0)
+    b2 = _day_rows(1, 5, 3.0) + _day_rows(2, 5, 4.0) + _day_rows(3, 5, 5.0)
+    b3 = _day_rows(3, 4, 6.0) + _day_rows(4, 4, 7.0)
+    path = str(tmp_path / "rollup")
+    upsert_rollup(spark, path, _events(spark, b1))
+    moves = fail_move(2)
+    with pytest.raises(OSError, match="injected"):
+        upsert_rollup(spark, path, _events(spark, b2))
+    assert len(moves) == 2
+    fail_move(0)
+    upsert_rollup(spark, path, _events(spark, b3))
+    assert _canon(read_rollup(spark, path)) == _canon(
+        hourly_rollup(_events(spark, b1 + b2 + b3))
+    )
+    assert not [d for d in os.listdir(tmp_path) if "__inc_" in d]

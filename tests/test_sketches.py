@@ -224,22 +224,17 @@ def _mk_batch(spark, rows):
 
 
 def test_upsert_stages_executor_side_and_survives_torn_commit(
-    spark, tmp_path
+    spark, tmp_path, fail_move
 ):
     """Round-8 advisory fix: the upsert commit is marker-protected. A
-    crash mid-swap (simulated by rebuilding the exact torn state the
-    marker describes: staged merged slice present, live day dir already
+    crash mid-commit (the day move fails after the live day dir was
     deleted) must be repaired losslessly by the next maintenance entry —
     the pre-crash history for the touched day comes back merged, not
     lost, and untouched days stay byte-identical."""
-    import json
     import os
-    import shutil
 
-    from vectordb_similarity_search_spark.operators.sketches import (
-        HLL,
-        sketch_ledger_repair,
-    )
+    from vectordb_similarity_search_spark import commit
+    from vectordb_similarity_search_spark.operators.sketches import HLL
 
     path = str(tmp_path / "ledger")
     base = [
@@ -247,24 +242,20 @@ def test_upsert_stages_executor_side_and_survives_torn_commit(
         (2, dt.datetime(2026, 4, 2, 9), 2, "click", 1.0),
     ]
     assert HLL.upsert(_mk_batch(spark, base), path) == 2
+    untouched = sorted(os.listdir(os.path.join(path, "day=2026-04-01")))
 
-    # build the torn state a mid-commit crash leaves: stage the merged
-    # slice for day 2 via a REAL upsert against a copy, then transplant
-    # its staged output and marker into the live store with the live day
-    # dir removed (the exact moment between rmtree and replace)
-    shadow = str(tmp_path / "shadow")
-    shutil.copytree(path, shadow)
+    fail_move(1)
     batch = [(3, dt.datetime(2026, 4, 2, 15), 9, "view", 1.0)]
-    assert HLL.upsert(_mk_batch(spark, batch), shadow) == 1
-    staged = os.path.join(path, "_staging", "day=2026-04-02")
-    shutil.copytree(os.path.join(shadow, "day=2026-04-02"), staged)
-    with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
-        json.dump({"days": ["2026-04-02"], "staging": "_staging"}, fh)
-    shutil.rmtree(os.path.join(path, "day=2026-04-02"))
+    with pytest.raises(OSError, match="injected"):
+        HLL.upsert(_mk_batch(spark, batch), path)
+    assert not os.path.exists(os.path.join(path, "day=2026-04-02"))  # torn
+    fail_move(0)
 
-    assert sketch_ledger_repair(path) == 1
-    assert not os.path.exists(os.path.join(path, "_upsert_pending.json"))
+    commit.recover(path)
+    assert os.path.isdir(os.path.join(path, "day=2026-04-02"))
+    assert not os.path.exists(os.path.join(path, commit.PENDING))
     assert not os.path.exists(os.path.join(path, "_staging"))
+    assert sorted(os.listdir(os.path.join(path, "day=2026-04-01"))) == untouched
     got = {
         (str(r["day"]), r["event_type"]): r["n_events"]
         for r in spark.read.parquet(path).collect()
@@ -513,27 +504,30 @@ def test_upsert_empty_delta_is_noop(spark, tmp_path):
 
 
 def test_concurrent_upsert_raises_descriptive_error(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, fail_move
 ):
     """Advisory fix: a pending marker appearing mid-upsert (another LIVE
-    writer — entry-time repair already consumed any crashed one) must
+    writer — entry-time recovery already consumed any crashed one) must
     surface as a descriptive single-writer violation, not a raw
     FileExistsError traceback."""
-    import os
-
-    import vectordb_similarity_search_spark.operators.sketches as sk
+    from vectordb_similarity_search_spark import commit
+    from vectordb_similarity_search_spark.operators.sketches import HLL
 
     path = str(tmp_path / "ledger")
     rows = [(1, dt.datetime(2026, 8, 3, 9), 1, "click", 1.0)]
-    assert sk.HLL.upsert(_mk_batch(spark, rows), path) == 1
+    other_day = [(2, dt.datetime(2026, 8, 4, 9), 1, "click", 1.0)]
+    assert HLL.upsert(_mk_batch(spark, rows + other_day), path) == 2
 
-    # freeze entry-time repair so the hand-planted marker survives to the
-    # commit point, simulating a concurrent writer's marker
-    monkeypatch.setattr(sk, "sketch_ledger_repair", lambda p: 0)
-    with open(os.path.join(path, "_upsert_pending.json"), "w") as fh:
-        fh.write('{"days": [], "staging": "_staging"}')
+    # a writer stopped mid-commit leaves its marker; freezing entry-time
+    # recovery lets that marker survive to the next writer's commit
+    # point, as a concurrent writer's marker would
+    fail_move(1)
+    with pytest.raises(OSError, match="injected"):
+        HLL.upsert(_mk_batch(spark, rows), path)
+    fail_move(0)
+    monkeypatch.setattr(commit, "recover", lambda p: None)
     with pytest.raises(RuntimeError, match="concurrent"):
-        sk.HLL.upsert(_mk_batch(spark, rows), path)
+        HLL.upsert(_mk_batch(spark, rows), path)
 
 
 def test_write_sidecar_cross_checked_against_frame(spark, tmp_path):
@@ -1384,8 +1378,6 @@ def test_hh_validation_and_write_cross_check(spark, events, tmp_path):
 
     with pytest.raises(ValueError, match="k must be"):
         daily_hh_sketches(events, k=0)
-    with pytest.raises(ValueError, match="buckets"):
-        daily_hh_sketches(events, buckets=0)
     with pytest.raises(ValueError, match="window_days"):
         rolling_hh(daily_hh_sketches(events, k=4), 0)
     with pytest.raises(ValueError, match="missing columns"):

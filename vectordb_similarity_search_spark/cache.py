@@ -25,9 +25,10 @@ Values are keyed by ``(applicationId, kind, *key)``; the kinds in use are
   or fitted model its ``sf_dir``, an index or ledger scan its directory.
   Every writer that changes a directory calls :func:`invalidate` on it
   after the change has landed, which drops every entry whose read path
-  lies on, under or above the written path. The rename-based rewrites
-  (snapshot swaps, partition reconciles) invalidate in a ``finally``, so a
-  rewrite that fails half-way leaves no entry over the table. A rebuild
+  lies on, under or above the written path. The publishes of
+  ``commit.py`` (snapshot swaps, partition commits) and the index
+  writers invalidate in a ``finally``, so a write that fails half-way
+  leaves no entry over the table. A rebuild
   that invalidated before its renames would let a plan built in between
   pin the old listing. Registry builders read only ``sf_dir`` and
   committed memo directories, and neither changes once written, so a write
@@ -208,7 +209,6 @@ def memo_dir(name: str, sources: Sequence[str], *params, build: Callable[[str], 
         os.makedirs(path)
         build(path)
         invalidate(path)
-        with open(done + ".tmp", "w"):
+        with open(done, "w"):  # creating an empty file is atomic
             pass
-        os.replace(done + ".tmp", done)
     return path

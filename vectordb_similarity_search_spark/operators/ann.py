@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hyperplane_signature
-from .. import cache
+from .. import cache, commit
 from .topk import knn
 
 
@@ -216,10 +216,12 @@ def ivf_write_index(
     (similarity_search.py:284-286), except probes become partition-pruned
     scans: a search with nprobe=4 of 64 cells reads 1/16th of the data and
     the pruning shows up in the plan's PartitionFilters."""
-    model.assign(corpus, cell_col).write.partitionBy(cell_col).mode(
-        "overwrite"
-    ).parquet(path)
-    cache.invalidate(path)
+    try:
+        model.assign(corpus, cell_col).write.partitionBy(cell_col).mode(
+            "overwrite"
+        ).parquet(path)
+    finally:
+        cache.invalidate(path)  # a failed overwrite may have removed files
 
 
 def _tombstone_dir(path: str) -> str:
@@ -515,10 +517,12 @@ def ivf_append(
     Centroids are NOT refit on insert (standard IVF practice: the cell
     assignment function must stay frozen or existing cells go stale);
     periodic offline refits rebuild the index under a new path."""
-    model.assign(new_rows, cell_col).write.partitionBy(cell_col).mode(
-        "append"
-    ).parquet(path)
-    cache.invalidate(path)
+    try:
+        model.assign(new_rows, cell_col).write.partitionBy(cell_col).mode(
+            "append"
+        ).parquet(path)
+    finally:
+        cache.invalidate(path)
 
 
 def ivf_compact(
@@ -535,7 +539,7 @@ def ivf_compact(
     files — one shuffle by cell puts every cell in one task, and
     ``maxRecordsPerFile`` rolls that task's output for the cell every
     ``target_rows_per_file`` rows — then swap the index directory
-    (util.swap_snapshot — parked old snapshot, mid-swap crash recovered on
+    (``commit.swap`` — parked old snapshot, mid-swap crash recovered on
     the next compact/merge). No separate count job: the survivor count is
     observed during the write.
 
@@ -556,11 +560,9 @@ def ivf_compact(
 
     from pyspark.sql import Observation
 
-    from ..util import restore_snapshot, swap_snapshot
-
     if target_rows_per_file < 1:
         raise ValueError(f"target_rows_per_file must be >= 1, got {target_rows_per_file}")
-    restore_snapshot(path)  # recover a crashed previous swap, if any
+    commit.recover(path)
     obs = Observation()
     # observed ABOVE the shuffle: when the survivor set is empty, AQE
     # replaces the empty shuffle stage (and any metrics node inside it) by
@@ -580,7 +582,7 @@ def ivf_compact(
     if not obs.get["rows"]:
         shutil.rmtree(tmp, ignore_errors=True)
         return False
-    swap_snapshot(path, tmp)
+    commit.swap(path, tmp)
     return True
 
 
@@ -652,13 +654,11 @@ def ivf_maintain(
     """
     if rebalance_ratio < 1.0:
         raise ValueError(f"rebalance_ratio must be >= 1, got {rebalance_ratio}")
-    from ..util import restore_snapshot
-
     # Recover a crashed swap (compact/recluster) BEFORE measuring: a
     # parked snapshot means `path` may not exist, and the balance scan
     # would raise PATH_NOT_FOUND before any restore further down could
     # run. Same on-entry discipline as ivf_compact.
-    restore_snapshot(path)
+    commit.recover(path)
     report = ivf_cell_balance(
         spark, path, model, cell_col=cell_col, id_col=id_col
     )
@@ -674,8 +674,6 @@ def ivf_maintain(
 
     import uuid
 
-    from ..util import swap_snapshot
-
     live = _apply_tombstones(
         spark, path, _index_scan(spark, path), id_col
     ).drop(cell_col)
@@ -690,7 +688,7 @@ def ivf_maintain(
     new_model.assign(live, cell_col).write.partitionBy(cell_col).mode(
         "overwrite"
     ).parquet(tmp)
-    swap_snapshot(path, tmp)
+    commit.swap(path, tmp)
     return new_model, {**report, "action": "recluster"}
 
 
@@ -732,8 +730,10 @@ def ivfpq_write_index(
     encoded = pq_model.encode(
         to_encode, vec_col=ivf_model.vec_col, code_col="pq_code"
     ).join(assigned.select("vec_id", ivf_model.vec_col), "vec_id")
-    encoded.write.partitionBy(cell_col).mode("overwrite").parquet(path)
-    cache.invalidate(path)
+    try:
+        encoded.write.partitionBy(cell_col).mode("overwrite").parquet(path)
+    finally:
+        cache.invalidate(path)
 
 
 def ivfpq_search_index(

@@ -18,7 +18,7 @@ Spark shapes used here:
   ``repartitionByRange`` + ``sortWithinPartitions`` when ``sort_cols``
   is given, preserving the clustered layout and its zone maps —
   compaction then IS re-clustering, like OPTIMIZE ZORDER) and a
-  recoverable snapshot swap (util.swap_snapshot).
+  recoverable snapshot swap (``commit.swap``).
 - **Hive-partitioned tables** compact only the partition dirs that
   need it, in ONE shuffle job for all touched dirs: the touched dirs
   are read with ``basePath`` (keeps partition columns), every row gets
@@ -27,8 +27,9 @@ Spark shapes used here:
   ``repartition(partition_cols + bucket)`` gives each (dir, bucket) a
   single writer — each dir comes back with at most its target file
   count. Untouched dirs are never read, never rewritten
-  (byte-identical, pinned in tests). Per-dir recoverable swaps reuse
-  the MERGE machinery.
+  (byte-identical, pinned in tests). The touched dirs are published as
+  one partition-set commit (``commit.commit_partitions``), like the
+  partitioned MERGE.
 
 The reference engine has no storage layer at all (in-memory store,
 similarity_search.py:268-271); this is engine-native surface.
@@ -44,8 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import restore_snapshot, swap_snapshot
-from .merge import _partition_dirs, _reconcile_partition_dirs, _restore_partition_swaps
+from .. import commit
+from .merge import _partition_dirs
 
 DEFAULT_TARGET_BYTES = 128 << 20
 
@@ -108,7 +109,7 @@ def compact_parquet(
     are deleted (``timetravel.vacuum_versions``)."""
     from .timetravel import HISTORY_DIR, recover_history, vacuum_versions
 
-    restore_snapshot(table_path)
+    commit.recover(table_path)
     recover_history(table_path)  # finish an interrupted archive, if any
     files = _data_files(table_path)
     if not files:
@@ -154,7 +155,7 @@ def compact_parquet(
 
         history_preserving_swap(table_path, tmp)
     else:
-        swap_snapshot(table_path, tmp)
+        commit.swap(table_path, tmp)
     if zone_cols or sort_cols:
         # the old sidecar died with the old snapshot; re-commit stats
         # for the same columns (plus any new clustering columns)
@@ -181,10 +182,10 @@ def compact_parquet_partitioned(
     file count exceeds their byte-size target. ONE shuffle job rewrites
     every touched dir (basePath read keeps the partition columns; a
     per-dir bucket column sized from a broadcast map caps each dir's
-    writer count), then per-dir recoverable swaps replace exactly the
+    writer count), then one partition-set commit replaces exactly the
     touched dirs — untouched dirs are never read and stay
     byte-identical."""
-    _restore_partition_swaps(table_path)
+    commit.recover(table_path)
     dirs = _partition_dirs(table_path)
     if not dirs:
         raise ValueError(
@@ -193,7 +194,7 @@ def compact_parquet_partitioned(
     # partition_cols MUST match the on-disk dir nesting IN ORDER: the
     # data-side join key is built in caller order while the dir-side key
     # follows the directory nesting — a mismatch would drop every row in
-    # the inner join and the reconcile step would then remove the
+    # the inner join and the commit would then remove the
     # "empty" partitions. Data loss, so validate up front.
     disk_order = [seg.split("=", 1)[0] for seg in next(iter(dirs)).split(os.sep)]
     if partition_cols != disk_order:
@@ -268,7 +269,7 @@ def compact_parquet_partitioned(
     # Defense in depth against the join-key/dir-key mismatch class: a
     # compaction rewrites exactly the planned dirs — if the tmp output
     # is missing any (rows were lost to a bad key) abort with the table
-    # untouched rather than let the reconcile delete "empty" partitions.
+    # untouched rather than let the commit delete "empty" partitions.
     tmp_dirs = _partition_dirs(tmp)
     if tmp_dirs != set(plan):
         import shutil
@@ -278,7 +279,7 @@ def compact_parquet_partitioned(
             f"compaction output dirs {sorted(tmp_dirs)} != planned "
             f"{sorted(plan)}; aborting before any swap (table unchanged)"
         )
-    _reconcile_partition_dirs(table_path, tmp, set(plan))
+    commit.commit_partitions(table_path, tmp, plan)
     for rel in plan:
         after += len(_data_files(os.path.join(table_path, rel)))
     return {

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cache
+from .. import cache, commit
 from ..functions.text import char_shingles, tokens
 from ..functions.hashing import (
     hamming_distance,
@@ -846,8 +846,7 @@ def write_signature_store(
         else:
             sigs.write.mode(mode).parquet(path)
             keys.write.mode(mode).parquet(keys_path)
-            with open(_store_meta_path(path), "w") as fh:
-                json.dump(meta, fh)
+            commit.write_json(_store_meta_path(path), meta)
     finally:
         sigs.unpersist()
 

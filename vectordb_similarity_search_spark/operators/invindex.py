@@ -52,7 +52,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, commit
 from ..functions.text import n_tokens, tokens
 from .ann import _index_scan
 from .bm25 import bm25_score_expr
@@ -111,17 +111,10 @@ def text_index_write(
         F.col(id_col), n_tokens(text_col).cast("double").alias("dl")
     ).write.mode("overwrite").parquet(f"{root}/_docs")
     _clear_append_leftovers(root)
-    tmp = f"{root}/_meta.json.tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "num_buckets": num_buckets,
-                "id_col": id_col,
-                "text_col": text_col,
-            },
-            f,
-        )
-    os.replace(tmp, f"{root}/_meta.json")
+    commit.write_json(
+        f"{root}/_meta.json",
+        {"num_buckets": num_buckets, "id_col": id_col, "text_col": text_col},
+    )
     cache.invalidate(root)
 
 
@@ -154,7 +147,7 @@ def _require_not_torn(root: str, path: str) -> None:
 
 def _clear_append_leftovers(root: str) -> None:
     """Remove the torn-append marker and any stats-dir swap leftovers
-    (``__old_*`` parked snapshots / ``__new_*`` tmp outputs) a crashed
+    (parked snapshots / ``__new_*`` tmp outputs) a crashed
     append left: called by the REBUILD only (text_index_write — the
     documented recovery path). An append never cleans up: it refuses to
     run on a torn store (_require_not_torn) precisely so debris stays in
@@ -166,8 +159,8 @@ def _clear_append_leftovers(root: str) -> None:
         os.remove(f"{root}/_append_pending")
     except FileNotFoundError:
         pass
-    for pat in ("terms__old_*", "terms__new_*", "meta__old_*", "meta__new_*"):
-        for d in glob.glob(f"{root}/_stats/{pat}"):
+    for stats in (f"{root}/_stats/terms", f"{root}/_stats/meta"):
+        for d in commit.parks(stats) + glob.glob(f"{stats}__new_*"):
             shutil.rmtree(d, ignore_errors=True)
 
 
@@ -207,8 +200,6 @@ def text_index_append(new_docs: DataFrame, path: str) -> int:
     jobs are vocabulary- and 1-row-sized; nothing rescans or reshuffles
     the existing postings (appended files land beside them)."""
     import uuid
-
-    from ..util import swap_snapshot
 
     root = path.rstrip("/")
     spark = new_docs.sparkSession
@@ -292,7 +283,7 @@ def text_index_append(new_docs: DataFrame, path: str) -> int:
         )
         tmp_terms = f"{root}/_stats/terms__new_{uuid.uuid4().hex[:8]}"
         merged_terms.coalesce(1).write.mode("overwrite").parquet(tmp_terms)
-        swap_snapshot(f"{root}/_stats/terms", tmp_terms)
+        commit.swap(f"{root}/_stats/terms", tmp_terms)
 
         n_total = float(old_meta["n"]) + float(stats["n"])
         dl_total = float(old_meta["total_dl"]) + float(stats["total_dl"])
@@ -302,7 +293,7 @@ def text_index_append(new_docs: DataFrame, path: str) -> int:
             (F.lit(dl_total) / F.lit(n_total)).alias("avgdl"),
             F.lit(dl_total).alias("total_dl"),
         ).coalesce(1).write.mode("overwrite").parquet(tmp_meta)
-        swap_snapshot(f"{root}/_stats/meta", tmp_meta)
+        commit.swap(f"{root}/_stats/meta", tmp_meta)
 
         cache.invalidate(root)
         os.remove(pending)  # marker LAST: the append is committed

@@ -10,16 +10,18 @@ read-join-rewrite with a recoverable directory swap:
    small — the common CDC case: a day's changes vs years of history),
 3. resolve per row: update wins over target, absent-in-target inserts,
    tombstones delete,
-4. write the new snapshot NEXT TO the table and swap it in
-   (``util.swap_snapshot``: the previous snapshot is parked and removed
-   only after the new one is in place; a crash mid-swap is recovered by
-   ``restore_snapshot``, which this writer runs on entry — see its
-   docstring for the honest atomicity statement).
+4. write the new snapshot NEXT TO the table and publish it with
+   ``commit.swap`` (the previous snapshot is parked and removed only
+   after the new one is in place; a crash mid-swap is undone by
+   ``commit.recover``, which every writer here runs on entry).
 
 Scale notes: the rewrite cost is one pass over the table — that is the
-honest floor for format-less parquet; partition the table and merge only
-affected partitions to cut it (``partition_by`` + pre-filtering updates'
-partitions).
+honest floor for format-less parquet. The partition-pruned writers
+(``merge_parquet_partitioned``, ``scd2_apply_partitioned``) rewrite only
+the touched partitions and publish them as one partition-set commit
+(``commit.commit_partitions``): a crash mid-commit is rolled forward by
+the next writer's entry, so no reader after that sees the batch
+half-applied.
 """
 
 from __future__ import annotations
@@ -30,8 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cache
-from ..util import restore_snapshot, swap_snapshot
+from .. import commit
 
 
 # Table-level schema sidecar (partitioned evolution). A partitioned
@@ -50,15 +51,6 @@ def _sidecar_path(table_path: str) -> str:
     import os
 
     return os.path.join(table_path, _SCHEMA_SIDECAR)
-
-
-def _write_schema_sidecar(table_path: str, schema) -> None:
-    import os
-
-    tmp = _sidecar_path(table_path) + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(schema.json())
-    os.replace(tmp, _sidecar_path(table_path))  # atomic on POSIX
 
 
 def _read_schema_sidecar(table_path: str):
@@ -133,7 +125,7 @@ def merge_parquet(
         # validate BEFORE the merge job runs: archive_swap's own check
         # would fire only after the tmp snapshot is written, stranding it
         raise ValueError(f"retain_history must be >= 1, got {retain_history}")
-    restore_snapshot(table_path)  # recover a crashed previous swap, if any
+    commit.recover(table_path)
     if retain_history is not None:
         from .timetravel import recover_history
 
@@ -154,7 +146,7 @@ def merge_parquet(
 
         archive_swap(table_path, tmp, retain=retain_history)
     else:
-        swap_snapshot(table_path, tmp)
+        commit.swap(table_path, tmp)
 
 
 def _evolve_target(
@@ -330,7 +322,7 @@ def scd2_apply(
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    restore_snapshot(table_path)
+    commit.recover(table_path)
     target = read_table_snapshot(spark, table_path)
     snapshot, obs = _scd2_snapshot(
         target, updates, key_cols, ts_col, valid_from, valid_to,
@@ -340,7 +332,7 @@ def scd2_apply(
     tmp = f"{table_path.rstrip('/')}__scd2_{uuid.uuid4().hex[:8]}"
     snapshot.write.mode("overwrite").parquet(tmp)
     _raise_if_stale(obs, tmp)
-    swap_snapshot(table_path, tmp)
+    commit.swap(table_path, tmp)
 
 
 def _raise_if_stale(obs: Observation, tmp: str) -> None:
@@ -450,24 +442,6 @@ def _scd2_snapshot(
     return snapshot, obs
 
 
-def _restore_partition_swaps(table_path: str) -> None:
-    """Crash recovery for per-partition swaps: any ``<dir>__old_<id>``
-    under the table root either shadows a missing partition dir (crash
-    between the two renames → restore it) or survived a completed swap
-    (crash before cleanup → remove it)."""
-    import glob
-    import os
-
-    for parked in glob.glob(
-        os.path.join(table_path, "**", "*__old_*"), recursive=True
-    ):
-        live = parked.split("__old_")[0]
-        if os.path.exists(live):
-            shutil.rmtree(parked, ignore_errors=True)
-        else:
-            os.rename(parked, live)
-
-
 def _partition_dirs(root: str) -> set[str]:
     """Relative paths of the leaf partition directories under ``root``
     (dirs that directly contain data files) — names are Spark's own
@@ -515,16 +489,15 @@ def merge_parquet_partitioned(
     partition tuples (driver-bounded, capped at
     ``max_touched_partitions`` — beyond that, a full merge is cheaper
     than per-dir bookkeeping and the cap raises with that advice). The
-    merged slice is written next to the table, then per-partition-dir
-    swaps reconcile: same-named dirs swap (recoverable park-and-rename),
-    brand-new partition dirs move in, and a touched dir with NO output
-    rows (every row tombstoned) is removed. Crash honesty: the swap loop
-    is sequential, so a crash mid-loop leaves SOME partitions merged and
-    some not — each individual dir is recoverable
-    (``_restore_partition_swaps`` runs on entry), but cross-partition
-    atomicity needs a transactional table format (Delta/Iceberg), which
-    plain parquet cannot express. Returns the number of partitions
-    rewritten.
+    merged slice is written next to the table and published as ONE
+    partition-set commit (``commit.commit_partitions``): written dirs
+    replace their live namesakes or move in new, and a touched dir with
+    NO output rows (every row tombstoned) is removed. Crash honesty: the
+    commit's pending marker names the whole set before any live dir
+    changes, so a crash mid-commit is rolled forward by the next writer's
+    entry (``commit.recover``) — after it, the batch is fully applied.
+    Between the crash and that entry, a reader can see the batch
+    half-applied. Returns the number of partitions rewritten.
 
     ``schema_evolution``: same strictly-additive ADD-COLUMN semantics as
     ``merge_parquet`` — but only TOUCHED partitions are rewritten with
@@ -535,7 +508,7 @@ def merge_parquet_partitioned(
     reader as an explicit schema, surfacing the column as NULL in
     pre-evolution files. A new partition column can never be added this
     way (``partition_by`` ⊆ ``key_cols`` ⊆ existing schema). Crash
-    honesty: the sidecar is written BEFORE the dir reconcile — a crash
+    honesty: the sidecar is written BEFORE the partition commit — a crash
     between leaves the table readable at the NEW schema with the column
     NULL everywhere (no data dir has changed yet), and re-running the
     merge completes the rewrite. The reverse order would be unrepairable:
@@ -548,7 +521,7 @@ def merge_parquet_partitioned(
         raise ValueError("key_cols must be non-empty")
     _validate_pruned_partitioning(key_cols, partition_by)
     _require_hive_layout(table_path)
-    _restore_partition_swaps(table_path)
+    commit.recover(table_path)
     full = read_table_snapshot(spark, table_path)
     base_cols = set(full.columns)
     if schema_evolution:
@@ -569,8 +542,8 @@ def merge_parquet_partitioned(
         # the batch actually added columns: record the table-level schema
         # (partition columns ride at their read positions) BEFORE any dir
         # carries mixed footers — see the crash-honesty note above
-        _write_schema_sidecar(table_path, full.schema)
-    return _reconcile_partition_dirs(table_path, tmp_root, existing)
+        commit.write_json(_sidecar_path(table_path), full.schema.jsonValue())
+    return _commit_partitions(table_path, tmp_root, existing)
 
 
 def _validate_pruned_partitioning(
@@ -664,7 +637,7 @@ def _existing_partition_dirs(target: DataFrame, table_path: str) -> set[str]:
         # "p=x%253Ay"). One unquote level recovers the on-disk name so
         # this set compares equal to _partition_dirs' os.walk names —
         # otherwise any partition value with a space/':'/'%' makes the
-        # reconcile treat the dir as brand-new AND fully-deleted.
+        # commit treat the dir as brand-new AND fully-deleted.
         f = unquote(f)
         rel = os.path.relpath(os.path.dirname(f), root)
         if rel != ".":
@@ -672,36 +645,13 @@ def _existing_partition_dirs(target: DataFrame, table_path: str) -> set[str]:
     return existing
 
 
-def _reconcile_partition_dirs(
-    table_path: str, tmp_root: str, existing: set[str]
-) -> int:
-    """Move the written partition dirs into the table: same-named dirs
-    swap (recoverable park-and-rename), brand-new dirs move in, touched
-    dirs with no output rows are removed. Sequential, so only
-    per-partition (not cross-partition) atomicity — see the public
-    functions' docstrings. The table's cache entries are invalidated
-    after the renames land (a plan rebuilt between an early eviction and
-    the renames would pin the old listing), and also when one of them
-    raises half-way."""
-    import os
-
-    root = os.path.abspath(table_path)
-    tmp_names = _partition_dirs(tmp_root)
-    try:
-        for name in sorted(tmp_names & existing):  # rewritten partitions
-            swap_snapshot(os.path.join(root, name), os.path.join(tmp_root, name))
-        for name in sorted(tmp_names - existing):  # brand-new partitions
-            dst = os.path.join(root, name)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(os.path.join(tmp_root, name), dst)
-        for name in sorted(existing - tmp_names):  # fully-deleted partitions
-            parked = os.path.join(root, name) + f"__old_{uuid.uuid4().hex[:8]}"
-            os.rename(os.path.join(root, name), parked)
-            shutil.rmtree(parked)
-    finally:
-        cache.invalidate(table_path)
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    return len(tmp_names | existing)
+def _commit_partitions(table_path: str, tmp_root: str, existing: set[str]) -> int:
+    """Publish the written partition dirs over the touched ``existing``
+    ones (a touched dir with no output rows is deleted); returns the
+    number of partitions rewritten."""
+    written = _partition_dirs(tmp_root)
+    commit.commit_partitions(table_path, tmp_root, written, existing - written)
+    return len(written | existing)
 
 
 def scd2_apply_partitioned(
@@ -730,15 +680,15 @@ def scd2_apply_partitioned(
     updated key. A stale batch is detected after the tmp write and
     discarded before ANY partition dir is swapped — the dimension is
     untouched on rejection. Crash honesty matches
-    ``merge_parquet_partitioned``: per-partition recoverable swaps,
-    sequential across partitions. Returns the number of partitions
-    rewritten.
+    ``merge_parquet_partitioned``: one partition-set commit, rolled
+    forward by the next writer's entry after a crash. Returns the number
+    of partitions rewritten.
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     _validate_pruned_partitioning(key_cols, partition_by)
     _require_hive_layout(table_path)
-    _restore_partition_swaps(table_path)
+    commit.recover(table_path)
     full = read_table_snapshot(spark, table_path)
     missing = set(partition_by) - set(updates.columns)
     if missing:
@@ -759,4 +709,4 @@ def scd2_apply_partitioned(
     tmp_root = f"{table_path.rstrip('/')}__pscd2_{uuid.uuid4().hex[:8]}"
     snapshot.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp_root)
     _raise_if_stale(obs, tmp_root)
-    return _reconcile_partition_dirs(table_path, tmp_root, existing)
+    return _commit_partitions(table_path, tmp_root, existing)

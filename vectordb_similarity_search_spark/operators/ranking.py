@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cache
+from .. import cache, commit
 
 
 def persist_dimension_frame(df: DataFrame) -> DataFrame:
@@ -335,7 +335,6 @@ def write_training_shards(
     pattern shared with the inverted index's ``_meta.json``): a reader
     that requires the manifest never sees half-written shards.
     """
-    import json
     import os
 
     from pyspark.sql.functions import col
@@ -405,8 +404,7 @@ def write_training_shards(
         "total_weight": sum(m["weight"] for m in manifest),
         "shards": manifest,
     }
-    with open(os.path.join(path, "_shard_manifest.json"), "w") as fh:
-        json.dump(sidecar, fh, indent=1)
+    commit.write_json(os.path.join(path, "_shard_manifest.json"), sidecar)
     return manifest
 
 

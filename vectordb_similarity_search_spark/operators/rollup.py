@@ -12,7 +12,11 @@ time as sum/count), partitioned by day. Maintenance is incremental:
    so collecting it to the driver is a constant-size lookup, not a data
    collect),
 3. re-merge those days (partial aggregates combine by sum/sum/min/max),
-4. atomically swap in ONLY the touched day directories.
+4. publish ONLY the touched day directories as one partition-set commit
+   (``commit.commit_partitions``): a crash mid-commit is rolled forward
+   by the next upsert's entry, so a batch is never left half-applied
+   (replaying it would double-count the days already published, and
+   skipping it would lose the rest).
 
 At 100 TB of history the cost per batch is O(batch + touched days), never
 a rescan of the table — untouched partitions are not read and not
@@ -22,15 +26,13 @@ partial aggregation below its shuffles; here it's used across batches.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..util import swap_snapshot
+from .. import commit
 
 _AGG = lambda: [  # noqa: E731 — one shared shape for full & incremental
     F.count("*").cast("long").alias("n_events"),
@@ -68,49 +70,27 @@ def _remerge(existing: DataFrame, inc: DataFrame) -> DataFrame:
     )
 
 
-def _recover(rollup_path: str) -> None:
-    """Finish a crashed per-day swap: any parked ``day=*__old_*`` dir whose
-    live dir is missing is restored (mirrors util.restore_snapshot, per
-    partition)."""
-    for parked in glob.glob(os.path.join(rollup_path, "day=*__old_*")):
-        live = parked.split("__old_")[0]
-        if not os.path.exists(live):
-            os.rename(parked, live)
-        else:
-            shutil.rmtree(parked)
-
-
 def upsert_rollup(
     spark: SparkSession, rollup_path: str, new_events: DataFrame
 ) -> list[str]:
     """Apply one batch of events to the rollup table at ``rollup_path``.
     Returns the list of day partitions that were (re)written."""
     inc = hourly_rollup(new_events)
+    commit.recover(rollup_path)
+    # bounded driver lookup: one row per day touched by THIS batch
+    days = sorted(r[0] for r in inc.select("day").distinct().collect())
+    if not days:
+        return days
     if os.path.exists(rollup_path):
-        _recover(rollup_path)
-        # bounded driver lookup: one row per day touched by THIS batch
-        days = sorted(r[0] for r in inc.select("day").distinct().collect())
         existing = _read_raw(spark, rollup_path).filter(F.col("day").isin(days))
         merged = _remerge(existing, inc)
     else:
-        days = sorted(r[0] for r in inc.select("day").distinct().collect())
         merged = inc
 
     tmp = f"{rollup_path.rstrip('/')}__inc_{uuid.uuid4().hex[:8]}"
     merged.write.mode("overwrite").partitionBy("day").parquet(tmp)
-    try:
-        for day in days:
-            src = os.path.join(tmp, f"day={day}")
-            dst = os.path.join(rollup_path, f"day={day}")
-            if not os.path.exists(src):
-                continue  # day pruned empty (no rows survived the merge)
-            os.makedirs(rollup_path, exist_ok=True)
-            if os.path.exists(dst):
-                swap_snapshot(dst, src)
-            else:
-                os.rename(src, dst)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(rollup_path, exist_ok=True)
+    commit.commit_partitions(rollup_path, tmp, [f"day={d}" for d in days])
     return days
 
 

@@ -56,7 +56,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, commit
 
 # 2^12 registers ≈ 0.8% relative standard error — the classic
 # cost/accuracy point; callers can widen for tighter bounds.
@@ -182,21 +182,13 @@ def rollup_distinct(ledger: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Persisted ledgers: one engine (write, upsert, repair, retention); each
+# Persisted ledgers: one engine (write, upsert, retention); each
 # kind is a LedgerKind spec declared after its builder and merge
 # ---------------------------------------------------------------------------
 
 
 _META_FILE = "_ledger_meta.json"
-_PENDING_FILE = "_upsert_pending.json"
 _STAGING_DIR = "_staging"
-
-
-def _write_ledger_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, _META_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, _META_FILE))
 
 
 def _check_ledger_meta(path: str, got: dict) -> None:
@@ -218,56 +210,23 @@ def _check_ledger_meta(path: str, got: dict) -> None:
         )
 
 
-def sketch_ledger_repair(path: str) -> int:
-    """Complete a torn upsert commit (crash between day-dir swaps).
-    The pending marker is written O_EXCL BEFORE any day dir is mutated
-    and the full merged state of every touched day sits in the staging
-    dir, so repair = finish moving staged day dirs into place — each
-    move is idempotent (an already-moved day has no staged dir left).
-    Returns the number of day dirs repaired (0 = store was clean)."""
-    marker = os.path.join(path, _PENDING_FILE)
-    if not os.path.isfile(marker):
-        return 0
-    with open(marker) as fh:
-        pending = json.load(fh)
-    staging = os.path.join(path, pending["staging"])
-    fixed = 0
-    try:
-        for day in pending["days"]:
-            staged = os.path.join(staging, f"day={day}")
-            if not os.path.isdir(staged):
-                continue  # this day's swap already completed pre-crash
-            live = os.path.join(path, f"day={day}")
-            if os.path.isdir(live):
-                shutil.rmtree(live)
-            os.replace(staged, live)
-            fixed += 1
-    finally:
-        if fixed:
-            cache.invalidate(path)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    os.remove(marker)
-    return fixed
-
-
 def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int:
     """The O(touched-days) persisted-ledger upsert behind
     :meth:`LedgerKind.upsert`, its one caller (``merge_fn(stored_slice,
     delta)`` is the only sketch-specific part): bootstrap a missing store
-    from the delta alone; otherwise repair any torn commit, validate the
+    from the delta alone; otherwise finish any torn commit, validate the
     stored configuration, read back ONLY the touched day partitions,
     merge, STAGE the merged slice executor-side (no sketch state through
-    the driver), and swap day dirs under an O_EXCL pending marker. Crash
-    semantics as documented on :meth:`LedgerKind.upsert`.
-    SINGLE-WRITER: concurrent upserts against one ledger path are a
-    contract violation (the entry-time repair would sweep a live
-    writer's staging); a concurrent commit is detected at the marker
-    open and refused with a descriptive error."""
+    the driver), and publish the day dirs as one partition-set commit
+    (``commit.commit_partitions``). Crash semantics as documented on
+    :meth:`LedgerKind.upsert`. SINGLE-WRITER: concurrent upserts against
+    one ledger path are a contract violation (the entry-time recovery
+    would sweep a live writer's staging); a concurrent commit is detected
+    at the marker open and refused with a descriptive error."""
     spark = delta.sparkSession
     exists = os.path.isdir(path)
     if exists:
-        sketch_ledger_repair(path)
+        commit.recover(path)
         _check_ledger_meta(path, meta)
     # touched-day list: a bounded driver frame (days, not sketch state)
     day_vals = [r["day"] for r in delta.select("day").distinct().collect()]
@@ -290,10 +249,9 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
         return 0
     if not exists:
         delta.write.partitionBy("day").mode("overwrite").parquet(path)
-        _write_ledger_meta(path, meta)
+        commit.write_json(os.path.join(path, _META_FILE), meta)
         return len(day_vals)
     touched_days = sorted(day_vals)
-    touched = [str(d) for d in touched_days]  # ISO names = partition dirs
     staging = os.path.join(path, _STAGING_DIR)
     if os.path.isdir(staging):  # stale pre-marker staging from a crash
         shutil.rmtree(staging)
@@ -302,38 +260,9 @@ def _staged_day_upsert(path: str, delta: DataFrame, merge_fn, meta: dict) -> int
     # stage executor-side: the lazy read of `path` executes HERE, before
     # any live day dir is mutated — no self-overwrite torn read
     merged.write.partitionBy("day").mode("overwrite").parquet(staging)
-    # commit under an O_EXCL marker (round-8 advisory fix: the marker +
-    # staged slice make a mid-commit crash repairable instead of lossy)
-    marker = os.path.join(path, _PENDING_FILE)
-    try:
-        fd = os.open(marker, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    except FileExistsError:
-        # entry-time repair consumed any CRASHED writer's marker, so a
-        # marker here means another LIVE writer committed concurrently —
-        # the single-writer contract (see the upsert docstrings) was
-        # violated; refuse with a actionable error instead of the raw
-        # O_EXCL traceback
-        raise RuntimeError(
-            f"concurrent ledger maintenance detected at {path}: another "
-            "writer's pending marker appeared mid-upsert. Sketch ledgers "
-            "are SINGLE-WRITER (serialize maintenance per ledger path); "
-            "retry after the other writer finishes"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"days": touched, "staging": _STAGING_DIR}, fh)
-    # NO try/finally cleanup here: if a swap raises (or the process
-    # dies), the marker + staged slice must SURVIVE so the next entry's
-    # sketch_ledger_repair can finish the commit; cleanup only happens
-    # after every day dir is in place.
-    for day in touched:
-        live = os.path.join(path, f"day={day}")
-        staged = os.path.join(staging, f"day={day}")
-        if os.path.isdir(live):
-            shutil.rmtree(live)
-        os.replace(staged, live)
-    shutil.rmtree(staging, ignore_errors=True)
-    os.remove(marker)
-    return len(touched)
+    # ISO date strings are the partition dir names
+    commit.commit_partitions(path, staging, [f"day={d}" for d in touched_days])
+    return len(touched_days)
 
 
 def _n_true(cond: Column) -> Column:
@@ -424,7 +353,7 @@ class LedgerKind:
         n, problem = self.check(ledger.sparkSession.read.parquet(path), **cfg)
         if problem:
             raise ValueError(problem)
-        _write_ledger_meta(path, self.meta(cfg))
+        commit.write_json(os.path.join(path, _META_FILE), self.meta(cfg))
         return n
 
     def upsert(self, batch: DataFrame, path: str, **cfg) -> int:
@@ -439,13 +368,13 @@ class LedgerKind:
         Write path: the merged touched-day slice is STAGED executor-side
         (one partitioned parquet write under ``_staging`` — an underscore
         dir, invisible to parquet readers of the store), then committed
-        by swapping day dirs under an O_EXCL pending marker. Leaf state
+        as one partition-set commit (``commit.commit_partitions``). Leaf state
         never round-trips through the driver, so a year-wide backfill
         over a high-cardinality type column streams through executors
         like any other write. Crash semantics: a crash BEFORE the marker
         leaves the store untouched (stale staging is swept on the next
-        call); a crash mid-commit is repaired from the staged slice by
-        :func:`sketch_ledger_repair` (run at every entry) — no
+        call); a crash mid-commit is rolled forward from the staged slice
+        by ``commit.recover`` (run at every entry) — no
         touched-day history can be lost. The residual at-least-once
         window is the caller's: a crash between a completed commit and
         the applied-batch marker re-applies one batch (see the kind's
@@ -457,7 +386,7 @@ class LedgerKind:
         store — the streaming apply path drops them before calling here,
         direct callers must filter or the upsert raises)."""
         cfg = self.resolve(cfg, knobs=True)
-        delta = self.build(batch, **cfg)
+        delta = self.build(batch, **{k: cfg[k] for k in self.config})
         try:
             return _staged_day_upsert(
                 path, delta, functools.partial(self.merge, **cfg), self.meta(cfg)
@@ -479,7 +408,7 @@ def sketch_ledger_merge_batch(
     full-rebuild estimates in tests. Late-arriving data for an old day is
     just another union. Replay semantics: see ``HLL.doc``."""
     cfg = HLL.resolve(cfg)
-    sketch_ledger_repair(path)
+    commit.recover(path)
     _check_ledger_meta(path, HLL.meta(cfg))
     return HLL.merge(spark.read.parquet(path), HLL.build(batch, **cfg))
 
@@ -1264,7 +1193,7 @@ def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
         raise ValueError(f"keep_days must be >= 1, got {keep_days}")
     if not os.path.isdir(path):
         raise ValueError(f"no ledger at {path}")
-    sketch_ledger_repair(path)
+    commit.recover(path)
     days = []
     for name in os.listdir(path):
         m = re.fullmatch(r"day=(\d{4}-\d{2}-\d{2})", name)
@@ -1325,20 +1254,21 @@ def sketch_ledger_retention(path: str, *, keep_days: int) -> list[str]:
 # than the CMS/theta tolerance twins.
 #
 # Scale shape: leaf build is one groupBy(day, type, key) count (the one
-# wide shuffle, map-side combined) followed by a TWO-LEVEL in-array
-# tournament for per-group top-(k+1) — level 1 takes each hash-bucket's
-# local top inside a bounded aggregation buffer (a key lives in exactly
-# one bucket, so bucket-top unions contain the group top), level 2
-# merges ≤ ``buckets`` bounded arrays. No per-group row_number window
-# (the coarse-window lint), no Python, no driver loop; readouts touch
-# days×types×k rows of ledger state, never the log.
+# wide shuffle, map-side combined) followed by a rank-limit window for
+# per-group top-(k+1) (Spark's WindowGroupLimit cuts each group map-side
+# before the exchange). The ledger-sized merges and readouts use a
+# TWO-LEVEL in-array tournament instead — level 1 takes each
+# hash-bucket's local top inside a bounded aggregation buffer (a key
+# lives in exactly one bucket, so bucket-top unions contain the group
+# top), level 2 merges ≤ ``buckets`` bounded arrays. No Python, no driver
+# loop; readouts touch days×types×k rows of ledger state, never the log.
 
 HH_K = 64
 HH_BUCKETS = 256
 
 
 def _hh_topn_arr(
-    df: DataFrame, keys: list[str], n: int, buckets: int, via: str = "window"
+    df: DataFrame, keys: list[str], n: int, buckets: int | None = None
 ) -> DataFrame:
     """Exact per-``keys``-group top-``n`` of a ``(*keys, _k, _c)`` counts
     frame under (count desc, key asc). Output: ``(*keys, _arr, _tot)`` where
@@ -1346,8 +1276,8 @@ def _hh_topn_arr(
     heaviest) and ``_tot`` is the sum of ALL counts in the group, not
     just the kept top.
 
-    Round-10: two implementations, picked by input size class.
-    ``via="window"`` (the RAW-counts daily build): ``row_number() ≤ n``
+    Round-10: two implementations, picked by input size class. Without
+    ``buckets`` (the RAW-counts daily build): ``row_number() ≤ n``
     under the same total order — Spark's WindowGroupLimit runs a partial
     map-side top-n heap per group BEFORE the exchange (≤ n rows per
     group per task shuffle, vs the tournament's level-1 partial
@@ -1355,14 +1285,14 @@ def _hh_topn_arr(
     DISTINCT keys as arrays), then the final per-group cut; the kept ≤ n
     rows fold into the output array in a bounded aggregate, and ``_tot``
     joins back broadcast from a group-cardinality count aggregate.
-    ``via="tournament"`` (ledger-sized READOUT merges — days×types×k
-    rows at any scale): the original two-level collect_list tournament —
+    With ``buckets`` (ledger-sized READOUT merges — days×types×k rows at
+    any scale): the original two-level collect_list tournament —
     fewer stages, measured faster on small inputs, and its level-1
     buffers are bounded by the ledger size itself."""
     item = F.struct(
         (-F.col("_c")).cast("long").alias("nc"), F.col("_k").alias("k")
     )
-    if via == "window":
+    if buckets is None:
         w = Window.partitionBy(*keys).orderBy(
             F.col("_c").desc(), F.col("_k").asc()
         )
@@ -1406,7 +1336,6 @@ def daily_hh_sketches(
     type_col: str = "event_type",
     ts_col: str = "ts",
     k: int = HH_K,
-    buckets: int = HH_BUCKETS,
 ) -> DataFrame:
     """ONE pass over the event log → the heavy-hitters leaf ledger
     ``(day, event_type, n_events, items, err)``: ``items`` the
@@ -1417,13 +1346,10 @@ def daily_hh_sketches(
     then a complete, EXACT census). NULL keys are dropped entirely (a
     NULL heavy hitter is a data-quality signal — ``r_table_profile``
     territory), so ``n_events`` counts non-null-key rows and the bound
-    algebra stays consistent. ``buckets`` is an execution knob
-    (tournament fan-in), not a semantic parameter — results are
-    identical for any value."""
+    algebra stays consistent. The per-group cut is a rank-limit window
+    (``_hh_topn_arr`` without ``buckets``)."""
     if not 1 <= k <= 65536:
         raise ValueError(f"k must be in [1, 65536], got {k}")
-    if buckets < 1:
-        raise ValueError(f"buckets must be >= 1, got {buckets}")
     cnts = (
         events.select(
             F.to_date(ts_col).alias("day"),
@@ -1434,7 +1360,7 @@ def daily_hh_sketches(
         .groupBy("day", "event_type", "_k")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
     )
-    arr = _hh_topn_arr(cnts, ["day", "event_type"], k + 1, buckets)
+    arr = _hh_topn_arr(cnts, ["day", "event_type"], k + 1)
     c_star = (
         F.when(F.size("_arr") > k, -F.element_at("_arr", k + 1)["nc"])
         .otherwise(F.lit(0))
@@ -1475,7 +1401,7 @@ def _hh_scope_bounds(
     )
     # ledger-sized input (days×types×k rows) — the tournament's two hash
     # aggregates beat the window's extra stages here (round-10 A/B)
-    arr = _hh_topn_arr(lbs, keys, top_n, buckets, via="tournament")
+    arr = _hh_topn_arr(lbs, keys, top_n, buckets)
     return (
         arr.select(*keys, F.posexplode("_arr"))
         .join(F.broadcast(tot), keys)
@@ -1562,9 +1488,7 @@ def _hh_merge(
     )
     # ledger-sized merge input (summary items of the touched days) —
     # tournament form, same reasoning as the rollup readout
-    arr = _hh_topn_arr(
-        cnts, ["day", "event_type"], k + 1, buckets, via="tournament"
-    ).drop("_tot")
+    arr = _hh_topn_arr(cnts, ["day", "event_type"], k + 1, buckets).drop("_tot")
     empty = F.expr("array()").cast(
         "array<struct<nc:bigint,k:string>>"
     )

@@ -14,13 +14,13 @@ as the ANN index's ``_tombstones``) — giving
 - bounded retention (``retain`` newest versions; older pruned at the
   next swap).
 
-Crash honesty (extends util.swap_snapshot's contract): the swap itself
-still has the documented park-and-rename window, recovered by
-``restore_snapshot``. Archiving happens strictly AFTER the new snapshot
-is live; a crash mid-archive leaves the old snapshot parked at
-``<table>__old_*`` and :func:`recover_history` (run by versioned writers
-on entry) finishes moving it into ``_history``. Data is never lost in
-any window; at worst a version is archived late.
+Crash honesty (extends ``commit.swap``'s contract): the swap itself
+still has the documented park-and-rename window, undone by
+``commit.recover``. Archiving happens strictly AFTER the new snapshot is
+live (it is the swap's ``retire`` step); a crash mid-archive leaves the
+old snapshot parked (``commit.parks``) and :func:`recover_history` (run
+by versioned writers on entry) finishes moving it into ``_history``.
+Data is never lost in any window; at worst a version is archived late.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import cache
+from .. import commit
 
 HISTORY_DIR = "_history"
 _V_RE = re.compile(r"v(\d{6})$")
@@ -92,91 +92,73 @@ def _hoist_history(table_path: str, park: str) -> None:
             os.rename(old_hist, new_hist)
 
 
-def _archive_park(table_path: str, park: str, version: int) -> None:
-    """Move a parked previous snapshot (history already hoisted) into
-    ``_history/v{version}``."""
-    new_hist = _hist(table_path)
-    os.makedirs(new_hist, exist_ok=True)
-    os.rename(park, os.path.join(new_hist, f"v{version:06d}"))
+def _archive_park(table_path: str, park: str) -> int:
+    """Archive a parked previous snapshot as the next version under
+    ``_history`` and return its number."""
+    _hoist_history(table_path, park)
+    versions = list_versions(table_path)
+    version = (versions[-1] + 1) if versions else 1
+    os.makedirs(_hist(table_path), exist_ok=True)
+    os.rename(park, os.path.join(_hist(table_path), f"v{version:06d}"))
+    return version
 
 
 def recover_history(table_path: str) -> bool:
     """Finish an interrupted archive: if the table is live but parked
-    ``__old_`` snapshots remain (crash between swap and archive), move
-    them into ``_history``. Returns True if anything was recovered.
-    (A crash BEFORE the swap completed — table missing — is
-    ``util.restore_snapshot``'s case, which writers run first.)"""
-    import glob
-
+    snapshots remain (crash between swap and archive), move them into
+    ``_history``. Returns True if anything was recovered. (A crash BEFORE
+    the swap completed — table missing — is ``commit.recover``'s case,
+    which writers run first.)"""
     if not os.path.isdir(table_path):
         return False
-    parks = sorted(glob.glob(f"{table_path.rstrip('/')}__old_*"))
-    done = False
+    parks = commit.parks(table_path)
     for park in parks:
-        # hoist BEFORE numbering: the live table has no _history until
-        # the park's is moved in, so numbering first would collide with
-        # or sort below the retained versions
-        _hoist_history(table_path, park)
-        versions = list_versions(table_path)
-        nxt = (versions[-1] + 1) if versions else 1
-        _archive_park(table_path, park, nxt)
-        done = True
-    return done
+        _archive_park(table_path, park)
+    return bool(parks)
 
 
 def archive_swap(
     table_path: str, new_path: str, *, retain: int = 5
 ) -> int:
-    """Like ``util.swap_snapshot`` but the previous snapshot is retained
-    as the next version under ``_history`` (pruned to the ``retain``
-    newest). Returns the version number the previous snapshot received.
+    """``commit.swap`` that retains the previous snapshot as the next
+    version under ``_history`` (pruned to the ``retain`` newest). Returns
+    the version number the previous snapshot received.
     """
-    import uuid
-
     if retain < 1:
         raise ValueError(f"retain must be >= 1, got {retain}")
     recover_history(table_path)
-    park = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(table_path, park)
-        os.rename(new_path, table_path)
-        _hoist_history(table_path, park)
-        versions = list_versions(table_path)
-        nxt = (versions[-1] + 1) if versions else 1
-        _archive_park(table_path, park, nxt)
+    archived = []
+
+    def retire(park: str) -> None:
+        archived.append(_archive_park(table_path, park))
         for v in list_versions(table_path)[:-retain]:
             shutil.rmtree(
                 os.path.join(_hist(table_path), f"v{v:06d}"), ignore_errors=True
             )
-    finally:
-        cache.invalidate(table_path)
-    return nxt
+
+    commit.swap(table_path, new_path, retire=retire)
+    return archived[0]
 
 
 def history_preserving_swap(table_path: str, new_path: str) -> None:
-    """``util.swap_snapshot`` for REWRITES of a versioned table
-    (compaction): the retained ``_history`` moves onto the new snapshot
-    instead of dying with the old one; the previous snapshot itself is
-    NOT archived — a compaction rewrite holds the same logical rows, so
-    it is the same version. Crash honesty: the rename windows are the
-    documented swap_snapshot ones (table briefly missing → parked copy
-    intact, ``util.restore_snapshot`` recovers); a crash AFTER the new
-    snapshot is live but before park cleanup leaves the park with the
-    history still inside, and :func:`recover_history` (run on entry by
-    versioned writers, compaction, and :func:`vacuum_versions`) hoists
-    the history back and archives the park as a version — conservative
-    (a byte-identical version appears) but lossless; vacuum prunes it
-    later."""
-    import uuid
+    """``commit.swap`` for REWRITES of a versioned table (compaction): the
+    retained ``_history`` moves onto the new snapshot instead of dying
+    with the old one; the previous snapshot itself is NOT archived — a
+    compaction rewrite holds the same logical rows, so it is the same
+    version. Crash honesty: the rename windows are ``commit.swap``'s
+    (table briefly missing → parked copy intact, ``commit.recover``
+    restores it); a crash AFTER the new snapshot is live but before park
+    cleanup leaves the park with the history still inside, and
+    :func:`recover_history` (run on entry by versioned writers,
+    compaction, and :func:`vacuum_versions`) hoists the history back and
+    archives the park as a version — conservative (a byte-identical
+    version appears) but lossless; vacuum prunes it later."""
 
-    park = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(table_path, park)
-        os.rename(new_path, table_path)
+    def retire(park: str) -> None:
         _hoist_history(table_path, park)
         shutil.rmtree(park)
-    finally:
-        cache.invalidate(table_path)
+
+    commit.swap(table_path, new_path, retire=retire)
 
 
 def vacuum_versions(table_path: str, *, keep_last: int) -> list[int]:
@@ -188,21 +170,19 @@ def vacuum_versions(table_path: str, *, keep_last: int) -> list[int]:
     deleted version numbers, oldest first.
 
     Safety: REFUSES a mid-swap torn table (live dir missing while a
-    parked ``__old_*`` snapshot exists — ``util.restore_snapshot``'s
-    case): vacuuming around a torn swap could GC the only surviving
+    parked snapshot exists — ``commit.recover``'s case): vacuuming
+    around a torn swap could GC the only surviving
     lineage. A LIVE table with parked snapshots is first recovered
     (parks archived as versions, numbering completed) so retention
     counts them — recover-then-prune, never prune-around."""
-    import glob
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    parks = sorted(glob.glob(f"{table_path.rstrip('/')}__old_*"))
     if not os.path.isdir(table_path):
+        parks = commit.parks(table_path)
         if parks:
             raise RuntimeError(
                 f"table at {table_path} is mid-swap (live dir missing, "
-                f"parked snapshot(s) {parks}); run util.restore_snapshot "
+                f"parked snapshot(s) {parks}); run commit.recover "
                 "— every versioned writer does on entry — before "
                 "vacuuming"
             )

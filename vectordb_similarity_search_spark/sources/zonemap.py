@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commit
+
 SIDECAR = "_zonemap.json"
 
 # Stats are trusted only for types whose JSON round-trip preserves
@@ -98,10 +100,7 @@ def write_zone_map(path: str, cols: list[str]) -> str:
     of a real table format). Returns the sidecar path."""
     zm = collect_zone_map(path, cols)
     sidecar = os.path.join(path, SIDECAR)
-    tmp = sidecar + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"columns": cols, "files": zm}, fh)
-    os.replace(tmp, sidecar)
+    commit.write_json(sidecar, {"columns": cols, "files": zm})
     return sidecar
 
 

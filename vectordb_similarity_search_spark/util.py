@@ -52,46 +52,3 @@ def _scan_shaped(df: DataFrame) -> bool:
         if m and m.group(1) not in _SCAN_NODES:
             return False
     return True
-
-
-def swap_snapshot(table_path: str, new_path: str) -> None:
-    """Replace the directory at ``table_path`` with ``new_path`` by two
-    renames, parking the previous snapshot at ``<table>__old_<uuid>`` until
-    the swap completes.
-
-    Honest atomicity note: POSIX cannot atomically exchange two
-    directories (no portable renameat2), so there IS a crash window
-    between the renames in which ``table_path`` does not exist — but the
-    previous snapshot is intact under the ``__old_`` name and
-    :func:`restore_snapshot` (called automatically by the writers before
-    their next run) brings it back. Data is never lost; readers racing
-    the window see a missing path, not a half-written table."""
-    import os
-    import shutil
-    import uuid
-
-    from . import cache
-
-    old = f"{table_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(table_path, old)
-        os.rename(new_path, table_path)
-        shutil.rmtree(old)
-    finally:
-        cache.invalidate(table_path)
-
-
-def restore_snapshot(table_path: str) -> bool:
-    """Crash recovery for :func:`swap_snapshot`: if ``table_path`` is
-    missing and a parked ``__old_`` snapshot exists, restore the newest
-    one. Returns True if a restore happened."""
-    import glob
-    import os
-
-    if os.path.exists(table_path):
-        return False
-    parked = sorted(glob.glob(f"{table_path.rstrip('/')}__old_*"), key=os.path.getmtime)
-    if not parked:
-        return False
-    os.rename(parked[-1], table_path)
-    return True
