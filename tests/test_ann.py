@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.ann import ivf_fit, lsh_bucket_topk
@@ -120,8 +121,6 @@ def test_blocked_join_rejects_oversized_query_side(spark, sf_dir):
     """The query side is collected+broadcast by contract; a corpus-sized
     'queries' frame must raise (bounded limit+1 probe), not OOM the
     driver — the mmr_rerank max_candidates pattern."""
-    import pytest
-
     from vectordb_similarity_search_spark.operators.topk import (
         similarity_join_blocked,
     )
@@ -361,3 +360,58 @@ def test_ivf_batch_rejects_duplicate_qids(spark, sf_dir, tmp_path):
     qv = _query_vec(emb)
     with _pytest.raises(ValueError, match="duplicate"):
         ivf_search_index_batch(spark, path, model, [(1, qv), (1, qv)])
+
+
+def test_ivf_fit_is_one_job(spark, sf_dir, count_jobs):
+    """Validation of every row and the training sample share one Spark
+    job (an MLlib fit of the same corpus ran 19)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    model, jobs = count_jobs(ivf_fit, emb, n_cells=8)
+    assert jobs == 1
+    assert model.centers.shape == (8, 64)
+
+
+def test_ivf_fit_is_layout_independent(spark, sf_dir):
+    """The hash sample is a function of the vectors, not of the partition
+    layout: any repartitioning trains bit-identical centres."""
+    import numpy as np
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = ivf_fit(emb, n_cells=8).centers
+    assert np.array_equal(base, ivf_fit(emb.repartition(7), n_cells=8).centers)
+    assert np.array_equal(base, ivf_fit(emb.coalesce(1), n_cells=8).centers)
+
+
+_BAD_VECTORS = {
+    "null": None,
+    "ragged": [0.5] * 3,
+    "nan": [float("nan")] + [0.5] * 7,
+    "inf": [0.5] * 7 + [float("inf")],
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_BAD_VECTORS))
+def test_ivf_fit_rejects_bad_rows_outside_the_sample(spark, kind):
+    """A NULL, ragged or non-finite vector anywhere in the corpus raises
+    ValueError — also when the row falls outside the training sample
+    (1 cell → the 256 smallest hashes of 2,000 rows), which only the
+    all-row observation can catch."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(2000)]
+    rows.append((2000, _BAD_VECTORS[kind]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    v = F.col("embedding")
+    sampled = df.orderBy(F.xxhash64(F.lit(42), v), v).limit(256)
+    assert sampled.filter(F.col("vec_id") == 2000).isEmpty()
+    with pytest.raises(ValueError, match="1 (NULL|with)|lengths 3..8"):
+        ivf_fit(df, n_cells=1, seed=42)
+
+
+def test_ivf_fit_rejects_fewer_rows_than_cells(spark):
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(3)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="3 corpus rows"):
+        ivf_fit(df, n_cells=4)

@@ -65,6 +65,30 @@ def test_merge_survives_partitioned_rewrite(spark, table):
     assert got[0] == ("z", "a") and len(got) == 10
 
 
+def test_merge_writes_schema_sidecar_so_reads_skip_the_footer_job(
+    spark, table, count_jobs
+):
+    """merge_parquet stages the table schema next to the data, so after
+    the first merge a readback starts no Spark job and the next merge
+    skips its schema-inference (footer) job: 1 → 0 and 6 → 5 jobs."""
+    import os
+
+    from vectordb_similarity_search_spark.operators.merge import read_table_snapshot
+
+    def batch(i):
+        return spark.createDataFrame(
+            [(i, f"u{i}", "a")], "k int, v string, grp string"
+        )
+
+    _, first = count_jobs(merge_parquet, spark, table, batch(0), ["k"])
+    assert os.path.exists(os.path.join(table, "_table_schema.json"))
+    df, read_jobs = count_jobs(read_table_snapshot, spark, table)
+    _, second = count_jobs(merge_parquet, spark, table, batch(1), ["k"])
+    assert (first, read_jobs, second) == (6, 0, 5)
+    assert df.schema == spark.read.parquet(table).schema
+    assert _read(spark, table)[1] == ("u1", "a")
+
+
 @pytest.mark.parametrize("how", ["inner", "left"])
 def test_salted_join_matches_plain(spark, how):
     # 90% of big rows share one hot key

@@ -60,12 +60,12 @@ def test_codebooks_deterministic(spark, emb):
 
 
 def test_sorted_fit_is_layout_independent(spark, emb):
-    """The v_pq_knn catalog query trains on a vec_id-sorted sample so the
-    codebooks are a pure content function: reshuffling the corpus into a
-    different partition layout must yield bit-identical codebooks (a bare
+    """fit_pq trains on a hash-ordered sample, so the codebooks are a pure
+    content function: reshuffling the corpus into a different partition
+    layout must yield bit-identical codebooks without any sort (a bare
     limit() sample would not — it takes whatever partitions come first)."""
-    a = fit_pq(emb.orderBy("vec_id"), m=16, k=32, seed=42)
-    b = fit_pq(emb.repartition(7).orderBy("vec_id"), m=16, k=32, seed=42)
+    a = fit_pq(emb, m=16, k=32, seed=42)
+    b = fit_pq(emb.repartition(7), m=16, k=32, seed=42)
     assert np.array_equal(a.codebooks, b.codebooks)
 
 
@@ -84,3 +84,22 @@ def test_l2_metric_screens_by_distance(spark):
     q = [1.0, 0.0] * 4
     got = model.search(codes, df, q, k=1, rescore=20, metric="l2").collect()
     assert got[0].vec_id == 0
+
+
+def test_kmeans_reaches_a_lloyd_fixed_point():
+    """The matmul-form kernel against a broadcast brute-force reference:
+    at convergence every point sits in its nearest cell and every centre
+    is the mean of its cell, with no cell left empty."""
+    from vectordb_similarity_search_spark.operators.pq import _kmeans
+
+    rng = np.random.default_rng(5)
+    blobs = rng.standard_normal((6, 8)) * 5.0
+    X = np.repeat(blobs, 50, axis=0) + rng.standard_normal((300, 8))
+    centers = _kmeans(X, 6, 100, np.random.default_rng(1))
+    d2 = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+    assign = d2.argmin(axis=1)
+    assert sorted(np.bincount(assign, minlength=6)) == [50] * 6
+    for j in range(6):
+        np.testing.assert_allclose(centers[j], X[assign == j].mean(axis=0), rtol=0, atol=1e-12)
+    again = _kmeans(X, 6, 100, np.random.default_rng(1))
+    assert np.array_equal(centers, again)

@@ -8,7 +8,9 @@ within-cell scorer but prune the search space first:
 - IVF (inverted-file): k-means partition of the corpus; a query probes only
   the ``nprobe`` nearest cells. Write the corpus partitioned by cell id and
   the probe becomes a partition-pruned scan — the Spark-native analogue of
-  an IVF index.
+  an IVF index. The cells train FAISS-style on a bounded sample (256
+  points per cell, one Spark job) with the driver-side k-means that also
+  trains the PQ codebooks (operators/pq).
 - SRP-LSH: random-hyperplane signatures bucket cosine-similar vectors;
   probing a bucket is a hash-key filter.
 
@@ -26,7 +28,14 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hyperplane_signature
 from .. import cache, commit
+from .pq import _kmeans, sample_vectors
 from .topk import knn
+
+
+# Training points per cell — FAISS's ``max_points_per_centroid``: past a
+# few hundred points a cell's centroid moves by far less than the cell's
+# own spread, so fitting on more rows buys no recall, only cost.
+_POINTS_PER_CELL = 256
 
 
 def ivf_fit(
@@ -37,15 +46,20 @@ def ivf_fit(
     seed: int = 42,
     max_iter: int = 20,
 ) -> "IvfModel":
-    """K-means the corpus into ``n_cells`` inverted-file cells (MLlib,
-    distributed). Returns a model holding the (tiny) centroid table."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    km = KMeans(k=n_cells, seed=seed, maxIter=max_iter)
-    model = km.fit(feats)
-    return IvfModel(np.array(model.clusterCenters()), vec_col)
+    """K-means the corpus into ``n_cells`` inverted-file cells. ONE Spark
+    job (operators/pq.sample_vectors) validates every row and takes the
+    ``256 × n_cells`` vectors with the smallest seeded hash; seeded
+    Lloyd's (operators/pq._kmeans, the same kernel the PQ codebooks
+    train with) runs on that sample driver-side. The centres depend only
+    on the corpus contents and ``seed``, not on its partition layout.
+    Raises ``ValueError`` for NULL, ragged or non-finite vectors anywhere
+    in the corpus, or for fewer rows than ``n_cells``. Returns a model
+    holding the (tiny) centroid table."""
+    X, rows = sample_vectors(corpus, vec_col, _POINTS_PER_CELL * n_cells, seed)
+    if rows < n_cells:
+        raise ValueError(f"{rows} corpus rows cannot fill n_cells={n_cells} cells")
+    centers = _kmeans(X, n_cells, max_iter, np.random.default_rng(seed))
+    return IvfModel(centers, vec_col)
 
 
 class IvfModel:

@@ -44,6 +44,10 @@ from .. import commit
 # file listing) and read back by read_table_snapshot: an explicit
 # read-schema makes parquet fill the column with NULL in old files —
 # exactly the ADD-COLUMN NULL-backfill semantics, without touching them.
+# merge_parquet writes the sidecar into every snapshot it stages, so the
+# next merge and every readback skip the parquet footer (schema-inference)
+# job. Writers that swap in a whole new dir without one drop it with the
+# old snapshot; the pruned writers keep the schema it records.
 _SCHEMA_SIDECAR = "_table_schema.json"
 
 
@@ -68,9 +72,10 @@ def _read_schema_sidecar(table_path: str):
 
 def read_table_snapshot(spark: SparkSession, table_path: str) -> DataFrame:
     """Read a merge-managed parquet table honoring its schema sidecar, if
-    one exists (written by a partitioned schema-evolving merge): the
-    explicit schema makes partitions whose files predate an added column
-    surface it as NULL. Without a sidecar this is a plain parquet scan."""
+    one exists (written by ``merge_parquet`` and by a partitioned
+    schema-evolving merge): the explicit schema skips the footer job and
+    makes partitions whose files predate an added column surface it as
+    NULL. Without a sidecar this is a plain parquet scan."""
     schema = _read_schema_sidecar(table_path)
     if schema is None:
         return spark.read.parquet(table_path)
@@ -141,6 +146,7 @@ def merge_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(tmp)
+    commit.write_json(_sidecar_path(tmp), merged.schema.jsonValue())
     if retain_history is not None:
         from .timetravel import archive_swap
 

@@ -14,6 +14,12 @@ PQ recipe — codebooks are tiny and training needs k·m·iters distance
 evals, not the corpus); encode/score are Arrow batch passes; the rescore
 is a broadcast candidate semi-join. Cosine use: normalize vectors first
 (dot over unit vectors == cosine), which also makes ADC error scale-free.
+
+This module also holds the package's one k-means: :func:`sample_vectors`
+takes the training sample in ONE Spark job (a hash top-k, so the sample is
+a function of the vectors alone, not of the partition layout, and every
+row is validated on the way), and :func:`_kmeans` runs seeded Lloyd's on
+it driver-side. The IVF fit (operators/ann.ivf_fit) uses both.
 """
 
 from __future__ import annotations
@@ -22,23 +28,115 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .topk import knn
 
 
-def _kmeans(X: np.ndarray, k: int, iters: int, rng: np.random.Generator) -> np.ndarray:
-    """Seeded Lloyd's on the driver (inputs are a bounded sample)."""
-    centers = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(k):
-            pts = X[assign == j]
-            if len(pts):
-                centers[j] = pts.mean(axis=0)
+def sample_vectors(
+    df: DataFrame, vec_col: str, cap: int, seed: int
+) -> tuple[np.ndarray, int]:
+    """The ``cap`` vectors with the smallest ``xxhash64(seed, v)`` (ties
+    broken by ``v``) as a float64 matrix, plus the corpus row count — ONE
+    Spark job: an ordered limit (per-task top-k, bounded state, no
+    shuffle) whose input also feeds an ``Observation`` over EVERY row.
+
+    The sample is a function of the vector contents only, so any
+    repartitioning of the same corpus trains bit-identical models (a bare
+    ``limit`` takes whichever partitions come first). The observation
+    rejects NULL, ragged, empty and non-finite vectors anywhere in the
+    corpus, not just in the sample, with one ``ValueError`` carrying the
+    counts; the checks are codegen'd array_max/array_min/array_compact
+    expressions, not lambdas."""
+    v = F.col("_v")
+    hi, lo = F.array_max(v), F.array_min(v)
+    bad = (
+        F.isnan(hi)
+        | (hi == float("inf"))
+        | (lo == float("-inf"))
+        | (F.size(F.array_compact(v)) < F.size(v))
+    )
+    dim = F.when(v.isNotNull(), F.size(v))
+    obs = Observation()
+    rows = (
+        df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(v.isNull()).alias("null"),
+            F.min(dim).alias("min_dim"),
+            F.max(dim).alias("max_dim"),
+            F.count_if(bad).alias("non_finite"),
+        )
+        .orderBy(F.xxhash64(F.lit(seed), v), v)
+        .limit(cap)
+        .collect()
+    )
+    c = obs.get
+    if c["null"] or c["non_finite"] or c["min_dim"] != c["max_dim"] or c["min_dim"] == 0:
+        raise ValueError(
+            f"{vec_col!r} must hold non-NULL, finite vectors of one length: "
+            f"{c['rows']} rows, {c['null']} NULL, {c['non_finite']} with "
+            f"NaN/Inf/NULL elements, lengths {c['min_dim']}..{c['max_dim']}"
+        )
+    return np.asarray([r[0] for r in rows], dtype=np.float64), c["rows"]
+
+
+def _kmeans(X: np.ndarray, k: int, max_iter: int, rng: np.random.Generator) -> np.ndarray:
+    """Seeded k-means on the driver (``X`` is a bounded sample): greedy
+    k-means++ seeding, then Lloyd's until ``max_iter`` or until no assignment
+    changes. Distances take the matmul form ``|x|² − 2XCᵀ + |c|²`` —
+    O(n·k) memory where broadcasting ``X − C`` is O(n·k·d), which an IVF
+    sample of 256 points × hundreds of cells cannot afford. A cell left
+    empty is re-seeded at the sample point farthest from its centre
+    (ties by index), so the result depends on ``X`` and ``rng`` only."""
+    n = len(X)
+    if n < k:
+        raise ValueError(f"k-means needs at least k={k} points, got {n}")
+    x2 = np.einsum("ij,ij->i", X, X)
+
+    def sqdist(C: np.ndarray) -> np.ndarray:
+        c2 = np.einsum("ij,ij->i", C, C)
+        return np.maximum(x2[:, None] - 2.0 * (X @ C.T) + c2[None, :], 0.0)
+
+    # greedy k-means++: draw 2 + ln k candidates ∝ D² per step and keep
+    # the one that lowers the potential most (Arthur & Vassilvitskii §6)
+    trials = 2 + int(np.log(k))
+    centers = np.empty((k, X.shape[1]))
+    centers[0] = X[rng.integers(n)]
+    closest = sqdist(centers[:1])[:, 0]
+    for j in range(1, k):
+        cum = np.cumsum(closest)
+        if cum[-1] > 0.0:
+            cand = np.searchsorted(cum, rng.random(trials) * cum[-1], side="right")
+        else:  # every point sits on a chosen centre (duplicates)
+            cand = rng.integers(n, size=trials)
+        d2 = np.minimum(closest[:, None], sqdist(X[cand]))
+        best = int(d2.sum(axis=0).argmin())
+        centers[j] = X[cand[best]]
+        closest = d2[:, best]
+
+    assign = None
+    for _ in range(max_iter):
+        # |x|² is constant per row, so the argmin needs only |c|² − 2x·c
+        d = X @ centers.T
+        d *= -2.0
+        d += np.einsum("ij,ij->i", centers, centers)
+        new = d.argmin(axis=1)
+        if assign is not None and np.array_equal(new, assign):
+            break
+        assign = new
+        counts = np.bincount(assign, minlength=k)
+        live = counts > 0
+        starts = np.cumsum(counts) - counts
+        sums = np.add.reduceat(X[np.argsort(assign, kind="stable")], starts[live])
+        centers[live] = sums / counts[live, None]
+        empty = np.flatnonzero(~live)
+        if len(empty):
+            far = np.argsort(-(x2 + d[np.arange(n), assign]), kind="stable")
+            centers[empty] = X[far[: len(empty)]]
     return centers
 
 
@@ -165,11 +263,12 @@ def fit_pq(
     seed: int = 42,
     normalize: bool = True,
 ) -> PqModel:
-    """Train subspace codebooks on a bounded deterministic sample.
+    """Train subspace codebooks on at most ``sample_rows`` vectors taken
+    by :func:`sample_vectors` — so the codebooks are a function of the
+    corpus contents and ``seed``, whatever its partition layout.
     ``normalize`` unit-norms the training vectors — use together with
     normalized corpus vectors for cosine search (dot == cosine)."""
-    sample = df.select(vec_col).limit(sample_rows).collect()
-    X = np.asarray([r[0] for r in sample], dtype=np.float64)
+    X, _ = sample_vectors(df, vec_col, sample_rows, seed)
     if normalize:
         norms = np.linalg.norm(X, axis=1, keepdims=True)
         norms[norms == 0.0] = 1.0

@@ -39,12 +39,13 @@ def _committed_centers_path(sf_dir: str, n_cells: int, seed: int) -> str:
 
     The sf-bound expected-output fixtures of the k-means-derived queries
     (d_semantic_prune, v_ivf_recall_curve) are only as stable as the
-    fitted centroids. Fitting is deterministic for THIS fixture layout
-    (single-row-group file → single input partition → fixed aggregation
-    order; verified bit-identical across session core counts), but
-    committing the fitted centers next to the expected outputs makes the
-    guarantee structural instead of empirical: any environment that can
-    load a .npy reproduces the exact cell assignment."""
+    fitted centroids. ``ivf_fit`` is deterministic whatever the input
+    layout (hash sample + seeded driver-side k-means), but the committed
+    centers (fitted by an earlier distributed k-means) are what the
+    expected outputs were generated from: committing them next to the
+    expected outputs makes the guarantee structural instead of empirical
+    — any environment that can load a .npy reproduces the exact cell
+    assignment, whatever the fitter does."""
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(
         FIXTURES_DIR, f"ivf_centers_{sf_tag}_{n_cells}_{seed}.npy"
@@ -87,7 +88,7 @@ def _ivf_index_for(
         if os.path.exists(committed):
             # prefer the committed centers fixture: guarantees the cell
             # assignment matches the committed expected-output fixtures
-            # even if a future Spark/MLlib version fits differently
+            # even where ivf_fit would fit different centers
             model = IvfModel(np.load(committed), "embedding")
         else:
             model = ivf_fit(emb, n_cells=n_cells, seed=seed)
@@ -653,7 +654,7 @@ def _pq_state(spark: SparkSession, sf_dir: str, corpus):
     from ..operators.pq import fit_pq, l2_normalized
 
     def fit():
-        model = fit_pq(corpus.orderBy("vec_id"), m=16, k=32, seed=42)
+        model = fit_pq(corpus, m=16, k=32, seed=42)
         return model, model.encode(l2_normalized(corpus))
 
     return _model(spark, sf_dir, "pq", fit)
@@ -723,18 +724,20 @@ FROM scored ORDER BY s DESC, vec_id LIMIT 10
 def v_pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 search through the PQ-ENCODED store (operators/pq: 16x-
     compressed codes — 64-dim float32 → 16 one-byte subspace codes — ADC-
-    screened to an approximate top-200, then an exact rescore over just
+    screened to an approximate top-400, then an exact rescore over just
     those candidates' float vectors picks the final top-10). Same driver
     contract as v_sq8_knn and the same exact-kNN SQL twin: approximate
-    screen, EXACT served top-k (screen-depth margin measured >=2x at
-    every fixture sf; rescore-window property in tests/test_pq.py). The
-    codebooks train on a vec_id-SORTED sample so the fit is partition-
-    layout independent (limit over an unordered scan is not); fit +
-    encode memoized per session like the other model builds."""
+    screen, EXACT served top-k (screen-depth margin — window ÷ deepest
+    ADC rank of an exact top-10 row — measured 10.0x / 8.5x / 2.5x at
+    sf0.001 / sf0.01 / sf0.1; rescore-window property in
+    tests/test_pq.py). The codebooks train on a hash-ordered sample
+    (operators/pq.sample_vectors) so the fit is partition-layout
+    independent (limit over an unordered scan is not); fit + encode
+    memoized per session like the other model builds."""
     qv = _vq(spark, sf_dir)
     corpus = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     model, codes = _pq_state(spark, sf_dir, corpus)
-    res = model.search(codes, corpus, qv, k=10, rescore=200)
+    res = model.search(codes, corpus, qv, k=10, rescore=400)
     return res.select("vec_id", "label", F.round("score", 6).alias("score"))
 
 
@@ -1451,7 +1454,7 @@ def r_als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
     """Build-once IVF-PQ index for the embeddings fixture: the committed
     16-cell IVF centers (same cells v_ivf_knn probes) + the session PQ
-    model (m=16, k=32, sorted-sample fit — deterministic), written
+    model (m=16, k=32, hash-sample fit — deterministic), written
     cell-partitioned with normalized codes and RAW float vectors (see
     ivfpq_write_index), memoized like _ivf_index_for."""
     from ..operators.ann import ivfpq_write_index
