@@ -1,9 +1,19 @@
 #!/usr/bin/env python
-"""Split each query's per-run wall into BUILD (python-side plan
-construction: the registry builder call, py4j expression-tree traffic)
-vs EXEC (noop-sink execution of an already-built handle) — the guide
-§1.2 "per-task work includes the driver's own per-run work" diagnostic
-that motivated the registry plan cache.
+"""Per-query cost of registry queries in one session: BUILD (python-side
+plan construction: the registry builder call, py4j expression-tree
+traffic), EXEC (noop-sink execution of an already-built handle) and the
+classes Janino compiled for each — the guide §1.2 "per-task work
+includes the driver's own per-run work" diagnostic that motivated the
+registry plan cache.
+
+Protocol: each named query runs once, untimed (build + exec, the run
+that compiles its generated classes); then three rounds run the named
+queries in the given order, and the min of 3 of each part is reported.
+EXEC is the bench.py number (one warm run, then min of 3 into the noop
+sink). The rounds interleave the queries the way a serving session
+does, so ``compiles repeat`` (Janino compilations over the three rounds)
+is 0 only if the session's codegen cache holds the classes of every
+named query at once; anything else is recompilation of evicted classes.
 
 Usage: python scripts/build_exec_split.py [--nocache] <query> [query ...]
 
@@ -40,31 +50,44 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 
     from vectordb_similarity_search_spark import cache
 
-    out: dict[str, dict[str, float]] = {}
+    builds = {name: [] for name in names}
+    execs = {name: [] for name in names}
+    first = {}
+    repeat = dict.fromkeys(names, 0)
     for name in names:
-        fn = REGISTRY[name].fn
-        # warm (build + exec once, untimed)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        builds, execs = [], []
-        for _ in range(3):
+        n0 = compiled().getCount()
+        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        first[name] = compiled().getCount() - n0
+    for _ in range(3):
+        for name in names:
             if nocache:
                 cache.clear("plan")
+            n0 = compiled().getCount()
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
+            df = REGISTRY[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            builds.append(t1 - t0)
-            execs.append(t2 - t1)
+            repeat[name] += compiled().getCount() - n0
+            builds[name].append(t1 - t0)
+            execs[name].append(t2 - t1)
+    out: dict[str, dict[str, float]] = {}
+    for name in names:
         out[name] = {
-            "build": round(min(builds), 3),
-            "exec": round(min(execs), 3),
+            "build": round(min(builds[name]), 3),
+            "exec": round(min(execs[name]), 3),
+            "compiles_first": first[name],
+            "compiles_repeat": repeat[name],
         }
-        print(f"{name}: build {out[name]['build']} exec {out[name]['exec']}",
-              flush=True)
+        print(
+            f"{name}: build {out[name]['build']} exec {out[name]['exec']} "
+            f"compiles first {first[name]} repeat {repeat[name]}",
+            flush=True,
+        )
     print(json.dumps(out))
 
 

@@ -63,6 +63,23 @@ def count_jobs(spark):
 
 
 @pytest.fixture()
+def count_codegen_compiles(spark):
+    """``count_codegen_compiles(fn, *args)`` returns ``(result, classes
+    Janino compiled while fn ran)``, read from Spark's own counter. A
+    class served from the codegen cache is not compiled, so a warm query
+    whose classes are still cached counts 0. The counter is JVM-wide: run
+    nothing else on the session meanwhile."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+
+    def run(fn, *args, **kwargs):
+        before = metric().getCount()
+        out = fn(*args, **kwargs)
+        return out, metric().getCount() - before
+
+    return run
+
+
+@pytest.fixture()
 def fail_move(monkeypatch):
     """``fail_move(n)`` makes the ``n``-th directory move of ``commit``
     (1-based, counted from the call) raise ``OSError`` — the torn state a

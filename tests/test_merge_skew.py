@@ -590,6 +590,40 @@ def test_pruned_merge_torn_commit_rolls_forward_on_next_entry(
     assert not [d for d in os.listdir(tmp_path) if "__pmerge_" in d]
 
 
+def test_snapshot_reader_refuses_half_committed_table(spark, tmp_path, fail_move):
+    """After a crash between two partition moves, read_table_snapshot
+    raises instead of serving the merge half-applied; once commit.recover
+    has rolled the commit forward it reads the merged rows."""
+    import shutil
+
+    from vectordb_similarity_search_spark import commit
+    from vectordb_similarity_search_spark.operators.merge import (
+        merge_parquet_partitioned,
+        read_table_snapshot,
+    )
+
+    path = _part_table(spark, tmp_path)
+    control = str(tmp_path / "control")
+    shutil.copytree(path, control)
+    batch = spark.createDataFrame(
+        [(0, "b1", 0), (1, "b1", 1), (100, "b1", 3)], "k int, v string, bucket int"
+    )
+    fail_move(2)
+    with pytest.raises(OSError, match="injected"):
+        merge_parquet_partitioned(spark, path, batch, ["k", "bucket"], ["bucket"])
+    fail_move(0)
+    with pytest.raises(RuntimeError, match="commit.recover"):
+        read_table_snapshot(spark, path)
+    commit.recover(path)
+    merge_parquet_partitioned(spark, control, batch, ["k", "bucket"], ["bucket"])
+
+    def rows(table):
+        return sorted(tuple(r) for r in read_table_snapshot(spark, table).collect())
+
+    assert rows(path) == rows(control)
+    assert len(rows(path)) == 31
+
+
 def _part_dim(spark, tmp_path, name="pdim"):
     import datetime as dt
 

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from vectordb_similarity_search_spark import commit
 from vectordb_similarity_search_spark.operators.rollup import (
     hourly_rollup,
     read_rollup,
@@ -132,6 +133,26 @@ def test_crashed_swap_recovers(spark, tmp_path, fail_move):
     upsert_rollup(spark, path, _events(spark, _day_rows(2, 3, 9.0)))
     assert os.path.exists(victim)
     assert not [d for d in os.listdir(path) if not d.startswith(("day=", "_"))]
+
+
+def test_reader_refuses_half_committed_rollup(spark, tmp_path, fail_move):
+    """After a crash between two day moves, read_rollup raises instead of
+    serving the batch half-applied (one day new, one day missing); once
+    commit.recover has rolled the commit forward it reads every row."""
+    b1 = _day_rows(1, 8, 1.0) + _day_rows(2, 8, 2.0)
+    b2 = _day_rows(1, 5, 3.0) + _day_rows(2, 5, 4.0) + _day_rows(3, 5, 5.0)
+    path = str(tmp_path / "rollup")
+    upsert_rollup(spark, path, _events(spark, b1))
+    fail_move(2)
+    with pytest.raises(OSError, match="injected"):
+        upsert_rollup(spark, path, _events(spark, b2))
+    fail_move(0)
+    with pytest.raises(RuntimeError, match="commit.recover"):
+        read_rollup(spark, path)
+    commit.recover(path)
+    assert _canon(read_rollup(spark, path)) == _canon(
+        hourly_rollup(_events(spark, b1 + b2))
+    )
 
 
 def test_torn_commit_neither_double_counts_nor_loses_days(

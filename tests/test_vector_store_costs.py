@@ -11,6 +11,9 @@ patient search that does not re-run the embedding model per query.
   ivf_compact needs no count job.
 - PatientSimilaritySearch(embed=...) embeds its store once: query plans
   scan the cached store, with no MapInPandas node.
+- hyperplane_signature builds each plane as one array literal: the same
+  signatures as per-element literals, in py4j calls that do not grow
+  with dim.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from vectordb_similarity_search_spark.functions.hashing import hyperplane_signature
 from vectordb_similarity_search_spark.functions.vector import (
     array_lit,
     cosine_similarity,
@@ -110,6 +114,47 @@ def test_assign_expression_matches_per_centroid_form(spark):
     rows = model.assign(corpus, use_blas=False).withColumn("old", old).collect()
     assert all(r.cell == r.old for r in rows)
     assert {r.cell for r in rows} == set(range(6))
+
+
+def _old_hyperplane_signature(vec, dim, n_planes=16, seed=42):
+    planes = np.random.default_rng(seed).standard_normal((n_planes, dim))
+    v = vec.cast("array<double>")
+    key = F.lit(0)
+    for p in planes:
+        d = F.aggregate(
+            F.zip_with(v, _old_array_lit(p), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+        )
+        key = key * 2 + F.when(d >= 0, 1).otherwise(0)
+    return key
+
+
+def test_hyperplane_signature_matches_per_element_planes(spark):
+    """Signatures equal the per-element literal form on a seeded frame,
+    including a zero vector (every dot product 0.0) and negative zeros."""
+    corpus, _ = _corpus(spark, 200, 16, seed=6)
+    corpus = corpus.unionByName(
+        spark.createDataFrame([(1000, [-0.0] * 16), (1001, [-0.0, 1.0] * 8)], corpus.schema)
+    )
+    for n_planes, seed in ((16, 42), (8, 7)):
+        rows = corpus.select(
+            "vec_id",
+            hyperplane_signature(F.col("embedding"), 16, n_planes, seed).alias("new"),
+            _old_hyperplane_signature(F.col("embedding"), 16, n_planes, seed).alias("old"),
+        ).collect()
+        assert all(r.new == r.old for r in rows)
+        assert len({r.new for r in rows}) > 1
+        zero = next(r for r in rows if r.vec_id == 0)
+        assert zero.new == 2**n_planes - 1  # sign(0.0) counts as >= 0
+
+
+def test_hyperplane_signature_py4j_calls_do_not_grow_with_dim(spark, count_py4j_calls):
+    counts = {}
+    for dim in (8, 256):
+        hyperplane_signature(F.col("embedding"), dim)  # warm
+        _, counts[dim] = count_py4j_calls(hyperplane_signature, F.col("embedding"), dim)
+    assert counts[8] == counts[256], counts
+    # per-element planes cost ~4 calls per element: 16 x 256 x 4
+    assert counts[256] < 16 * 256, counts
 
 
 def _built_index(spark, tmp_path, dim):

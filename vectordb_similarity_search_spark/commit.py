@@ -20,6 +20,11 @@ renaming directories it wrote next to the live table. Four parts:
   newest park of a missing ``live`` and rolls a pending partition commit
   forward. Its cost on a clean table is two ``stat`` calls — no
   directory walk.
+- :func:`require_committed` runs at the entry of every reader of a
+  partition-committed table and refuses while a pending marker exists.
+  A reader never rolls forward itself: it cannot tell a crashed commit
+  from one still in flight, and finishing a live writer's commit under
+  it would race that writer.
 - :func:`write_json` writes a sidecar atomically (tmp file, then
   ``os.replace``), so a crash leaves the previous sidecar or the new
   one, never torn JSON.
@@ -129,6 +134,17 @@ def recover(path: str) -> None:
     if os.path.exists(marker):
         with open(marker) as fh:
             _roll_forward(path, json.load(fh))
+
+
+def require_committed(path: str) -> None:
+    """Raise ``RuntimeError`` while a partition commit at ``path`` is
+    pending, so a reader never serves a batch half-applied."""
+    if os.path.exists(os.path.join(path, PENDING)):
+        raise RuntimeError(
+            f"{path} has a pending partition commit ({PENDING}): a writer is "
+            "publishing or crashed mid-commit; if no writer is running, "
+            "commit.recover(path) finishes it"
+        )
 
 
 def write_json(path: str, obj) -> None:

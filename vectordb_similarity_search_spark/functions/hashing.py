@@ -13,6 +13,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .vector import array_lit
+
 
 def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
     """MinHash signature: sig[i] = min over shingles of xxhash64(i, shingle).
@@ -97,13 +99,15 @@ def hamming_distance(bits_a: Column, bits_b: Column) -> Column:
 def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 42) -> Column:
     """Random-hyperplane (SRP) LSH key for cosine similarity: bit i =
     sign(v·r_i) packed into one int. Planes are a seeded numpy draw folded
-    into the plan as literals — identical on every executor, no shuffle."""
+    into the plan as literals — identical on every executor, no shuffle.
+    Each plane is one ``array_lit`` (O(1) py4j calls, and one reference
+    object in the generated code rather than ``dim`` inlined constants)."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
     v = vec.cast("array<double>")
     key = F.lit(0)
     for i in range(n_planes):
-        p = F.array(*[F.lit(float(x)) for x in planes[i]])
+        p = array_lit(planes[i])
         d = F.aggregate(F.zip_with(v, p, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
         key = key * 2 + F.when(d >= 0, 1).otherwise(0)
     return key

@@ -75,7 +75,10 @@ def read_table_snapshot(spark: SparkSession, table_path: str) -> DataFrame:
     one exists (written by ``merge_parquet`` and by a partitioned
     schema-evolving merge): the explicit schema skips the footer job and
     makes partitions whose files predate an added column surface it as
-    NULL. Without a sidecar this is a plain parquet scan."""
+    NULL. Without a sidecar this is a plain parquet scan. Raises
+    ``RuntimeError`` while a partition commit is pending
+    (``commit.require_committed``)."""
+    commit.require_committed(table_path)
     schema = _read_schema_sidecar(table_path)
     if schema is None:
         return spark.read.parquet(table_path)

@@ -97,7 +97,10 @@ def upsert_rollup(
 def _read_raw(spark: SparkSession, rollup_path: str) -> DataFrame:
     """Read the rollup normalizing the partition column back to string
     (partition-value type inference would otherwise hand back DATE and
-    silently fork the column's type between written and re-read data)."""
+    silently fork the column's type between written and re-read data).
+    Raises ``RuntimeError`` while a day commit is pending
+    (``commit.require_committed``)."""
+    commit.require_committed(rollup_path)
     return spark.read.parquet(rollup_path).withColumn(
         "day", F.col("day").cast("string")
     )

@@ -14,7 +14,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cache
+from .. import cache, commit
 from ..operators.ann import (
     IvfModel,
     _index_scan,
@@ -2426,8 +2426,11 @@ def _build_stream_sketch_ledger(spark: SparkSession, sf_dir: str, base: str) -> 
 def _stream_ledger_frame(spark: SparkSession, base: str, kind: str):
     """Memoized read of one scenario ledger: spark.read.parquet pays a
     1-task footer job per call, and the build-time zero-jobs discipline
-    (tests/test_lazy_build.py) applies to this query like any other."""
-    return _index_scan(spark, os.path.join(base, kind))
+    (tests/test_lazy_build.py) applies to this query like any other.
+    The pending-commit check runs on every call, cache hit or not."""
+    path = os.path.join(base, kind)
+    commit.require_committed(path)
+    return _index_scan(spark, path)
 
 
 def _cells_match(
