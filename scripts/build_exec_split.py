@@ -9,11 +9,12 @@ registry plan cache.
 Protocol: each named query runs once, untimed (build + exec, the run
 that compiles its generated classes); then three rounds run the named
 queries in the given order, and the min of 3 of each part is reported.
-EXEC is the bench.py number (one warm run, then min of 3 into the noop
-sink). The rounds interleave the queries the way a serving session
-does, so ``compiles repeat`` (Janino compilations over the three rounds)
-is 0 only if the session's codegen cache holds the classes of every
-named query at once; anything else is recompilation of evicted classes.
+That is bench.py's protocol (one warm run, then min of 3 into the noop
+sink) except that the rounds interleave the queries the way a serving
+session does, so ``compiles repeat`` (Janino compilations over the three
+rounds) is 0 only if the session's codegen cache holds the classes of
+every named query at once; anything else is recompilation of evicted
+classes (or, under AQE, a new codegen stage numbering).
 
 Usage: python scripts/build_exec_split.py [--nocache] <query> [query ...]
 

@@ -1,7 +1,7 @@
 """How a write is published and how a crash is recovered — the one place.
 
 Plain parquet has no transaction log, so every writer publishes by
-renaming directories it wrote next to the live table. Four parts:
+renaming directories it wrote next to the live table. Five parts:
 
 - :func:`swap` replaces a whole directory by two renames. The previous
   snapshot is parked at ``<live>__old_<8 hex>`` until the new one is in

@@ -10,17 +10,17 @@ The codegen cache holds the classes whole-stage codegen compiles with
 Janino. Spark's default keeps the 100 most recently used, but one
 session of this engine cycles through more distinct classes than that:
 the five-query ``perfbench`` analytics mix alone needs ~172, so with the
-default every warm round evicted each class before its next use and
-recompiled all of them (and HotSpot then JIT-compiled each new class
+default every warm round evicted classes before their next use and
+recompiled ~118 of them (and HotSpot then JIT-compiled each new class
 again). The cap is sized from a pass over the whole registry (see the
 comment at the setting); each cached class keeps its source text on the
 heap and its loaded class in Metaspace.
 
 It is a STATIC conf: it takes effect only when the session is created,
-so it cannot be set on a session built elsewhere. The grading driver's
-own session (``__spark_entry__.py``, replicated by
-``scripts/drive_replica.py``) does not go through :func:`get_spark` and
-keeps Spark's default.
+so it cannot be set on a session built elsewhere. A caller's own
+session, such as the one the ``__spark_entry__.py`` contract is called
+with (replicated by ``scripts/drive_replica.py``), does not go through
+:func:`get_spark` and keeps Spark's default.
 """
 
 from __future__ import annotations
