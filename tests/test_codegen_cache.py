@@ -3,8 +3,8 @@
 Spark keeps compiled classes in an LRU cache of
 ``spark.sql.codegen.cache.maxEntries`` entries (100 by default). The
 ``perfbench`` analytics mix needs more distinct classes than that, so
-with the default every interleaved warm round evicted each class before
-its next use and recompiled ~116 of them. ``get_spark`` sizes the cache
+with the default every interleaved warm round evicted classes before
+their next use and recompiled ~116 of them. ``get_spark`` sizes the cache
 above the whole registry's working set.
 """
 
@@ -35,7 +35,7 @@ def test_warm_mix_compiles_no_classes(spark, count_codegen_compiles):
     inside d_ppjoin_pairs's plan follow the order in which its
     concurrently ready query stages get planned, so now and then a warm
     run meets a numbering it has not compiled yet (6 classes, in about
-    one warm round of eight). Without AQE each plan is numbered once, so
+    one warm round of ten). Without AQE each plan is numbered once, so
     any compile in the second pass is an evicted class."""
     def run_mix():
         for q in MIX:
