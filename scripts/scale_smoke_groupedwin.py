@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Scale smoke for the round-8 coarse-group window machinery
-(operators/ranking.grouped_cumsum / grouped_rolling), vanilla local[8]:
+(operators/ranking.global_cumsum with group columns / grouped_rolling),
+local[8]:
 
 - 5M rows over FIVE groups (the bounded-cardinality regime the plain
   PARTITION BY window funnels onto 5 reducers) with a heavy-tailed
@@ -37,10 +38,7 @@ def main() -> int:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from vectordb_similarity_search_spark.operators.ranking import (
-        grouped_cumsum,
-        grouped_rolling,
-    )
+    from vectordb_similarity_search_spark.operators import ranking
     from vectordb_similarity_search_spark.session import get_spark
 
     spark = get_spark(
@@ -75,7 +73,9 @@ def main() -> int:
 
     # ---- grouped_cumsum: distinct frame (groups x o unique already) ----
     t0 = time.time()
-    routed = grouped_cumsum(df, "v", ["grp"], "o", buckets=32, col_name="cs")
+    routed = ranking.global_cumsum(
+        df, "v", ["o"], group_cols=["grp"], buckets=32, col_name="cs"
+    )
     routed_sum = routed.agg(F.sum(F.col("cs")).alias("s")).first()["s"]
     t_routed = time.time() - t0
 
@@ -97,14 +97,10 @@ def main() -> int:
     # a wall at 100 TB); the routed form bounds every sort at roughly
     # N/(groups*buckets) whatever N grows to. The extra linear passes
     # (quantile probe, offset aggregate, halo/offset join) cost a
-    # constant factor that the auto_* thresholds keep OFF small frames.
+    # constant factor that the routing threshold keeps OFF small frames.
     part_plain = (
         df.groupBy("grp").count().agg(F.max("count")).first()[0]
     )
-    from vectordb_similarity_search_spark.operators.ranking import (
-        _bucket_expr,
-    )
-
     fracs = [i / 32 for i in range(1, 32)]
     bounds = sorted(
         set(
@@ -113,7 +109,9 @@ def main() -> int:
         )
     )
     part_routed = (
-        df.withColumn("_b", _bucket_expr(F.col("o"), bounds, descending=False))
+        df.withColumn(
+            "_b", ranking._bucket_expr(F.col("o"), bounds, descending=False)
+        )
         .groupBy("grp", "_b")
         .count()
         .agg(F.max("count"))
@@ -129,7 +127,7 @@ def main() -> int:
         f"  cumsum wall: routed {t_routed:.1f}s vs plain coarse window "
         f"{t_plain:.1f}s at {N} rows / 5 groups (plain wins the toy wall "
         "- its 5-reducer sort is cheap at 5M, which is exactly why the "
-        "auto_* threshold keeps small frames on it)"
+        "routing threshold keeps small frames on it)"
     )
 
     # slice parity: exact row-level equality on a 200k sample window
@@ -140,9 +138,12 @@ def main() -> int:
     check("cumsum 200k-slice bit parity", a == b, f"({len(a)} rows)")
 
     # ---- grouped_rolling: trailing 20-row stats, halo cascade ----
+    # force the routed branch (the one this smoke measures), whatever
+    # the size estimate of the cached frame says
+    ranking.DIMENSION_WINDOW_MAX_BYTES = -1
     t0 = time.time()
-    frame, wspec, keep = grouped_rolling(
-        df, ["grp"], ["o"], 20, buckets=32, max_bytes=-1
+    frame, wspec, keep = ranking.grouped_rolling(
+        df, ["grp"], ["o"], 20, buckets=32
     )
     r_rolled = (
         frame.withColumn("mu", F.avg("v").over(wspec))

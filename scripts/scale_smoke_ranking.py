@@ -183,15 +183,16 @@ def main() -> None:
 
     # --- auto-routing trips ORGANICALLY (round-6 VERDICT order #6) ------
     # The routing threshold (operators/ranking.py DIMENSION_WINDOW_MAX_
-    # BYTES) is bit-parity-tested both sides with a forced max_bytes, but
+    # BYTES) is bit-parity-tested both sides with a forced threshold, but
     # this is the first smoke where the Catalyst size ESTIMATE of real
     # data exceeds it with no override: a 16M-row frame with a 64-byte
-    # payload column estimates ~352 MB > 256 MB, auto_row_number must
-    # pick the bucketed branch on its own, produce exact 1..N ranks, and
-    # beat the SinglePartition single-window plan on wall time.
+    # payload column estimates ~352 MB > 256 MB, the routing predicate
+    # must pick the bucketed branch on its own, and its rank
+    # (global_row_number) must produce exact 1..N ranks and beat the
+    # SinglePartition single-window plan on wall time.
     from vectordb_similarity_search_spark.operators.ranking import (
         DIMENSION_WINDOW_MAX_BYTES,
-        auto_row_number,
+        _routes,
         estimated_plan_bytes,
     )
 
@@ -204,7 +205,7 @@ def main() -> None:
         F.repeat(F.lit("x"), 64).alias("pad"),
     )
     est = estimated_plan_bytes(wide)
-    routed = auto_row_number(wide, ["n_tok", "doc_id"], descending=[True, False])
+    routed = global_row_number(wide, ["n_tok", "doc_id"], descending=[True, False])
     buf3 = io.StringIO()
     with contextlib.redirect_stdout(buf3):
         routed.explain(mode="formatted")
@@ -219,6 +220,7 @@ def main() -> None:
     check(
         "auto_route_trips_organically",
         est > DIMENSION_WINDOW_MAX_BYTES
+        and _routes(wide)
         and "SinglePartition" not in buf3.getvalue()
         and rs["hi"] == n_auto == rs["n"] == rs["nd"],
         f"estimate={est / 1e6:.0f}MB > {DIMENSION_WINDOW_MAX_BYTES / 1e6:.0f}MB "

@@ -217,7 +217,7 @@ def test_ivfpq_index_probe(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_assign_blas_matches_expression_at_256_cells(spark):
+def test_assign_blas_matches_expression_at_256_cells(spark, monkeypatch):
     """The Arrow BLAS argmin assign (the >EXPR_MAX_CELLS path a production
     4k-64k-cell IVF takes) must agree cell-for-cell with the small-model
     expression form, and must be the auto-picked strategy at 256 cells."""
@@ -234,10 +234,8 @@ def test_assign_blas_matches_expression_at_256_cells(spark):
     model = IvfModel(centers, "embedding")
     assert len(model.centers) > IvfModel.EXPR_MAX_CELLS  # auto -> BLAS
     blas = {r.vec_id: r.cell for r in model.assign(df).collect()}
-    expr = {
-        r.vec_id: r.cell
-        for r in model.assign(df, use_blas=False).collect()
-    }
+    monkeypatch.setattr(IvfModel, "EXPR_MAX_CELLS", 256)  # expression path
+    expr = {r.vec_id: r.cell for r in model.assign(df).collect()}
     assert blas == expr
     assert set(blas.values()) <= set(range(256))
 

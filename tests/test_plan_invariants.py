@@ -442,3 +442,66 @@ def test_no_commit_regrowth_outside_commit_module():
                 if rule == "__old_" or (rel, func) not in _RENAME_ALLOWED:
                     offenders.append(f"{rel}:{line}: {rule} in {func}")
     assert not offenders, offenders
+
+
+# Routing lint: the plain-vs-bucketed window choice (the Catalyst size
+# estimate against the dimension threshold, and the routed branch's
+# persist) lives in operators/ranking.py only; a plan builder that
+# re-derives it brings back its own branch and its own copy of the
+# bucketed plan.
+_RANKING_MODULE = os.path.join(_PKG, "operators", "ranking.py")
+_ROUTING_NAMES = {
+    "estimated_plan_bytes", "DIMENSION_WINDOW_MAX_BYTES", "persist_dimension_frame",
+}
+
+
+def routing_regrowth(tree: ast.Module) -> list[tuple[str, int]]:
+    """``(name, line)`` for each name, attribute, import or definition
+    spelling one of the routing names."""
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            name = node.id
+        elif isinstance(node, ast.Attribute):
+            name = node.attr
+        elif isinstance(node, (ast.alias, ast.FunctionDef)):
+            name = node.name
+        else:
+            continue
+        if name in _ROUTING_NAMES:
+            hits.append((name, getattr(node, "lineno", 0)))
+    return hits
+
+
+def test_routing_regrowth_lint_discriminates():
+    """The lint must not pass vacuously: it flags ranking.py's own
+    threshold and estimate, and an inline branch re-added to a plan
+    module."""
+    with open(_RANKING_MODULE) as fh:
+        names = {n for n, _ in routing_regrowth(ast.parse(fh.read()))}
+    assert names == {"estimated_plan_bytes", "DIMENSION_WINDOW_MAX_BYTES"}, names
+    with open(os.path.join(_PKG, "plans", "window_queries.py")) as fh:
+        src = fh.read()
+    assert routing_regrowth(ast.parse(src)) == []
+    src += (
+        "\n\ndef _branch(per):\n"
+        "    from ..operators.ranking import persist_dimension_frame\n"
+        "    if ranking.estimated_plan_bytes(per) <= ranking.DIMENSION_WINDOW_MAX_BYTES:\n"
+        "        return per\n"
+        "    return persist_dimension_frame(per)\n"
+    )
+    assert sorted(n for n, _ in routing_regrowth(ast.parse(src))) == [
+        "DIMENSION_WINDOW_MAX_BYTES", "estimated_plan_bytes",
+        "persist_dimension_frame", "persist_dimension_frame",
+    ]
+
+
+def test_no_routing_outside_ranking_module():
+    offenders = []
+    for path in _py_sources():
+        if path == _RANKING_MODULE or not path.startswith(_PKG + os.sep):
+            continue
+        with open(path) as fh:
+            for name, line in routing_regrowth(ast.parse(fh.read())):
+                offenders.append(f"{os.path.relpath(path, _PKG)}:{line}: {name}")
+    assert not offenders, offenders

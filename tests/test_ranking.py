@@ -9,6 +9,8 @@ relies on).
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -487,28 +489,48 @@ def _explain_str(df) -> str:
     )
 
 
-def test_auto_row_number_branches_bit_identical_and_routed_plan_shape(
-    spark,
+@contextlib.contextmanager
+def _force_bucketed(monkeypatch):
+    """Every routed window builds its bucketed branch inside the block.
+    Registry plans are memoized per session, so the plan cache is cleared
+    going in and coming out (the cache.py knob contract)."""
+    from vectordb_similarity_search_spark import cache
+    from vectordb_similarity_search_spark.operators import ranking
+
+    orig = ranking.DIMENSION_WINDOW_MAX_BYTES
+    monkeypatch.setattr(ranking, "DIMENSION_WINDOW_MAX_BYTES", -1)
+    cache.clear("plan")
+    try:
+        yield
+    finally:
+        cache.clear("plan")
+        monkeypatch.setattr(ranking, "DIMENSION_WINDOW_MAX_BYTES", orig)
+
+
+def test_dimension_rank_branches_bit_identical_and_routed_plan_shape(
+    spark, monkeypatch
 ):
-    """auto_row_number: the two branches (single window vs bucketed
-    global rank) are bit-identical on a duplicate-heavy frame, and the
-    routed plan carries NO SinglePartition exchange."""
+    """dimension_rank: the two branches (single windows vs bucketed
+    global rank + cumsum + broadcast scalars) are bit-identical on a
+    duplicate-heavy frame, and in the routed plan only the final scalar
+    aggregate crosses a SinglePartition exchange."""
     from vectordb_similarity_search_spark.operators.ranking import (
-        auto_row_number,
+        dimension_rank,
     )
 
     df = spark.range(4000).selectExpr(
         "id", "CAST(id % 37 AS INT) AS k"
     )
-    small = auto_row_number(df, ["k", "id"], col_name="rn",
-                            max_bytes=1 << 60)
-    big = auto_row_number(df, ["k", "id"], col_name="rn", max_bytes=-1)
+    small = dimension_rank(df, ["k", "id"], total="k", running=True)
+    with _force_bucketed(monkeypatch):
+        big = dimension_rank(df, ["k", "id"], total="k", running=True)
     assert small.schema == big.schema
     assert (
         small.orderBy("id").collect() == big.orderBy("id").collect()
     )
     assert "SinglePartition" in _explain_str(small)
-    assert "SinglePartition" not in _explain_str(big)
+    consumers = _single_partition_consumers(big)
+    assert consumers and all("Aggregate" in c for c in consumers), consumers
 
 
 def test_global_cumsum_matches_single_window_decimals_and_nulls(spark):
@@ -612,22 +634,24 @@ def test_dimension_global_plans_route_past_threshold(spark, monkeypatch):
         ], name
 
 
-def test_grouped_cumsum_matches_per_group_window(spark):
-    """grouped_cumsum == sum() OVER (PARTITION BY grp ORDER BY o ROWS
-    UNBOUNDED PRECEDING) bit-for-bit on a (grp, order)-unique frame with
-    NULL order keys and NULL values, and the bucketed plan hashes on
+def test_grouped_cumsum_matches_per_group_window(spark, monkeypatch):
+    """Grouped global_cumsum == sum() OVER (PARTITION BY grp ORDER BY o
+    ROWS UNBOUNDED PRECEDING) bit-for-bit on a (grp, order)-unique frame
+    with a NULL group, NULL order keys and NULL values, and the bucketed
+    plan hashes on
     (grp, bucket) — never on the bare bounded-cardinality group key."""
     from vectordb_similarity_search_spark.operators.ranking import (
         auto_grouped_cumsum,
-        grouped_cumsum,
+        global_cumsum,
     )
 
     rows = []
-    for g in range(5):
+    # group 5 is the NULL group: its offsets must attach like any other's
+    for g in range(6):
         for i in range(600):
             o = None if i % 97 == 0 else (i * 13) % 1000 + g
             v = None if i % 31 == 0 else ((i * 7) % 50) + 1
-            rows.append((f"g{g}", o, v, g * 1000 + i))
+            rows.append((f"g{g}" if g < 5 else None, o, v, g * 1000 + i))
     df = (
         spark.createDataFrame(rows, "grp string, o int, v long, uid long")
         # (grp, o) must be unique: aggregate ties away first, exactly
@@ -639,21 +663,21 @@ def test_grouped_cumsum_matches_per_group_window(spark):
         Window.unboundedPreceding, Window.currentRow
     )
     want = df.withColumn("cs", F.sum("v").over(w))
-    got = grouped_cumsum(df, "v", ["grp"], "o", col_name="cs", buckets=8)
+    got = global_cumsum(
+        df, "v", ["o"], group_cols=["grp"], col_name="cs", buckets=8
+    )
     assert want.schema == got.schema
     key = ["grp", "o"]
     assert want.orderBy(*key).collect() == got.orderBy(*key).collect()
-    # routed == plain through the auto form at both thresholds
-    small = auto_grouped_cumsum(df, "v", ["grp"], "o", col_name="cs",
-                                max_bytes=1 << 60)
-    big = auto_grouped_cumsum(df, "v", ["grp"], "o", col_name="cs",
-                              max_bytes=-1)
-    assert small.orderBy(*key).collect() == big.orderBy(*key).collect()
-    # the bucketed branch's window partitions on (grp, _grc_bucket):
+    # routed auto form == the plain window built above
+    with _force_bucketed(monkeypatch):
+        big = auto_grouped_cumsum(df, "v", ["grp"], "o", col_name="cs")
+    assert want.orderBy(*key).collect() == big.orderBy(*key).collect()
+    # the bucketed branch's window partitions on (grp, _rk_bucket):
     # the plan must show the composite hashpartitioning, and no
     # partitioning on grp alone
     plan = _explain_str(big)
-    assert "_grc_bucket" in plan
+    assert "_rk_bucket" in plan
     import re
 
     bare = re.findall(r"hashpartitioning\(grp#\d+, 3?\d+\)", plan)
@@ -679,13 +703,16 @@ def test_mann_whitney_bucketed_branch_bit_identical(spark, sf_dir):
     assert plain == routed
 
 
-def test_grouped_rolling_halo_bit_identical_to_plain_window(spark):
+def test_grouped_rolling_halo_bit_identical_to_plain_window(
+    spark, monkeypatch
+):
     """grouped_rolling's routed branch (time-quantile buckets + exact
     predecessor-tail halo rows, cascading across thin buckets) produces
     bit-identical trailing-frame aggregates to the plain per-group
     window — including float stddev — on a frame with a SPARSE group
     (rows only at the extremes, so intermediate buckets are empty and
-    the halo must cascade) and NULL values inside frames."""
+    the halo must cascade), a NULL series and NULL values inside
+    frames."""
     from vectordb_similarity_search_spark.operators.ranking import (
         grouped_rolling,
     )
@@ -693,6 +720,9 @@ def test_grouped_rolling_halo_bit_identical_to_plain_window(spark):
     rows = []
     for i in range(4000):
         rows.append(("dense", i, float((i * 37) % 100) if i % 17 else None))
+    # the NULL series needs its own halo rows like any other series
+    for i in range(0, 4000, 4):
+        rows.append((None, i, float(i % 13)))
     # sparse series: 30 rows at the start, 30 at the end — every routed
     # bucket between them is empty for this group
     for i in range(30):
@@ -700,10 +730,7 @@ def test_grouped_rolling_halo_bit_identical_to_plain_window(spark):
         rows.append(("sparse", 3960 + i, float(i * 2)))
     df = spark.createDataFrame(rows, "grp string, o long, v double")
 
-    def run(max_bytes):
-        frame, w, keep = grouped_rolling(
-            df, ["grp"], ["o"], 20, buckets=8, max_bytes=max_bytes
-        )
+    def run(frame, w, keep):
         return (
             frame.withColumn("mu", F.avg("v").over(w))
             .withColumn("sd", F.stddev_samp("v").over(w))
@@ -714,7 +741,15 @@ def test_grouped_rolling_halo_bit_identical_to_plain_window(spark):
             .collect()
         )
 
-    plain = run(1 << 60)
-    routed = run(-1)
+    w = Window.partitionBy("grp").orderBy("o").rowsBetween(-20, -1)
+    plain = run(df, w, F.lit(True))
+    with _force_bucketed(monkeypatch):
+        frame, w_routed, keep = grouped_rolling(
+            df, ["grp"], ["o"], 20, buckets=8
+        )
+    # the routed frame really carries halo rows (a plain-window frame
+    # would make the comparison vacuous)
+    assert frame.where(~keep).count() > 0
+    routed = run(frame, w_routed, keep)
     assert plain == routed
     assert len(plain) == len(rows)

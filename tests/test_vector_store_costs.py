@@ -96,7 +96,7 @@ def test_driver_query_norm_is_bit_identical(spark):
             assert (r.new is None and r.old is None) or _bits([r.new]) == _bits([r.old])
 
 
-def test_assign_expression_matches_per_centroid_form(spark):
+def test_assign_expression_matches_per_centroid_form(spark, monkeypatch):
     """One transform over the centroid literal picks the same cells as the
     per-centroid distance array it replaces."""
     corpus, vecs = _corpus(spark, 300, 8, seed=3)
@@ -111,7 +111,8 @@ def test_assign_expression_matches_per_centroid_form(spark):
         for c in centers
     ]
     old = F.array_position(F.array(*dists), F.array_min(F.array(*dists))).cast("int") - 1
-    rows = model.assign(corpus, use_blas=False).withColumn("old", old).collect()
+    monkeypatch.setattr(IvfModel, "EXPR_MAX_CELLS", len(centers))  # expression path
+    rows = model.assign(corpus).withColumn("old", old).collect()
     assert all(r.cell == r.old for r in rows)
     assert {r.cell for r in rows} == set(range(6))
 
@@ -181,13 +182,14 @@ def test_probe_build_py4j_calls_do_not_grow_with_dim(spark, tmp_path, count_py4j
     assert max(counts[256]) < 4 * 256, counts
 
 
-def test_assign_build_py4j_calls_do_not_grow(spark, count_py4j_calls):
+def test_assign_build_py4j_calls_do_not_grow(spark, count_py4j_calls, monkeypatch):
     sizes = {}
+    monkeypatch.setattr(IvfModel, "EXPR_MAX_CELLS", 32)  # expression path at both sizes
     for n_cells, dim in ((4, 8), (32, 256)):
         corpus, _ = _corpus(spark, 8, dim)
         model = IvfModel(np.random.default_rng(0).standard_normal((n_cells, dim)), "embedding")
-        model.assign(corpus, use_blas=False)  # warm
-        _, sizes[(n_cells, dim)] = count_py4j_calls(model.assign, corpus, use_blas=False)
+        model.assign(corpus)  # warm
+        _, sizes[(n_cells, dim)] = count_py4j_calls(model.assign, corpus)
     assert sizes[(32, 256)] <= sizes[(4, 8)], sizes
 
 

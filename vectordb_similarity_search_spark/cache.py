@@ -9,7 +9,7 @@ Values are keyed by ``(applicationId, kind, *key)``; the kinds in use are
 ``plan`` (registry plan handles), ``scan`` (fixture-table scans),
 ``index_scan`` (ANN/inverted-index and ledger scans), ``audit_scan``,
 ``model`` (fitted models and query parameters) and ``plan_stats``
-(rank-bucket bounds).
+(window-bucket bounds and per-bucket aggregates).
 
 - What is cached is a LAZY plan or a driver-side parameter, never a result:
   every action on a cached DataFrame re-executes from its inputs. The win

@@ -16,22 +16,6 @@ from pyspark.sql import functions as F
 from .vector import array_lit
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """MinHash signature: sig[i] = min over shingles of xxhash64(i, shingle).
-
-    One pass over the shingle array per hash function; |sig| = n_hashes.
-    E[Jaccard(a,b)] = P(sig_a[i] == sig_b[i]) — the classic estimator.
-    """
-    # NB: closures must be single-arg — PySpark interprets a 2-param HOF
-    # lambda as (element, index) and would bind our seed to the array index.
-    def hash_i(i: int):
-        return lambda s: F.xxhash64(F.lit(i), s)
-
-    return F.array(
-        *[F.array_min(F.transform(shingles, hash_i(i))) for i in range(n_hashes)]
-    )
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     """Banded LSH keys: hash each band of ``rows`` consecutive signature
     entries. Two docs become candidates iff they collide in ≥1 band.

@@ -74,13 +74,7 @@ class IvfModel:
         self.centers = centers  # n_cells × dim, driver-side (tiny)
         self.vec_col = vec_col
 
-    def assign(
-        self,
-        corpus: DataFrame,
-        cell_col: str = "cell",
-        *,
-        use_blas: bool | None = None,
-    ) -> DataFrame:
+    def assign(self, corpus: DataFrame, cell_col: str = "cell") -> DataFrame:
         """Attach the nearest-centroid cell id to every corpus row — the
         'build the index' step. At scale, persist the result partitioned by
         ``cell`` (partitionBy on write) so probes prune at the source.
@@ -90,14 +84,12 @@ class IvfModel:
         the whole plan codegen-friendly and oracle-replayable) and an
         Arrow ``mapInPandas`` BLAS argmin for large ones (the centroid
         matrix rides the closure — one broadcast per executor, one matmul
-        per batch). ``use_blas=None`` picks by ``EXPR_MAX_CELLS``. The two
+        per batch), picked by ``EXPR_MAX_CELLS``. The two
         compute the distance with different float summation orders, so a
         vector EXACTLY equidistant from two centroids can land differently;
         real corpora don't sit on bisectors, and an index is always
         built+probed through one strategy."""
-        if use_blas is None:
-            use_blas = len(self.centers) > self.EXPR_MAX_CELLS
-        if use_blas:
+        if len(self.centers) > self.EXPR_MAX_CELLS:
             return self._assign_blas(corpus, cell_col)
         from ..functions.vector import matrix_lit, to_double_array
 

@@ -682,6 +682,8 @@ def semantic_neardup_pairs(
 
     import pandas as pd
 
+    from ._blockgrid import seq_dot
+
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
@@ -696,12 +698,6 @@ def semantic_neardup_pairs(
         cell_col,
     ).withColumnRenamed(ivf_model.vec_col, "_v")
 
-    def _seq_dot_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        acc = A[:, 0] * B[:, 0]
-        for d in range(1, A.shape[1]):
-            acc = acc + A[:, d] * B[:, d]
-        return acc
-
     empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
 
     def cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -715,7 +711,7 @@ def semantic_neardup_pairs(
             return empty
         X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
         ids = pdf["_id"].to_numpy()
-        norms = np.sqrt(_seq_dot_rows(X, X))
+        norms = np.sqrt(seq_dot(X, X))
         ok = norms != 0.0  # zero vectors: no direction, never near-dups
         Xn = np.where(ok[:, None], X / np.where(ok, norms, 1.0)[:, None], 0.0)
         S = Xn @ Xn.T  # BLAS screen (pairwise-summed dots)
@@ -725,7 +721,7 @@ def semantic_neardup_pairs(
         if len(ii) == 0:
             return empty
         # exact rescore: sequential fold, dot/(na*nb) — oracle association
-        cos = _seq_dot_rows(X[ii], X[jj]) / (norms[ii] * norms[jj])
+        cos = seq_dot(X[ii], X[jj]) / (norms[ii] * norms[jj])
         final = cos >= threshold
         ia, jb = ids[ii[final]], ids[jj[final]]
         lo, hi = np.minimum(ia, jb), np.maximum(ia, jb)

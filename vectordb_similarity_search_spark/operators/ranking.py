@@ -1,10 +1,11 @@
-"""Distributed global ranking — ``row_number`` over a total order WITHOUT
-a single-reducer sort, plus the token-balanced shard assignment built on it.
+"""Dimension-global windows — ranks, ntiles, running sums and trailing
+frames over a total order — WITHOUT a single-reducer sort.
 
 Why this exists: ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY
 compiles to a single-partition Exchange — the entire table funnels through
-one task. Fine at fixture scale, a wall at 100 TB. ``global_row_number``
-produces the identical ranks with bounded per-task state:
+one task; a ``PARTITION BY grp`` window over a handful of groups funnels
+it through a handful. Fine at fixture scale, a wall at 100 TB. Every
+bucketed form here runs the same recipe (:func:`_bucket_stats`):
 
 1. one stats pass computes approximate quantiles of the leading sort key
    (``percentile_approx`` — deterministic for a given dataset, unlike
@@ -13,10 +14,12 @@ produces the identical ranks with bounded per-task state:
 2. every row gets a bucket from those bounds via a pure expression —
    rows EQUAL on the leading key always share a bucket, so bucket order
    extends to the full sort order;
-3. one exchange on the bucket id; ``row_number`` runs per bucket;
-4. per-bucket counts (a tiny aggregate, ≤ ``buckets`` rows) are collected
-   and turned into cumulative offsets shipped back as a literal map —
-   global rank = bucket offset + local rank.
+3. one tiny per-(group, bucket) aggregate (≤ groups·``buckets`` rows) is
+   collected: row counts for ranks and halos, sums for running sums;
+4. the window runs per (group, bucket), and each bucket's share of its
+   predecessors comes back from the collected aggregate — rank offsets as
+   a literal map, running-sum offsets and halo rows through a NULL-safe
+   broadcast join (:func:`_attach`).
 
 The shuffle carries only the projected frame (callers should select the
 key/payload columns they need first — for shard planning that is two
@@ -25,9 +28,13 @@ columns, ~16 bytes/row). Skew caveat: a leading-key value heavier than
 breaking rank correctness); pick a high-cardinality leading key.
 
 Build cost: two tiny driver jobs over the projected frame (quantile stats,
-bucket counts) before the ranked plan itself — an OFFLINE planning
+bucket aggregate) before the ranked plan itself — an OFFLINE planning
 primitive like ``measure_key_skew``, not a serving-path operator; callers
 on the hot path should reuse the returned frame.
+
+The plain-vs-bucketed choice for frames that are usually small lives here
+too, in one predicate (:func:`_routes`), used by :func:`dimension_rank`,
+:func:`auto_grouped_cumsum` and :func:`grouped_rolling`.
 """
 
 from __future__ import annotations
@@ -38,18 +45,8 @@ from pyspark.sql import types as T
 
 from .. import cache, commit
 
-
-def persist_dimension_frame(df: DataFrame) -> DataFrame:
-    """Persist (app-scoped, released by :func:`cache.release`) a
-    dimension aggregate that a ROUTED dimension-global plan is about to
-    consume several times. The bucketed machinery makes multiple passes
-    (rank quantiles, bucket counts, cumsum quantiles/sums, the final plan,
-    scalar aggregates) — without this, each pass re-runs the aggregate's
-    whole subtree from the fact-table scan, and the routed branch only
-    fires when that subtree is HUGE. Spark's CacheManager matches any
-    semantically-equal subplan, so every consumer built over the same
-    aggregate hits the one cache."""
-    return cache.persist(df)
+_BUCKET = "_rk_bucket"
+_RUNNING = (Window.unboundedPreceding, Window.currentRow)
 
 
 def _bucket_expr(key: Column, bounds: list, *, descending: bool) -> Column:
@@ -74,6 +71,127 @@ def _bucket_expr(key: Column, bounds: list, *, descending: bool) -> Column:
         F.lit(0),
         lambda acc, b: acc + F.when(cmp(b), F.lit(1)).otherwise(F.lit(0)),
     )
+
+
+def _order_cols(keys: list[str], descending: list[bool] | None) -> list[Column]:
+    if not keys:
+        raise ValueError("keys must name at least one order column")
+    desc = descending or [False] * len(keys)
+    if len(desc) != len(keys):
+        raise ValueError("descending must match keys length")
+    return [
+        F.col(k).desc() if d else F.col(k).asc() for k, d in zip(keys, desc)
+    ]
+
+
+def _bucket_stats(
+    df: DataFrame,
+    lead: str,
+    agg: Column,
+    *,
+    descending: bool = False,
+    group_cols: list[str] = (),
+    buckets: int = 32,
+    memo_key: tuple | None = None,
+) -> tuple[Column, dict[tuple, list]]:
+    """The one bucketing core: quantile bounds of ``lead`` and one
+    collected per-(group, bucket) ``agg``. Returns the bucket column (in
+    SORT order of ``lead``) and ``{group key: [(bucket, value), ...]}``
+    with each list in bucket order.
+
+    NULL leading keys sort FIRST under asc and LAST under desc in Spark's
+    default ordering, so they take bucket -1 ascending and
+    ``len(bounds)`` descending — any other bucket breaks bit-parity with
+    the single-window form (tests pin both). A timestamp leading key is
+    bucketed on its ``unix_micros`` (numeric bounds, no session-timezone
+    literal round trip).
+
+    ``memo_key``: stable identity of the input whose first element is the
+    path it reads (e.g. ``(sf_dir,)``) — when given, bounds and aggregate
+    memoize per session so a REBUILD of the same plan runs zero driver
+    jobs (tests/test_lazy_build.py); ad-hoc frames have no stable identity
+    to key on. Callers mutating the underlying data between builds must
+    not pass it."""
+    key = F.col(lead)
+    if isinstance(df.schema[lead].dataType, T.TimestampType):
+        key = F.unix_micros(key)
+
+    def bucket_of(bounds: list) -> Column:
+        nonnull = (
+            _bucket_expr(key, bounds, descending=descending) if bounds
+            else F.lit(0)  # constant/empty leading key: one bucket
+        )
+        null_bucket = F.lit(len(bounds) if descending else -1)
+        return F.when(key.isNull(), null_bucket).otherwise(nonnull)
+
+    def build() -> tuple[list, dict[tuple, list]]:
+        fracs = [i / buckets for i in range(1, buckets)]
+        qs = df.select(F.percentile_approx(key, fracs, 10_000).alias("q")).first()["q"]
+        # dedupe (heavy ties collapse adjacent quantiles) and order the
+        # bounds in SORT direction so bucket index increases along the
+        # output order
+        bounds = sorted(set(qs or []), reverse=descending)
+        rows = (
+            df.withColumn(_BUCKET, bucket_of(bounds))
+            .groupBy(*group_cols, _BUCKET)
+            .agg(agg.alias("_v"))
+            .collect()
+        )
+        stats: dict[tuple, list] = {}
+        for r in sorted(rows, key=lambda r: r[_BUCKET]):
+            stats.setdefault(tuple(r[g] for g in group_cols), []).append(
+                (r[_BUCKET], r["_v"])
+            )
+        return bounds, stats
+
+    if memo_key is None:
+        bounds, stats = build()
+    else:
+        bounds, stats = cache.get(
+            df.sparkSession, "plan_stats", lead, descending, tuple(group_cols),
+            str(agg), buckets, *memo_key, reads=memo_key[:1], build=build,
+        )
+    return bucket_of(bounds), stats
+
+
+def _exclusive_prefix(stats: dict[tuple, list]) -> list[tuple]:
+    """``(*group, bucket, offset)`` rows: each bucket's total over the
+    EARLIER buckets of its group. SQL sum semantics — NULL totals add
+    nothing, and a bucket with no non-null predecessor gets no row."""
+    rows = []
+    for gkey, lst in stats.items():
+        acc = None
+        for b, s in lst:
+            if acc is not None:
+                rows.append((*gkey, b, acc))
+            if s is not None:
+                acc = s if acc is None else acc + s
+    return rows
+
+
+def _attach(
+    df: DataFrame,
+    group_cols: list[str],
+    rows: list[tuple],
+    fields: list[T.StructField],
+    how: str,
+) -> DataFrame:
+    """Broadcast-join collected ``(*group, bucket, *fields)`` rows onto the
+    bucketed ``df`` on (group, bucket). Group keys match NULL-safely — a
+    NULL group is a group like any other, exactly as in the plain
+    ``PARTITION BY`` window."""
+    gk = [f"_rk_g{i}" for i in range(len(group_cols))]
+    schema = T.StructType(
+        [
+            *(T.StructField(k, df.schema[g].dataType) for k, g in zip(gk, group_cols)),
+            T.StructField("_rk_b", T.IntegerType()),
+            *fields,
+        ]
+    )
+    side = df.sparkSession.createDataFrame(rows, schema)
+    on = [F.col(_BUCKET) == F.col("_rk_b")]
+    on += [F.col(g).eqNullSafe(F.col(k)) for g, k in zip(group_cols, gk)]
+    return df.join(F.broadcast(side), on, how).drop(*gk, "_rk_b")
 
 
 def global_row_number(
@@ -102,11 +220,7 @@ def global_row_number(
     stays session-lived like the other per-session memos. Correctness
     never depends on it: bucket assignment is a pure function of the row.
 
-    ``memo_key``: stable identity of the input whose first element is
-    the path it reads (e.g. ``(sf_dir,)``) — when given, the planning artifacts (bounds, offsets, total count)
-    memoize per session so a REBUILD of the same plan runs zero driver
-    jobs (the lazy-build contract catalog queries follow). Callers
-    mutating the underlying data between builds must not pass it.
+    ``memo_key``: see :func:`_bucket_stats` — a rebuild runs zero jobs.
     """
     return _global_rank(
         df,
@@ -133,84 +247,42 @@ def _global_rank(
     (a free by-product of the per-bucket count pass), which
     :func:`global_ntile` needs to replay exact SQL ntile semantics without
     an extra job or a single-partition count window."""
-    if not keys:
-        raise ValueError("keys must name at least one order column")
-    desc = descending or [False] * len(keys)
-    if len(desc) != len(keys):
-        raise ValueError("descending must match keys length")
+    order = _order_cols(keys, descending)
     if persist:
         df = cache.persist(df)
-
-    k0 = F.col(keys[0])
-
-    def _bucket_of(bounds: list) -> Column:
-        if not bounds:  # constant/empty leading key: one bucket
-            nonnull = F.lit(0)
-        else:
-            nonnull = _bucket_expr(k0, bounds, descending=desc[0])
-        # NULL leading keys sort FIRST under asc and LAST under desc in
-        # Spark's default ordering; the bucket must agree or ranks break
-        # bit-parity with the single-window form (tests pin both)
-        null_bucket = F.lit(len(bounds)) if desc[0] else F.lit(-1)
-        return F.when(k0.isNull(), null_bucket).otherwise(nonnull)
-
-    def plan_stats() -> tuple[list, dict[int, int], int]:
-        fracs = [i / buckets for i in range(1, buckets)]
-        row = df.select(
-            F.percentile_approx(keys[0], fracs, 10_000).alias("q")
-        ).first()
-        qs = row["q"] or []
-        # dedupe (heavy ties collapse adjacent quantiles) and order the
-        # bounds in SORT direction so bucket index increases along the
-        # output order
-        bounds = sorted(set(qs), reverse=desc[0])
-        counts = {
-            r["_grn_bucket"]: r["n"]
-            for r in df.withColumn("_grn_bucket", _bucket_of(bounds))
-            .groupBy("_grn_bucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        offsets = {}
-        acc = 0
-        for b in sorted(counts):
-            offsets[b] = acc
-            acc += counts[b]
-        return bounds, offsets, acc
-
-    # the SECOND build of a rank-backed catalog query must run zero jobs
-    # (tests/test_lazy_build.py), so a caller-keyed input memoizes its
-    # planning artifacts for the session; ad-hoc frames have no stable
-    # identity to key on
-    if memo_key is None:
-        bounds, offsets, total = plan_stats()
-    else:
-        bounds, offsets, total = cache.get(
-            df.sparkSession, "plan_stats", tuple(keys), tuple(desc), buckets, *memo_key,
-            reads=memo_key[:1], build=plan_stats,
-        )
-
-    bucketed = df.withColumn("_grn_bucket", _bucket_of(bounds))
-    if offsets:
-        off_map = F.create_map(*[F.lit(x) for bo in offsets.items() for x in bo])
-        offset = F.coalesce(
-            F.element_at(off_map, F.col("_grn_bucket")), F.lit(0)
-        )
-    else:  # empty input: no offsets to add
-        offset = F.lit(0)
-
-    order = [
-        F.col(k).desc() if d else F.col(k).asc() for k, d in zip(keys, desc)
-    ]
-    w = Window.partitionBy("_grn_bucket").orderBy(*order)
-    ranked = (
-        bucketed.withColumn(
-            col_name,
-            (F.row_number().over(w) + offset).cast("long"),
-        )
-        .drop("_grn_bucket")
+    bucket, stats = _bucket_stats(
+        df, keys[0], F.count("*"), descending=bool(descending and descending[0]),
+        buckets=buckets, memo_key=memo_key,
     )
-    return ranked, total
+    # rank offsets ride the plan as a literal map (bucket -> rows before
+    # it): plain data, so the memoized stats rebuild the plan with no job
+    offsets = _exclusive_prefix(stats)
+    offset = F.lit(0)
+    if offsets:
+        off_map = F.create_map(*[F.lit(x) for bo in offsets for x in bo])
+        offset = F.coalesce(F.element_at(off_map, F.col(_BUCKET)), offset)
+    w = Window.partitionBy(_BUCKET).orderBy(*order)
+    ranked = (
+        df.withColumn(_BUCKET, bucket)
+        .withColumn(col_name, (F.row_number().over(w) + offset).cast("long"))
+        .drop(_BUCKET)
+    )
+    return ranked, sum(n for lst in stats.values() for _, n in lst)
+
+
+def ntile_of(rn: Column, n: Column, n_tiles: int) -> Column:
+    """SQL-standard ``ntile(n_tiles)`` of the 1-based row ``rn`` among
+    ``n`` rows: with ``q, rem = divmod(n, n_tiles)`` the first ``rem``
+    tiles hold ``q + 1`` rows, the rest ``q`` (both Spark and DuckDB
+    implement this form); with fewer rows than tiles row r lands alone in
+    tile r. A literal ``n`` folds to the same constants at plan time."""
+    q = F.floor(n / F.lit(n_tiles)).cast("long")
+    rem = (n % F.lit(n_tiles)).cast("long")
+    cut = rem * (q + 1)
+    return F.when(q == 0, rn).otherwise(
+        F.when(rn <= cut, F.floor((rn - 1) / (q + 1)) + 1)
+        .otherwise(rem + F.floor((rn - cut - 1) / q) + 1)
+    ).cast("int")
 
 
 def global_ntile(
@@ -229,13 +301,9 @@ def global_ntile(
     ``ntile(n) OVER (ORDER BY ...)`` (tests/test_ranking.py pins parity
     against the single-window form), but WITHOUT its SinglePartition sort
     exchange: ranks come from :func:`global_row_number` and the tile is
-    pure arithmetic on (rank, total).
-
-    SQL ntile semantics replayed exactly: with ``n`` rows and ``k`` tiles,
-    ``q, rem = divmod(n, k)`` — the first ``rem`` tiles hold ``q + 1``
-    rows, the rest ``q`` (both Spark and DuckDB implement this form). The
-    total ``n`` is a free by-product of the rank's per-bucket count pass,
-    so no extra job, no ``count() OVER ()`` single-partition window.
+    pure arithmetic on (rank, total) (:func:`ntile_of`). The total is a free
+    by-product of the rank's per-bucket count pass, so no extra job, no
+    ``count() OVER ()`` single-partition window.
 
     ``keys`` must form a TOTAL order: ntile over a non-total order is
     nondeterministic in any engine (ties split across tile boundaries in
@@ -253,18 +321,8 @@ def global_ntile(
         persist=persist,
         memo_key=memo_key,
     )
-    rn = F.col("_gnt_rn")
-    q, rem = divmod(n, n_tiles)
-    if q == 0:
-        # fewer rows than tiles: row r lands alone in tile r
-        tile = rn
-    else:
-        cut = rem * (q + 1)
-        tile = F.when(
-            rn <= F.lit(cut),
-            F.floor((rn - 1) / F.lit(q + 1)) + 1,
-        ).otherwise(F.lit(rem) + F.floor((rn - F.lit(cut) - 1) / F.lit(q)) + 1)
-    return ranked.withColumn(col_name, tile.cast("int")).drop("_gnt_rn")
+    tile = ntile_of(F.col("_gnt_rn"), F.lit(n), n_tiles)
+    return ranked.withColumn(col_name, tile).drop("_gnt_rn")
 
 
 def snake_shards(
@@ -408,15 +466,77 @@ def write_training_shards(
     return manifest
 
 
+
+
+def global_cumsum(
+    df: DataFrame,
+    value_col: str,
+    keys: list[str],
+    *,
+    group_cols: list[str] = (),
+    descending: list[bool] | None = None,
+    buckets: int = 32,
+    col_name: str = "cumsum",
+) -> DataFrame:
+    """Running ``sum(value_col)`` under the total order ``keys`` within
+    each ``group_cols`` group (the whole frame when there are none) —
+    identical to ``sum(v) OVER (PARTITION BY grp ORDER BY ... ROWS
+    UNBOUNDED PRECEDING)``, result type included — WITHOUT its
+    row-sized sorts: the plain window hashes every row of a group onto
+    one reducer (all rows, with no groups), so a bounded-cardinality group
+    column funnels the table through ≤k tasks at 100 TB. Here the window
+    partitions on (group, quantile-bucket of the leading key) — k·
+    ``buckets`` sorts of ~1/buckets of a group each — and per-(group,
+    bucket) exclusive-prefix SUM offsets (one tiny collected aggregate,
+    exact int/Decimal arithmetic) are broadcast-joined back on top of the
+    within-bucket running sum.
+
+    SQL running-sum NULL semantics: NULL values contribute nothing, and
+    the result is NULL only while NO non-null value has been seen yet —
+    across buckets too (running NULL + non-null offset = the offset).
+    Group cardinality must be bounded (the offsets frame is collected);
+    high-cardinality groups don't need this machinery — the plain
+    per-group window already spreads across reducers."""
+    order = _order_cols(keys, descending)
+    bucket, stats = _bucket_stats(
+        df, keys[0], F.sum(value_col), descending=bool(descending and descending[0]),
+        group_cols=group_cols, buckets=buckets,
+    )
+    sum_type = df.select(F.sum(value_col).alias("_t")).schema["_t"].dataType
+    framed = _attach(
+        df.withColumn(_BUCKET, bucket), group_cols, _exclusive_prefix(stats),
+        [T.StructField("_rk_offset", sum_type)], "left",
+    )
+    running = F.sum(value_col).over(
+        Window.partitionBy(*group_cols, _BUCKET).orderBy(*order).rowsBetween(*_RUNNING)
+    )
+    off = F.col("_rk_offset")
+    out = framed.withColumn(
+        col_name,
+        F.when(off.isNull(), running)
+        .when(running.isNull(), off)
+        .otherwise(running + off),
+    ).drop(_BUCKET, "_rk_offset")
+    # match the plain-window result type exactly (sum over decimal(p,s)
+    # widens to decimal(p+10,s); running + offset widens once more)
+    want = df.select(
+        F.sum(value_col).over(
+            Window.partitionBy(*group_cols).orderBy(*order).rowsBetween(*_RUNNING)
+        ).alias("_t")
+    ).schema["_t"].dataType
+    return out.withColumn(col_name, F.col(col_name).cast(want))
+
+
 # ---------------------------------------------------------------------------
-# Auto-routed dimension-global windows (round-5 VERDICT #6). An ORDER BY
-# window with no PARTITION BY plans a SinglePartition sort exchange — the
-# right plan while the frame is a per-entity AGGREGATE far smaller than the
-# fact table, a one-reducer straggler once the dimension itself is huge
-# (billions of users/customers at 100 TB). The auto_* forms keep the plain
-# single-window plan below a Catalyst size estimate and transparently
-# reroute onto the bucketed global machinery past it; both branches are
-# bit-identical under a TOTAL order (pinned in tests/test_ranking.py).
+# Routed windows (round-5 VERDICT #6). An ORDER BY window with no PARTITION
+# BY, or one partitioned on a coarse group column, plans one reducer per
+# partition — the right plan while the frame is a per-entity AGGREGATE far
+# smaller than the fact table, a straggler once the frame itself is huge
+# (billions of users/customers at 100 TB). The routed forms keep the plain
+# window below a Catalyst size estimate and reroute onto the bucketed
+# machinery past it; both branches are bit-identical under a TOTAL order
+# (pinned in tests/test_ranking.py). Tests force the bucketed branch by
+# patching DIMENSION_WINDOW_MAX_BYTES (and clearing the plan cache).
 # ---------------------------------------------------------------------------
 DIMENSION_WINDOW_MAX_BYTES = 256 << 20
 
@@ -428,247 +548,85 @@ def estimated_plan_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
-def _order_cols(keys: list[str], descending: list[bool] | None) -> list[Column]:
-    desc = descending or [False] * len(keys)
-    if len(desc) != len(keys):
-        raise ValueError("descending must match keys length")
-    return [
-        F.col(k).desc() if d else F.col(k).asc() for k, d in zip(keys, desc)
-    ]
+def _routes(df: DataFrame) -> bool:
+    """The one plain-vs-bucketed decision: does windowing ``df`` need the
+    bucketed machinery? Keyed on the bytes of the frame ACTUALLY windowed
+    — callers pass the per-entity aggregate or tie-aggregated distinct
+    frame, not raw rows."""
+    return estimated_plan_bytes(df) > DIMENSION_WINDOW_MAX_BYTES
 
 
-def auto_row_number(
+def dimension_rank(
     df: DataFrame,
     keys: list[str],
     *,
     descending: list[bool] | None = None,
-    col_name: str = "rn",
-    buckets: int = 32,
-    max_bytes: int | None = None,
+    total: str | None = None,
+    running: bool = False,
 ) -> DataFrame:
-    """1-based global row_number under the total order ``keys``/
-    ``descending`` (LongType in both branches): the plain single-window
-    plan below the size estimate, :func:`global_row_number` past it."""
-    limit = DIMENSION_WINDOW_MAX_BYTES if max_bytes is None else max_bytes
-    if estimated_plan_bytes(df) <= limit:
-        w = Window.orderBy(*_order_cols(keys, descending))
-        return df.withColumn(col_name, F.row_number().over(w).cast("long"))
-    return global_row_number(
-        df, keys, descending=descending, buckets=buckets, col_name=col_name
-    )
+    """Append the dimension-global columns a per-entity report needs,
+    under the total order ``keys``/``descending``: ``rn`` (1-based
+    row_number, long), ``n`` (row count) and, given a ``total`` value
+    column, ``total`` (its sum) and — with ``running`` — ``cumsum`` (its
+    running sum, ROWS UNBOUNDED PRECEDING).
+
+    Below the size estimate these are plain windows (one SinglePartition
+    sort of a small aggregate). Past it: :func:`global_row_number` and
+    :func:`global_cumsum`, with the scalars as a 1-row broadcast cross
+    join, so only the final scalar aggregate crosses a single partition.
+    That branch persists ``df`` once (app-scoped, released by
+    :func:`cache.release`): the rank and cumsum planning passes, the
+    scalar aggregate and the final plan all consume it, and without the
+    cache each re-runs the aggregate's whole subtree from the fact-table
+    scan."""
+    order = _order_cols(keys, descending)
+    scalars = {"n": F.count("*")}
+    if total is not None:
+        scalars["total"] = F.sum(total)
+    if not _routes(df):
+        wall = Window.partitionBy()
+        cols = [
+            F.row_number().over(Window.orderBy(*order)).cast("long").alias("rn"),
+            *(agg.over(wall).alias(name) for name, agg in scalars.items()),
+        ]
+        if running:
+            w = Window.orderBy(*order).rowsBetween(*_RUNNING)
+            cols.append(F.sum(total).over(w).alias("cumsum"))
+        return df.select("*", *cols)
+    names = [*df.columns, "rn", *scalars, *(["cumsum"] if running else [])]
+    df = cache.persist(df)
+    out = global_row_number(df, keys, descending=descending, col_name="rn")
+    if running:
+        out = global_cumsum(out, total, keys, descending=descending)
+    return out.crossJoin(
+        F.broadcast(df.agg(*(agg.alias(name) for name, agg in scalars.items())))
+    ).select(*names)  # the plain branch's column order
 
 
-def global_cumsum(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str],
-    *,
-    descending: list[bool] | None = None,
-    buckets: int = 32,
-    col_name: str = "cumsum",
-) -> DataFrame:
-    """Running ``sum(value_col)`` under the total order ``keys`` —
-    identical to ``sum(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``
-    but without its SinglePartition exchange: the same quantile-bucket
-    scheme as :func:`global_row_number`, with per-bucket SUM offsets
-    (collected P rows, exact Decimal/int arithmetic) added to a
-    within-bucket running sum."""
-    if not keys:
-        raise ValueError("keys must name at least one order column")
-    desc = descending or [False] * len(keys)
-    k0 = F.col(keys[0])
-
-    fracs = [i / buckets for i in range(1, buckets)]
-    row = df.select(
-        F.percentile_approx(keys[0], fracs, 10_000).alias("q")
-    ).first()
-    bounds = sorted(set(row["q"] or []), reverse=desc[0])
-
-    def _bucket_of() -> Column:
-        nonnull = (
-            F.lit(0) if not bounds
-            else _bucket_expr(k0, bounds, descending=desc[0])
-        )
-        null_bucket = F.lit(len(bounds)) if desc[0] else F.lit(-1)
-        return F.when(k0.isNull(), null_bucket).otherwise(nonnull)
-
-    sums = {
-        r["_gcs_bucket"]: r["s"]
-        for r in df.withColumn("_gcs_bucket", _bucket_of())
-        .groupBy("_gcs_bucket")
-        .agg(F.sum(value_col).alias("s"))
-        .collect()
-    }
-    offsets, acc = {}, None
-    for b in sorted(sums):
-        offsets[b] = acc
-        s = sums[b]  # None when every value in the bucket is NULL
-        if s is not None:
-            acc = s if acc is None else acc + s
-
-    bucketed = df.withColumn("_gcs_bucket", _bucket_of())
-    # exact literals (Decimal stays Decimal, int stays int); buckets with
-    # no predecessor add nothing
-    nonnull_offsets = {b: v for b, v in offsets.items() if v is not None}
-    if nonnull_offsets:
-        off_map = F.create_map(
-            *[F.lit(x) for bo in nonnull_offsets.items() for x in bo]
-        )
-        offset = F.element_at(off_map, F.col("_gcs_bucket"))
-    else:
-        offset = F.lit(None)
-    w = Window.partitionBy("_gcs_bucket").orderBy(
-        *_order_cols(keys, descending)
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    running = F.sum(value_col).over(w)
-    # SQL running-sum NULL semantics: NULL values contribute nothing, and
-    # the result is NULL only while NO non-null value has been seen yet —
-    # across buckets too (running NULL + non-null offset = the offset)
-    out = bucketed.withColumn(
-        col_name,
-        F.when(offset.isNull(), running)
-        .when(running.isNull(), offset)
-        .otherwise(running + offset),
-    ).drop("_gcs_bucket")
-    # match the single-window result type exactly (sum over decimal(p,s)
-    # widens to decimal(p+10,s); running + offset widens once more)
-    want = df.select(
-        F.sum(value_col).over(
-            Window.orderBy(*_order_cols(keys, descending)).rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ).alias("_t")
-    ).schema["_t"].dataType
-    return out.withColumn(col_name, F.col(col_name).cast(want))
-
-
-def auto_cumsum(
-    df: DataFrame,
-    value_col: str,
-    keys: list[str],
-    *,
-    descending: list[bool] | None = None,
-    col_name: str = "cumsum",
-    buckets: int = 32,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Running sum under a total order: plain single-window plan below
-    the size estimate, :func:`global_cumsum` past it."""
-    limit = DIMENSION_WINDOW_MAX_BYTES if max_bytes is None else max_bytes
-    if estimated_plan_bytes(df) <= limit:
-        w = Window.orderBy(*_order_cols(keys, descending)).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return df.withColumn(col_name, F.sum(value_col).over(w))
-    return global_cumsum(
-        df, value_col, keys,
-        descending=descending, buckets=buckets, col_name=col_name,
-    )
-
-
-def grouped_cumsum(
+def auto_grouped_cumsum(
     df: DataFrame,
     value_col: str,
     grp_cols: list[str],
     order_col: str,
     *,
-    buckets: int = 32,
     col_name: str = "cumsum",
+    buckets: int = 32,
 ) -> DataFrame:
-    """Per-group running ``sum(value_col)`` ordered by ``order_col`` —
-    identical to ``sum(v) OVER (PARTITION BY grp ORDER BY o ROWS
-    UNBOUNDED PRECEDING)`` — WITHOUT a per-group row-sized sort: the
-    plain window hashes every row of a group onto one reducer, so a
-    BOUNDED-cardinality group column (k order priorities, k regions)
-    funnels the whole table through ≤k tasks at 100 TB. Here the window
-    partitions on (group, quantile-bucket of ``order_col``) instead —
-    k·``buckets`` sorts of ~1/buckets of a group each — and per-(group,
-    bucket) exclusive-prefix SUM offsets (one tiny collected aggregate,
-    ≤ k·buckets rows, exact int/Decimal arithmetic) are broadcast-joined
-    back on top of the within-bucket running sum.
-
-    Contract: rows must be UNIQUE on (``grp_cols``, ``order_col``) — the
-    caller aggregates ties first (a (grp, value)-distinct counts frame,
-    the r_mann_whitney shape), which any rank/midrank derivation needs
-    anyway. Group cardinality must be bounded (the offsets frame is
-    collected); high-cardinality groups don't need this machinery — the
-    plain per-group window already spreads across reducers. NULL order
-    keys sort FIRST (Spark ASC default), matching the plain window."""
-    if not grp_cols:
-        raise ValueError("grp_cols must name at least one group column")
-    ok = F.col(order_col)
-
-    fracs = [i / buckets for i in range(1, buckets)]
-    row = df.select(
-        F.percentile_approx(order_col, fracs, 10_000).alias("q")
-    ).first()
-    bounds = sorted(set(row["q"] or []))
-    nonnull = (
-        F.lit(0) if not bounds else _bucket_expr(ok, bounds, descending=False)
-    )
-    bucketed = df.withColumn(
-        "_grc_bucket", F.when(ok.isNull(), F.lit(-1)).otherwise(nonnull)
-    )
-
-    # per-(group, bucket) totals -> exclusive prefix offsets within each
-    # group, shipped back as a broadcast frame (≤ |groups|·buckets rows)
-    spark = df.sparkSession
-    totals = (
-        bucketed.groupBy(*grp_cols, "_grc_bucket")
-        .agg(F.sum(value_col).alias("_grc_sum"))
-        .collect()
-    )
-    by_grp: dict[tuple, list] = {}
-    for r in totals:
-        by_grp.setdefault(tuple(r[g] for g in grp_cols), []).append(
-            (r["_grc_bucket"], r["_grc_sum"])
+    """Per-group running sum ordered by ``order_col``: the plain
+    ``PARTITION BY grp`` window while the frame's size estimate is small
+    (the sort is tiny, whatever the group cardinality),
+    :func:`global_cumsum` past it (bounded-cardinality groups stop
+    funneling onto ≤k reducers). Contract: rows UNIQUE on (``grp_cols``,
+    ``order_col``) — callers aggregate ties first (a (grp, value)-distinct
+    counts frame), which any rank/midrank derivation needs anyway. NULL
+    order keys sort FIRST (Spark ASC default)."""
+    if _routes(df):
+        return global_cumsum(
+            df, value_col, [order_col], group_cols=grp_cols,
+            buckets=buckets, col_name=col_name,
         )
-    off_rows = []
-    for gkey, lst in by_grp.items():
-        acc = None
-        for b, s in sorted(lst, key=lambda t: t[0]):
-            if acc is not None:
-                off_rows.append((*gkey, b, acc))
-            if s is not None:
-                acc = s if acc is None else acc + s
-    # offset dtype: match what sum(value_col) widens to (Decimal scale,
-    # long for ints) by reusing the aggregate's own schema
-    sum_type = (
-        df.select(F.sum(value_col).alias("_t")).schema["_t"].dataType
-    )
-    grp_fields = [df.schema[g] for g in grp_cols]
-    off_schema = T.StructType(
-        [
-            *grp_fields,
-            T.StructField("_grc_bucket", T.IntegerType()),
-            T.StructField("_grc_offset", sum_type),
-        ]
-    )
-    offsets = spark.createDataFrame(off_rows, off_schema)
-
-    w = Window.partitionBy(*grp_cols, "_grc_bucket").orderBy(
-        ok.asc()
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    running = F.sum(value_col).over(w)
-    joined = bucketed.withColumn("_grc_bucket", F.col("_grc_bucket").cast("int")).join(
-        F.broadcast(offsets), [*grp_cols, "_grc_bucket"], "left"
-    )
-    off = F.col("_grc_offset")
-    out = joined.withColumn(
-        col_name,
-        F.when(off.isNull(), running)
-        .when(running.isNull(), off)
-        .otherwise(running + off),
-    ).drop("_grc_bucket", "_grc_offset")
-    # match the plain-window result type exactly (sum + offset may widen)
-    want = df.select(
-        F.sum(value_col).over(
-            Window.partitionBy(*grp_cols).orderBy(ok.asc()).rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ).alias("_t")
-    ).schema["_t"].dataType
-    return out.withColumn(col_name, F.col(col_name).cast(want))
+    w = Window.partitionBy(*grp_cols).orderBy(F.col(order_col).asc())
+    return df.withColumn(col_name, F.sum(value_col).over(w.rowsBetween(*_RUNNING)))
 
 
 def grouped_rolling(
@@ -678,7 +636,6 @@ def grouped_rolling(
     lookback: int,
     *,
     buckets: int = 32,
-    max_bytes: int | None = None,
 ) -> tuple[DataFrame, "WindowSpec", Column]:  # noqa: F821
     """Trailing ``ROWS BETWEEN lookback PRECEDING AND 1 PRECEDING``
     frames over COARSE series (a handful of event types / sensors)
@@ -691,13 +648,12 @@ def grouped_rolling(
     real row's ``lookback`` predecessors are made PRESENT in its
     (group, bucket) partition by duplicating exact predecessor tails as
     flagged HALO rows: per (group, destination-bucket) the driver walks
-    the collected per-(group, bucket) row counts (a ≤|groups|·buckets
-    frame) backwards, taking the tail of each earlier bucket until
-    ``lookback`` rows are covered — so thin buckets cascade correctly.
-    Halo rows feed frames only; ``keep`` drops them from the output.
-    Frame contents are identical row-for-row to the plain window's, so
-    aggregates (including float ones) are bit-identical — pinned in
-    tests/test_ranking.py.
+    the collected per-(group, bucket) row counts backwards, taking the
+    tail of each earlier bucket until ``lookback`` rows are covered — so
+    thin buckets cascade correctly. Halo rows feed frames only; ``keep``
+    drops them from the output. Frame contents are identical row-for-row
+    to the plain window's, so aggregates (including float ones) are
+    bit-identical — pinned in tests/test_ranking.py.
 
     Ordering contract: ``order_cols`` ascending, leading column numeric
     or timestamp (bucket bounds come from ``percentile_approx``); rows
@@ -705,111 +661,42 @@ def grouped_rolling(
     ``order_cols`` tuple must be a total order within each group."""
     if lookback < 1:
         raise ValueError(f"lookback must be >= 1, got {lookback}")
-    limit = DIMENSION_WINDOW_MAX_BYTES if max_bytes is None else max_bytes
-    keep_all = F.lit(True)
-    if estimated_plan_bytes(df) <= limit:
-        w = Window.partitionBy(*grp_cols).orderBy(
-            *[F.col(c).asc() for c in order_cols]
-        ).rowsBetween(-lookback, -1)
-        return df, w, keep_all
+    asc = [F.col(c).asc() for c in order_cols]
+    if not _routes(df):
+        w = Window.partitionBy(*grp_cols).orderBy(*asc).rowsBetween(-lookback, -1)
+        return df, w, F.lit(True)
 
-    lead = order_cols[0]
-    dtype = df.schema[lead].dataType.simpleString()
-    key = (
-        F.unix_micros(F.col(lead)) if dtype == "timestamp" else F.col(lead)
+    bucket, stats = _bucket_stats(
+        df, order_cols[0], F.count(F.lit(1)), group_cols=grp_cols, buckets=buckets
     )
-    fracs = [i / buckets for i in range(1, buckets)]
-    row = df.select(
-        F.percentile_approx(key, fracs, 10_000).alias("q")
-    ).first()
-    bounds = sorted(set(row["q"] or []))
-    bexpr = (
-        F.lit(0) if not bounds else _bucket_expr(key, bounds, descending=False)
-    )
-    base = df.withColumn(
-        "_grw_bucket",
-        F.when(key.isNull(), F.lit(-1)).otherwise(bexpr).cast("int"),
-    ).withColumn("_grw_halo", F.lit(False))
-
-    counts = (
-        base.groupBy(*grp_cols, "_grw_bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    by_grp: dict[tuple, list[tuple[int, int]]] = {}
-    for r in counts:
-        by_grp.setdefault(tuple(r[g] for g in grp_cols), []).append(
-            (r["_grw_bucket"], r["_n"])
-        )
+    frame = df.withColumn(_BUCKET, bucket).withColumn("_rk_halo", F.lit(False))
     # (grp..., src_bucket, dst_bucket, take_last_k): nearest-first walk —
     # from each earlier bucket take its TAIL until lookback rows covered
-    map_rows = []
-    for gkey, lst in by_grp.items():
-        lst.sort()
+    takes = []
+    for gkey, lst in stats.items():
         for i in range(1, len(lst)):
             need, j = lookback, i - 1
             while need > 0 and j >= 0:
                 take = min(need, lst[j][1])
-                map_rows.append((*gkey, lst[j][0], lst[i][0], take))
+                takes.append((*gkey, lst[j][0], lst[i][0], take))
                 need -= take
                 j -= 1
-    frame = base
-    if map_rows:
-        spark = df.sparkSession
-        grp_fields = [df.schema[g] for g in grp_cols]
-        map_schema = T.StructType(
-            [
-                *grp_fields,
-                T.StructField("_grw_bucket", T.IntegerType()),
-                T.StructField("_grw_dst", T.IntegerType()),
-                T.StructField("_grw_take", T.LongType()),
-            ]
-        )
-        mapping = spark.createDataFrame(
-            [(*m[:-1], int(m[-1])) for m in map_rows], map_schema
-        )
-        w_desc = Window.partitionBy(*grp_cols, "_grw_bucket").orderBy(
-            *[F.col(c).desc() for c in order_cols]
+    if takes:
+        tail_rank = F.row_number().over(
+            Window.partitionBy(*grp_cols, _BUCKET).orderBy(*[F.col(c).desc() for c in order_cols])
         )
         halo = (
-            base.withColumn("_grw_rnd", F.row_number().over(w_desc))
-            .join(F.broadcast(mapping), [*grp_cols, "_grw_bucket"])
-            .filter(F.col("_grw_rnd") <= F.col("_grw_take"))
-            .withColumn("_grw_bucket", F.col("_grw_dst"))
-            .withColumn("_grw_halo", F.lit(True))
-            .drop("_grw_rnd", "_grw_dst", "_grw_take")
+            _attach(
+                frame.withColumn("_rk_rnd", tail_rank), grp_cols, takes,
+                [T.StructField("_rk_dst", T.IntegerType()),
+                 T.StructField("_rk_take", T.LongType())],
+                "inner",
+            )
+            .filter(F.col("_rk_rnd") <= F.col("_rk_take"))
+            .withColumn(_BUCKET, F.col("_rk_dst"))
+            .withColumn("_rk_halo", F.lit(True))
+            .drop("_rk_rnd", "_rk_dst", "_rk_take")
         )
-        frame = base.unionByName(halo)
-    w = Window.partitionBy(*grp_cols, "_grw_bucket").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    ).rowsBetween(-lookback, -1)
-    return frame, w, ~F.col("_grw_halo")
-
-
-def auto_grouped_cumsum(
-    df: DataFrame,
-    value_col: str,
-    grp_cols: list[str],
-    order_col: str,
-    *,
-    col_name: str = "cumsum",
-    buckets: int = 32,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Per-group running sum: the plain ``PARTITION BY grp`` window while
-    the frame's size estimate is small (the sort is tiny, whatever the
-    group cardinality), :func:`grouped_cumsum` past it (bounded-
-    cardinality groups stop funneling onto ≤k reducers). The routing
-    threshold keys on the bytes of the frame ACTUALLY windowed — callers
-    pass the tie-aggregated distinct frame, not raw rows — so a huge
-    distinct frame over a coarse group column routes correctly."""
-    limit = DIMENSION_WINDOW_MAX_BYTES if max_bytes is None else max_bytes
-    if estimated_plan_bytes(df) <= limit:
-        w = Window.partitionBy(*grp_cols).orderBy(
-            F.col(order_col).asc()
-        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return df.withColumn(col_name, F.sum(value_col).over(w))
-    return grouped_cumsum(
-        df, value_col, grp_cols, order_col,
-        buckets=buckets, col_name=col_name,
-    )
+        frame = frame.unionByName(halo)
+    w = Window.partitionBy(*grp_cols, _BUCKET).orderBy(*asc).rowsBetween(-lookback, -1)
+    return frame, w, ~F.col("_rk_halo")

@@ -927,10 +927,6 @@ THETA_NUM = 3
 THETA_DEN = 4
 
 
-def _theta_keep(key: Column, num: int, den: int) -> Column:
-    return F.pmod(F.xxhash64(key.cast("string")), F.lit(den)) < F.lit(num)
-
-
 def daily_theta_sketches(
     events: DataFrame,
     *,

@@ -988,45 +988,19 @@ def e_gini_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass is the grouped count."""
     e = t(spark, sf_dir, "events")
     per = e.groupBy("user_id").agg(F.count("*").alias("n_events"))
-    if (
-        ranking.estimated_plan_bytes(per)
-        <= ranking.DIMENSION_WINDOW_MAX_BYTES
-    ):
-        w = Window.orderBy("n_events", "user_id")
-        wall = Window.partitionBy()
-        ranked = per.select(
-            "n_events",
-            F.row_number().over(w).cast("long").alias("i"),
-            F.count("*").over(wall).cast("long").alias("n"),
-            F.sum("n_events").over(wall).cast("long").alias("tot"),
-        )
-    else:
-        # routed past the dimension threshold: bucketed global rank + a
-        # 1-row broadcast scalar join for (n, tot) — no SinglePartition
-        # exchange anywhere (twin-parity pinned in tests/test_ranking.py).
-        # Persist the aggregate once: the rank passes + the scalar agg
-        # would otherwise each re-run the grouped count from the scan.
-        per = ranking.persist_dimension_frame(per)
-        ranked = ranking.global_row_number(
-            per, ["n_events", "user_id"], col_name="i"
-        ).crossJoin(
-            F.broadcast(
-                per.agg(
-                    F.count("*").cast("long").alias("n"),
-                    F.sum("n_events").cast("long").alias("tot"),
-                )
-            )
-        ).select("n_events", "i", "n", "tot")
+    # BIGINT rank rn and scalars (n, total); past the dimension threshold
+    # the rank is bucketed and no SinglePartition sort runs
+    ranked = ranking.dimension_rank(per, ["n_events", "user_id"], total="n_events")
     n_d = F.max("n").cast("double")
-    tot_d = F.max("tot").cast("double")
+    tot_d = F.max("total").cast("double")
     gini = (
-        F.lit(2.0) * F.sum(F.col("i") * F.col("n_events")).cast("double")
+        F.lit(2.0) * F.sum(F.col("rn") * F.col("n_events")).cast("double")
         / (n_d * tot_d)
         - (n_d + 1) / n_d
     )
     return ranked.agg(
         F.max("n").cast("long").alias("n_users"),
-        F.max("tot").cast("long").alias("total_events"),
+        F.max("total").cast("long").alias("total_events"),
         F.round(gini, 6).alias("gini"),
     )
 

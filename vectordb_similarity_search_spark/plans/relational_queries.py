@@ -1634,69 +1634,32 @@ def r_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     All accumulation is DECIMAL-exact over a total order (spend desc,
     custkey): the cumulative-spend window and the grand total are exact
     sums, so every tier's share divides two exact decimals in double. The
-    tier membership test (r*100 <= n*pct) is pure BIGINT arithmetic — no
+    tier membership test (rn*100 <= n*pct) is pure BIGINT arithmetic — no
     float percent thresholds. Windows run on the per-customer AGGREGATE
-    frame (dimension-sized; operators/ranking.global_row_number is the
-    documented past-single-reducer path, as in r_rfm_segments)."""
-    from pyspark.sql import Window
-
+    frame (dimension-sized; operators/ranking.dimension_rank takes the
+    bucketed past-single-reducer path once it is not)."""
     from ..operators import ranking
 
     o = t(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend")
     )
-    order = [F.col("spend").desc(), F.col("o_custkey").asc()]
-    if (
-        ranking.estimated_plan_bytes(per)
-        <= ranking.DIMENSION_WINDOW_MAX_BYTES
-    ):
-        wall = Window.partitionBy()
-        wcum = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        ranked = per.select(
-            "spend",
-            F.row_number().over(Window.orderBy(*order)).cast("long")
-            .alias("r"),
-            F.count("*").over(wall).cast("long").alias("n"),
-            F.sum("spend").over(wall).alias("total_spend"),
-            F.sum("spend").over(wcum).alias("cum_spend"),
-        )
-    else:
-        # routed past the dimension threshold: bucketed global rank AND
-        # bucketed exact cumulative sum (same decimal widening as the
-        # single-window form), scalars via a 1-row broadcast join — no
-        # SinglePartition exchange (parity pinned in tests/test_ranking.py).
-        # Persist the aggregate once: rank + cumsum each make two planning
-        # passes, and the scalar agg / final plan scan it again — without
-        # the cache every pass re-runs the grouped sum from the orders scan.
-        keys, desc = ["spend", "o_custkey"], [True, False]
-        per = ranking.persist_dimension_frame(per)
-        routed = ranking.global_row_number(
-            per, keys, descending=desc, col_name="r"
-        )
-        routed = ranking.global_cumsum(
-            routed, "spend", keys, descending=desc, col_name="cum_spend"
-        )
-        ranked = routed.crossJoin(
-            F.broadcast(
-                per.agg(
-                    F.count("*").cast("long").alias("n"),
-                    F.sum("spend").alias("total_spend"),
-                )
-            )
-        ).select("spend", "r", "n", "total_spend", "cum_spend")
+    # rank, count, grand total and cumulative spend under one order;
+    # bucketed past the dimension threshold (no SinglePartition sort)
+    ranked = ranking.dimension_rank(
+        per, ["spend", "o_custkey"], descending=[True, False],
+        total="spend", running=True,
+    )
     tiers = ranked.crossJoin(
         F.broadcast(
             spark.createDataFrame([(1,), (10,), (20,)], "pct: int")
         )
     )
-    in_tier = F.col("r") * 100 <= F.col("n") * F.col("pct")
+    in_tier = F.col("rn") * 100 <= F.col("n") * F.col("pct")
     agg = tiers.groupBy("pct").agg(
-        F.max(F.when(in_tier, F.col("r"))).cast("long").alias("n_customers"),
-        F.max(F.when(in_tier, F.col("cum_spend"))).alias("tier_spend"),
-        F.max("total_spend").alias("total_spend"),
+        F.max(F.when(in_tier, F.col("rn"))).cast("long").alias("n_customers"),
+        F.max(F.when(in_tier, F.col("cumsum"))).alias("tier_spend"),
+        F.max("total").alias("total_spend"),
     )
     return agg.select(
         F.col("pct").alias("top_pct"),

@@ -214,57 +214,28 @@ def w_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Total order (spend, custkey) makes all three deterministic; both
     engines share the SQL-standard definitions ((rank-1)/(n-1),
     rows<=current/n, larger-buckets-first). Windows run on the
-    per-customer aggregate; the wide work is the grouped sum. Past the
-    Catalyst size estimate in operators/ranking.DIMENSION_WINDOW_MAX_BYTES
-    (dimension no longer ≪ facts) the plan auto-reroutes the whole trio
-    onto the bucketed global rank — no SinglePartition exchange; exact
-    twin-parity between the branches is pinned in tests/test_ranking.py."""
+    per-customer aggregate; the wide work is the grouped sum. All three
+    are replayed from (rank, count) of operators/ranking.dimension_rank,
+    which reroutes onto the bucketed global rank once the dimension is no
+    longer ≪ facts — no SinglePartition exchange; exact twin-parity
+    between the branches is pinned in tests/test_ranking.py."""
     from ..operators import ranking
 
     o = t(spark, sf_dir, "orders")
     per = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("spend")
     )
-    if (
-        ranking.estimated_plan_bytes(per)
-        <= ranking.DIMENSION_WINDOW_MAX_BYTES
-    ):
-        w = Window.orderBy("spend", "o_custkey")
-        return per.select(
-            "o_custkey",
-            F.round(F.col("spend").cast("double"), 2).alias("spend"),
-            F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 6).alias("cume"),
-            F.ntile(10).over(w).cast("int").alias("decile"),
-        )
-    # routed: rank from the bucketed machinery, n as a 1-row broadcast
-    # scalar; percent_rank/cume_dist replayed exactly ((rn-1)/(n-1),
-    # rn/n under a total order), ntile via the global_ntile formula.
-    # Persist the aggregate ONCE: the bucketed passes + the scalar agg
-    # would otherwise each re-run the grouped sum from the orders scan.
-    per = ranking.persist_dimension_frame(per)
-    ranked = ranking.global_row_number(
-        per, ["spend", "o_custkey"], col_name="_rn"
-    )
-    n_df = per.agg(F.count("*").cast("long").alias("_n"))
-    both = ranked.crossJoin(F.broadcast(n_df))
-    rn, n = F.col("_rn"), F.col("_n")
-    q = F.floor(n / F.lit(10)).cast("long")
-    rem = (n % F.lit(10)).cast("long")
-    cut = rem * (q + F.lit(1))
-    tile = F.when(q == 0, rn).otherwise(
-        F.when(
-            rn <= cut, F.floor((rn - 1) / (q + 1)) + 1
-        ).otherwise(rem + F.floor((rn - cut - 1) / q) + 1)
-    )
-    return both.select(
+    ranked = ranking.dimension_rank(per, ["spend", "o_custkey"])
+    # Spark's own definitions under a total order (rank == row_number),
+    # the same double divisions, so bit-identical to the window functions
+    rn, n = F.col("rn"), F.col("n")
+    return ranked.select(
         "o_custkey",
         F.round(F.col("spend").cast("double"), 2).alias("spend"),
-        F.round(
-            F.when(n > 1, (rn - 1) / (n - 1)).otherwise(F.lit(0.0)), 6
-        ).alias("pct_rank"),
+        F.round(F.when(n > 1, (rn - 1) / (n - 1)).otherwise(F.lit(0.0)), 6)
+        .alias("pct_rank"),
         F.round(rn / n, 6).alias("cume"),
-        tile.cast("int").alias("decile"),
+        ranking.ntile_of(rn, n, 10).alias("decile"),
     )
 
 

@@ -79,8 +79,3 @@ def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose all fixture tables as SQL temp views (for spark.sql plans)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

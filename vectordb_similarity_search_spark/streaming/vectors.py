@@ -210,6 +210,7 @@ def semantic_cache_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..functions.hashing import hyperplane_signature
+    from ..operators._blockgrid import seq_dot as _seq_dot
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -236,12 +237,6 @@ def semantic_cache_stream(
 
     out_schema = "vec_id BIGINT, cache_id BIGINT, cosine DOUBLE"
     state_schema = "ids ARRAY<BIGINT>, vecs BINARY"
-
-    def _seq_dot(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        acc = A[:, 0] * B[:, 0]
-        for d in range(1, A.shape[1]):
-            acc = acc + A[:, d] * B[:, d]
-        return acc
 
     def update(key, pdfs, state: GroupState):
         if state.exists:
