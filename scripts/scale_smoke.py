@@ -63,16 +63,18 @@ def main() -> None:
     knn(vecs, qv, 10).collect()
     out["knn_1m_exact_warm_sec"] = round(time.time() - t0, 2)
 
-    from vectordb_similarity_search_spark.operators.topk import knn_blocked
+    from vectordb_similarity_search_spark.operators.topk import similarity_join_blocked
 
+    # the Arrow/numpy block scorer with a one-row query side
+    q1 = spark.createDataFrame([(0, qv)], "query_id int, query_vec array<double>")
     t0 = time.time()
-    blocked_hits = knn_blocked(vecs, qv, 10).collect()
+    blocked_hits = similarity_join_blocked(q1, vecs, 10).collect()
     out["knn_1m_blocked_sec"] = round(time.time() - t0, 2)
     best = max(blocked_hits, key=lambda r: r["score"])
     assert best["vec_id"] == 7  # same winner as the expression path
 
     t0 = time.time()
-    knn_blocked(vecs, qv, 10).collect()
+    similarity_join_blocked(q1, vecs, 10).collect()
     out["knn_1m_blocked_warm_sec"] = round(time.time() - t0, 2)
 
     # --- quantized search at 1M: PQ codes are 8 B/vector (vs 512 B float64

@@ -1,11 +1,9 @@
 #!/usr/bin/env python
-"""Skew loop at bench scale (VERDICT item 7): a 10M-row join where one key
-carries 90% of the rows, driven through the diagnostics → salting loop
-end-to-end, with the balance win measured — not just asserted at test
-scale.
+"""Salted join at bench scale (VERDICT item 7): a 10M-row join where one
+key carries 90% of the rows, joined plain and through ``salted_join``,
+with the balance win measured — not just asserted at test scale.
 
 What it records:
-- the measured skew ratio (max/avg rows per key) that routes the join,
 - wall-clock of the plain shuffle join vs the salted join,
 - the max single-reducer group size before/after salting (the proxy for
   the straggler task a 1000-executor cluster would wait on — in local[32]
@@ -34,10 +32,7 @@ HOT_SHARE = 0.9
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from vectordb_similarity_search_spark.operators.skew import (
-        SALT,
-        skew_aware_join,
-    )
+    from vectordb_similarity_search_spark.operators.skew import SALT, salted_join
     from vectordb_similarity_search_spark.session import get_spark
 
     spark = get_spark(
@@ -64,16 +59,8 @@ def main() -> None:
     plain_rows = big.join(small, ["key"]).count()
     t_plain = time.perf_counter() - t0
 
-    # pass a precomputed ratio (the ADVICE hook): the diagnostic below is
-    # reported separately so the timed section is join-only either way
-    from vectordb_similarity_search_spark.operators.skew import (
-        measure_key_skew,
-    )
-
-    ratio = measure_key_skew(big, ["key"], sample_fraction=0.01)
-    out, decision = skew_aware_join(
-        big, small, ["key"], n_salts=32, skew_ratio=ratio
-    )
+    n_salts = 32
+    out = salted_join(big, small, ["key"], n_salts=n_salts)
     t0 = time.perf_counter()
     salted_rows = out.count()
     t_salted = time.perf_counter() - t0
@@ -83,7 +70,7 @@ def main() -> None:
         big.groupBy("key").count().agg(F.max("count")).head()[0]
     )
     hot_after = (
-        big.withColumn(SALT, F.floor(F.rand(42) * decision.n_salts).cast("int"))
+        big.withColumn(SALT, F.floor(F.rand(42) * n_salts).cast("int"))
         .groupBy("key", SALT)
         .count()
         .agg(F.max("count"))
@@ -91,16 +78,13 @@ def main() -> None:
     )
 
     ok = (
-        decision.salted
-        and salted_rows == plain_rows
+        salted_rows == plain_rows
         and hot_after * 8 < hot_before  # >=8x better balance at 32 salts
     )
     print(
         {
             "rows": plain_rows,
-            "skew_ratio": round(decision.skew_ratio, 1),
-            "salted": decision.salted,
-            "n_salts": decision.n_salts,
+            "n_salts": n_salts,
             "wall_plain_s": round(t_plain, 2),
             "wall_salted_s": round(t_salted, 2),
             "max_reducer_group_before": hot_before,

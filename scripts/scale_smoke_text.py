@@ -96,11 +96,7 @@ def main() -> None:
 
     t0 = time.time()
     n_sim = simhash_pairs(docs).count()
-    print(f"simhash_pairs(ham<=3, jvm): {n_sim} pairs  {time.time()-t0:.1f}s", flush=True)
-
-    t0 = time.time()
-    n_sim_a = simhash_pairs(docs, impl="arrow").count()
-    print(f"simhash_pairs(ham<=3, arrow): {n_sim_a} pairs  {time.time()-t0:.1f}s", flush=True)
+    print(f"simhash_pairs(ham<=3): {n_sim} pairs  {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
     from vectordb_similarity_search_spark.operators.dedup import (

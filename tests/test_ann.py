@@ -14,17 +14,24 @@ def _query_vec(emb):
     return list(emb.filter(F.col("vec_id") == 0).select("embedding").head()[0])
 
 
-def test_ivf_recall(spark, sf_dir):
+def test_ivf_recall(spark, sf_dir, tmp_path):
+    from vectordb_similarity_search_spark.operators.ann import (
+        ivf_search_index,
+        ivf_write_index,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(emb)
     corpus = emb.filter(F.col("vec_id") != 0)
     exact = {r.vec_id for r in knn(corpus, qv, 10).collect()}
     model = ivf_fit(emb, n_cells=8)
-    approx = {r.vec_id for r in model.search(model.assign(corpus), qv, 10, nprobe=4).collect()}
+    path = str(tmp_path / "ivf")
+    ivf_write_index(model, corpus, path)
+    approx = {r.vec_id for r in ivf_search_index(spark, path, model, qv, 10, nprobe=4).collect()}
     # probing half the cells should recover most of the true top-10
     assert len(exact & approx) >= 6
     # full probe == exact search
-    full = {r.vec_id for r in model.search(model.assign(corpus), qv, 10, nprobe=8).collect()}
+    full = {r.vec_id for r in ivf_search_index(spark, path, model, qv, 10, nprobe=8).collect()}
     assert full == exact
 
 
@@ -83,19 +90,6 @@ def test_ivf_written_index_prunes_partitions(spark, sf_dir, tmp_path):
     exact = {r.vec_id for r in knn(emb.filter(F.col("vec_id") != 0), qv, 5).collect()}
     full = {r.vec_id for r in ivf_search_index(spark, path, model, qv, 5, nprobe=8).collect()}
     assert full == exact
-
-
-def test_knn_blocked_matches_expression_path(spark, sf_dir):
-    from vectordb_similarity_search_spark.operators.topk import knn_blocked
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(emb)
-    corpus = emb.filter(F.col("vec_id") != 0)
-    a = {r.vec_id: r.score for r in knn(corpus, qv, 10).collect()}
-    b = {r.vec_id: r.score for r in knn_blocked(corpus, qv, 10).collect()}
-    assert set(a) == set(b)
-    for vid in a:
-        assert abs(a[vid] - b[vid]) < 1e-9
 
 
 def test_blocked_join_zero_norm_query_no_nan(spark, sf_dir):

@@ -149,12 +149,13 @@ def test_alpha_fuse_validates_alpha(spark):
 
 
 def test_dynamic_bm25_bit_matches_static(spark, sf_dir):
-    """bm25_dynamic_topk with the static term set must reproduce
-    bm25_topk BIT-exactly (same rounded scores, same order): the 0.0 fold
-    init and absent-term-part-is-0.0 are float identities."""
+    """The dynamic-term scorer behind prf_expand_topk, fed the static
+    term set (no expansion), must reproduce bm25_topk BIT-exactly (same
+    rounded scores, same order): the 0.0 fold init and
+    absent-term-part-is-0.0 are float identities."""
     from vectordb_similarity_search_spark.operators.bm25 import (
-        bm25_dynamic_topk,
         bm25_topk,
+        prf_expand_topk,
     )
     from vectordb_similarity_search_spark.sources.tables import load_table
 
@@ -162,10 +163,9 @@ def test_dynamic_bm25_bit_matches_static(spark, sf_dir):
     terms = ["table", "scan", "window"]
     static = [(r.doc_id, r.bm25) for r in bm25_topk(docs, terms, k=10).collect()]
     assert all(s > 0 for _, s in static)  # else zero-match docs could pad
-    qt = spark.createDataFrame([(t,) for t in terms], "term string")
     dyn = [
         (r.doc_id, r.bm25)
-        for r in bm25_dynamic_topk(docs, qt, k=10).collect()
+        for r in prf_expand_topk(docs, terms, k=10, n_expand=0).collect()
     ]
     assert dyn == static
 

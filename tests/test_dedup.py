@@ -19,33 +19,31 @@ from vectordb_similarity_search_spark.sources.tables import load_table
 import pytest
 
 
-@pytest.mark.parametrize("impl", ["arrow", "sql"])
-def test_minhash_lsh_finds_exact_high_jaccard_pairs(spark, sf_dir, impl):
+def test_minhash_lsh_finds_exact_high_jaccard_pairs(spark, sf_dir):
     """Every exact pair with J >= 0.5 must be recalled by the LSH operator
     (at 32 bands × 2 rows the miss probability at J=0.5 is ~(1-.25)^32 ≈ 1e-4)
     and every reported pair must meet the verify threshold (no false
-    positives by construction). Holds for both signature implementations."""
+    positives by construction)."""
     docs = load_table(spark, sf_dir, "documents")
     exact = REGISTRY["t_ngram_jaccard_pairs"].fn(spark, sf_dir).collect()
     exact_high = {
         (r.doc_a, r.doc_b) for r in exact if r.jaccard >= 0.5
     }
     got = minhash_lsh_pairs(
-        docs, threshold=0.3, bands=32, n_hashes=64, impl=impl
+        docs, threshold=0.3, bands=32, n_hashes=64
     ).collect()
     got_pairs = {(r.id_a, r.id_b) for r in got}
     assert exact_high <= got_pairs
     assert all(r.jaccard >= 0.3 for r in got)
 
 
-@pytest.mark.parametrize("impl", ["arrow", "sql"])
-def test_minhash_identical_docs_always_pair(spark, impl):
+def test_minhash_identical_docs_always_pair(spark):
     rows = [(1, "the quick brown fox jumps over the lazy dog"),
             (2, "the quick brown fox jumps over the lazy dog"),
             (3, "completely different content about spark engines")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r.id_a, r.id_b): r.jaccard
-           for r in minhash_lsh_pairs(df, impl=impl).collect()}
+           for r in minhash_lsh_pairs(df).collect()}
     assert got.get((1, 2)) == 1.0
     assert (1, 3) not in got and (2, 3) not in got
 
@@ -171,26 +169,14 @@ def test_minhash_word_shingles_recall_and_exactness(spark):
     assert got == expected
 
 
-def test_minhash_word_mode_requires_arrow(spark):
-    import pytest as _pytest
-
-    from vectordb_similarity_search_spark.operators.dedup import minhash_lsh_pairs
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="arrow"):
-        minhash_lsh_pairs(df, shingle_mode="word", impl="jvm")
-
-
-def test_simhash_arrow_path_recall(spark):
-    """Arrow simhash (crc32 family): pigeonhole recall on injected
+def test_simhash_pigeonhole_recall(spark):
+    """Simhash (xxhash64 family): pigeonhole recall on injected
     near-identical docs, no pair above max_hamming, and the bit arrays are
     valid simhash output (0/1, length 64)."""
     import numpy as np
 
-    from vectordb_similarity_search_spark.operators.dedup import (
-        simhash_bits_batch,
-        simhash_pairs,
-    )
+    from vectordb_similarity_search_spark.functions.hashing import simhash_bits
+    from vectordb_similarity_search_spark.functions.text import tokens
 
     rng = np.random.default_rng(3)
     vocab = [f"w{i:04d}" for i in range(2000)]
@@ -205,12 +191,15 @@ def test_simhash_arrow_path_recall(spark):
         texts[i] = " ".join(toks)
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
 
-    bits = {r.doc_id: list(r.bits) for r in simhash_bits_batch(df).collect()}
+    bits = {
+        r.doc_id: list(r.bits)
+        for r in df.select("doc_id", simhash_bits(tokens("text")).alias("bits")).collect()
+    }
     assert all(len(b) == 64 and set(b) <= {0, 1} for b in bits.values())
 
     got = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_pairs(df, impl="arrow").collect()
+        for r in simhash_pairs(df).collect()
     }
     assert all(h <= 3 for h in got.values())
     # every injected pair whose true hamming <= 3 must be found (pigeonhole)
@@ -247,7 +236,8 @@ def test_dedup_clusters_transitive_chain(spark):
 
 class TestSemanticPrune:
     """SemDeDup-style cluster-blocked embedding dedup
-    (operators/dedup.py::semantic_neardup_pairs / semantic_prune)."""
+    (operators/dedup.py::semantic_neardup_pairs, checked against the
+    exact baseline ``embedding_neardup_pairs``)."""
 
     def test_pairs_subset_of_exact_and_same_cell_complete(self, spark):
         from vectordb_similarity_search_spark.operators.ann import ivf_fit
@@ -290,11 +280,9 @@ class TestSemanticPrune:
     def test_prune_keeps_canonical_per_cluster(self, spark):
         from vectordb_similarity_search_spark.operators.ann import ivf_fit
         from vectordb_similarity_search_spark.operators.dedup import (
-            semantic_neardup_pairs,
-            semantic_prune,
-        )
-        from vectordb_similarity_search_spark.operators.dedup import (
             dedup_clusters,
+            dedup_keep_canonical,
+            semantic_neardup_pairs,
         )
         from vectordb_similarity_search_spark.sources.tables import load_table
 
@@ -305,7 +293,7 @@ class TestSemanticPrune:
         pairs = semantic_neardup_pairs(emb, ivf, threshold=0.4)
         labels = dedup_clusters(pairs)
         n_losers = labels.filter("doc_id != cluster_id").count()
-        kept = semantic_prune(emb, ivf, threshold=0.4)
+        kept = dedup_keep_canonical(emb, pairs, id_col="vec_id")
         assert kept.count() == emb.count() - n_losers
         # every cluster's canonical (min id) survives
         canon_ids = {r["cluster_id"] for r in labels.collect()}

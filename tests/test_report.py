@@ -47,32 +47,15 @@ vec = st.lists(
 @settings(max_examples=10, deadline=None)
 @given(vec)
 def test_vector_kernel_properties(spark, v):
-    n = len(v)
     df = spark.createDataFrame([(v, v)], "a array<double>, b array<double>")
     row = df.select(
-        cosine_similarity("a", "b", dim=n).alias("self_cos"),
-        l2_distance("a", "b", dim=n).alias("self_dist"),
-        dot("a", "b", dim=n).alias("unrolled"),
-        dot("a", "b").alias("hof"),
+        cosine_similarity("a", "b").alias("self_cos"),
+        l2_distance("a", "b").alias("self_dist"),
+        dot("a", "b").alias("self_dot"),
     ).head()
     assert math.isclose(row.self_cos, 1.0, rel_tol=1e-9)
     assert row.self_dist == 0.0
-    # unrolled kernel must be BIT-equal to the HOF fold (same association)
-    assert row.unrolled == row.hof
-
-
-def test_l2_normalize_zero_vector_unchanged(spark):
-    """Zero vectors have no direction: l2_normalize returns them unchanged
-    instead of raising DIVIDE_BY_ZERO under ANSI mode."""
-    from vectordb_similarity_search_spark.functions.vector import l2_normalize
-
-    df = spark.createDataFrame(
-        [([0.0, 0.0, 0.0],), ([3.0, 4.0, 0.0],)], "a array<double>"
-    )
-    rows = {tuple(r.a): r.n for r in
-            df.select("a", l2_normalize("a").alias("n")).collect()}
-    assert rows[(0.0, 0.0, 0.0)] == [0.0, 0.0, 0.0]
-    assert rows[(3.0, 4.0, 0.0)] == [0.6, 0.8, 0.0]
+    assert math.isclose(row.self_dot, math.fsum(x * x for x in v), rel_tol=1e-9)
 
 
 def test_row_zscore_matches_reference_semantics(spark):

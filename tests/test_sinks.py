@@ -39,14 +39,13 @@ def test_blocked_similarity_join_matches_window_impl(spark, sf_dir):
     """The mapInPandas block-topk scale path must return the same neighbor
     sets (and near-identical scores) as the declarative window version."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").head()[0])
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.select("vec_id", "embedding")
     exact = {
         (r.query_id, r.rank): (r.vec_id, r.score)
-        for r in similarity_join(q, corpus, k=5, dim=dim).collect()
+        for r in similarity_join(q, corpus, k=5).collect()
     }
     blocked = {
         (r.query_id, r.rank): (r.vec_id, r.score)

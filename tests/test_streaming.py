@@ -252,38 +252,6 @@ def test_streaming_neardup_finds_cross_batch_pair(spark, tmp_path):
         q.stop()
 
 
-def test_stream_static_enrichment(spark, stream_env, tmp_path):
-    from vectordb_similarity_search_spark.streaming.events import (
-        enrich_stream_static,
-    )
-
-    _, src, chk, name, reader = stream_env
-    dim = spark.createDataFrame(
-        [("click", "engagement"), ("purchase", "revenue")],
-        "event_type string, category string",
-    )
-    _write_batch(
-        src,
-        [(1, _t(9), 1, "click", 1.0), (2, _t(9), 2, "purchase", 2.0),
-         (3, _t(9), 3, "error", 0.0)],
-        "b1",
-    )
-    q = (
-        enrich_stream_static(reader(), dim, "event_type")
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", chk)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {r.event_id: r.category for r in spark.table(name).collect()}
-        assert got == {1: "engagement", 2: "revenue", 3: None}
-    finally:
-        q.stop()
-
-
 def test_rollup_ingest_stream_matches_batch(spark, stream_env, tmp_path):
     """Streaming ingest via foreachBatch + upsert_rollup: after two
     micro-batches the rollup table equals the one-shot batch rollup of
@@ -336,60 +304,6 @@ def test_rollup_ingest_stream_matches_batch(spark, stream_env, tmp_path):
     # marked batch through the sink function is a no-op
     ledger = path + "__applied"
     assert len(os.listdir(ledger)) >= 1
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Purchases match same-user clicks within the interval; out-of-window
-    and cross-user clicks don't. Incremental: a later click batch joins
-    against buffered purchase state."""
-    import uuid as _uuid
-
-    from vectordb_similarity_search_spark.streaming.events import (
-        stream_stream_interval_join,
-    )
-
-    csrc = tmp_path / "clicks"
-    psrc = tmp_path / "purchases"
-    csrc.mkdir()
-    psrc.mkdir()
-    name = f"mem_{_uuid.uuid4().hex[:8]}"
-    clicks = spark.readStream.schema(SCHEMA).parquet(str(csrc))
-    purchases = spark.readStream.schema(SCHEMA).parquet(str(psrc))
-
-    _write_batch(
-        csrc,
-        [
-            (1, _t(10, 0), 1, "click", 1.0),   # in window for purchase@10:30
-            (2, _t(9, 0), 1, "click", 1.0),    # 90 min before -> out of window
-            (3, _t(10, 15), 2, "click", 1.0),  # other user
-        ],
-        "c1",
-    )
-    _write_batch(psrc, [(10, _t(10, 30), 1, "purchase", 5.0)], "p1")
-    q = (
-        stream_stream_interval_join(clicks, purchases, within="1 hour")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.purchase_id, r.click_id)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-        assert got == {(10, 1)}
-        # late-arriving in-window click for the buffered purchase
-        _write_batch(csrc, [(4, _t(10, 20), 1, "click", 1.0)], "c2")
-        q.processAllAvailable()
-        got2 = {
-            (r.purchase_id, r.click_id)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
-        assert got2 == {(10, 1), (10, 4)}
-    finally:
-        q.stop()
 
 
 def test_cdc_merge_stream_upserts_and_deletes(spark, tmp_path):

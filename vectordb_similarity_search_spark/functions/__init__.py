@@ -3,7 +3,6 @@ from .vector import (
     dot,
     l2_distance,
     l2_norm,
-    l2_normalize,
     to_double_array,
 )
 
@@ -12,6 +11,5 @@ __all__ = [
     "dot",
     "l2_distance",
     "l2_norm",
-    "l2_normalize",
     "to_double_array",
 ]

@@ -106,38 +106,23 @@ def _query_norm(vec) -> float:
     return math.sqrt(acc)
 
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def dot(a: Column | str, b: Column | str) -> Column:
     """Sequential left-to-right fold — matches DuckDB list ops' order.
 
-    Measured guidance (sf0.1, 2M pairs, dim 64): the HOF fold with
-    PRECOMPUTED norms is the fast JVM form (~9 s); passing ``dim`` unrolls
-    into a 64-term element_at chain that is bit-identical but ~2x SLOWER —
-    the giant generated method blows the JIT inlining budget and runs as
-    interpreted bytecode. Leave ``dim`` unset unless profiling says
-    otherwise; the true scale path for massive pair counts is the
+    Measured (sf0.1, 2M pairs, dim 64): the HOF fold with PRECOMPUTED
+    norms runs in ~9 s; the scale path for massive pair counts is the
     numpy-blocked scorer (operators/topk.similarity_join_blocked)."""
-    if dim is not None:
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-                "double"
-            )
-        return acc
     a, b = to_double_array(a), to_double_array(b)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def l2_norm(a: Column | str, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def l2_norm(a: Column | str) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine_similarity(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b) = a·b / (|a||b|) — the reference's core scoring kernel
     (similarity_search.py:302). NULL when either vector is zero (cosine is
     undefined there; ANSI mode would otherwise raise DIVIDE_BY_ZERO). The
@@ -151,23 +136,15 @@ def cosine_similarity(
         b_norm = F.lit(_query_norm(b))
         b = array_lit(b)
     else:
-        b_norm = l2_norm(b, dim)
-    denom = l2_norm(a, dim) * b_norm
-    return F.when(denom != 0.0, dot(a, b, dim) / denom)
+        b_norm = l2_norm(b)
+    denom = l2_norm(a) * b_norm
+    return F.when(denom != 0.0, dot(a, b) / denom)
 
 
-def l2_distance(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def l2_distance(a: Column | str, b: Column | str) -> Column:
     """Euclidean distance; ``b`` may be a driver-side vector (array_lit)."""
     if _is_vector(b):
         b = array_lit(b)
-    if dim is not None:
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            d = F.element_at(a, i).cast("double") - F.element_at(b, i).cast("double")
-            acc = acc + d * d
-        return F.sqrt(acc)
     a, b = to_double_array(a), to_double_array(b)
     return F.sqrt(
         F.aggregate(
@@ -192,14 +169,3 @@ def row_zscore_normalize(a: Column | str, eps: float = 1e-8) -> Column:
     sd = F.sqrt(var) + F.lit(eps)
     return F.transform(a, lambda x: (x - mu) / sd)
 
-
-def l2_normalize(a: Column | str, eps: float = 0.0) -> Column:
-    """Unit-normalize a vector column. The reference z-scores per-row at query
-    time (similarity_search.py:576 — a train/serve skew bug we do NOT copy;
-    see SURVEY.md §2.4 V2). Unit-norm here is the standard cosine prep.
-
-    Zero vectors are returned unchanged (no direction to normalize to) —
-    unguarded, ANSI mode raises DIVIDE_BY_ZERO on a single zero row."""
-    a = to_double_array(a)
-    n = l2_norm(a) + F.lit(eps)
-    return F.when(n != 0.0, F.transform(a, lambda x: x / n)).otherwise(a)

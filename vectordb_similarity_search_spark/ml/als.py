@@ -51,18 +51,18 @@ def _hash_unit(key: str) -> float:
     return h / float(1 << 52)
 
 
-def init_factors(ids, rank: int, *, tag: str, scale: float = 0.1):
-    """Content-keyed factor init: factor[d] of id i is
+def _init_vector(i: int, rank: int, tag: str, scale: float = 0.1) -> list[float]:
+    """Content-keyed factor init of one id: factor[d] of id i is
     (md5-uniform('als:tag:i:d') − 0.5)·scale — reproducible across
     sessions, layouts and cluster sizes."""
+    return [(_hash_unit(f"als:{tag}:{i}:{d}") - 0.5) * scale for d in range(rank)]
+
+
+def init_factors(ids, rank: int, *, tag: str, scale: float = 0.1):
+    """:func:`_init_vector` for every id, as the ``{id: vector}`` map the
+    test replica of :func:`als_fit` starts from."""
     return {
-        int(i): np.array(
-            [
-                (_hash_unit(f"als:{tag}:{int(i)}:{d}") - 0.5) * scale
-                for d in range(rank)
-            ],
-            dtype=np.float64,
-        )
+        int(i): np.array(_init_vector(int(i), rank, tag, scale), dtype=np.float64)
         for i in ids
     }
 
@@ -151,8 +151,8 @@ def als_fit(
     # content-keyed init for the ITEM side (the first user step solves
     # against it), computed ON THE EXECUTORS over the distinct-item frame
     # — the factor table never exists driver-side (50M items × rank
-    # floats would be a driver OOM); the per-(id, dim) md5 formula is
-    # the same one init_factors exposes for tests/replicas
+    # floats would be a driver OOM); _init_vector is the one formula,
+    # shared with init_factors
     factor_schema = T.StructType(
         [
             T.StructField("i", T.LongType()),
@@ -167,14 +167,7 @@ def als_fit(
             yield pd.DataFrame(
                 {
                     "i": pdf["i"],
-                    "f": [
-                        [
-                            (_hash_unit(f"als:item:{int(i)}:{d}") - 0.5)
-                            * 0.1
-                            for d in range(rank)
-                        ]
-                        for i in pdf["i"]
-                    ],
+                    "f": [_init_vector(int(i), rank, "item") for i in pdf["i"]],
                 }
             )
 

@@ -146,24 +146,6 @@ class IvfModel:
         d = ((self.centers - q) ** 2).sum(axis=1)
         return [int(i) for i in np.argsort(d)[:nprobe]]
 
-    def search(
-        self,
-        indexed: DataFrame,
-        query_vec: Sequence[float],
-        k: int = 10,
-        *,
-        nprobe: int = 2,
-        id_col: str = "vec_id",
-        cell_col: str = "cell",
-        metric: str = "cosine",
-    ) -> DataFrame:
-        """IVF query: filter to the nprobe nearest cells (partition-pruned
-        scan when the index is written partitioned by cell), then exact
-        brute-force top-k within them."""
-        cells = self.probe_cells(query_vec, nprobe)
-        pruned = indexed.filter(F.col(cell_col).isin(cells))
-        return knn(pruned, query_vec, k, id_col=id_col, vec_col=self.vec_col, metric=metric)
-
 
 def lsh_bucket_topk(
     corpus: DataFrame,

@@ -28,7 +28,7 @@ def bm25_part(tf, df, dl, n, avgdl, k1: float = 1.2, b: float = 0.75):
     ``idf = ln(1 + (n−df+0.5)/(df+0.5))``. The single shared shape behind
     the static fold (:func:`bm25_score_expr`), the phrase booster
     (:func:`bm25_phrase_topk`) and the dynamic scorer
-    (:func:`bm25_dynamic_topk`) — bit-parity across paths and with the
+    (:func:`_dynamic_topk_from_toks`) — bit-parity across paths and with the
     DuckDB twins depends on there being exactly one copy of this
     expression tree."""
     idf = F.log(F.lit(1.0) + (n - df + 0.5) / (df + 0.5))
@@ -287,10 +287,16 @@ def _dynamic_topk_from_toks(
     k1: float,
     b: float,
 ) -> DataFrame:
-    """Dynamic-term scorer over a pre-tokenized ``(id, _toks, _len)``
-    frame — the shared interior of :func:`bm25_dynamic_topk` and
-    :func:`prf_expand_topk` (which persists ONE tokenized frame across
-    its stages instead of re-tokenizing the corpus per stage)."""
+    """BM25 top-k over a pre-tokenized ``(id, _toks, _len)`` frame where
+    the query terms arrive as a DATAFRAME (column ``term``) — the re-rank
+    stage of :func:`prf_expand_topk`, whose terms are data-dependent.
+
+    Parity with the static path: per-(doc, term) score parts are the ONE
+    shared :func:`bm25_part` expression, and the per-document sum is a
+    fixed-order fold over the TERM-SORTED collected parts, so it is
+    bit-identical to :func:`bm25_topk` for a sorted static term list and
+    agrees at the displayed round-6 otherwise. Documents matching NO
+    query term are absent."""
     stats = toks.agg(
         F.count("*").cast("double").alias("_n"),
         (F.sum("_len") / F.count("*")).alias("_avgdl"),
@@ -333,46 +339,6 @@ def _dynamic_topk_from_toks(
         .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
         .limit(k)
     )
-
-
-def bm25_dynamic_topk(
-    docs: DataFrame,
-    qterms: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 top-k where the query terms arrive as a DATAFRAME (column
-    ``term``) instead of a static Python list — the building block for
-    query paths whose terms are data-dependent (pseudo-relevance
-    feedback, query logs, learned expansions), which the per-term-column
-    architecture of :func:`bm25_topk` cannot express.
-
-    Parity with the static path: per-(doc, term) score parts are the ONE
-    shared :func:`bm25_part` expression, and the per-document sum is a
-    fixed-order fold over the TERM-SORTED collected parts
-    (``aggregate(array_sort(collect_list(...)), 0.0, +)``). The fold is
-    therefore bit-identical to :func:`bm25_topk` when the static term
-    list is lexicographically sorted (the 0.0 init and absent terms —
-    whose part is exactly 0.0 — are float identities); for an unsorted
-    static list the association differs and agreement is only at the
-    displayed round-6 (float + is commutative but not associative — do
-    NOT claim bit parity there). Documents matching NO query term are
-    absent (the t_bm25_indexed zero-score caveat).
-
-    Scale shape: one (doc, token) partial-agg exchange for tf restricted
-    by a BROADCAST semi-join with the (tiny) term frame, term df as a
-    terms-sized aggregate, corpus stats as a 1-row broadcast, one
-    doc-keyed fold exchange of matched parts only."""
-    toks = docs.select(
-        F.col(id_col),
-        tokens(text_col).alias("_toks"),
-        n_tokens(text_col).cast("double").alias("_len"),
-    )
-    return _dynamic_topk_from_toks(toks, qterms, k, id_col, k1, b)
 
 
 def prf_expand_topk(

@@ -170,7 +170,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.3,
     max_bucket: int = 1000,
     verify: bool = True,
-    impl: str = "arrow",
     shingle_mode: str = "char",
 ) -> DataFrame:
     """MinHash + banded-LSH near-duplicate pairs, optionally verified with
@@ -184,41 +183,20 @@ def minhash_lsh_pairs(
 
     ``shingle_mode``: ``char`` n-grams match the exact-Jaccard oracle
     baseline; ``word`` n-grams (use shingle_n≈3-5 tokens) are the
-    boilerplate-robust web-scale choice — see _shingle_set. Arrow impl
-    only for ``word``.
+    boilerplate-robust web-scale choice — see _shingle_set.
+
+    Signatures are the crc32 family of :func:`minhash_signatures_batch`
+    (Arrow/numpy); the verify is exact shingle-set Jaccard over the
+    candidates' texts.
     """
-    if shingle_mode != "char" and impl != "arrow":
-        raise ValueError("word shingles are implemented on the arrow path only")
     rows = n_hashes // bands
-    sh = None
-    if impl == "arrow":
-        # Arrow/numpy signature build (fast path, see minhash_signatures_batch).
-        # Persisted: consumed by the band keys AND both sides of the
-        # signature screen below — without persist each branch re-runs the
-        # scan + Python signature pass.
-        sig_df = cache.persist(minhash_signatures_batch(
-            df, id_col, text_col, shingle_n=shingle_n, n_hashes=n_hashes,
-            shingle_mode=shingle_mode,
-        ))
-    else:
-        # Pure-JVM expression path: explode + n_hashes min-aggregates
-        # (codegen-able aggregates; the transform-per-hash HOF form is ~20x
-        # slower). One base xxhash64 per shingle, then the family
-        # g_i = xxhash64(i, h) — native and overflow-free under ANSI mode.
-        # The shingle branch feeds the signature build and both verify join
-        # sides; persist it or Spark recomputes the scan + shingling per
-        # branch.
-        sh = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), char_shingles(text_col, shingle_n).alias("shingles")
-        ))
-        base = sh.select(
-            id_col, F.explode("shingles").alias("sgl")
-        ).select(id_col, F.xxhash64("sgl").alias("h"))
-        sig_df = base.groupBy(id_col).agg(
-            F.array(
-                *[F.min(F.xxhash64(F.lit(i), F.col("h"))) for i in range(n_hashes)]
-            ).alias("sig")
-        )
+    # Persisted: consumed by the band keys AND both sides of the signature
+    # screen below — without persist each branch re-runs the scan + Python
+    # signature pass.
+    sig_df = cache.persist(minhash_signatures_batch(
+        df, id_col, text_col, shingle_n=shingle_n, n_hashes=n_hashes,
+        shingle_mode=shingle_mode,
+    ))
     keyed = sig_df.select(
         id_col, F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
     ).select(id_col, F.col("bk.key").alias("key"))
@@ -254,125 +232,51 @@ def minhash_lsh_pairs(
             .select("id_a", "id_b")
         )
 
-    if impl == "arrow":
-        # Vectorized verify: ship candidate pairs' texts through Arrow and
-        # compute exact shingle-set Jaccard in Python sets — candidates are
-        # LSH-bounded, so this touches pairs, not the corpus.
-        from collections.abc import Iterator as _Iter
-
-        import pandas as pd
-
-        texts = df.select(F.col(id_col), F.col(text_col))
-        paired = (
-            cand.join(texts.select(F.col(id_col).alias("id_a"),
-                                   F.col(text_col).alias("ta")), "id_a")
-            .join(texts.select(F.col(id_col).alias("id_b"),
-                               F.col(text_col).alias("tb")), "id_b")
-        )
-        id_type = df.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("id_a", id_type),
-                T.StructField("id_b", id_type),
-                T.StructField("jaccard", T.DoubleType()),
-            ]
-        )
-
-        def verify_pairs(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
-            k = shingle_n
-            shingles: dict = {}  # doc id → shingle set (docs recur across pairs)
-
-            def sset(doc_id, text):
-                s = shingles.get(doc_id)
-                if s is None:
-                    s = _shingle_set(text, k, shingle_mode)
-                    shingles[doc_id] = s
-                return s
-
-            for pdf in batches:
-                out = []
-                for ia, ib, ta, tb in zip(pdf["id_a"], pdf["id_b"], pdf["ta"], pdf["tb"]):
-                    sa, sb = sset(ia, ta), sset(ib, tb)
-                    inter = len(sa & sb)
-                    j = inter / (len(sa) + len(sb) - inter)
-                    if j >= threshold:
-                        out.append({"id_a": ia, "id_b": ib, "jaccard": round(j, 6)})
-                yield pd.DataFrame(out, columns=["id_a", "id_b", "jaccard"])
-
-        return paired.mapInPandas(verify_pairs, out_schema)
-
-    # Pure-JVM verify over the persisted shingle branch.
-    if sh is None:
-        sh = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), char_shingles(text_col, shingle_n).alias("shingles")
-        ))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sa"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    jac = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def simhash_bits_batch(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    n_bits: int = 64,
-) -> DataFrame:
-    """Arrow-vectorized simhash bits (the throughput path, same design as
-    minhash_signatures_batch): per doc, hash every whitespace token once,
-    then one numpy broadcast ``(h >> j) & 1`` over all bit positions and a
-    column sum — ~3x the 64-fold JVM aggregate chain. The 64-bit token
-    hash is two salted crc32 halves (crc32 alone is 32-bit — using it
-    unextended would silently pin bits 32+ to a constant and collapse the
-    signature to 32 effective bits). Signatures differ from the
-    xxhash64-based JVM expression path (both are valid simhash families;
-    pick one per corpus and stick with it — an index built with one
-    cannot be probed with the other)."""
-    import zlib
-    from collections.abc import Iterator
+    # Vectorized verify: ship candidate pairs' texts through Arrow and
+    # compute exact shingle-set Jaccard in Python sets — candidates are
+    # LSH-bounded, so this touches pairs, not the corpus.
+    from collections.abc import Iterator as _Iter
 
     import pandas as pd
 
-    if n_bits > 64:
-        raise ValueError("simhash_bits_batch supports n_bits <= 64")
-    id_field = df.schema[id_col]
+    texts = df.select(F.col(id_col), F.col(text_col))
+    paired = (
+        cand.join(texts.select(F.col(id_col).alias("id_a"),
+                               F.col(text_col).alias("ta")), "id_a")
+        .join(texts.select(F.col(id_col).alias("id_b"),
+                           F.col(text_col).alias("tb")), "id_b")
+    )
+    id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("bits", T.ArrayType(T.IntegerType())),
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("jaccard", T.DoubleType()),
         ]
     )
-    shifts = np.arange(n_bits, dtype=np.uint64)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def verify_pairs(batches: "_Iter[pd.DataFrame]") -> "_Iter[pd.DataFrame]":
+        k = shingle_n
+        shingles: dict = {}  # doc id → shingle set (docs recur across pairs)
+
+        def sset(doc_id, text):
+            s = shingles.get(doc_id)
+            if s is None:
+                s = _shingle_set(text, k, shingle_mode)
+                shingles[doc_id] = s
+            return s
+
         for pdf in batches:
-            ids, out = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t.encode() for t in text.split()]
-                lo = np.fromiter(
-                    (zlib.crc32(t) for t in toks), dtype=np.uint64, count=len(toks)
-                )
-                hi = np.fromiter(
-                    (zlib.crc32(t + b"\x01") for t in toks),
-                    dtype=np.uint64,
-                    count=len(toks),
-                )
-                h = lo | (hi << np.uint64(32))
-                bitmat = ((h[:, None] >> shifts[None, :]) & 1).astype(np.int64)
-                sums = (2 * bitmat - 1).sum(axis=0)
-                ids.append(doc_id)
-                out.append((sums > 0).astype(np.int32))
-            yield pd.DataFrame({id_col: ids, "bits": out})
+            out = []
+            for ia, ib, ta, tb in zip(pdf["id_a"], pdf["id_b"], pdf["ta"], pdf["tb"]):
+                sa, sb = sset(ia, ta), sset(ib, tb)
+                inter = len(sa & sb)
+                j = inter / (len(sa) + len(sb) - inter)
+                if j >= threshold:
+                    out.append({"id_a": ia, "id_b": ib, "jaccard": round(j, 6)})
+            yield pd.DataFrame(out, columns=["id_a", "id_b", "jaccard"])
 
-    return widen(df.select(id_col, text_col)).mapInPandas(build, out_schema)
+    return paired.mapInPandas(verify_pairs, out_schema)
 
 
 def simhash_pairs(
@@ -384,24 +288,17 @@ def simhash_pairs(
     max_hamming: int = 3,
     max_bucket: int = 1000,
     n_bits: int = 64,
-    impl: str = "jvm",
 ) -> DataFrame:
-    """SimHash near-dup pairs: ``n_bits``-bit simhash, block-key LSH
-    candidates, exact hamming verify. Guarantee: any pair with
-    hamming < n_blocks shares ≥1 block key (pigeonhole), so recall is exact
-    for max_hamming < n_blocks; larger max_hamming trades recall for cost.
-
-    ``impl='jvm'`` (default, xxhash64 expressions — the catalog/oracle
-    path) or ``'arrow'`` (crc32 numpy batch — the throughput path; a
-    different but equally valid hash family, see simhash_bits_batch)."""
+    """SimHash near-dup pairs: ``n_bits``-bit simhash over xxhash64 token
+    hashes (JVM expressions), block-key LSH candidates, exact hamming
+    verify. Guarantee: any pair with hamming < n_blocks shares ≥1 block key
+    (pigeonhole), so recall is exact for max_hamming < n_blocks; larger
+    max_hamming trades recall for cost."""
     # three consumers (band keys + both verify sides) — persist or the
     # 64-fold simhash recomputes per branch
-    if impl == "arrow":
-        sb = cache.persist(simhash_bits_batch(df, id_col, text_col, n_bits=n_bits))
-    else:
-        sb = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
-            id_col, simhash_bits(tokens(text_col), n_bits).alias("bits")
-        ))
+    sb = cache.persist(widen(df.select(F.col(id_col), F.col(text_col))).select(
+        id_col, simhash_bits(tokens(text_col), n_bits).alias("bits")
+    ))
     keyed = sb.select(
         id_col,
         F.explode(simhash_block_keys(F.col("bits"), n_blocks, n_bits)).alias("bk"),
@@ -428,7 +325,6 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     *,
     threshold: float = 0.4,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (i < j, cosine ≥ threshold).
 
@@ -447,19 +343,19 @@ def embedding_neardup_pairs(
     a = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
-        l2_norm(vec_col, dim).alias("na"),
+        l2_norm(vec_col).alias("na"),
     )
     b = df.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
-        l2_norm(vec_col, dim).alias("nb"),
+        l2_norm(vec_col).alias("nb"),
     )
     joined = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     # Zero-norm guard: cosine undefined for zero vectors → NULL (mirrors
     # functions/vector.cosine_similarity; unguarded, ANSI mode raises
     # DIVIDE_BY_ZERO and one degenerate row kills the whole query).
     denom = F.col("na") * F.col("nb")
-    cosine = F.when(denom != 0.0, _dot("va", "vb", dim) / denom)
+    cosine = F.when(denom != 0.0, _dot("va", "vb") / denom)
     return (
         joined.withColumn("cosine", cosine)
         .filter(F.col("cosine") >= threshold)
@@ -730,23 +626,6 @@ def semantic_neardup_pairs(
         )
 
     return assigned.groupBy(cell_col).applyInPandas(cell_pairs, out_schema)
-
-
-def semantic_prune(
-    df: DataFrame,
-    ivf_model,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-) -> DataFrame:
-    """SemDeDup keep-one-per-semantic-cluster: within-cell near-dup pairs →
-    connected components → keep each cluster's min-id canonical. Returns
-    the pruned frame (all columns of ``df``)."""
-    pairs = semantic_neardup_pairs(
-        df, ivf_model, id_col=id_col, vec_col=vec_col, threshold=threshold
-    )
-    return dedup_keep_canonical(df, pairs, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------

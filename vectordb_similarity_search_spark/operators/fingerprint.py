@@ -24,18 +24,6 @@ def kgram_hashes(c: Column | str, k: int = 5) -> Column:
     return F.transform(idx, lambda i: F.xxhash64(F.substr(c, i, F.lit(k))))
 
 
-def winnow_fingerprints(c: Column | str, k: int = 5, w: int = 8) -> Column:
-    """Distinct winnowed fingerprints: min hash of each w-window over the
-    k-gram hash sequence.
-
-    NB: as a single expression the k-gram array is re-evaluated per window
-    (no common-subexpression elimination inside HOF lambdas — measured 15x
-    slower). Use :func:`with_fingerprints` on DataFrames; this column form
-    is for small/ad-hoc use."""
-    hashes = kgram_hashes(c, k)
-    return _winnow_from_hashes(hashes, w)
-
-
 def _winnow_from_hashes(hashes: Column, w: int) -> Column:
     n_windows = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
     windows = F.sequence(F.lit(1), n_windows)
@@ -76,7 +64,8 @@ def fingerprint_overlap_pairs(
     substring-level near-dup detection (complementary to MinHash, which
     measures set overlap, not contiguity). Blocked self-join like the
     Jaccard baseline; the inverted-index formulation (explode fingerprints,
-    join on fingerprint) is the unblocked scale path below."""
+    group on fingerprint, exactly the LSH-bucket plan in
+    operators/dedup._candidate_pairs) is the unblocked scale path."""
     cols = [id_col] + ([block_col] if block_col else [])
     fp = with_fingerprints(df, text_col, "fp", k=k, w=w).select(*cols, "fp")
     a = fp.select(
@@ -96,21 +85,4 @@ def fingerprint_overlap_pairs(
         .withColumn("shared_fingerprints", shared.cast("int"))
         .filter(F.col("shared_fingerprints") >= min_shared)
         .select("id_a", "id_b", "shared_fingerprints")
-    )
-
-
-def fingerprint_postings(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    k: int = 5,
-    w: int = 8,
-) -> DataFrame:
-    """Inverted-index form: (fingerprint, doc_id) postings — the 100 TB
-    path. Candidate pairs come from grouping on fingerprint (exactly the
-    LSH-bucket plan in operators/dedup._candidate_pairs), so cost is bound
-    by posting-list sizes, not N²."""
-    return with_fingerprints(df, text_col, "_fp", k=k, w=w).select(
-        F.col(id_col), F.explode("_fp").alias("fp")
     )

@@ -356,31 +356,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(decode, DECODED_SCHEMA)
 
 
-def byte_histogram(media: DataFrame, bins: int = 16) -> DataFrame:
-    """Feature extraction over raw bytes: per-blob histogram (array<long>),
-    a stand-in for any per-blob featurizer (embedding, spectrogram…) with
-    the same batch shape."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("hist", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(
-                pdf["media_id"].to_numpy(), pdf["data"].to_numpy()
-            ):
-                payload = np.frombuffer(bytes(data)[16:], dtype=np.uint8)
-                hist, _ = np.histogram(payload, bins=bins, range=(0, 256))
-                out.append((mid, hist.tolist()))
-            yield pd.DataFrame(out, columns=["media_id", "hist"])
-
-    return media.mapInPandas(featurize, schema)
-
-
 def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
     """Video frame sampling: slice the payload into fixed-size frames and
     keep every k-th — explode-style output (media_id, frame_idx, frame

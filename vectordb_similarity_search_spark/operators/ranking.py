@@ -29,8 +29,8 @@ breaking rank correctness); pick a high-cardinality leading key.
 
 Build cost: two tiny driver jobs over the projected frame (quantile stats,
 bucket aggregate) before the ranked plan itself — an OFFLINE planning
-primitive like ``measure_key_skew``, not a serving-path operator; callers
-on the hot path should reuse the returned frame.
+primitive, not a serving-path operator; callers on the hot path should
+reuse the returned frame.
 
 The plain-vs-bucketed choice for frames that are usually small lives here
 too, in one predicate (:func:`_routes`), used by :func:`dimension_rank`,

@@ -815,26 +815,6 @@ def rolling_percentiles(
     return _qsk_percentiles_from_buckets(contrib, ["day"], qs, k)
 
 
-def rolling_percentiles_by_type(
-    ledger: DataFrame,
-    window_days: int = 7,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    *,
-    k: int = QSK_SUB_BUCKETS,
-) -> DataFrame:
-    """Per-event_type trailing-window percentiles — the QSK sibling of
-    :func:`rolling_distinct_by_type`: same explode + broadcast-semi-join
-    window engine, bucket counts merged per (day, type) before the
-    shared in-array estimator. Output: ``(day, event_type, n, p*...)``.
-    Same error contract as :func:`rolling_percentiles`."""
-    contrib = (
-        _trailing(ledger, window_days, "event_type", "b", "cnt")
-        .groupBy("day", "event_type", "b")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return _qsk_percentiles_from_buckets(contrib, ["day", "event_type"], qs, k)
-
-
 def rollup_percentiles(
     ledger: DataFrame,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
@@ -1050,28 +1030,6 @@ def _theta_pairwise(
             / (F.col("m_a") + F.col("m_b") - F.col("m_both")).cast("double")
         ).alias("est_jaccard"),
     )
-
-
-def rolling_theta_overlap(
-    ledger: DataFrame,
-    window_days: int = 7,
-    *,
-    num: int = THETA_NUM,
-    den: int = THETA_DEN,
-) -> DataFrame:
-    """Per-day TRAILING-WINDOW pairwise overlap estimates — the rolling
-    audience-overlap metric ("7-day Jaccard between segments, daily")
-    from the ledger alone: the same explode + broadcast-semi-join
-    window engine as the HLL/QSK rolling readouts builds a per-day
-    distinct sample frame (a key active on several window days counts
-    once — set semantics, deduped by the distinct), then the shared
-    pairwise estimator runs grouped by day. Output: ``(day, type_a,
-    type_b, m_*, est_*)`` — same columns as :func:`theta_overlap` plus
-    ``day``."""
-    if not 1 <= num < den:
-        raise ValueError(f"need 1 <= num < den, got num={num} den={den}")
-    th = _trailing(ledger, window_days, "event_type", "h").distinct()
-    return _theta_pairwise(th, ["day"], float(den) / float(num))
 
 
 def theta_rollup_distinct(
@@ -1447,7 +1405,7 @@ def rolling_hh(
 ) -> DataFrame:
     """Per-day TRAILING-WINDOW top keys — the daily "top users this
     week" monitor from the ledger alone: the same explode +
-    broadcast-semi-join window engine as the HLL/QSK/theta rolling
+    broadcast-semi-join window engine as the HLL/QSK rolling
     readouts, then the shared interval-merge readout grouped by day.
     Output: ``(day, rank, key, lb, ub)``; same bound contract as
     :func:`hh_rollup` per window."""
@@ -1594,65 +1552,6 @@ HH = LedgerKind(
     },
     knobs={"buckets": HH_BUCKETS},
 )
-
-
-def hh_estimate(
-    ledger: DataFrame, keys: DataFrame, key_col: str
-) -> DataFrame:
-    """Point INTERVAL estimates for a SMALL candidate key frame from the
-    heavy-hitters ledger — the MG analogue of :func:`cms_estimate`
-    (which bounds from above only; MG bounds from BOTH sides): per
-    candidate, ``lb`` = Σ stored counters across all leaves (0 when the
-    key never survived any summary) and ``ub`` = lb + Σ err over ALL
-    leaves — whole-range scope, true count ∈ [lb, ub] by invariant (a).
-    Returns ``(key_col, lb, ub)``. The candidate frame is broadcast
-    (candidates come from a business list or a CMS screen); the err
-    total is a 1-row broadcast scalar. Intersecting with a CMS probe —
-    ``[hh_lb, min(cms_est, hh_ub)]`` — tightens both, since the two
-    ledgers err in opposite directions."""
-    cand = keys.select(
-        F.col(key_col).cast("string").alias("_k")
-    ).distinct()
-    lbs = (
-        ledger.select(F.explode("items").alias("it"))
-        .select(F.col("it.k").alias("_k"), F.col("it.c").alias("_c"))
-        .join(F.broadcast(cand), "_k", "left_semi")
-        .groupBy("_k")
-        .agg(F.sum("_c").cast("long").alias("lb"))
-    )
-    err_total = ledger.agg(
-        F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("_err_total")
-    )
-    return (
-        cand.join(lbs, "_k", "left")
-        .crossJoin(F.broadcast(err_total))
-        .select(
-            F.col("_k").alias(key_col),
-            F.coalesce("lb", F.lit(0).cast("long")).alias("lb"),
-            (F.coalesce("lb", F.lit(0).cast("long")) + F.col("_err_total"))
-            .cast("long")
-            .alias("ub"),
-        )
-    )
-
-
-def rolling_hh_by_type(
-    ledger: DataFrame,
-    window_days: int = 7,
-    top_n: int = 20,
-    *,
-    buckets: int = HH_BUCKETS,
-) -> DataFrame:
-    """Per-event_type trailing-window top keys — the HH sibling of
-    :func:`rolling_distinct_by_type` / :func:`rolling_percentiles_by_type`
-    (API symmetry across the ledger family): the same explode +
-    broadcast-semi-join window engine, interval-merged per (day, type).
-    Output: ``(day, event_type, rank, key, lb, ub)``; the bound contract
-    of :func:`hh_rollup` holds per (window, type) scope."""
-    contrib = _trailing(
-        ledger, window_days, "event_type", "n_events", "err", "items"
-    )
-    return _hh_scope_bounds(contrib, ["day", "event_type"], top_n, buckets)
 
 
 # ---------------------------------------------------------------------------

@@ -16,99 +16,10 @@ on its own salt).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT = "_salt"
-
-
-def measure_key_skew(
-    df: DataFrame, on: list[str], *, sample_fraction: float | None = None
-) -> float:
-    """Max-to-avg rows-per-key ratio of a join key — the number the
-    r_skew_report query computes over the whole table, as a reusable
-    advisor primitive. 1.0 = perfectly uniform; a ratio of N means the hot
-    key's reducer gets N× the average task's rows. Two-level aggregate
-    (shuffle carries (key, partial count), second level is a single tiny
-    row), so the diagnostic costs one scan — at 100 TB pass
-    ``sample_fraction`` (a Bernoulli row sample preserves the max/avg
-    ratio of any key that matters: a key hot enough to hurt a reducer
-    keeps thousands of sampled rows at 1%) or reuse a maintained per-key
-    stats table instead. NOTE: this runs an eager Spark job."""
-    if sample_fraction is not None:
-        df = df.sample(fraction=sample_fraction, seed=42)
-    row = (
-        df.groupBy(*on)
-        .agg(F.count("*").alias("c"))
-        .agg(
-            (
-                F.max("c").cast("double")
-                / (F.sum("c").cast("double") / F.count("*"))
-            ).alias("ratio")
-        )
-        .head()
-    )
-    # empty input -> zero key groups -> null aggregates; an empty frame has
-    # no skew, so report the uniform ratio instead of crashing the caller
-    return 1.0 if row["ratio"] is None else float(row["ratio"])
-
-
-@dataclass(frozen=True)
-class SkewDecision:
-    """What the advisor saw and did — so the routing is auditable."""
-
-    skew_ratio: float
-    threshold: float
-    salted: bool
-    n_salts: int
-
-
-def skew_aware_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    *,
-    how: str = "inner",
-    threshold: float = 4.0,
-    n_salts: int = 8,
-    seed: int = 42,
-    skew_ratio: float | None = None,
-    sample_fraction: float | None = None,
-) -> tuple[DataFrame, SkewDecision]:
-    """The diagnostics → mitigation loop as one executable operator: measure
-    the big side's key skew (measure_key_skew == r_skew_report's ratio),
-    and route through ``salted_join`` only when it crosses ``threshold``
-    (default 4.0: below that, AQE's skew-split handles residual imbalance;
-    above it, the hot key's single reducer dominates the stage wall-clock).
-    Returns (result, decision); result rows are identical either way
-    (pinned in tests/test_merge_skew.py).
-
-    Cost contract: with neither ``skew_ratio`` nor ``sample_fraction``
-    set, this call BLOCKS on one full diagnostic scan of ``big`` before
-    returning its (lazy) join — and the join's own execution scans
-    ``big`` again. At 100 TB avoid the double full pass by either
-    passing ``skew_ratio`` (a precomputed/maintained statistic — the
-    routing then adds zero jobs) or ``sample_fraction`` (diagnose on a
-    seeded Bernoulli sample; a reducer-breaking hot key is still hot at
-    1%)."""
-    # validate up front, not only in the salted branch: an unsupported
-    # join type must fail on day one, not the day the data turns skewed
-    if how not in ("inner", "left"):
-        raise ValueError("skew_aware_join supports inner/left (big side drives)")
-    ratio = (
-        skew_ratio
-        if skew_ratio is not None
-        else measure_key_skew(big, on, sample_fraction=sample_fraction)
-    )
-    salted = ratio >= threshold
-    out = (
-        salted_join(big, small, on, n_salts=n_salts, how=how, seed=seed)
-        if salted
-        else big.join(small, on, how)
-    )
-    return out, SkewDecision(ratio, threshold, salted, n_salts)
 
 
 def salted_join(

@@ -31,14 +31,14 @@ from ..util import widen
 
 
 def _score(
-    vec_col: str, query: Column | Sequence[float], metric: str, dim: int | None = None
+    vec_col: str, query: Column | Sequence[float], metric: str
 ) -> tuple[Column, bool]:
     """Returns (score column, descending?). ``query`` is a vector column or
     a driver-side query vector (folded into the plan as a literal)."""
     if metric == "cosine":
-        return cosine_similarity(vec_col, query, dim), True
+        return cosine_similarity(vec_col, query), True
     if metric == "l2":
-        return l2_distance(vec_col, query, dim), False
+        return l2_distance(vec_col, query), False
     raise ValueError(f"unknown metric {metric!r} (want 'cosine' or 'l2')")
 
 
@@ -66,35 +66,6 @@ def knn(
     return scored.orderBy(order, F.col(id_col).asc()).limit(k)
 
 
-def knn_blocked(
-    corpus: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
-    score_col: str = "score",
-) -> DataFrame:
-    """Exact kNN via the Arrow/numpy block scorer — the throughput path for
-    large corpora. One BLAS matmul per record batch (~60x the per-element
-    HOF fold at 1M rows), block-local top-k, global TakeOrdered on the
-    reduced candidates. Same results as :func:`knn` up to float64 matmul
-    reassociation (~1e-15) — use :func:`knn` where oracle bit-parity
-    matters, this where the corpus is the cost."""
-    q = (
-        corpus.sparkSession.createDataFrame(
-            [(0, [float(x) for x in query_vec])],
-            f"query_id int, query_vec array<double>",
-        )
-    )
-    res = similarity_join_blocked(
-        q, corpus, k, id_col=id_col, vec_col=vec_col, metric=metric,
-        score_col=score_col,
-    )
-    return res.drop("query_id", "rank")
-
-
 def similarity_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -107,7 +78,6 @@ def similarity_join(
     metric: str = "cosine",
     score_col: str = "score",
     pair_filter: Column | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """N×M brute-force similarity join: top-k corpus rows per query row.
 
@@ -123,7 +93,7 @@ def similarity_join(
     :func:`similarity_join_blocked`, which reduces to O(k·P·Q) rows before
     any shuffle via vectorized block-local top-k.
     """
-    score, desc = _score(vec_col, F.col(query_vec_col), metric, dim=dim)
+    score, desc = _score(vec_col, F.col(query_vec_col), metric)
     order = F.col(score_col).desc() if desc else F.col(score_col).asc()
 
     keep = [c for c in corpus.columns if c != vec_col]

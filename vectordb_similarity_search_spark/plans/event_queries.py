@@ -345,8 +345,8 @@ FROM purchases p JOIN clicks c
 """,
 )
 def e_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval (attribution) join — the batch twin of
-    streaming/events.stream_stream_interval_join: every click within the
+    """Interval (attribution) join — the batch form of a watermarked
+    stream-stream join: every click within the
     hour preceding a same-user purchase (e_asof_join keeps only the LAST
     click; the interval form keeps them all, which is the shape whose
     streaming state Spark can bound and evict).

@@ -179,8 +179,9 @@ def d_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     operating point (J ≥ 0.8; 16 bands × 4 rows → recall ≈ 1-(1-0.41)^16 ≈
     100% at J=0.8 while random J≈0.2 pairs collide at ~0.16% per band) —
     the scale path for t_ngram_jaccard_pairs. Oracle: expected-output
-    parquet (xxhash64 sketch has no DuckDB replay, but the pair set is a
-    pure content function — session/core-count independent)."""
+    parquet (the seeded crc32 MinHash family of minhash_signatures_batch
+    has no DuckDB replay, but the pair set is a pure content function —
+    session/core-count independent)."""
     return minhash_lsh_pairs(
         t(spark, sf_dir, "documents"), threshold=0.8, bands=16, n_hashes=64
     )
@@ -2840,8 +2841,8 @@ def e_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the log. Candidates come from the exact top-20 (the
     verification harness; a production pipeline feeds candidates from
     the mergeable heavy-hitters LEDGER — sketches.hh_rollup, whose
-    intervals the CMS probe then tightens from above, see
-    hh_estimate — or the exact operators/heavyhitters.py pass; CMS
+    intervals the CMS probe then tightens from above — or the exact
+    operators/heavyhitters.py pass; CMS
     serves point lookups for ANY key without a per-key log scan).
 
     INDEPENDENT oracle: the DuckDB twin recomputes the exact counts and

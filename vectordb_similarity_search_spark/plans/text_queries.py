@@ -2349,7 +2349,7 @@ def t_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 the seed bag, mine 3 expansion terms from the top-10 feedback
     documents (feedback-frequency desc, global df asc — the Rocchio signal
     with integer-deterministic ranking), re-rank with the expanded bag via
-    the DYNAMIC-term scorer (bm25_dynamic_topk) — terms live in a
+    the DYNAMIC-term scorer (bm25._dynamic_topk_from_toks) — terms live in a
     DataFrame, scored through a broadcast join + term-sorted fixed-order
     fold, which is the architecture static per-term columns cannot give a
     data-dependent query.  Fold parity with the static path is exact

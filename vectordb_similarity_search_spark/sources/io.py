@@ -6,10 +6,11 @@ boundary beyond the parquet fixture loaders (sources/tables.py).
 
 Design rules encoded here (the ones that matter at 100 TB):
 
-- **Schema is explicit on read** for the text formats. CSV/JSON schema
-  inference runs an extra full pass over the data before the real job —
-  at scale that's a second 100 TB scan. Columnar formats (parquet/ORC)
-  carry their schema in file metadata, so no pass is needed.
+- **Schema is explicit on read** for the text formats: read them back
+  with ``spark.read.schema(...)`` and the writer's options below. CSV/JSON
+  schema inference runs an extra full pass over the data before the real
+  job — at scale that's a second 100 TB scan. Columnar formats
+  (parquet/ORC) carry their schema in file metadata.
 - **Partitioned layout is the coarsest index.** ``partition_by`` writes
   ``col=value/`` directories; readers that filter on the partition column
   prune whole directories at planning time (asserted by plan test — the
@@ -20,14 +21,14 @@ Design rules encoded here (the ones that matter at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 FORMATS = ("parquet", "orc", "json", "csv")
 
-# Read options per text format: no inference (schema is required), ISO
-# timestamps so round-trips are lossless at micro precision.
+# Write (and read-back) options per text format: ISO timestamps so
+# round-trips are lossless at micro precision.
 _CSV_OPTS = {
     "header": "true",
     "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
@@ -71,31 +72,6 @@ def write_table(
     elif fmt == "json":
         w = w.options(**_JSON_OPTS)
     w.format(fmt).save(path)
-
-
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    *,
-    schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """Scan ``path``. For csv/json a schema is REQUIRED (see module doc);
-    for parquet/orc it is optional (projection over the file schema)."""
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {FORMATS}")
-    r = spark.read
-    if fmt == "csv":
-        if schema is None:
-            raise ValueError("csv read requires an explicit schema (no inference pass)")
-        r = r.options(**_CSV_OPTS)
-    elif fmt == "json":
-        if schema is None:
-            raise ValueError("json read requires an explicit schema (no inference pass)")
-        r = r.options(**_JSON_OPTS)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.format(fmt).load(path)
 
 
 def write_bucketed(

@@ -74,8 +74,3 @@ def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
             # pure type change, not a value shift.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-

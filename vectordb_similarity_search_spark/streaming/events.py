@@ -249,20 +249,6 @@ def _perm_hash(i: int):
     return f
 
 
-def enrich_stream_static(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-    *,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: the static side is re-read per
-    micro-batch (so slowly-changing dims pick up updates) and broadcast —
-    the standard pattern for decorating an event stream with reference
-    data without shuffling the stream."""
-    return events.join(F.broadcast(dim), on, how)
-
-
 def rollup_ingest_stream(
     events: DataFrame, rollup_path: str, checkpoint_dir: str
 ):
@@ -441,48 +427,6 @@ def cdc_merge_stream(
         updates.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .start()
-    )
-
-
-def stream_stream_interval_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    *,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join: each purchase matches the same user's
-    clicks from the preceding ``within`` interval — the streaming form of
-    the attribution join (batch twin: plans/event_queries.e_asof_join
-    keeps only the LAST click; the interval join emits every click in
-    range, which is the shape Structured Streaming can evict state for).
-
-    Both sides are watermarked and the join condition carries the time
-    range, so each side's buffered state is bounded by
-    watermark + within — without the range predicate a stream-stream join
-    would have to buffer forever. At 100 TB/day this state bound is the
-    difference between a runnable job and an OOM."""
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("user_id").alias("c_user"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("user_id"),
-    )
-    cond = (
-        (p["user_id"] == c["c_user"])
-        & (c["click_ts"] <= p["purchase_ts"])
-        & (c["click_ts"] >= p["purchase_ts"] - F.expr(f"INTERVAL {within}"))
-    )
-    return p.join(c, cond, "inner").select(
-        "user_id",
-        "purchase_id",
-        "purchase_ts",
-        "click_id",
-        "click_ts",
     )
 
 
